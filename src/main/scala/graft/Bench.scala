@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main — one JSON line with per-query seconds over
   * SPARK_GRAFT_SF_DIR (driver contract; BASELINE.md targets).
   *
-  * Measurement hygiene (round-2 bench showed 5× per-query swings with zero
-  * code changes — JIT warm-up and run ordering, not signal):
+  * Measurement hygiene (JIT warm-up and run ordering alone can swing a
+  * per-query number 5×):
   *  - base tables are cached once up front, so queries measure operator
   *    cost, not repeated parquet decode of the same ~100 MB inputs;
   *  - queries run in a FIXED order (sorted by name);
@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *  - each query is then timed `RUNS` times and the MEDIAN is reported, so
   *    one GC pause or compilation stall cannot move a per-query number.
   *
-  * Shared-frame convention (r7 verdict "cost laundering" fix): the two
+  * Shared-frame convention: the two
   * memoized cross-query frames are cleared after warm-up and rebuilt inside
   * the timed window as `_shared_jaccard_pairs` / `_shared_mutual_knn`
   * pseudo-entries — timed ONCE each (a median over re-runs would time the
@@ -25,18 +25,17 @@ import org.apache.spark.sql.SparkSession
   * alphabetical consumer so it never competes for memory with later
   * queries.
   *
-  * INGEST RUNS FIRST, ON ITS OWN SparkContext (r8 verdict: the shipped
-  * artifact's p10 collapsed to 4.9k rows/s while the previous run of
-  * identical code read 35.4k — the clearCache()-before-ingest mitigation
-  * was fragile against the memory debris of 259 queries). Running the
+  * INGEST RUNS FIRST, ON ITS OWN SparkContext (a clearCache() before
+  * ingest was fragile against the memory debris of the query phase: p10
+  * once collapsed from 35.4k to 4.9k rows/s on identical code). Running the
   * streaming measurement before any table is cached or query executed
   * removes the query→ingest neighbor effect by CONSTRUCTION — and
   * STOPPING that context before the query session starts kills the
   * reverse direction too: the 13 streaming runs leave an async
   * ContextCleaner backlog plus state-store maintenance threads that
-  * otherwise drain INTO the timed query phase (the first r9 pass measured
-  * a +0.5–2.5 s bulge across the alphabetically-mid queries that decayed
-  * as the backlog emptied). The full per-run series is emitted as
+  * otherwise drain INTO the timed query phase (a +0.5–2.5 s bulge across
+  * the alphabetically-mid queries that decayed as the backlog emptied).
+  * The full per-run series is emitted as
   * `ingest_runs` so any residual spread is in the artifact, not
   * reconstructed from stderr.
   *
@@ -55,11 +54,11 @@ import org.apache.spark.sql.SparkSession
   * interior-rank p10/p90) rides along, plus `ingest_diag` (per-run
   * GC/provider//tmp/writeback columns) and a dedicated `sentinels` field —
   * q_latest_per_key re-timed once right after ingest teardown
-  * (`_sentinel_post_ingest`, r9 asks #1/#4) and once again right before the
-  * dist-twin phase (`_sentinel_pre_dist`, r10 ask #4), so driver-box
+  * (`_sentinel_post_ingest`) and once again right before the dist-twin
+  * phase (`_sentinel_pre_dist`), so driver-box
   * contention is attributable per phase. Sentinels are kept OUT of
   * `total`/`n_queries`/`queries`: they re-time a query that already carries
-  * its own median entry (r10 ADVICE double-count fix).
+  * its own median entry.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -386,26 +385,25 @@ object Bench {
       s""""sf":"$sfDir","total_sec":${s3(total)}}"""
     // only a FULL pass may overwrite the committed full map — a restricted
     // SPARK_GRAFT_BENCH_ONLY iteration run would otherwise clobber it with
-    // a 2-query fragment (round 6 caught exactly that in the working tree).
-    // The map is ALSO written cpu-count-suffixed: the driver benches at two
-    // core counts and the second (8-core) run used to overwrite the 32-core
-    // full map, leaving only the compact line's slowest-~60 subset of the
-    // headline run in the committed tree (r14 verdict ask #4 — the judge
-    // reconstructs per-query tables from these files).
+    // a 2-query fragment. The map is ALSO written cpu-count-suffixed, so a
+    // bench at two core counts keeps both full maps.
     val fullSuffixed = s"BENCH_FULL_c$cpus.json"
-    if (only.isEmpty) try {
-      val out = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"))
-      java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
-      if (!sys.env.contains("SPARK_GRAFT_BENCH_FULL"))
-        java.nio.file.Files.write(java.nio.file.Paths.get(fullSuffixed),
-          (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    def writeFull(path: String): Boolean =
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(path), (fullLine + "\n").getBytes("UTF-8"))
+        true
+      } catch { case _: Throwable => false }
+    // the compact line names the suffixed file only when THIS run wrote it
+    val wroteSuffixed = only.isEmpty && {
+      val envFull = sys.env.get("SPARK_GRAFT_BENCH_FULL")
+      writeFull(envFull.getOrElse("BENCH_FULL.json")) && envFull.isEmpty && writeFull(fullSuffixed)
+    }
     // compact line: slowest-first, cut to a query budget that keeps the
     // whole line under the driver's parse window. The r14 line (~2.3k
     // chars) parsed; the r13 full line (>15k) did not. Budget raised by
     // exactly what the two per-run ingest arrays freed up (they stay in
     // the full artifact), plus a `full` pointer naming the committed file
-    // that carries all entries (r14 verdict ask #4).
+    // that carries all entries.
     val budget = 1850
     val slowFirst = results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + s3(v) }
     val kept = new scala.collection.mutable.ArrayBuffer[String]
@@ -417,7 +415,7 @@ object Bench {
       s""""ingest_rows_per_sec_p10":${s3(ingest._1)},"ingest_rows_per_sec_p90":${s3(ingest._3)}"""
     println(fullLine)
     println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","n_queries":${results.size},""" +
-      s""""n_failed":${failed.size},"full":"$fullSuffixed",""" +
+      s""""n_failed":${failed.size},""" + (if (wroteSuffixed) s""""full":"$fullSuffixed",""" else "") +
       s""""queries":$compactQs,"sentinels":$sentinelsJson,$compactIngest,"sf":"$sfDir","total_sec":${s3(total)}}""")
     spark.stop()
   }
@@ -432,13 +430,11 @@ object Bench {
     * derives p10/p50/p90 and emits the series itself as `ingest_runs` —
     * plus one pre-rendered JSON diagnostic object per run (`ingest_diag`):
     * GC-ms delta, state-store provider count after stop, scratch free
-    * space and /proc/meminfo dirty/writeback at run start. BENCH_r09's
-    * final-two-run collapse (50k → 4.2k/8.7k rows/s) reproduces only in
-    * the driver environment; these columns make the artifact NAME the
-    * environmental bound (heap churn vs provider leak vs disk fill vs
-    * writeback stall) instead of leaving it to reconstruction (r9 verdict
-    * ask #1). The third element is the `ingest_scale` key-cardinality
-    * sweep (r12 ask #7): one run each at 500/5k/50k PVs, same total rows,
+    * space and /proc/meminfo dirty/writeback at run start. These columns
+    * make the artifact NAME an environmental bound (heap churn vs provider
+    * leak vs disk fill vs writeback stall) instead of leaving it to
+    * reconstruction. The third element is the `ingest_scale`
+    * key-cardinality sweep: one run each at 500/5k/50k PVs, same total rows,
     * each carrying rows/s + state rows/memory + the batch-duration curve.
     */
   private def totalGcMs(): Long = {

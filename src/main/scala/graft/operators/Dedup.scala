@@ -95,12 +95,12 @@ object Dedup {
 
   /** Distinct (docId, shingle) pairs — the inverted-index input.
     *
-    * Deliberately NO [[SizeGates.spreadSmall]] here (r14 added one, r15
-    * reverts it): every minhash/verify consumer RE-DERIVES this frame 2–6
-    * times per query, and a spread inside the helper pays a fresh
-    * round-robin exchange plus wide-tiny-task overhead on each derivation
-    * (measured: q_edit_verify 1.89→4.51 s, q_clean_eval_split 0.31×,
-    * q_dedup_agreement 0.57× on the r14 driver run). Parallelism for the
+    * Deliberately NO [[SizeGates.spreadSmall]] here: every minhash/verify
+    * consumer RE-DERIVES this frame 2–6 times per query, and a spread
+    * inside the helper pays a fresh round-robin exchange plus
+    * wide-tiny-task overhead on each derivation (with a spread here:
+    * q_edit_verify 1.89→4.51 s, q_clean_eval_split 0.31×,
+    * q_dedup_agreement 0.57×). Parallelism for the
     * shingle kernel comes from the input's own width (the scan's splits at
     * scale); spreads stay only at single-derivation call sites (spanPairs,
     * cdcChunks, the hashed-set builders ahead of their groupBy barrier).
@@ -316,11 +316,18 @@ object Dedup {
     * same representation as the blocked sweep, and the same vanishing
     * MD5-collision argument for result identity), broadcast, and sweep
     * the (i, j) upper triangle with [[jaccardPairHashed]]'s early-exit
-    * merge-intersection and size-ratio filter. The r14 probe put ~21 s of
+    * merge-intersection and size-ratio filter. A profile put ~21 s of
     * executor CPU per bench run in the old STRING merge (one
     * `String.compareTo` per merge step, each a char-by-char walk of a
     * ~12-char shingle); comparing two longs instead cut the sweep's CPU
     * several-fold with the per-pair arithmetic otherwise unchanged.
+    *
+    * The `id` column must have an integral type (byte, short, int or
+    * long); any other type — string, decimal, double — now throws an
+    * `IllegalArgumentException` up front, even when every value is
+    * integral. This is a behaviour change: such callers used to get
+    * coincidentally correct results, or silently merged shingle sets when
+    * the long cast collapsed distinct ids (7.2 and 7.9 → 7).
     *
     * Use when the shingle-set index fits in executor memory (it is ~16
     * bytes per distinct shingle). Prefix filtering ([[ngramJaccard]]) wins
@@ -514,7 +521,7 @@ object Dedup {
     * `lastMineTrace` convention. Diagnostic only. */
   @volatile var lastJaccardRoute: String = ""
 
-  /** Corpus-shape-routed exact n-gram Jaccard (r13 verdict ask #4): ONE
+  /** Corpus-shape-routed exact n-gram Jaccard: ONE
     * entry point that picks between the two identical-output plans —
     * [[ngramJaccard]] (PPJoin prefix filter: right when rare shingles
     * exist, so prefixes prune the candidate join) and

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.streaming.{KeyedFold, Smoothing}
 
 /** The archiver's query surface re-expressed as declarative DataFrame
   * transforms (SURVEY.md §2.2/§2.3/§2.5/§2.8/§2.10 and §3.1).
@@ -286,6 +290,12 @@ object TimeSeries {
       .select(lCols.map(col) ++ rightVals.map(c => col(s"__carry_$c").as(c)): _*)
   }
 
+  /** A column by its literal name. Pivoted PV columns are named after the
+    * PV, and an EPICS name with a record field (`13BMA:m1.VAL`) would read
+    * as struct-field access through `col`.
+    */
+  private def named(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
   /** J2/W1 — multi-series as-of alignment with LOCF (scripts/get_pvarch:122-192):
     * pivot the series onto the union of their timestamps, then carry each
     * series' last value forward; rows before every series has a value are
@@ -313,10 +323,10 @@ object TimeSeries {
       .agg(max(col(value)))
     val w = Window.orderBy(col(ts)).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val filled = keys.foldLeft(grid) { (acc, k) =>
-      acc.withColumn(k, last(col(k), ignoreNulls = true).over(w))
+      acc.withColumn(k, last(named(k), ignoreNulls = true).over(w))
     }
     filled
-      .where(col(ts) >= t0 && keys.map(k => col(k).isNotNull).reduce(_ && _))
+      .where(col(ts) >= t0 && keys.map(k => named(k).isNotNull).reduce(_ && _))
       .orderBy(col(ts))
   }
 
@@ -350,8 +360,8 @@ object TimeSeries {
     // per-chunk last non-null value of each series
     val lastPerChunk = grid.groupBy(col("__chunk"))
       .agg(
-        max_by(col(keys.head), when(col(keys.head).isNotNull, col(ts))).as(s"__last_${keys.head}"),
-        keys.tail.map(k => max_by(col(k), when(col(k).isNotNull, col(ts))).as(s"__last_$k")): _*)
+        max_by(named(keys.head), when(named(keys.head).isNotNull, col(ts))).as(s"__last_${keys.head}"),
+        keys.tail.map(k => max_by(named(k), when(named(k).isNotNull, col(ts))).as(s"__last_$k")): _*)
     // seed of chunk c = last non-null of any STRICTLY EARLIER chunk: a
     // running last(ignoreNulls) over rows (-inf, -1] of the per-chunk frame.
     // This global window runs over one row per chunk (control data), so the
@@ -359,7 +369,7 @@ object TimeSeries {
     val wSeed = Window.orderBy(col("__chunk")).rowsBetween(Window.unboundedPreceding, -1)
     val seeds = lastPerChunk.select(
       col("__chunk") +:
-        keys.map(k => last(col(s"__last_$k"), ignoreNulls = true).over(wSeed).as(s"__seed_$k")): _*)
+        keys.map(k => last(named(s"__last_$k"), ignoreNulls = true).over(wSeed).as(s"__seed_$k")): _*)
     // within-chunk LOCF, seeded by the previous chunks' carry (null-safe
     // join key so a null-ts group keeps its seed row, like a plain window's
     // nulls-first order)
@@ -369,11 +379,11 @@ object TimeSeries {
       broadcast(seeds.withColumnRenamed("__chunk", "__schunk")),
       col("__chunk") <=> col("__schunk")).drop("__schunk")
     val filled = keys.foldLeft(joined) { (acc, k) =>
-      acc.withColumn(k, coalesce(last(col(k), ignoreNulls = true).over(wChunk), col(s"__seed_$k")))
+      acc.withColumn(k, coalesce(last(named(k), ignoreNulls = true).over(wChunk), named(s"__seed_$k")))
     }
     filled
-      .where(col(ts) >= t0 && keys.map(k => col(k).isNotNull).reduce(_ && _))
-      .select(col(ts) +: keys.map(col): _*)
+      .where(col(ts) >= t0 && keys.map(k => named(k).isNotNull).reduce(_ && _))
+      .select(col(ts) +: keys.map(named): _*)
       .orderBy(col(ts))
   }
 
@@ -415,9 +425,9 @@ object TimeSeries {
 
   /** Distributed global row number over an ARBITRARY sort key — identical
     * output to `row_number().over(Window.orderBy(sortCols))` with ZERO
-    * empty-partition windows in the plan (the r9 verdict ask: [[rfm]]'s and
-    * `negativeSample`'s rank windows were the last data-sized global sorts
-    * on the surface). [[rowNumberChunked]] needs a wide-range monotone long
+    * empty-partition windows in the plan ([[rfm]]'s and `negativeSample`'s
+    * rank windows were the last data-sized global sorts on the surface).
+    * [[rowNumberChunked]] needs a wide-range monotone long
     * key (timestamps); this variant ranks on any orderable key, including
     * low-cardinality metrics where value-derived chunking degenerates to
     * one chunk.
@@ -454,8 +464,7 @@ object TimeSeries {
     * harnesses call [[releaseCallScopedPersists]] at points where every
     * frame built since the last release is dead (Bench after each query's
     * timed runs, Verify after each query's parquet dump) so a long-lived
-    * session does not pin one users-sized frame per call forever (r10
-    * verdict "What's wrong" #4).
+    * session does not pin one users-sized frame per call forever.
     *
     * Nulls: range partitioning and window ordering both place nulls first
     * ascending — consistent with a plain global window's default.
@@ -719,43 +728,36 @@ object TimeSeries {
     * over time order. Duplicate timestamps collapse to their max first so
     * the fold order is total.
     *
-    * The recurrence is inherently sequential PER KEY, so the scale path is
-    * the same secondary-sort shape as the stateful downsampler's batch twin
-    * ([[graft.streaming.Downsampler]]): hash-repartition on the key, sort
-    * within partitions by `(key, ts)`, one linear `mapPartitions` fold with
-    * O(1) state per key. No window that collects a key's history, no
-    * driver-side anything; a 100 TB corpus folds as width(keys) parallel
-    * linear scans. Cross-engine determinism: the fold applies the exact
-    * double expression `(1-alpha)*s + alpha*v` in the exact same order as
-    * the oracle's `list_reduce`, so the `ewma` doubles are bit-identical —
-    * returned UNROUNDED (a dyadic alpha lands many values exactly on
-    * decimal rounding half-points, where engines' round() disagree;
-    * quantize with floor(x*1e6)/1e6 if a fixed-decimal compare is needed).
+    * The recurrence is inherently sequential PER KEY: the batch
+    * [[graft.streaming.KeyedFold]] over the same fold as the streaming twin
+    * ([[graft.streaming.Smoothing.streaming]]), so a 100 TB corpus folds as
+    * width(keys) parallel linear scans with O(1) state per key.
+    * Cross-engine determinism: the fold applies the exact double expression
+    * `(1-alpha)*s + alpha*v` in the exact same order as the oracle's
+    * `list_reduce`, so the `ewma` doubles are bit-identical — returned
+    * UNROUNDED (a dyadic alpha lands many values exactly on decimal rounding
+    * half-points, where engines' round() disagree; quantize with
+    * floor(x*1e6)/1e6 if a fixed-decimal compare is needed).
     */
   def ewma(df: DataFrame, key: String, ts: String, value: String,
-      alpha: Double): DataFrame = {
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
+      alpha: Double): DataFrame =
+    foldPoints(df, key, ts, value, new Smoothing.EwmaFold(alpha))
+      .toDF(key, ts, "value", "ewma")
+
+  /** Runs a [[Smoothing]] fold as its batch twin: null keys dropped (they
+    * carry no identity to fold under), duplicate instants collapsed to their
+    * max, then [[graft.streaming.KeyedFold.batch]] on the key.
+    */
+  private def foldPoints[S, O <: Product: TypeTag](df: DataFrame, key: String, ts: String,
+      value: String, fold: KeyedFold[String, Smoothing.Point, S, O]): Dataset[O] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val oneMinus = 1.0 - alpha
-    // null keys dropped: they carry no identity to fold under (and would
-    // alias the fold's pre-first-key sentinel)
-    val s = df.where(col(key).isNotNull)
+    val points = df.where(col(key).isNotNull)
       .groupBy(col(key), col(ts)).agg(max(col(value)).cast("double").as("__v"))
-      .select(col(key).cast("string"), col(ts).cast("long"), col("__v"))
-      .as[(String, Long, Double)]
-    s.repartition(col(s.columns.head))
-      .sortWithinPartitions(col(s.columns.head), col(s.columns(1)))
-      .mapPartitions { it =>
-        var curKey: String = null
-        var state = 0.0
-        it.map { case (k, t, v) =>
-          if (k != curKey) { curKey = k; state = v }
-          else state = oneMinus * state + alpha * v
-          (k, t, v, state)
-        }
-      }
-      .toDF(key, ts, "value", "ewma")
+      .select(col(key).cast("string").as("pvname"), col(ts).cast("long").as("tsUs"),
+        col("__v").as("value"))
+      .as[Smoothing.Point]
+    KeyedFold.batch(points, fold, (p: Smoothing.Point) => p.pvname, "pvname", "tsUs")
   }
 
   /** Per-key TIME-WEIGHTED average over `[t0, t1)` — the canonical archiver
@@ -951,39 +953,16 @@ object TimeSeries {
     * exceeds `h`. Catches slow drifts a z-score threshold misses.
     * Duplicate instants collapse to their max first.
     *
-    * Sequential per key like [[ewma]], and the same scale shape:
-    * hash-repartition on the key, sort within partitions, one linear
-    * `mapPartitions` fold with two doubles of state. Both accumulators are
-    * returned unrounded (bit-identical to the oracle's prefix folds;
+    * Sequential per key like [[ewma]], and the same shape: the batch
+    * [[graft.streaming.KeyedFold]] over the fold its streaming twin
+    * ([[graft.streaming.Smoothing.cusumStreaming]]) runs. Both accumulators
+    * are returned unrounded (bit-identical to the oracle's prefix folds;
     * floor-quantize for fixed-decimal compares).
     */
   def cusum(df: DataFrame, key: String, ts: String, value: String,
-      target: Double, slack: Double, h: Double): DataFrame = {
-    require(slack >= 0, s"slack must be >= 0, got $slack")
-    require(h > 0, s"alarm threshold must be positive, got $h")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // null keys dropped: they carry no identity to fold under (and would
-    // alias the fold's pre-first-key sentinel)
-    val s = df.where(col(key).isNotNull)
-      .groupBy(col(key), col(ts)).agg(max(col(value)).cast("double").as("__v"))
-      .select(col(key).cast("string"), col(ts).cast("long"), col("__v"))
-      .as[(String, Long, Double)]
-    s.repartition(col(s.columns.head))
-      .sortWithinPartitions(col(s.columns.head), col(s.columns(1)))
-      .mapPartitions { it =>
-        var curKey: String = null
-        var sPos = 0.0
-        var sNeg = 0.0
-        it.map { case (k, t, v) =>
-          if (k != curKey) { curKey = k; sPos = 0.0; sNeg = 0.0 }
-          sPos = math.max(0.0, sPos + (v - target - slack))
-          sNeg = math.min(0.0, sNeg + (v - target + slack))
-          (k, t, v, sPos, sNeg, sPos > h || sNeg < -h)
-        }
-      }
+      target: Double, slack: Double, h: Double): DataFrame =
+    foldPoints(df, key, ts, value, new Smoothing.CusumFold(target, slack, h))
       .toDF(key, ts, "value", "s_pos", "s_neg", "alarm")
-  }
 
   /** Spearman rank-correlation matrix over a LOCF-aligned frame — the
     * outlier-robust companion to [[correlationMatrix]] (monotone
@@ -997,14 +976,14 @@ object TimeSeries {
   def spearmanMatrix(aligned: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.size >= 2, s"need at least 2 series, got ${keys.size}")
     val ranked = keys.foldLeft(aligned) { (acc, k) =>
-      val wr = Window.orderBy(col(k))
-      val wt = Window.partitionBy(col(k))
+      val wr = Window.orderBy(named(k))
+      val wt = Window.partitionBy(named(k))
       acc.withColumn(k,
         rank().over(wr).cast("double") + (count(lit(1)).over(wt) - 1) / 2.0)
     }
     // average ranks are exact halves: the 0.5 grid doubles them into exact
     // integers with the tightest overflow bound (n·(2n)² < 2^63)
-    correlationMatrix(ranked.select(keys.map(col): _*), keys, quantum = 0.5)
+    correlationMatrix(ranked.select(keys.map(named): _*), keys, quantum = 0.5)
   }
 
   /** Per-key hour-of-day × day-of-week seasonal profile — "what does this
@@ -1224,21 +1203,21 @@ object TimeSeries {
     require(quantum > 0, s"quantum must be positive, got $quantum")
     val invQ = 1.0 / quantum
     val quantized = aligned.select(keys.map(k =>
-      expr(s"CAST(round(CAST(`$k` AS DOUBLE) * ${invQ}D) AS BIGINT)").as(k)): _*)
+      round(named(k).cast("double") * lit(invQ)).cast("bigint").as(k)): _*)
     val pairs = for { i <- keys.indices; j <- i + 1 until keys.size }
       yield (keys(i), keys(j))
     val n = count(lit(1)).as("__n")
     val perKey = keys.flatMap { k =>
-      Seq(sum(col(k)).as(s"__sx_$k"), sum(col(k) * col(k)).as(s"__sxx_$k"))
+      Seq(sum(named(k)).as(s"__sx_$k"), sum(named(k) * named(k)).as(s"__sxx_$k"))
     }
-    val perPair = pairs.map { case (a, b) => sum(col(a) * col(b)).as(s"__sxy_${a}__$b") }
+    val perPair = pairs.map { case (a, b) => sum(named(a) * named(b)).as(s"__sxy_${a}__$b") }
     val sums = quantized.agg(n, (perKey ++ perPair): _*)
     def varN(k: String) =
-      col("__n").cast("double") * col(s"__sxx_$k").cast("double") -
-        col(s"__sx_$k").cast("double") * col(s"__sx_$k").cast("double")
+      col("__n").cast("double") * named(s"__sxx_$k").cast("double") -
+        named(s"__sx_$k").cast("double") * named(s"__sx_$k").cast("double")
     val rows = pairs.map { case (a, b) =>
-      val num = col("__n").cast("double") * col(s"__sxy_${a}__$b").cast("double") -
-        col(s"__sx_$a").cast("double") * col(s"__sx_$b").cast("double")
+      val num = col("__n").cast("double") * named(s"__sxy_${a}__$b").cast("double") -
+        named(s"__sx_$a").cast("double") * named(s"__sx_$b").cast("double")
       val den = sqrt(varN(a)) * sqrt(varN(b))
       struct(lit(a).as("k1"), lit(b).as("k2"),
         when(den > 0, round(num / den, 6)).as("corr"))
@@ -1311,45 +1290,18 @@ object TimeSeries {
     * the fold order is total; null keys dropped like [[ewma]]). The one-step
     * forecast is `l + b`.
     *
-    * Same scale shape as [[ewma]]: the recurrence is sequential PER KEY, so
-    * hash-repartition on the key, sort within partitions, one linear
-    * `mapPartitions` fold with two doubles of state per key — width(keys)
-    * parallel scans, no windows collecting history, nothing driver-side.
-    * Cross-engine determinism: with dyadic `alpha`/`beta` the fold applies
-    * bit-exact double arithmetic in a fixed order, mirrored by the oracle's
-    * struct-state `list_reduce`; outputs are returned UNROUNDED (quantize
-    * with `floor(x*1e6)/1e6` for fixed-decimal compares, like [[ewma]]).
+    * Same shape as [[ewma]]: the batch [[graft.streaming.KeyedFold]] over
+    * the fold its streaming twin ([[graft.streaming.Smoothing.holtStreaming]])
+    * runs. Cross-engine determinism: with dyadic `alpha`/`beta` the fold
+    * applies bit-exact double arithmetic in a fixed order, mirrored by the
+    * oracle's struct-state `list_reduce`; outputs are returned UNROUNDED
+    * (quantize with `floor(x*1e6)/1e6` for fixed-decimal compares, like
+    * [[ewma]]).
     */
   def holt(df: DataFrame, key: String, ts: String, value: String,
-      alpha: Double, beta: Double): DataFrame = {
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1], got $beta")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val oneMinusA = 1.0 - alpha
-    val oneMinusB = 1.0 - beta
-    val s = df.where(col(key).isNotNull)
-      .groupBy(col(key), col(ts)).agg(max(col(value)).cast("double").as("__v"))
-      .select(col(key).cast("string"), col(ts).cast("long"), col("__v"))
-      .as[(String, Long, Double)]
-    s.repartition(col(s.columns.head))
-      .sortWithinPartitions(col(s.columns.head), col(s.columns(1)))
-      .mapPartitions { it =>
-        var curKey: String = null
-        var l = 0.0
-        var b = 0.0
-        it.map { case (k, t, v) =>
-          if (k != curKey) { curKey = k; l = v; b = 0.0 }
-          else {
-            val lNew = alpha * v + oneMinusA * (l + b)
-            b = beta * (lNew - l) + oneMinusB * b
-            l = lNew
-          }
-          (k, t, v, l, b)
-        }
-      }
+      alpha: Double, beta: Double): DataFrame =
+    foldPoints(df, key, ts, value, new Smoothing.HoltFold(alpha, beta))
       .toDF(key, ts, "value", "level", "trend")
-  }
 
   /** Per-key Theil–Sen robust trend — the median of pairwise slopes
     * between per-bucket medians, the drift estimator outliers can't drag
@@ -1625,7 +1577,7 @@ object TimeSeries {
     * `max(abs(P))` over ALL rows, not just the segment-boundary prefix
     * sum: with mixed-sign values a mid-segment P can far exceed |Pb|,
     * and a guard on the boundary alone would let the BIGINT gain wrap
-    * silently (r8 ADVICE).
+    * silently.
     *
     * Plan shape: ONE key-local window pass builds (rank, prefix sum);
     * each level is a segment-frame join (segments ≤ 2^level per key —

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** T4 — the alert state machine (cache.py:601-630, doc/alerts.rst:42-74):
   * per (alert, PV) compare each observed value against the trippoint with one
@@ -12,9 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Value coercion mirrors the reference (cache.py:609-616): numeric compare
   * when both value and trippoint parse as doubles, else string compare.
   *
-  * The same per-event step drives the batch replay (tests, backfill audits)
-  * and the streaming `flatMapGroupsWithState` form. State per alert is two
-  * scalars — no scale concern at any fleet size.
+  * One [[KeyedFold]] drives the batch replay (tests, backfill audits) and
+  * the streaming form. State per alert is two scalars — no scale concern at
+  * any fleet size.
   */
 object Alerts {
 
@@ -66,19 +65,32 @@ object Alerts {
     * on a debounced ok→alarm edge.
     */
   def onObservation(st: State, cfg: AlertConfig, o: Observation): (Option[AlertEvent], State) = {
-    if (!cfg.active) (None, st)
+    var ev: Option[AlertEvent] = None
+    val s = evaluate(st, cfg, o, e => ev = Some(e))
+    (ev, s)
+  }
+
+  private def evaluate(st: State, cfg: AlertConfig, o: Observation,
+      emit: AlertEvent => Unit): State =
+    if (!cfg.active) st
     else {
       val nowAlarm = tripped(cfg.compare, o.value, cfg.trippoint)
       val status = if (nowAlarm) "alarm" else "ok"
       val edge = st.status == "ok" && nowAlarm
       val notify = edge && o.tsUs > st.lastNoticeUs + cfg.timeoutUs
-      val st2 = State(status, if (notify) o.tsUs else st.lastNoticeUs)
-      val ev =
-        if (status != st.status || notify)
-          Some(AlertEvent(cfg.alertId, cfg.pvname, o.tsUs, o.value, status, notify))
-        else None
-      (ev, st2)
+      if (status != st.status || notify)
+        emit(AlertEvent(cfg.alertId, cfg.pvname, o.tsUs, o.value, status, notify))
+      State(status, if (notify) o.tsUs else st.lastNoticeUs)
     }
+
+  /** The alert fold ([[KeyedFold]]); an alert without a config keeps no
+    * state and emits nothing.
+    */
+  private final class Fold(configs: Map[Long, AlertConfig])
+      extends KeyedFold[Long, Observation, State, AlertEvent] {
+    def init(id: Long): State = if (configs.contains(id)) InitState else null
+    def step(id: Long, st: State, o: Observation, emit: AlertEvent => Unit): State =
+      if (st == null) st else evaluate(st, configs(id), o, emit)
   }
 
   /** OPTOKENS → OPSTRINGS (cache.py:31-34). */
@@ -105,49 +117,20 @@ object Alerts {
     else s"$body\nSee $plotBaseUrl/plot/1days/now/${cfg.pvname}"
   }
 
-  def replayKey(obs: Iterable[Observation], cfg: AlertConfig): Vector[AlertEvent] = {
-    var st = InitState
-    val out = Vector.newBuilder[AlertEvent]
-    obs.foreach { o =>
-      val (ev, st2) = onObservation(st, cfg, o)
-      out ++= ev
-      st = st2
-    }
-    out.result()
-  }
+  def replayKey(obs: Iterable[Observation], cfg: AlertConfig): Vector[AlertEvent] =
+    KeyedFold.run(new Fold(Map(cfg.alertId -> cfg)), (_: Observation) => cfg.alertId,
+      obs.iterator).toVector
 
-  /** Batch replay of alert evaluation over an observation Dataset.
-    * Secondary sort (shuffle on key + external within-partition sort +
-    * streaming run iterator), so a hot alert's full history never
-    * materializes on one executor.
+  /** Batch replay of alert evaluation over an observation Dataset
+    * ([[KeyedFold.batch]]).
     */
   def replayBatch(
       ds: Dataset[Observation],
       configs: Map[Long, AlertConfig]): Dataset[AlertEvent] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    ds.repartition(col("alertId"))
-      .sortWithinPartitions(col("alertId"), col("tsUs"), col("value"))
-      .as[Observation]
-      .mapPartitions { it =>
-        var curId = Long.MinValue
-        var started = false
-        var st = InitState
-        var cfg: Option[AlertConfig] = None
-        it.flatMap { o =>
-          if (!started || o.alertId != curId) {
-            started = true; curId = o.alertId; st = InitState; cfg = configs.get(o.alertId)
-          }
-          cfg match {
-            case Some(c) =>
-              val (ev, st2) = onObservation(st, c, o)
-              st = st2
-              ev.iterator
-            case None => Iterator.empty
-          }
-        }
-      }
+    KeyedFold.batch(ds, new Fold(configs), (o: Observation) => o.alertId,
+      "alertId", "tsUs", "value")
   }
 
   /** One composed alert mail, ready for an SMTP (or any) transport. */
@@ -169,8 +152,7 @@ object Alerts {
       s"[Epics Alert] ${cfg.label}",
       mailBody(cfg, ev, template, lookup, plotBaseUrl)))
 
-  /** Delivery sink over the alert event stream (r9 verdict "What's
-    * missing" #3 — the last unplumbed reference behavior): wires
+  /** Delivery sink over the alert event stream: wires
     * [[streaming]] through `foreachBatch` so each micro-batch delivers
     * exactly the debounced ok→alarm edges the state machine marked
     * `notified` — one mail per edge, none on stay-alarm or alarm→ok
@@ -221,29 +203,13 @@ object Alerts {
     writer.start()
   }
 
-  /** Streaming form (SURVEY §2.9 T4). */
+  /** Streaming form (SURVEY §2.9 T4; [[KeyedFold.streaming]]). */
   def streaming(
       ds: Dataset[Observation],
       configs: Map[Long, AlertConfig]): Dataset[AlertEvent] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.alertId)
-      .flatMapGroupsWithState[State, AlertEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (id: Long, it: Iterator[Observation], gs: GroupState[State]) =>
-          configs.get(id) match {
-            case None => Iterator.empty
-            case Some(cfg) =>
-              var st = gs.getOption.getOrElse(InitState)
-              val out = Vector.newBuilder[AlertEvent]
-              it.toVector.sortBy(o => (o.tsUs, o.value))(Downsampler.EventOrder).foreach { o =>
-                val (ev, st2) = onObservation(st, cfg, o)
-                out ++= ev
-                st = st2
-              }
-              gs.update(st)
-              out.result().iterator
-          }
-      }
+    KeyedFold.streaming(ds, new Fold(configs), (o: Observation) => o.alertId,
+      Downsampler.eventOrder[Observation](_.tsUs, _.value))
   }
 }

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** T2/T3 — the deadtime/deadband downsampler with limbo semantics, the one
   * genuinely stateful operator of the reference (archiver.py:362-463,
-  * doc/setup.rst:74-96), re-expressed as a keyed stateful op usable both as a
-  * Structured Streaming `flatMapGroupsWithState` and as a deterministic batch
-  * replay (same per-key step function, so the two stay in lockstep).
+  * doc/setup.rst:74-96), re-expressed as one [[KeyedFold]] that drives both
+  * the Structured Streaming form and the deterministic batch replay.
   *
   * Semantics (per PV, events in time order; all times in epoch micros):
   *  - first event always emits;
@@ -51,12 +49,11 @@ object Downsampler {
 
   /** UTF-8 binary string order — the order Spark SQL sorts strings in
     * (UTF8String byte comparison). The equal-timestamp tie-break must use
-    * THIS ordering everywhere: the secondary-sort batch replays tie-break
-    * via `sortWithinPartitions` (Spark binary order), so the streaming
-    * twins' in-memory sorts use the same order, or supplementary-plane
-    * values (where UTF-16 code-unit order and UTF-8 byte order disagree)
-    * would process in a different sequence and desynchronize the state
-    * machines.
+    * THIS ordering everywhere: the batch twins tie-break in Spark's order,
+    * so the streaming twins' in-memory sorts use the same order, or
+    * supplementary-plane values (where UTF-16 code-unit order and UTF-8
+    * byte order disagree) would process in a different sequence and
+    * desynchronize the state machines.
     */
   val Utf8Order: Ordering[String] = (x: String, y: String) => {
     val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -71,6 +68,10 @@ object Downsampler {
   /** (tsUs, value) event order with the UTF-8 tie-break. */
   val EventOrder: Ordering[(Long, String)] = Ordering.Tuple2(Ordering.Long, Utf8Order)
 
+  /** [[EventOrder]] over any event type, comparing values only on a tie. */
+  private[streaming] def eventOrder[E](ts: E => Long, value: E => String): Ordering[E] =
+    KeyedFold.byTime(ts)((a, b) => Utf8Order.compare(value(a), value(b)))
+
   /** Minimum gap (1 ms, archiver.py:398) below which a change is ignored. */
   private final val MinGapUs = 1000L
 
@@ -84,70 +85,81 @@ object Downsampler {
   }
 
   /** Process one event against the state; returns (emits, new state). */
-  def onEvent(st: Option[State], e: RawSample, cfg: PvConfig): (Vector[Sample], State) =
-    st match {
-      case None =>
-        (Vector(Sample(e.pvname, e.tsUs, e.value, e.cvalue)), State(e.tsUs, e.value, None))
-      case Some(s0) =>
-        var s = s0
-        val out = Vector.newBuilder[Sample]
-        // arrival advances the clock: flush an expired limbo first
-        if (s.limbo.isDefined && e.tsUs > s.lastTsUs + cfg.deadtimeUs) {
-          val l = s.limbo.get
-          out += Sample(l.pvname, l.tsUs, l.value, l.cvalue)
-          s = State(l.tsUs, l.value, None)
-        }
-        if (e.tsUs > s.lastTsUs + cfg.deadtimeUs) {
-          val moved =
-            if (cfg.dtype == "double")
-              (parseDouble(e.value), parseDouble(s.lastValue)) match {
-                case (Some(a), Some(b)) => math.abs(a - b) > math.abs(cfg.deadband)
-                case _ => true // unparseable → treat as changed (archiver.py:386-388)
-              }
-            else true
-          if (moved) {
-            out += Sample(e.pvname, e.tsUs, e.value, e.cvalue)
-            s = State(e.tsUs, e.value, None)
-          }
-        } else if (e.tsUs > s.lastTsUs + MinGapUs) {
-          s = s.copy(limbo = Some(e))
-        }
-        (out.result(), s)
-    }
+  def onEvent(st: Option[State], e: RawSample, cfg: PvConfig): (Vector[Sample], State) = {
+    val out = Vector.newBuilder[Sample]
+    val s = advance(st.orNull, e, cfg, out += _)
+    (out.result(), s)
+  }
 
   /** Flush the limbo if the clock has passed the deadtime. */
-  def onClock(st: State, nowUs: Long, cfg: PvConfig): (Vector[Sample], State) =
+  def onClock(st: State, nowUs: Long, cfg: PvConfig): (Vector[Sample], State) = {
+    val out = Vector.newBuilder[Sample]
+    val s = clock(st, nowUs, cfg, out += _)
+    (out.result(), s)
+  }
+
+  private def sample(e: RawSample): Sample = Sample(e.pvname, e.tsUs, e.value, e.cvalue)
+
+  /** The T2 step; `st == null` is a PV's first event. */
+  private def advance(st: State, e: RawSample, cfg: PvConfig, emit: Sample => Unit): State =
+    if (st == null) {
+      emit(sample(e))
+      State(e.tsUs, e.value, None)
+    } else {
+      // arrival advances the clock: flush an expired limbo first
+      var s = clock(st, e.tsUs, cfg, emit)
+      if (e.tsUs > s.lastTsUs + cfg.deadtimeUs) {
+        val moved =
+          if (cfg.dtype == "double")
+            (parseDouble(e.value), parseDouble(s.lastValue)) match {
+              case (Some(a), Some(b)) => math.abs(a - b) > math.abs(cfg.deadband)
+              case _ => true // unparseable → treat as changed (archiver.py:386-388)
+            }
+          else true
+        if (moved) {
+          emit(sample(e))
+          s = State(e.tsUs, e.value, None)
+        }
+      } else if (e.tsUs > s.lastTsUs + MinGapUs) {
+        s = s.copy(limbo = Some(e))
+      }
+      s
+    }
+
+  private def clock(st: State, nowUs: Long, cfg: PvConfig, emit: Sample => Unit): State =
     st.limbo match {
       case Some(l) if nowUs > st.lastTsUs + cfg.deadtimeUs =>
-        (Vector(Sample(l.pvname, l.tsUs, l.value, l.cvalue)), State(l.tsUs, l.value, None))
-      case _ => (Vector.empty, st)
+        emit(sample(l))
+        State(l.tsUs, l.value, None)
+      case _ => st
     }
+
+  /** The T2 fold ([[KeyedFold]]): the end-of-history flush and the quiet-PV
+    * timeout both release the limbo with its original timestamp.
+    */
+  private final class Fold(configs: Map[String, PvConfig], default: PvConfig, quietMs: Long)
+      extends KeyedFold[String, RawSample, State, Sample] {
+    def init(pv: String): State = null
+    def step(pv: String, st: State, e: RawSample, emit: Sample => Unit): State =
+      advance(st, e, configs.getOrElse(pv, default), emit)
+    // end of history: the deadtime has trivially expired by "now"
+    override def flush(pv: String, st: State, emit: Sample => Unit): Unit =
+      st.limbo.foreach(l => emit(sample(l)))
+    override def hasTimeout: Boolean = quietMs > 0
+    override def timeoutMs(pv: String, st: State): Long = if (st.limbo.isDefined) quietMs else 0L
+    override def onTimeout(pv: String, st: State, nowUs: Long, emit: Sample => Unit): State =
+      clock(st, nowUs, configs.getOrElse(pv, default), emit)
+  }
 
   /** Pure per-key replay: events must be time-ordered; the trailing limbo is
     * flushed (a batch replay sees the complete history).
     */
-  def replayKey(events: Iterable[RawSample], cfg: PvConfig): Vector[Sample] = {
-    var st: Option[State] = None
-    val out = Vector.newBuilder[Sample]
-    events.foreach { e =>
-      val (emits, s) = onEvent(st, e, cfg)
-      out ++= emits
-      st = Some(s)
-    }
-    st.flatMap(_.limbo).foreach { l =>
-      // end-of-history flush: deadtime has trivially expired by "now"
-      out += Sample(l.pvname, l.tsUs, l.value, l.cvalue)
-    }
-    out.result()
-  }
+  def replayKey(events: Iterable[RawSample], cfg: PvConfig): Vector[Sample] =
+    KeyedFold.run(new Fold(Map.empty, cfg, 0L), (e: RawSample) => e.pvname, events.iterator)
+      .toVector
 
   /** Batch replay over a Dataset — the deterministic twin used for
-    * correctness tests and backfills. Secondary sort, not per-key
-    * materialization: one shuffle on the key, Spark's external
-    * (spill-capable) sort orders `(pvname, tsUs, value)` within partitions,
-    * and a streaming run iterator applies [[onEvent]] with O(1) state per
-    * key — a multi-year backfill of one hot PV cannot OOM an executor the
-    * way a `groupByKey` + in-memory sort would.
+    * correctness tests and backfills ([[KeyedFold.batch]]).
     */
   def replayBatch(
       ds: Dataset[RawSample],
@@ -155,34 +167,12 @@ object Downsampler {
       default: PvConfig = DefaultConfig): Dataset[Sample] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    ds.repartition(col("pvname"))
-      .sortWithinPartitions(col("pvname"), col("tsUs"), col("value"))
-      .as[RawSample]
-      .mapPartitions { it =>
-        var curPv: String = null
-        var st: Option[State] = None
-        var cfg: PvConfig = default
-        def trailing(): Vector[Sample] =
-          // end-of-history flush: deadtime has trivially expired by "now"
-          st.flatMap(_.limbo).map(l => Sample(l.pvname, l.tsUs, l.value, l.cvalue)).toVector
-        val main = it.flatMap { e =>
-          val boundary = if (curPv != null && e.pvname != curPv) trailing() else Vector.empty
-          if (e.pvname != curPv) {
-            curPv = e.pvname; st = None; cfg = configs.getOrElse(e.pvname, default)
-          }
-          val (emits, s2) = onEvent(st, e, cfg)
-          st = Some(s2)
-          boundary ++ emits
-        }
-        // lazy tail: evaluated only after `main` is exhausted
-        main ++ Iterator.single(()).flatMap(_ => trailing())
-      }
+    KeyedFold.batch(ds, new Fold(configs, default, 0L), (e: RawSample) => e.pvname,
+      "pvname", "tsUs", "value")
   }
 
-  /** Streaming form: `flatMapGroupsWithState` in Append mode with a
-    * processing-time timeout that flushes the limbo when a PV goes quiet
-    * (SURVEY §2.9 T2).
+  /** Streaming form ([[KeyedFold.streaming]]) with a processing-time
+    * timeout that flushes the limbo when a PV goes quiet (SURVEY §2.9 T2).
     *
     * `timeoutMs <= 0` disables the quiet-PV flush (the limbo then flushes
     * on next arrival only) — used by deterministic tests, since a registered
@@ -195,36 +185,7 @@ object Downsampler {
       timeoutMs: Long = 1000L): Dataset[Sample] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    // NoTimeout when disabled: merely DECLARING ProcessingTimeTimeout makes
-    // the micro-batch engine schedule no-data batches forever (its
-    // shouldRunAnotherBatch is unconditional), which busy-loops a default
-    // trigger and keeps processAllAvailable from ever settling
-    val timeoutConf =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[State, Sample](OutputMode.Append(), timeoutConf) {
-        (pv: String, it: Iterator[RawSample], gs: GroupState[State]) =>
-          val cfg = configs.getOrElse(pv, DefaultConfig)
-          val out = Vector.newBuilder[Sample]
-          var st: Option[State] = gs.getOption
-          if (gs.hasTimedOut) {
-            st.foreach { s =>
-              val nowUs = gs.getCurrentProcessingTimeMs() * 1000L
-              val (emits, s2) = onClock(s, nowUs, cfg)
-              out ++= emits
-              st = Some(s2)
-            }
-          }
-          it.toVector.sortBy(e => (e.tsUs, e.value))(EventOrder).foreach { e =>
-            val (emits, s2) = onEvent(st, e, cfg)
-            out ++= emits
-            st = Some(s2)
-          }
-          st.foreach { s =>
-            gs.update(s)
-            if (timeoutMs > 0 && s.limbo.isDefined) gs.setTimeoutDuration(timeoutMs)
-          }
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, new Fold(configs, DefaultConfig, timeoutMs),
+      (e: RawSample) => e.pvname, eventOrder[RawSample](_.tsUs, _.value))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.EventAnalytics.funnel]]: per-user
   * step-completion state turns a live event stream into append-mode
@@ -29,37 +28,28 @@ object FunnelStream {
     */
   case class FunnelState(doneTimes: Seq[Long], lastTs: Long, lastTie: Long)
 
+  private final class Fold(steps: Seq[String], horizonUs: Long)
+      extends KeyedFold[Long, Event, FunnelState, Completion] {
+    def init(u: Long): FunnelState = FunnelState(Vector.empty, Long.MinValue, Long.MinValue)
+    def step(u: Long, st: FunnelState, e: Event, emit: Completion => Unit): FunnelState =
+      if (e.tsUs > st.lastTs || (e.tsUs == st.lastTs && e.tieBreak > st.lastTie)) {
+        val next = st.doneTimes.length
+        val completes = next < steps.length && e.eventType == steps(next) &&
+          (next == 0 ||
+            (e.tsUs > st.doneTimes(next - 1) && e.tsUs <= st.doneTimes(next - 1) + horizonUs))
+        if (completes) emit(Completion(u, next + 1, steps(next), e.tsUs))
+        FunnelState(if (completes) st.doneTimes :+ e.tsUs else st.doneTimes, e.tsUs, e.tieBreak)
+      } else st // late or duplicate instant: dropped (T7)
+  }
+
+  private val Order: Ordering[Event] =
+    KeyedFold.byTime[Event](_.tsUs)((a, b) => java.lang.Long.compare(a.tieBreak, b.tieBreak))
+
   def streaming(ds: Dataset[Event], steps: Seq[String], horizonUs: Long): Dataset[Completion] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(horizonUs > 0, s"horizonUs must be positive, got $horizonUs")
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState[FunnelState, Completion](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (u: Long, it: Iterator[Event], gs: GroupState[FunnelState]) =>
-          val out = Vector.newBuilder[Completion]
-          var st = gs.getOption.getOrElse(FunnelState(Vector.empty, Long.MinValue, Long.MinValue))
-          it.toVector.sortBy(e => (e.tsUs, e.tieBreak)).foreach { e =>
-            val fresh = e.tsUs > st.lastTs ||
-              (e.tsUs == st.lastTs && e.tieBreak > st.lastTie)
-            if (fresh) {
-              val next = st.doneTimes.length
-              if (next < steps.length && e.eventType == steps(next)) {
-                val qualifies =
-                  next == 0 ||
-                    (e.tsUs > st.doneTimes(next - 1) &&
-                      e.tsUs <= st.doneTimes(next - 1) + horizonUs)
-                if (qualifies) {
-                  out += Completion(u, next + 1, steps(next), e.tsUs)
-                  st = st.copy(doneTimes = st.doneTimes :+ e.tsUs)
-                }
-              }
-              st = st.copy(lastTs = e.tsUs, lastTie = e.tieBreak)
-            } // late or duplicate instant: dropped (T7)
-          }
-          gs.update(st)
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, new Fold(steps, horizonUs), (e: Event) => e.userId, Order)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import Downsampler.Sample
 
@@ -30,109 +29,83 @@ object Heartbeat {
     minUs + rng.nextLong(spanUs)
   }
 
+  case class HbState(lastTs: Long, value: String, cvalue: String, k: Int)
+
+  /** Re-archive the carried value at each force interval that elapses
+    * strictly before `until`.
+    */
+  private def fill(pv: String, st: HbState, until: Long, seed: Long,
+      emit: Sample => Unit): Unit = if (st != null) {
+    var ts = st.lastTs
+    var k = st.k
+    var interval = forceIntervalUs(pv, k, seed)
+    while (ts + interval < until) {
+      ts += interval
+      emit(Sample(pv, ts, st.value, st.cvalue))
+      k += 1
+      interval = forceIntervalUs(pv, k, seed)
+    }
+  }
+
+  private def carry(s: Sample): HbState = HbState(s.tsUs, s.value, s.cvalue, 0)
+
+  /** Event-time fold ([[KeyedFold]]): each real sample fills the silent gap
+    * before it, and the end of history fills up to `horizonUs`.
+    */
+  private final class ReplayFold(horizonUs: Long, seed: Long)
+      extends KeyedFold[String, Sample, HbState, Sample] {
+    def init(pv: String): HbState = null
+    def step(pv: String, st: HbState, s: Sample, emit: Sample => Unit): HbState = {
+      fill(pv, st, s.tsUs, seed, emit)
+      carry(s)
+    }
+    override def flush(pv: String, st: HbState, emit: Sample => Unit): Unit =
+      fill(pv, st, horizonUs, seed, emit)
+  }
+
+  /** Processing-time fold: a real sample only resets the carried value; the
+    * timeout re-archives it stamped with the wall clock.
+    */
+  private final class LiveFold(seed: Long, minUs: Long, spanUs: Long)
+      extends KeyedFold[String, Sample, HbState, Sample] {
+    def init(pv: String): HbState = null
+    def step(pv: String, st: HbState, s: Sample, emit: Sample => Unit): HbState = carry(s)
+    override def hasTimeout: Boolean = true
+    override def timeoutMs(pv: String, st: HbState): Long =
+      math.max(forceIntervalUs(pv, st.k, seed, minUs, spanUs) / 1000L, 1L)
+    override def onTimeout(pv: String, st: HbState, nowUs: Long, emit: Sample => Unit): HbState = {
+      emit(Sample(pv, nowUs, st.value, st.cvalue))
+      HbState(nowUs, st.value, st.cvalue, st.k + 1)
+    }
+  }
+
   /** Batch replay over one PV's archived samples (time-ordered): synthetic
     * heartbeat rows in the silent gaps, up to `horizonUs`.
     */
-  def replayKey(samples: Iterable[Sample], horizonUs: Long, seed: Long = 42L): Vector[Sample] = {
-    val out = Vector.newBuilder[Sample]
-    var last: Option[Sample] = None
-    var k = 0
-    def fill(until: Long): Unit = last.foreach { l =>
-      var ts = l.tsUs
-      var value = l.value
-      var cvalue = l.cvalue
-      var interval = forceIntervalUs(l.pvname, k, seed)
-      while (ts + interval < until) {
-        ts += interval
-        out += Sample(l.pvname, ts, value, cvalue)
-        k += 1
-        interval = forceIntervalUs(l.pvname, k, seed)
-      }
-    }
-    samples.foreach { s =>
-      fill(s.tsUs)
-      last = Some(s)
-      k = 0
-    }
-    fill(horizonUs)
-    out.result()
-  }
+  def replayKey(samples: Iterable[Sample], horizonUs: Long, seed: Long = 42L): Vector[Sample] =
+    KeyedFold.run(new ReplayFold(horizonUs, seed), (s: Sample) => s.pvname, samples.iterator)
+      .toVector
 
-  /** Secondary-sort form: shuffle on the key, external sort within
-    * partitions on `(pvname, tsUs, value)` (the value tie-break keeps the
-    * carried value partition-order independent), then a streaming run
-    * iterator with O(1) state per key — no per-key materialization, so one
-    * hot PV's multi-year history cannot OOM an executor.
+  /** [[replayKey]] over a Dataset ([[KeyedFold.batch]]); the `value`
+    * tie-break keeps the carried value partition-order independent.
     */
   def replayBatch(ds: Dataset[Sample], horizonUs: Long, seed: Long = 42L): Dataset[Sample] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    ds.repartition(col("pvname"))
-      .sortWithinPartitions(col("pvname"), col("tsUs"), col("value"))
-      .as[Sample]
-      .mapPartitions { it =>
-        var curPv: String = null
-        var last: Sample = null
-        var k = 0
-        def fill(until: Long): Vector[Sample] = {
-          if (last == null) Vector.empty
-          else {
-            val out = Vector.newBuilder[Sample]
-            var ts = last.tsUs
-            var interval = forceIntervalUs(last.pvname, k, seed)
-            while (ts + interval < until) {
-              ts += interval
-              out += Sample(last.pvname, ts, last.value, last.cvalue)
-              k += 1
-              interval = forceIntervalUs(last.pvname, k, seed)
-            }
-            out.result()
-          }
-        }
-        val main = it.flatMap { s =>
-          val boundary = if (curPv != null && s.pvname != curPv) fill(horizonUs) else Vector.empty
-          if (s.pvname != curPv) { curPv = s.pvname; last = null; k = 0 }
-          val gapFill = fill(s.tsUs)
-          last = s; k = 0
-          boundary ++ gapFill
-        }
-        main ++ Iterator.single(()).flatMap(_ => fill(horizonUs))
-      }
+    KeyedFold.batch(ds, new ReplayFold(horizonUs, seed), (s: Sample) => s.pvname,
+      "pvname", "tsUs", "value")
   }
 
-  case class HbState(lastTs: Long, value: String, cvalue: String, k: Int)
-
-  /** Streaming form: per-PV processing-time timeout re-emits the cached
-    * value when the force interval elapses with no real sample (stamped at
-    * the wall clock, like the reference's sweep). `minUs`/`spanUs` shrink
-    * the 13-21 h window for tests.
+  /** Streaming form ([[KeyedFold.streaming]]): a per-PV processing-time
+    * timeout re-emits the cached value when the force interval elapses with
+    * no real sample (stamped at the wall clock, like the reference's sweep).
+    * `minUs`/`spanUs` shrink the 13-21 h window for tests.
     */
   def streaming(ds: Dataset[Sample], seed: Long = 42L,
       minUs: Long = MinForceUs, spanUs: Long = SpanForceUs): Dataset[Sample] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[HbState, Sample](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout) {
-        (pv: String, it: Iterator[Sample], gs: GroupState[HbState]) =>
-          val out = Vector.newBuilder[Sample]
-          var st = gs.getOption
-          if (gs.hasTimedOut) {
-            st.foreach { s =>
-              val nowUs = gs.getCurrentProcessingTimeMs() * 1000L
-              out += Sample(pv, nowUs, s.value, s.cvalue)
-              st = Some(HbState(nowUs, s.value, s.cvalue, s.k + 1))
-            }
-          }
-          it.toVector.sortBy(s => (s.tsUs, s.value))(Downsampler.EventOrder).foreach { s =>
-            st = Some(HbState(s.tsUs, s.value, s.cvalue, 0))
-          }
-          st.foreach { s =>
-            gs.update(s)
-            gs.setTimeoutDuration(math.max(forceIntervalUs(pv, s.k, seed, minUs, spanUs) / 1000L, 1L))
-          }
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, new LiveFold(seed, minUs, spanUs), (s: Sample) => s.pvname,
+      Downsampler.eventOrder[Sample](_.tsUs, _.value))
   }
 }

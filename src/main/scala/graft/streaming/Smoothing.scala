@@ -1,20 +1,18 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of [[graft.operators.TimeSeries.ewma]]: the per-key
-  * exponential smoothing fold (`s_1 = v_1`, `s_i = (1-alpha)*s_{i-1} +
-  * alpha*v_i`) as a `flatMapGroupsWithState` topology — the live
-  * strip-chart smoother over an EPICS monitor stream, in lockstep with the
-  * batch replay (same double expression, same order, bit-identical).
+/** The EWMA, CUSUM and Holt recurrences as [[KeyedFold]]s, each shared by
+  * its batch twin in [[graft.operators.TimeSeries]] and the streaming form
+  * here — the live strip-chart smoother and control charts over an EPICS
+  * monitor stream, bit-identical to the batch replay because both run the
+  * same `step`.
   *
-  * Within a micro-batch, a key's events fold in `(tsUs, value)` order
-  * (same per-batch sort as [[Downsampler.streaming]]); across batches the
-  * fold assumes per-key event-time monotone delivery (the T7 convention —
-  * an out-of-order sample would need the batch replay to reconstruct
-  * history). State per key is TWO scalars; shuffle is keyed; emission is
-  * one row per input row in Append mode.
+  * Within a micro-batch, a key's events fold in `(tsUs, value DESC)` order:
+  * the max of an instant folds first and its same-instant peers drop,
+  * matching the batch twins' max-per-(key, ts) dedupe. A late event (tsUs
+  * at or below the last folded one) is dropped (the T7 convention). State
+  * per key is two or three scalars; emission is one row per folded event.
   */
 object Smoothing {
 
@@ -36,36 +34,6 @@ object Smoothing {
   case class CusumPoint(pvname: String, tsUs: Long, value: Double,
       sPos: Double, sNeg: Double, alarm: Boolean)
 
-  /** Streaming twin of [[graft.operators.TimeSeries.cusum]] — the live
-    * two-sided control chart: same fold expressions in the same order as
-    * the batch replay (bit-identical accumulators), same per-batch sort
-    * and late-drop rules as [[streaming]], three scalars of state per key.
-    */
-  def cusumStreaming(ds: Dataset[Point], target: Double, slack: Double,
-      h: Double): Dataset[CusumPoint] = {
-    require(slack >= 0, s"slack must be >= 0, got $slack")
-    require(h > 0, s"alarm threshold must be positive, got $h")
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (pv: String, it: Iterator[Point], gs: GroupState[CusumState]) =>
-          val out = Vector.newBuilder[CusumPoint]
-          var st = gs.getOption.getOrElse(CusumState(0.0, 0.0, Long.MinValue))
-          it.toVector.sortBy(p => (p.tsUs, -p.value)).foreach { p =>
-            if (p.tsUs > st.lastTsUs) {
-              val sp = math.max(0.0, st.sPos + (p.value - target - slack))
-              val sn = math.min(0.0, st.sNeg + (p.value - target + slack))
-              st = CusumState(sp, sn, p.tsUs)
-              out += CusumPoint(pv, p.tsUs, p.value, sp, sn, sp > h || sn < -h)
-            } // late or duplicate instant: dropped (T7)
-          }
-          gs.update(st)
-          out.result().iterator
-      }
-  }
-
   /** Per-key Holt state for [[holtStreaming]]: level, trend, last folded
     * event time.
     */
@@ -77,72 +45,88 @@ object Smoothing {
   case class HoltPoint(pvname: String, tsUs: Long, value: Double,
       level: Double, trend: Double)
 
-  /** Streaming twin of [[graft.operators.TimeSeries.holt]] — the live
-    * level+trend tracker: the same double expressions in the same order as
-    * the batch fold (`lNew = alpha*v + (1-alpha)*(l+b)` then
-    * `b = beta*(lNew-l) + (1-beta)*b`), so accumulators are bit-identical
-    * to the batch replay; same per-batch sort and late-drop rules as
-    * [[streaming]]. Three scalars of state per key, Append emission.
+  /** `(tsUs, value DESC)`; the descending value compares as `-value`, so a
+    * NaN sorts last.
     */
-  def holtStreaming(ds: Dataset[Point], alpha: Double, beta: Double): Dataset[HoltPoint] = {
+  private val PointOrder: Ordering[Point] =
+    KeyedFold.byTime[Point](_.tsUs)((a, b) => java.lang.Double.compare(-a.value, -b.value))
+
+  /** `s_1 = v_1`, `s_i = (1-alpha)*s_{i-1} + alpha*v_i`. */
+  private[graft] final class EwmaFold(alpha: Double)
+      extends KeyedFold[String, Point, SmoothState, Smoothed] {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1], got $beta")
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val oneMinusA = 1.0 - alpha
-    val oneMinusB = 1.0 - beta
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[HoltState, HoltPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (pv: String, it: Iterator[Point], gs: GroupState[HoltState]) =>
-          val out = Vector.newBuilder[HoltPoint]
-          var st: Option[HoltState] = gs.getOption
-          it.toVector.sortBy(p => (p.tsUs, -p.value)).foreach { p =>
-            st match {
-              case None =>
-                st = Some(HoltState(p.value, 0.0, p.tsUs))
-                out += HoltPoint(pv, p.tsUs, p.value, p.value, 0.0)
-              case Some(s) if p.tsUs > s.lastTsUs =>
-                val lNew = alpha * p.value + oneMinusA * (s.level + s.trend)
-                val bNew = beta * (lNew - s.level) + oneMinusB * s.trend
-                st = Some(HoltState(lNew, bNew, p.tsUs))
-                out += HoltPoint(pv, p.tsUs, p.value, lNew, bNew)
-              case Some(_) => () // late or duplicate instant: dropped (T7)
-            }
-          }
-          st.foreach(gs.update)
-          out.result().iterator
-      }
+    private val oneMinus = 1.0 - alpha
+    def init(pv: String): SmoothState = null
+    def step(pv: String, st: SmoothState, p: Point, emit: Smoothed => Unit): SmoothState =
+      if (st == null) {
+        emit(Smoothed(pv, p.tsUs, p.value, p.value))
+        SmoothState(p.value, p.tsUs)
+      } else if (p.tsUs > st.lastTsUs) {
+        val e = oneMinus * st.ewma + alpha * p.value
+        emit(Smoothed(pv, p.tsUs, p.value, e))
+        SmoothState(e, p.tsUs)
+      } else st // late or duplicate instant: dropped (T7)
   }
 
-  def streaming(ds: Dataset[Point], alpha: Double): Dataset[Smoothed] = {
+  /** Two-sided CUSUM (Page's test): `s_pos = max(0, s_pos + (v - target -
+    * slack))`, `s_neg = min(0, s_neg + (v - target + slack))`; a sample
+    * alarms when either passes `h`.
+    */
+  private[graft] final class CusumFold(target: Double, slack: Double, h: Double)
+      extends KeyedFold[String, Point, CusumState, CusumPoint] {
+    require(slack >= 0, s"slack must be >= 0, got $slack")
+    require(h > 0, s"alarm threshold must be positive, got $h")
+    def init(pv: String): CusumState = CusumState(0.0, 0.0, Long.MinValue)
+    def step(pv: String, st: CusumState, p: Point, emit: CusumPoint => Unit): CusumState =
+      if (p.tsUs > st.lastTsUs) {
+        val sp = math.max(0.0, st.sPos + (p.value - target - slack))
+        val sn = math.min(0.0, st.sNeg + (p.value - target + slack))
+        emit(CusumPoint(pv, p.tsUs, p.value, sp, sn, sp > h || sn < -h))
+        CusumState(sp, sn, p.tsUs)
+      } else st // late or duplicate instant: dropped (T7)
+  }
+
+  /** Holt linear trend: seeded `l_1 = v_1, b_1 = 0`, then
+    * `l = alpha*v + (1-alpha)*(l+b)` and `b = beta*(lNew-l) + (1-beta)*b`.
+    */
+  private[graft] final class HoltFold(alpha: Double, beta: Double)
+      extends KeyedFold[String, Point, HoltState, HoltPoint] {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
+    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1], got $beta")
+    private val oneMinusA = 1.0 - alpha
+    private val oneMinusB = 1.0 - beta
+    def init(pv: String): HoltState = null
+    def step(pv: String, st: HoltState, p: Point, emit: HoltPoint => Unit): HoltState =
+      if (st == null) {
+        emit(HoltPoint(pv, p.tsUs, p.value, p.value, 0.0))
+        HoltState(p.value, 0.0, p.tsUs)
+      } else if (p.tsUs > st.lastTsUs) {
+        val lNew = alpha * p.value + oneMinusA * (st.level + st.trend)
+        val bNew = beta * (lNew - st.level) + oneMinusB * st.trend
+        emit(HoltPoint(pv, p.tsUs, p.value, lNew, bNew))
+        HoltState(lNew, bNew, p.tsUs)
+      } else st // late or duplicate instant: dropped (T7)
+  }
+
+  /** Streaming twin of [[graft.operators.TimeSeries.cusum]]. */
+  def cusumStreaming(ds: Dataset[Point], target: Double, slack: Double,
+      h: Double): Dataset[CusumPoint] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val oneMinus = 1.0 - alpha
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[SmoothState, Smoothed](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (pv: String, it: Iterator[Point], gs: GroupState[SmoothState]) =>
-          val out = Vector.newBuilder[Smoothed]
-          var st: Option[SmoothState] = gs.getOption
-          // value DESC inside an instant: the max folds first and its
-          // same-instant peers drop, matching the batch twin's
-          // max-per-(key, ts) dedupe when the duplicates share a batch
-          it.toVector.sortBy(p => (p.tsUs, -p.value)).foreach { p =>
-            st match {
-              case None =>
-                st = Some(SmoothState(p.value, p.tsUs))
-                out += Smoothed(pv, p.tsUs, p.value, p.value)
-              case Some(s) if p.tsUs > s.lastTsUs =>
-                val e = oneMinus * s.ewma + alpha * p.value
-                st = Some(SmoothState(e, p.tsUs))
-                out += Smoothed(pv, p.tsUs, p.value, e)
-              case Some(_) => () // late or duplicate instant: dropped (T7)
-            }
-          }
-          st.foreach(gs.update)
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, new CusumFold(target, slack, h), (p: Point) => p.pvname, PointOrder)
+  }
+
+  /** Streaming twin of [[graft.operators.TimeSeries.holt]]. */
+  def holtStreaming(ds: Dataset[Point], alpha: Double, beta: Double): Dataset[HoltPoint] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold.streaming(ds, new HoltFold(alpha, beta), (p: Point) => p.pvname, PointOrder)
+  }
+
+  /** Streaming twin of [[graft.operators.TimeSeries.ewma]]. */
+  def streaming(ds: Dataset[Point], alpha: Double): Dataset[Smoothed] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold.streaming(ds, new EwmaFold(alpha), (p: Point) => p.pvname, PointOrder)
   }
 }

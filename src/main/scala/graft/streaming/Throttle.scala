@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.TimeSeries.throttle]] — the live
   * per-key rate cap: at most `perWindow` events pass per `(key, tumbling
@@ -22,30 +21,32 @@ object Throttle {
     */
   case class CapState(bucket: Long, n: Int, lastTsUs: Long)
 
+  private final class Fold(windowUs: Long, perWindow: Int)
+      extends KeyedFold[String, Smoothing.Point, CapState, Smoothing.Point] {
+    def init(pv: String): CapState = CapState(Long.MinValue, 0, Long.MinValue)
+    def step(pv: String, st0: CapState, p: Smoothing.Point,
+        emit: Smoothing.Point => Unit): CapState = {
+      val b = p.tsUs / windowUs // truncating, like the batch `DIV`
+      val st = if (b > st0.bucket) CapState(b, 0, st0.lastTsUs) else st0
+      if (b >= st.bucket && p.tsUs >= st.lastTsUs && st.n < perWindow) {
+        emit(p)
+        CapState(st.bucket, st.n + 1, p.tsUs)
+      } else st // over quota, or late (earlier bucket / before the admit frontier)
+    }
+  }
+
+  /** `(tsUs, value)` ascending, mirroring the batch `orderBy(ts, tieBreak = value)`. */
+  private val Order: Ordering[Smoothing.Point] =
+    KeyedFold.byTime[Smoothing.Point](_.tsUs)((a, b) =>
+      java.lang.Double.compare(a.value, b.value))
+
   def streaming(ds: Dataset[Smoothing.Point], windowUs: Long,
       perWindow: Int): Dataset[Smoothing.Point] = {
     require(windowUs > 0, s"windowUs must be positive, got $windowUs")
     require(perWindow >= 1, s"perWindow must be >= 1, got $perWindow")
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.pvname)
-      .flatMapGroupsWithState[CapState, Smoothing.Point](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[Smoothing.Point], gs: GroupState[CapState]) =>
-          val out = Vector.newBuilder[Smoothing.Point]
-          var st = gs.getOption.getOrElse(CapState(Long.MinValue, 0, Long.MinValue))
-          // (ts, value) ASC mirrors the batch orderBy(ts, tieBreak=value)
-          it.toVector.sortBy(p => (p.tsUs, p.value)).foreach { p =>
-            val b = p.tsUs / windowUs // truncating, like the batch `DIV`
-            if (b > st.bucket) st = CapState(b, 0, st.lastTsUs)
-            if (b >= st.bucket && p.tsUs >= st.lastTsUs && st.n < perWindow) {
-              st = CapState(st.bucket, st.n + 1, p.tsUs)
-              out += p
-            } // over quota, or late (earlier bucket / before the admit
-              // frontier): dropped
-          }
-          gs.update(st)
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, new Fold(windowUs, perWindow), (p: Smoothing.Point) => p.pvname,
+      Order)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.EventAnalytics.transitionMatrix]]'s
   * pairing stage: per-user "last event" state turns a live event stream
@@ -9,13 +8,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * complete-mode count aggregation for the live Markov matrix, or sink
   * them raw for the batch normalizer.
   *
-  * Within a micro-batch a user's events pair in `(tsUs, tieBreak)` order
-  * (the same per-batch sort as [[Smoothing.streaming]]); across batches
-  * the fold assumes per-key event-time monotone delivery (the T7
-  * convention), dropping late or duplicate instants instead of pairing
-  * backwards. State per key is one (ts, tieBreak, type) triple; shuffle
-  * is keyed by user; emission is append-mode, one row per consecutive
-  * pair.
+  * A [[KeyedFold]]: a user's events pair in `(tsUs, tieBreak)` order, and
+  * late or duplicate instants drop instead of pairing backwards. State per
+  * key is one (ts, tieBreak, type) triple; emission is one row per
+  * consecutive pair.
   */
 object Transitions {
 
@@ -31,25 +27,21 @@ object Transitions {
   /** Per-key fold state: the last folded event. */
   case class LastEvent(tsUs: Long, tieBreak: Long, eventType: String)
 
+  private object Fold extends KeyedFold[Long, Event, LastEvent, Transition] {
+    def init(u: Long): LastEvent = null
+    def step(u: Long, st: LastEvent, e: Event, emit: Transition => Unit): LastEvent =
+      if (st == null || e.tsUs > st.tsUs || (e.tsUs == st.tsUs && e.tieBreak > st.tieBreak)) {
+        if (st != null) emit(Transition(u, e.tsUs, st.eventType, e.eventType))
+        LastEvent(e.tsUs, e.tieBreak, e.eventType)
+      } else st // late or duplicate instant: dropped (T7)
+  }
+
+  private val Order: Ordering[Event] =
+    KeyedFold.byTime[Event](_.tsUs)((a, b) => java.lang.Long.compare(a.tieBreak, b.tieBreak))
+
   def streaming(ds: Dataset[Event]): Dataset[Transition] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState[LastEvent, Transition](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (u: Long, it: Iterator[Event], gs: GroupState[LastEvent]) =>
-          val out = Vector.newBuilder[Transition]
-          var st = gs.getOption.orNull
-          it.toVector.sortBy(e => (e.tsUs, e.tieBreak)).foreach { e =>
-            val fresh = st == null || e.tsUs > st.tsUs ||
-              (e.tsUs == st.tsUs && e.tieBreak > st.tieBreak)
-            if (fresh) {
-              if (st != null) out += Transition(u, e.tsUs, st.eventType, e.eventType)
-              st = LastEvent(e.tsUs, e.tieBreak, e.eventType)
-            } // late or duplicate instant: dropped (T7)
-          }
-          if (st != null) gs.update(st)
-          out.result().iterator
-      }
+    KeyedFold.streaming(ds, Fold, (e: Event) => e.userId, Order)
   }
 }

@@ -361,14 +361,50 @@ class PlanAuditSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val dir = "/root/testdata/sf0.001"
-      Seq("q_ohlc", "q_histogram", "q_delta_rate", "q_ewma", "q_pv_corr",
-        "q_lttb", "q_twa", "q_embed_quantize").foreach { q =>
-        SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
-      }
+      // the keyed folds' batch twins, with the key each one shuffles on
+      val folds = Seq("q_downsample_stateful" -> "pvname", "q_alerts" -> "alertId",
+        "q_heartbeat" -> "pvname", "q_ewma" -> "pvname", "q_cusum" -> "pvname",
+        "q_holt" -> "pvname")
+      val plans = (Seq("q_ohlc", "q_histogram", "q_delta_rate", "q_pv_corr",
+        "q_lttb", "q_twa", "q_embed_quantize") ++ folds.map(_._1)).map { q =>
+        q -> SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      }.toMap
       org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
       val offenders = java.util.List.copyOf(jobs).toArray.map(_.toString)
         .filterNot(_.startsWith("parquet at "))
       assert(offenders.isEmpty, s"operator ran driver jobs at construction: ${offenders.mkString("; ")}")
+      // each batch fold plans exactly one hash shuffle on its key alone, and
+      // its MapPartitions reads one within-partition Sort straight off it
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      import org.apache.spark.sql.execution._
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      def onKey(p: SparkPlan, key: String): Boolean = p match {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq(key)
+          case _ => false
+        }
+        case _ => false
+      }
+      def below(p: SparkPlan): SparkPlan = p match {
+        case _: WholeStageCodegenExec | _: InputAdapter | _: DeserializeToObjectExec |
+            _: ProjectExec => below(p.children.head)
+        case other => other
+      }
+      folds.foreach { case (q, key) =>
+        val plan = plans(q) match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        assert(plan.collect { case e if onKey(e, key) => e }.size == 1,
+          s"$q: want exactly one hash Exchange on $key\n$plan")
+        val folded = plan.collect { case m: MapPartitionsExec => below(m.child) }
+        assert(folded.size == 1, s"$q: want one MapPartitions\n$plan")
+        folded.head match {
+          case s: SortExec if !s.global && onKey(below(s.child), key) => ()
+          case other => fail(s"$q: MapPartitions must read a Sort over the $key Exchange, got\n$other")
+        }
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

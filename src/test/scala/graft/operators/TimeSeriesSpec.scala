@@ -96,13 +96,16 @@ class TimeSeriesSpec extends SparkSpec {
   test("locfAlign carries values forward and drops incomplete rows") {
     val sp = spark
     import sp.implicits._
-    val df = Seq(
-      ("x", 10L, 1.0), ("y", 20L, 5.0), ("x", 30L, 2.0), ("y", 40L, 6.0))
-      .toDF("k", "ts", "v")
-    val got = TimeSeries.locfAlign(df, "k", "ts", "v", Seq("x", "y"), 0L, 100L)
-      .collect().map(r => (r.getAs[Long]("ts"), r.getAs[Double]("x"), r.getAs[Double]("y")))
-    // ts=10 dropped (y missing); x carried forward at 20 and 40
-    assert(got.toSeq == Seq((20L, 1.0, 5.0), (30L, 2.0, 5.0), (40L, 2.0, 6.0)))
+    // EPICS names carry a record field; its `.` is part of the PV name
+    Seq(("x", "y"), ("13BMA:m1.VAL", "13BMA:m2.RBV")).foreach { case (x, y) =>
+      val df = Seq(
+        (x, 10L, 1.0), (y, 20L, 5.0), (x, 30L, 2.0), (y, 40L, 6.0))
+        .toDF("k", "ts", "v")
+      val got = TimeSeries.locfAlign(df, "k", "ts", "v", Seq(x, y), 0L, 100L)
+        .collect().map(r => (r.getAs[Long]("ts"), r.getAs[Double](x), r.getAs[Double](y)))
+      // ts=10 dropped (y missing); x carried forward at 20 and 40
+      assert(got.toSeq == Seq((20L, 1.0, 5.0), (30L, 2.0, 5.0), (40L, 2.0, 6.0)), s"keys $x, $y")
+    }
   }
 
   test("downsampleBatch keeps first and rows passing BOTH deadtime and deadband") {
@@ -163,19 +166,22 @@ class TimeSeriesSpec extends SparkSpec {
   test("property: locfAlignChunked is identical to locfAlign across chunk widths") {
     val sp = spark
     import sp.implicits._
-    (1 to 3).foreach { seed =>
+    for {
+      keys <- Seq(Seq("x", "y"), Seq("13BMA:m1.VAL", "13BMA:m2.RBV"))
+      seed <- 1 to 3
+    } {
       val rng = new scala.util.Random(200 + seed)
       val rows = for {
-        k <- Seq("x", "y")
+        k <- keys
         _ <- 0 until 40
       } yield (k, rng.nextLong(5000L), rng.nextDouble())
       val df = rows.toDF("k", "ts", "v")
-      val plain = TimeSeries.locfAlign(df, "k", "ts", "v", Seq("x", "y"), 500L, 4500L)
+      val plain = TimeSeries.locfAlign(df, "k", "ts", "v", keys, 500L, 4500L)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       Seq(100L, 999L, 10000L).foreach { w =>
-        val chunked = TimeSeries.locfAlignChunked(df, "k", "ts", "v", Seq("x", "y"), 500L, 4500L, w)
+        val chunked = TimeSeries.locfAlignChunked(df, "k", "ts", "v", keys, 500L, 4500L, w)
           .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-        assert(chunked == plain, s"seed=$seed chunk=$w")
+        assert(chunked == plain, s"keys=$keys seed=$seed chunk=$w")
       }
     }
   }
@@ -547,23 +553,28 @@ class TimeSeriesSpec extends SparkSpec {
     import sp.implicits._
     // y = x^3 is nonlinear but monotone: Pearson < 1, Spearman exactly 1;
     // z reverses x; t has a tie pair
-    val aligned = Seq(
-      (1.0, 1.0, 9.0, 5.0), (2.0, 8.0, 8.0, 5.0),
-      (3.0, 27.0, 7.0, 6.0), (4.0, 64.0, 6.0, 7.0))
-      .toDF("x", "y", "z", "t")
-    val got = TimeSeries.spearmanMatrix(aligned, Seq("x", "y", "z", "t"))
-      .collect()
-      .map(r => ((r.getAs[String]("k1"), r.getAs[String]("k2")),
-        Option(r.getAs[Any]("corr")))).toMap
-    assert(got(("x", "y")) == Some(1.0))
-    assert(got(("x", "z")) == Some(-1.0))
-    // t's ranks: {1.5, 1.5, 3, 4} vs x's {1,2,3,4} -> corr < 1 but high
-    val xt = got(("x", "t")).get.asInstanceOf[Double]
-    assert(xt > 0.9 && xt < 1.0, xt.toString)
-    // Pearson on x-y is NOT 1 (that's the point of Spearman)
-    val pearson = TimeSeries.correlationMatrix(aligned, Seq("x", "y"))
-      .collect().head.getAs[Double]("corr")
-    assert(pearson < 1.0)
+    // plain names, then EPICS names whose record field holds a `.`
+    Seq(Seq("x", "y", "z", "t"),
+        Seq("13BMA:m1.VAL", "13BMA:m2.VAL", "13BMA:m3.VAL", "13BMA:m4.VAL")).foreach { names =>
+      val Seq(x, y, z, t) = names
+      val aligned = Seq(
+        (1.0, 1.0, 9.0, 5.0), (2.0, 8.0, 8.0, 5.0),
+        (3.0, 27.0, 7.0, 6.0), (4.0, 64.0, 6.0, 7.0))
+        .toDF(names: _*)
+      val got = TimeSeries.spearmanMatrix(aligned, names)
+        .collect()
+        .map(r => ((r.getAs[String]("k1"), r.getAs[String]("k2")),
+          Option(r.getAs[Any]("corr")))).toMap
+      assert(got((x, y)) == Some(1.0))
+      assert(got((x, z)) == Some(-1.0))
+      // t's ranks: {1.5, 1.5, 3, 4} vs x's {1,2,3,4} -> corr < 1 but high
+      val xt = got((x, t)).get.asInstanceOf[Double]
+      assert(xt > 0.9 && xt < 1.0, xt.toString)
+      // Pearson on x-y is NOT 1 (that's the point of Spearman)
+      val pearson = TimeSeries.correlationMatrix(aligned, Seq(x, y))
+        .collect().head.getAs[Double]("corr")
+      assert(pearson < 1.0)
+    }
   }
 
   test("seasonalProfile: integer hour/dow cells (epoch day 0 is a Thursday)") {
@@ -676,21 +687,26 @@ class TimeSeriesSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     // x ascends, y = 2x+1 (corr +1), z descends (corr -1 vs x), c constant
-    val aligned = Seq(
-      (1.0, 3.0, 9.0, 5.0), (2.0, 5.0, 8.0, 5.0), (3.0, 7.0, 7.0, 5.0),
-      (4.0, 9.0, 6.0, 5.0))
-      .toDF("x", "y", "z", "c")
-    val got = TimeSeries.correlationMatrix(aligned, Seq("x", "y", "z", "c"))
-      .collect()
-      .map(r => ((r.getAs[String]("k1"), r.getAs[String]("k2")),
-        (r.getAs[Long]("n"), Option(r.getAs[Any]("corr")))))
-      .toMap
-    assert(got(("x", "y")) == ((4L, Some(1.0))))
-    assert(got(("x", "z")) == ((4L, Some(-1.0))))
-    assert(got(("y", "z")) == ((4L, Some(-1.0))))
-    // constant column: zero variance -> corr undefined (null), not NaN
-    assert(got(("x", "c")) == ((4L, None)))
-    assert(got.size == 6)
+    // plain names, then EPICS names whose record field holds a `.`
+    Seq(Seq("x", "y", "z", "c"),
+        Seq("13BMA:m1.VAL", "13BMA:m1.RBV", "13BMA:m2.VAL", "13BMA:m2.DMOV")).foreach { names =>
+      val Seq(x, y, z, c) = names
+      val aligned = Seq(
+        (1.0, 3.0, 9.0, 5.0), (2.0, 5.0, 8.0, 5.0), (3.0, 7.0, 7.0, 5.0),
+        (4.0, 9.0, 6.0, 5.0))
+        .toDF(names: _*)
+      val got = TimeSeries.correlationMatrix(aligned, names)
+        .collect()
+        .map(r => ((r.getAs[String]("k1"), r.getAs[String]("k2")),
+          (r.getAs[Long]("n"), Option(r.getAs[Any]("corr")))))
+        .toMap
+      assert(got((x, y)) == ((4L, Some(1.0))))
+      assert(got((x, z)) == ((4L, Some(-1.0))))
+      assert(got((y, z)) == ((4L, Some(-1.0))))
+      // constant column: zero variance -> corr undefined (null), not NaN
+      assert(got((x, c)) == ((4L, None)))
+      assert(got.size == 6)
+    }
   }
 
   test("winsorize: fences, clip counts and winsorized moments by hand") {

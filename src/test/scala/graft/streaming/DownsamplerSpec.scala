@@ -161,22 +161,36 @@ class DownsamplerSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = sp.sqlContext
     val events = (0 until 50).map(i => RawSample("pvS", i * 2 * S, (i * 1.0).toString, ""))
-    val input = MemoryStream[RawSample]
-    // timeouts disabled: limbo flushes only on arrival, keeping the run
-    // deterministic vs the batch twin (and processAllAvailable terminating)
-    val q = streaming(input.toDS(), Map.empty, timeoutMs = 0L)
-      .writeStream.format("memory").queryName("down_out").outputMode("append").start()
-    try {
-      input.addData(events.take(20))
-      q.processAllAvailable()
-      input.addData(events.drop(20))
-      q.processAllAvailable()
-      val got = sp.table("down_out").as[Sample].collect().toVector.sortBy(_.tsUs)
-      // batch twin on the same history; streaming keeps the tail event in
-      // limbo (no end-of-history flush), so compare modulo that tail
-      val want = replayKey(events, DefaultConfig).sortBy(_.tsUs)
-      assert(got == want.filter(s => got.map(_.tsUs).contains(s.tsUs)))
-      assert(got.size >= want.size - 1)
-    } finally q.stop()
+    // equal timestamps inside the deadtime of an emitted event: the one
+    // sorted last wins the limbo. UTF-16 order puts "😀" before "｡", UTF-8
+    // byte order (Spark's, Utf8Order) puts it after; arriving in UTF-16
+    // order, "😀" wins only if the streaming sort uses Spark's order
+    val ties = Seq(
+      Seq(RawSample("pvT", 0L, "1.0", "")),
+      Seq(RawSample("pvT", 2 * S, "😀", ""), RawSample("pvT", 2 * S, "｡", "")),
+      Seq(RawSample("pvT", 10 * S, "3.0", "")))
+    Seq(Seq(events.take(20), events.drop(20)), ties).zipWithIndex.foreach { case (batches, n) =>
+      val input = MemoryStream[RawSample]
+      // timeouts disabled: limbo flushes only on arrival, keeping the run
+      // deterministic vs the batch twin (and processAllAvailable terminating)
+      val q = streaming(input.toDS(), Map.empty, timeoutMs = 0L)
+        .writeStream.format("memory").queryName(s"down_out$n").outputMode("append").start()
+      try {
+        batches.foreach { b =>
+          input.addData(b)
+          q.processAllAvailable()
+        }
+        val got = sp.table(s"down_out$n").as[Sample].collect().toVector.sortBy(_.tsUs)
+        // batch twin on the same history, in the batch replay's order;
+        // streaming keeps the tail event in limbo (no end-of-history
+        // flush), so compare modulo that tail
+        val want = replayKey(batches.flatten.sortBy(e => (e.tsUs, e.value))(EventOrder),
+          DefaultConfig).sortBy(_.tsUs)
+        assert(got == want.filter(s => got.map(_.tsUs).contains(s.tsUs)))
+        assert(got.size >= want.size - 1)
+      } finally q.stop()
+    }
+    assert(sp.table("down_out1").as[Sample].collect().exists(_.value == "😀"),
+      "equal-timestamp tie-break must follow Spark's UTF-8 binary order")
   }
 }
