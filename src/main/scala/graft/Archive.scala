@@ -18,8 +18,11 @@ class Archive(samples: DataFrame, cache: Option[DataFrame] = None) {
   /** Q3 `get_data` (archiver.py:131-223): rows in `[t0, t1)` plus the most
     * recent row before `t0`, optionally extended with the live cached value
     * when the range ends "now" (archiver.py:212-218's with_current) —
-    * a single declarative pipeline; run/bucket pruning happens in the scan
-    * when `samples` comes from the partitioned store.
+    * a single declarative pipeline. Over a [[graft.store.SampleStore]]
+    * frame the scan reads one bucket per run (`BucketPruneRule` turns the
+    * pvname literal into a bucket partition filter) and skips row groups
+    * by their `tsUs` stats; runs are not pruned, because nothing here
+    * states a run predicate ([[graft.store.SampleStore.scanPv]] does).
     *
     * `withCurrent = None` mirrors the reference's auto-enable
     * (archiver.py:139-146): the cache row joins in whenever `t1Us` lands

@@ -22,9 +22,9 @@ object Patterns {
     * the level's surviving row count. The level counts are paid by the
     * mine itself now (they size the kernel/checkpoint widths); tracing
     * only records them, plus one extra cached count of the final
-    * checkpoint. Opt-in (`traced = true`); Bench opts in so the trace
-    * rides BENCH_FULL's `probe_trace`. Diagnostics only; single-threaded
-    * harness contract as with Graph's traces. */
+    * checkpoint (level 100 + maxSize). Opt-in (`traced = true`); Bench
+    * opts in so the trace rides BENCH_FULL's `probe_trace`. Diagnostics
+    * only; single-threaded harness contract as with Graph's traces. */
   @volatile var lastMineTrace: Seq[Graph.RoundTrace] = Nil
 
   /** Code width for packed itemset keys: frequent items are coded by their
@@ -223,8 +223,7 @@ object Patterns {
     val nL1 = l1.count()
     mark(1, nL1)
     // checkpoint width for the threshold-bounded result union, derived
-    // from the SUMMED level counts (L3 is Apriori-bounded by its sub-pairs
-    // and rides the same width): 1 partition for the usual hundreds of
+    // from the SUMMED level counts: 1 partition for the usual hundreds of
     // rows, more only when the counts say so
     def outW(levels: Long): Int = SizeGates.loopPartitions(1L + levels)
     // an EMPTY corpus yields an empty result (not a support=0 row whose
@@ -391,22 +390,25 @@ object Patterns {
       .groupBy(col("tk")).agg(sum(col("c")).as("support"))
       .join(broadcast(nb))
       .where(col("support") >= col("__ms"))
+      .persist() // threshold-bounded; counted, then read by the output
+    persisted += l3
+    val nL3 = l3.count() // a dense corpus can have far more triples than pairs
+    mark(3, nL3)
     val out3 = l3.join(broadcast(freq1)).select(
       concat_ws("|",
         element_at(col("__f1"), expr(s"CAST(tk DIV ${W * W} AS INT)")),
         element_at(col("__f1"), expr(s"CAST((tk DIV $W) % $W AS INT)")),
         element_at(col("__f1"), expr(s"CAST(tk % $W AS INT)"))).as("items"),
       lit(3L).as("size"), col("support"), ppm.as("support_ppm"))
-    // level 3 (the L3 mine + final union) materializes inside this
-    // checkpoint; its trace row doubles as the final-assembly mark.
     // Width from the measured level counts (outW): the result is
     // threshold-bounded, so this is 1 for the usual hundreds of rows —
     // the union of the three level caches otherwise checkpoints at the
     // SUM of their widths (66 tasks for ~330 rows in the r14 probe,
     // ~0.3 s of pure stage overhead) — but a low-threshold large-
-    // vocabulary mine no longer serializes into one task (r14 ADVICE)
-    val r = out12.unionByName(out3).coalesce(outW(nL1 + nL2)).localCheckpoint()
-    if (traced) mark(3, r.count())
+    // vocabulary mine, or a dense one whose triples outnumber its pairs,
+    // does not serialize into one task
+    val r = out12.unionByName(out3).coalesce(outW(nL1 + nL2 + nL3)).localCheckpoint()
+    if (traced) mark(3 + 100, r.count()) // final assembly, level tag 103
     if (traced) lastMineTrace = trace.result()
     releaseAll()
     r

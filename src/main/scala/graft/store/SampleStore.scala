@@ -1,6 +1,8 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 import graft.functions.PvFunctions
@@ -11,14 +13,27 @@ import graft.functions.PvFunctions
   * its zarr read-optimized copies (archiver.py:542-608).
   *
   * Layout: `partitionBy(run, bucket)`, rows sorted by (pvname, time) within
-  * each file. At 100 TB this gives:
-  *  - run (time) pruning for range queries — the `dbs_for_time` elimination
-  *    (archiver.py:104-110) becomes Catalyst partition pruning;
-  *  - bucket pruning for single-PV lookups — `bucket = hashname(pv)` is
-  *    computed driver-side so the scan touches 1/128 of each run, exactly
-  *    the reference's ">99% of data eliminated" property (doc/setup.rst:236);
-  *  - parquet min/max row-group stats on `time` within a file (rows sorted),
-  *    so even intra-partition scans skip pages.
+  * each file. What prunes what:
+  *  - run (time) pruning — the `dbs_for_time` elimination
+  *    (archiver.py:104-110) — happens only where a query states a run
+  *    predicate, as [[scanPv]] does; a `tsUs` range alone keeps every run;
+  *  - bucket pruning for single-PV lookups: [[scanPv]] computes
+  *    `bucket = hashname(pv)` driver-side, and `BucketPruneRule` adds the
+  *    same conjunct to any `pvname = '<literal>'` filter (so `Archive`
+  *    gets it), and the scan touches 1/128 of each run, the reference's
+  *    ">99% of data eliminated" property (doc/setup.rst:236);
+  *  - parquet min/max row-group stats on `tsUs` within a file (rows
+  *    sorted), so even intra-partition scans skip row groups.
+  *
+  * [[read]] lists through a [[StoreFileIndex]]: the root (the run
+  * directories) and one file's footer when it is called, then at planning
+  * time only the kept runs' bucket directories and the kept buckets'
+  * files, all on the driver with no Spark job. Each listing is kept for
+  * the life of the returned frame: re-executing it sees the same snapshot
+  * per directory until `refresh()`, and a new `read` sees new appends.
+  * Measured on the `query` benchmark (4 cores, traced): `read` took
+  * 1.5–1.6 s of a 1.8 s `get_data` as `spark.read.parquet`, in listing
+  * and schema-inference jobs, and takes 6–7 ms now.
   */
 object SampleStore {
 
@@ -66,7 +81,11 @@ object SampleStore {
       .partitionBy("run", "bucket")
       .parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val (index, dataSchema) = StoreFileIndex(spark, path)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      bucketSpec = None, new ParquetFileFormat(), options = Map.empty)(spark))
+  }
 
   /** S3's CO-LOCATED flavor: persist as a `bucketBy(pvname)` TABLE so every
     * downstream per-PV join/aggregation between same-bucketed tables is

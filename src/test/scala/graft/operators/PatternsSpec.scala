@@ -78,6 +78,40 @@ class PatternsSpec extends SparkSpec {
     assert(got == Set(("", 10L), ("a", 7L), ("b", 6L), ("c", 5L), ("d", 1L)))
   }
 
+  test("frequentItemsets: a dense corpus sizes the final checkpoint by its triples too") {
+    val sp = spark
+    import sp.implicits._
+    // two identical 230-item baskets at 100% support: every item, pair and
+    // triple is frequent, and the 2,001,460 triples outnumber the
+    // 230 + 26,335 items and pairs
+    val n = 230
+    val dense = (for (b <- 1L to 2L; i <- 0 until n) yield (b, f"i$i%03d")).toDF("b", "i")
+    // the planned width is the final checkpoint's Coalesce; the union under
+    // it may have fewer partitions, so it is read from the plan
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = if (name == "localCheckpoint") checkpoints.add(qe.executedPlan.toString)
+      override def onFailure(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    sp.listenerManager.register(listener)
+    val sets = try {
+      val r = Patterns.frequentItemsets(dense, "b", "i", minSupportPpm = 1000000L, maxSize = 3)
+      org.apache.spark.GraftSparkTestHooks.waitListenerBus(sp.sparkContext)
+      r
+    } finally sp.listenerManager.unregister(listener)
+    val bySize = sets.groupBy("size").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (l1, l2, l3) = (n.toLong, n.toLong * (n - 1) / 2, n.toLong * (n - 1) * (n - 2) / 6)
+    assert(bySize == Map(0L -> 1L, 1L -> l1, 2L -> l2, 3L -> l3))
+    assert(l3 > l1 + l2)
+    // the width counts L3: the levels without it fit one partition
+    assert(SizeGates.loopPartitions(1L + l1 + l2) == 1)
+    assert(SizeGates.loopPartitions(1L + l1 + l2 + l3) == 2)
+    assert(checkpoints.size == 1)
+    assert(checkpoints.peek().contains("Coalesce 2"), checkpoints.peek())
+  }
+
   test("associationRules: directional confidence, integer lift vs independence") {
     val got = Patterns.associationRules(baskets, "b", "i",
         minSupportPpm = 300000L)

@@ -160,11 +160,14 @@ class GraftPlansSpec extends SparkSpec {
     }.toDF("pvname", "tsUs", "value", "cvalue")
     graft.store.SampleStore.write(
       graft.store.SampleStore.normalize(raw, runWidthUs = 1L << 60), dir)
-    // a PLAIN pvname filter — no manual bucket math — must scan 1 bucket dir
-    val q = sp.read.parquet(dir).where(col("pvname") === "T:pv1.VAL")
-    val files = q.select(input_file_name()).distinct().collect().map(_.getString(0))
-    val b = PvFunctions.hashname("T:pv1.VAL")
-    assert(files.nonEmpty && files.forall(_.contains(s"bucket=$b")), files.mkString("\n"))
-    assert(q.count() == 50)
+    // a PLAIN pvname filter — no manual bucket math — must scan 1 bucket
+    // dir, through either reader of the store
+    Seq(sp.read.parquet(dir), graft.store.SampleStore.read(sp, dir)).foreach { store =>
+      val q = store.where(col("pvname") === "T:pv1.VAL")
+      val files = q.select(input_file_name()).distinct().collect().map(_.getString(0))
+      val b = PvFunctions.hashname("T:pv1.VAL")
+      assert(files.nonEmpty && files.forall(_.contains(s"bucket=$b")), files.mkString("\n"))
+      assert(q.count() == 50)
+    }
   }
 }

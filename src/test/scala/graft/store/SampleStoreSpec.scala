@@ -2,6 +2,11 @@ package graft.store
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -11,6 +16,40 @@ class SampleStoreSpec extends SparkSpec {
 
   private val S = 1000000L
   private val runWidth = 100 * S
+
+  private def storeIndex(df: DataFrame): StoreFileIndex =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.get.asInstanceOf[StoreFileIndex]
+
+  /** Runs `body` and returns the jobs it launched, each as its description
+    * plus its stages' call-site details. The listener bus is drained
+    * by waiting for a marker job, which runs after `body`. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(js.properties.getProperty("spark.job.description")).getOrElse("") +
+            " " + js.stageInfos.map(_.details).mkString(" "))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      val r = body
+      sc.setJobDescription("graft-marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_.startsWith("graft-marker")) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      (r, seen.asScala.toSeq.filterNot(_.startsWith("graft-marker")))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("normalize adds dvalue/cvalue duals, bucket, run") {
     val sp = spark
@@ -119,6 +158,81 @@ class SampleStoreSpec extends SparkSpec {
     val scanned = got.select(input_file_name()).distinct().collect().map(_.getString(0))
     assert(scanned.nonEmpty && scanned.forall(_.contains(s"bucket=$b")))
     assert(scanned.forall(f => (10 to 29).exists(r => f.contains(s"run=$r"))))
+
+    // and the reader LISTED no more than that: past the schema probe (the
+    // first run and its first bucket), only the runs the run predicate
+    // keeps (10..30) and the pv's bucket directory in each
+    val probe = storeIndex(SampleStore.read(sp, dir)).listedDirs
+    val listed = storeIndex(got).listedDirs -- probe
+    val keptRuns = (10 to 30).map(r => s"run=$r").toSet
+    assert(listed.exists(_.getName == s"bucket=$b"), listed)
+    assert(listed.forall { d =>
+      if (d.getName.startsWith("bucket=")) d.getName == s"bucket=$b" && keptRuns(d.getParent.getName)
+      else keptRuns(d.getName)
+    }, listed.map(_.toString).toSeq.sorted.mkString("\n"))
+  }
+
+  test("read launches no Spark job, and a one-PV getData lists and infers nothing") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft_store_jobs").toString
+    // 400 PVs over 2 runs: each run has far more than Spark's 32-path
+    // parallel-discovery threshold of populated bucket directories
+    val raw = (0 until 1600).map { i =>
+      (s"J:pv${i % 400}.VAL", i.toLong * 125000L, i.toString, i.toString)
+    }.toDF("pvname", "tsUs", "value", "cvalue")
+    SampleStore.write(SampleStore.normalize(raw, runWidth), dir)
+    assert(new java.io.File(dir, "run=0").list().count(_.startsWith("bucket=")) > 32)
+
+    val (read, readJobs) = jobsOf(SampleStore.read(sp, dir))
+    assert(readJobs.isEmpty, readJobs.mkString("\n"))
+    val (rows, queryJobs) = jobsOf(
+      new graft.Archive(read).getData("J:pv7.VAL", 0L, 200 * S).collect())
+    assert(rows.map(_.getAs[Long]("tsUs")).toSeq == (7 until 1600 by 400).map(_ * 125000L))
+    // the file reader's driver-side jobs: the leaf-file listing (its
+    // description) and the footer schema merge (a DataFrameReader call site)
+    val listingOrInference = queryJobs.filter(j =>
+      j.startsWith("Listing leaf files") || j.contains("DataFrameReader"))
+    assert(queryJobs.nonEmpty && listingOrInference.isEmpty, queryJobs.mkString("\n"))
+  }
+
+  test("read matches spark.read.parquet: schema, partition types, rows and size") {
+    val sp = spark
+    import sp.implicits._
+    def raw(ts: Seq[Long]) = ts.zipWithIndex.map { case (t, i) =>
+      (s"P:pv${i % 7}.VAL", t, s"${i * 0.5}", s"${i * 0.5}")
+    }.toDF("pvname", "tsUs", "value", "cvalue")
+    def same(dir: String, runType: org.apache.spark.sql.types.DataType): Unit = {
+      val ours = SampleStore.read(sp, dir)
+      val theirs = sp.read.parquet(dir)
+      assert(ours.schema == theirs.schema)
+      assert(ours.schema("run").dataType == runType)
+      assert(ours.schema("bucket").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(ours.count() == theirs.count())
+      assert(ours.exceptAll(theirs).isEmpty && theirs.exceptAll(ours).isEmpty)
+      assert(ours.queryExecution.optimizedPlan.stats.sizeInBytes ==
+        theirs.queryExecution.optimizedPlan.stats.sizeInBytes)
+    }
+    // ingest's per-batch marker files (`_batches/<id>`) beside the runs
+    def markers(dir: String): Unit = {
+      new java.io.File(dir, "_batches").mkdirs()
+      Seq("0", "1").foreach(id => new java.io.File(dir, s"_batches/$id").createNewFile())
+    }
+    val dir = Files.createTempDirectory("graft_store_parity").toString
+    SampleStore.write(SampleStore.normalize(raw((0 until 300).map(_ * 3 * S)), runWidth), dir)
+    markers(dir)
+    same(dir, org.apache.spark.sql.types.IntegerType)
+    // runWidthUs = 1: run ids are the timestamps, past Int.MaxValue
+    val wide = Files.createTempDirectory("graft_store_parity_long").toString
+    SampleStore.write(SampleStore.normalize(
+      raw(Seq(5L, 1000L, Int.MaxValue.toLong + 1, 3L * Int.MaxValue)), runWidthUs = 1L), wide)
+    same(wide, org.apache.spark.sql.types.LongType)
+    // a store holding only markers fails the same way
+    val empty = Files.createTempDirectory("graft_store_parity_empty").toString
+    markers(empty)
+    val ours = intercept[org.apache.spark.sql.AnalysisException](SampleStore.read(sp, empty))
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](sp.read.parquet(empty))
+    assert(ours.getCondition == theirs.getCondition, ours.getMessage)
   }
 
   test("writeBucketed: joins between same-bucketed tables run shuffle-free") {
