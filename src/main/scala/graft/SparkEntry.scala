@@ -327,6 +327,19 @@ object SparkEntry {
     expr("CAST((ts_us DIV 86400000000L) % 7 AS DOUBLE)"))
   private final val RUN_WEEK_US = 604800000000L // 7 days in micros
 
+  /** The reference checkout's own files that three queries read (the
+    * production cache dump, a PV-list file and a status-page template;
+    * FIXTURES.md §1), by query name. The repo does not hold them; the
+    * whole-surface specs leave out a query whose file is not readable.
+    */
+  val referenceInputs: Map[String, String] = {
+    val ref = "/root/reference"
+    Map(
+      "q_cache_import" -> s"$ref/sql/pvlist.txt",
+      "q_pvlist_source" -> s"$ref/test/GSE__PVList.txt",
+      "q_template_parse" -> s"$ref/templates/GSE_page1.txt")
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_get_data")(spark, "/root/testdata/sf0.001")
@@ -1170,7 +1183,7 @@ object SparkEntry {
     // escape=\) — two parsers agreeing field-exactly on the reference's
     // own data-at-rest is the migration-path correctness gate ---------------
     "q_cache_import" -> ((s, _) => {
-      graft.sources.CacheDump.load(s, "/root/reference/sql/pvlist.txt")
+      graft.sources.CacheDump.load(s, referenceInputs("q_cache_import"))
         .orderBy(col("id"))
     }),
 
@@ -1181,7 +1194,7 @@ object SparkEntry {
     // the parsed pvname stream — DuckDB re-parses the same file with its
     // own regexp machinery -------------------------------------------------
     "q_pvlist_source" -> ((s, _) => {
-      graft.sources.PvListFile.pvNames(s, "/root/reference/test/GSE__PVList.txt")
+      graft.sources.PvListFile.pvNames(s, referenceInputs("q_pvlist_source"))
         .select(col("pvname")).orderBy(col("pvname"))
     }),
 
@@ -1200,7 +1213,7 @@ object SparkEntry {
     // preserves insertion order) and mirrors the fill with
     // last_value IGNORE NULLS --------------------------------------------
     "q_template_parse" -> ((s, _) => {
-      graft.sources.PvListFile.render(s, "/root/reference/templates/GSE_page1.txt")
+      graft.sources.PvListFile.render(s, referenceInputs("q_template_parse"))
         .select(col("kind"),
           coalesce(col("section"), lit("")).as("section"),
           coalesce(concat_ws(",", transform(col("pvs"),
@@ -6029,14 +6042,10 @@ object SparkEntry {
          |WHERE event_type = 'signup' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $T1
          |ORDER BY ts_us, event_id""".stripMargin,
 
-    // cache-dump import: DuckDB parses the reference's production dump
-    // INDEPENDENTLY (read_csv with quote=''' escape=\ handles the
-    // embedded newlines and \' escapes; '(' and ');' shells stripped in
-    // SQL) — a hash match means both parsers recover identical fields
     "q_template_parse" ->
       s"""WITH raw AS (
          |  SELECT row_number() OVER () AS rid, trim(line) AS body
-         |  FROM read_csv('/root/reference/templates/GSE_page1.txt', delim='\t',
+         |  FROM read_csv('${referenceInputs("q_template_parse")}', delim='\t',
          |                header=false, quote='', parallel=false,
          |                columns={'line': 'VARCHAR'})),
          |l AS (
@@ -6093,7 +6102,7 @@ object SparkEntry {
     "q_pvlist_source" ->
       s"""WITH l AS (
          |  SELECT trim(regexp_replace(line, '#.*$$', '')) AS body
-         |  FROM read_csv('/root/reference/test/GSE__PVList.txt', delim='\t',
+         |  FROM read_csv('${referenceInputs("q_pvlist_source")}', delim='\t',
          |                header=false, quote='', columns={'line': 'VARCHAR'})),
          |x AS (
          |  SELECT unnest(regexp_split_to_array(body, '[,\\s]+')) AS pvname
@@ -6104,12 +6113,16 @@ object SparkEntry {
       s"""SELECT doc_id, trim(regexp_replace(text, '[;#].*', '', 's')) AS clean
          |FROM documents ORDER BY doc_id""".stripMargin,
 
+    // cache-dump import: DuckDB parses the reference's production dump
+    // INDEPENDENTLY (read_csv with quote=''' escape=\ handles the
+    // embedded newlines and \' escapes; '(' and ');' shells stripped in
+    // SQL) — a hash match means both parsers recover identical fields
     "q_cache_import" ->
       s"""SELECT CAST(replace(column0, '(', '') AS BIGINT) AS id,
          |       column1 AS pvname, column2 AS type, column3 AS value,
          |       column4 AS cvalue,
          |       CAST(rtrim(column5, ');') AS BIGINT) AS ts
-         |FROM read_csv('/root/reference/sql/pvlist.txt', delim=',',
+         |FROM read_csv('${referenceInputs("q_cache_import")}', delim=',',
          |              quote='''', escape='\\', header=false,
          |              allow_quoted_nulls=false,
          |              columns={'column0': 'VARCHAR', 'column1': 'VARCHAR',

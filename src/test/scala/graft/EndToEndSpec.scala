@@ -72,13 +72,16 @@ class EndToEndSpec extends SparkSpec {
     // every expected row hand-derived from the downsampler semantics
     // (archiver.py:362-463). The imported-rows DuckDB hash gate is the
     // q_cache_import / q_run_import CORRECTNESS rows; this test is the
-    // composition seam those per-loader oracles can't see.
+    // composition seam those per-loader oracles can't see. The repo does
+    // not hold the production dump: the drill is cancelled without it.
+    val refDumpPath = SparkEntry.referenceInputs("q_cache_import")
+    assumeReadable(refDumpPath)
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
 
     // 1) the reference's ACTUAL production cache dump → latest-value frame
-    val cacheDump = sources.CacheDump.load(sp, "/root/reference/sql/pvlist.txt")
+    val cacheDump = sources.CacheDump.load(sp, refDumpPath)
     assert(cacheDump.count() == 3671L)
 
     // 2) a synthetic `pvarch save` run dump: pv dimension + data shards +

@@ -26,7 +26,7 @@ class JitterSpec extends SparkSpec {
   test("every query is bit-stable under shuffle.partitions 1 vs 32") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val failures = runnableQueries().flatMap { case (name, fn) =>
         try {
           def run(parts: Int): Seq[String] = {
             spark.conf.set("spark.sql.shuffle.partitions", parts)

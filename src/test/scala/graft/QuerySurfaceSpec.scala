@@ -14,13 +14,16 @@ package graft
   *
   * sf0.001 keeps the full sweep cheap; correctness of the VALUES stays the
   * oracle gate's job — this spec only demands "runs and returns a schema".
+  * A query whose [[SparkEntry.referenceInputs]] file is not readable is
+  * not run; an `info` line names it (the same rule holds in the other
+  * whole-surface sweeps).
   */
 class QuerySurfaceSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
   test("every query on the surface analyzes, plans, and executes on sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val failures = runnableQueries().flatMap { case (name, fn) =>
       try {
         val df = fn(spark, dir)
         df.queryExecution.executedPlan // force analysis + physical planning
@@ -39,5 +42,16 @@ class QuerySurfaceSpec extends SparkSpec {
       SparkEntry.dataDependentOracles(spark, dir).keySet
     assert((q -- o).isEmpty, s"queries with no oracle: ${(q -- o).toSeq.sorted.mkString(", ")}")
     assert((o -- q).isEmpty, s"oracles with no query: ${(o -- q).toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every reference fixture is read by a registered query and its oracle") {
+    // the sweeps leave out a query whose fixture is missing: a stale entry
+    // must not exempt a query that no longer reads the file
+    val q = SparkEntry.queries.keySet
+    SparkEntry.referenceInputs.toSeq.sorted.foreach { case (name, path) =>
+      assert(q.contains(name), s"referenceInputs names no registered query: $name")
+      assert(SparkEntry.oracleSql.get(name).exists(_.contains(s"read_csv('$path'")),
+        s"$name: its oracle does not read $path")
+    }
   }
 }
