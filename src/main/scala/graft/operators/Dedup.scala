@@ -950,14 +950,13 @@ object Dedup {
     * the same content), so rounds stay single-digit at any corpus size; the
     * pair list is the SMALL output of the near-dup stage, not the corpus.
     *
-    * Like [[graft.operators.TimeSeries.decimateToCap]], the driver loop is
-    * control flow only (one convergence count per round — mirroring the
-    * reference's own iterate-until-fits loop); all data movement stays in
-    * distributed joins. Each round's labels are `localCheckpoint`ed to
-    * TRUNCATE lineage — without it the logical plan nests the previous
-    * round's plan on both sides of the join and grows exponentially
-    * (round ~12 of a chain graph OOMs the driver just stringifying the
-    * plan). NOT a lazy plan — call it at pipeline-action time.
+    * The driver loop is control flow only (one convergence count per
+    * round); all data movement stays in distributed joins. Each round's
+    * labels are `localCheckpoint`ed to TRUNCATE lineage — without it the
+    * logical plan nests the previous round's plan on both sides of the join
+    * and grows exponentially (round ~12 of a chain graph OOMs the driver
+    * just stringifying the plan). NOT a lazy plan — call it at
+    * pipeline-action time.
     */
   def connectedComponents(pairs: DataFrame, a: String, b: String,
       maxIters: Int = 50, maxDriverPairs: Long = 2000000L): DataFrame = {
@@ -1065,9 +1064,8 @@ object Dedup {
         s"connectedComponents did not converge in $maxIters rounds " +
           s"($changed labels still moving) — raise maxIters for long-chain graphs")
     }
-    // the RESULT keeps its one materialized label table (same contract as
-    // decimateToCap's returned cache); the ContextCleaner frees it once the
-    // frame is unreferenced
+    // the RESULT keeps its one materialized label table; the ContextCleaner
+    // frees it once the frame is unreferenced
     labels.select(col("node").as("doc"), col("comp").as("component"))
   }
 
@@ -1385,12 +1383,12 @@ object Dedup {
     * regardless of skew — the right plan when near-dups share prefixes
     * (titles, URLs, names) rather than shingle statistics.
     *
-    * Scale shape: the global rank is the [[graft.operators.TimeSeries
-    * .rowNumberChunked]] construction over an ordinal first-character chunk
-    * (per-chunk windows + a broadcast control-plane offsets frame — no
-    * single-partition sort); the neighbor "join" is each row EXPLODED into
-    * its `w−1` following rank slots and equi-joined — never a range join,
-    * never all-pairs.
+    * Scale shape: the global rank is a chunked row number over an ordinal
+    * first-character chunk (per-chunk windows plus each chunk's offset, the
+    * running count of earlier chunks, from a broadcast control-plane
+    * frame — no single-partition sort); the neighbor "join" is each row
+    * EXPLODED into its `w−1` following rank slots and equi-joined — never a
+    * range join, never all-pairs.
     *
     * Output: `(d1, d2, jaccard)` for pairs at or above `threshold`,
     * `d1 < d2`.

@@ -82,10 +82,12 @@ object Export {
       .orderBy(col(tsUs))
 
   /** Q4 — engine side of plot assembly (webapp.py:396-409 +
-    * web_utils.py:177-237): cull the series (Q1 decimation — the driver
-    * loop to the 30k cap is [[TimeSeries.decimateToCap]]), then emit the
-    * plot frame: `x` = ISO timestamps, `y` = numeric values. Layout, enum
-    * tick labels, and colors are presentation-layer per SURVEY §2.10.
+    * web_utils.py:177-237): cull the series with one Q1 pass
+    * ([[TimeSeries.decimate]]; [[TimeSeries.decimateToCap]] repeats it up
+    * to the 30k cap), then emit the plot frame: `x` = ISO timestamps,
+    * `y` = numeric values, in `(tsUs, tieBreak)` order, as one partition.
+    * Layout, enum tick labels, and colors are presentation-layer per
+    * SURVEY §2.10.
     */
   def plotTrace(
       df: DataFrame,
@@ -100,7 +102,6 @@ object Export {
         col(tieBreak),
         PvFunctions.ts2iso(col(tsUs)).as("x"),
         col(value).cast("double").as("y"))
-      .orderBy(col(tsUs), col(tieBreak))
 
   /** Largest-triangle plot decimation, the fixed-anchor (parallelizable)
     * take on LTTB — the modern alternative to the reference's

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,10 +17,10 @@ import graft.streaming.{KeyedFold, Smoothing}
   * filters and projections reach the parquet scan, per-key work shuffles once
   * on the key, and no driver-side loop touches data.
   *
-  * Scale notes are on each operator; the single intentionally
-  * narrow-parallelism spot is [[locfAlign]]'s final global ordering, which in
-  * practice runs over a bounded plot window (the reference caps plot payloads
-  * at 30k points — web_utils.py:131-161).
+  * Scale notes are on each operator; the intentionally narrow-parallelism
+  * spots are [[locfAlign]]'s final global ordering and [[decimateToCap]]'s
+  * one-task cull, both of which in practice run over a bounded plot window
+  * (the reference caps plot payloads at 30k points — web_utils.py:131-161).
   */
 object TimeSeries {
 
@@ -387,50 +387,12 @@ object TimeSeries {
       .orderBy(col(ts))
   }
 
-  /** Distributed global row number over `(ts, tieBreak)` — identical output
-    * to `row_number().over(Window.orderBy(ts, tieBreak))` but never moves the
-    * data to one partition. Two-phase: number within fixed-width time chunks
-    * (parallel per chunk), then offset each chunk by the cumulative count of
-    * earlier chunks. The chunk key `ts DIV chunkUs` is monotone in `ts`, so
-    * chunk-major order IS the global order, and ties (equal ts) land in the
-    * same chunk; null-ts rows form their own (first-ordered) chunk group,
-    * matching a plain window's nulls-first order.
-    *
-    * The prefix sum runs as a window over the one-row-per-chunk counts frame
-    * — control-plane-sized by construction (timeRange/chunkUs rows), lazy,
-    * and part of the same plan, so the operator composes and never runs
-    * side jobs at DataFrame-construction time.
-    */
-  def rowNumberChunked(
-      df: DataFrame,
-      ts: String,
-      tieBreak: String,
-      outCol: String,
-      chunkUs: Long): DataFrame = {
-    val withChunk = df.withColumn("__chunk", expr(s"$ts DIV ${chunkUs}L"))
-    val counts = withChunk.groupBy(col("__chunk")).agg(count(lit(1)).as("__cnt"))
-    val wOff = Window.orderBy(col("__chunk")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-      .select(col("__chunk"), col("__off"))
-    val wIn = Window.partitionBy(col("__chunk")).orderBy(col(ts), col(tieBreak))
-    // null-safe join key: a null-ts chunk group must keep its offset row
-    // (a plain window orders nulls first; an equi-join would drop them)
-    withChunk
-      .join(broadcast(offsets.withColumnRenamed("__chunk", "__ochunk")),
-        col("__chunk") <=> col("__ochunk"))
-      .withColumn(outCol, row_number().over(wIn).cast("long") + col("__off"))
-      .drop("__chunk", "__ochunk", "__off")
-  }
-
   /** Distributed global row number over an ARBITRARY sort key — identical
     * output to `row_number().over(Window.orderBy(sortCols))` with ZERO
     * empty-partition windows in the plan ([[rfm]]'s and `negativeSample`'s
     * rank windows were the last data-sized global sorts on the surface).
-    * [[rowNumberChunked]] needs a wide-range monotone long
-    * key (timestamps); this variant ranks on any orderable key, including
-    * low-cardinality metrics where value-derived chunking degenerates to
-    * one chunk.
+    * It ranks on any orderable key, including low-cardinality metrics
+    * where value-derived chunking degenerates to one chunk.
     *
     * Three-step plan, all distributed:
     *  1. `repartitionByRange(nParts, sortCols)` — partition boundaries are
@@ -454,7 +416,7 @@ object TimeSeries {
     * plan construction still runs no job (PlanAuditSpec contract). Ranks
     * themselves are boundary-independent — any consistent split yields the
     * same global numbering when the full sort key is unique (callers pass
-    * a tiebreak column, same contract as [[rowNumberChunked]]).
+    * a tiebreak column).
     *
     * The persist must NOT be unpersisted inside this call: the returned
     * frame is lazy, and unpersisting before (or between) its evaluations
@@ -496,12 +458,11 @@ object TimeSeries {
       .drop("__pid", "__off")
   }
 
-  /** Q1 `cull_data` (web_utils.py:131-161): plot decimation that keeps every
-    * `sample`-th point plus every point outside the `[percent, 100-percent]`
-    * value-percentile band, preserving extremes. One pass computes the exact
-    * percentile bounds (a 2-row broadcast), a second filters — both
-    * distributed. Row indexing uses [[rowNumberChunked]], so no global
-    * single-partition window even on an unbounded series.
+  /** Q1 `cull_data` (web_utils.py:131-161): one plot-decimation pass. It
+    * keeps every `sample`-th row in `(ts, tieBreak)` order, plus every row
+    * whose value lies outside the `[percent, 100-percent]` percentile band,
+    * so extremes survive. The plan and semantics are [[decimateToCap]]'s,
+    * with exactly one pass.
     */
   def decimate(
       df: DataFrame,
@@ -509,32 +470,34 @@ object TimeSeries {
       tieBreak: String,
       value: String,
       sample: Int,
-      percent: Double,
-      chunkUs: Long = 3600L * 1000000L): DataFrame = {
-    // percent/100.0 and (100.0-percent)/100.0 round-trip exactly through
-    // decimal literals, so an external SQL oracle lands on bit-identical
-    // percentile fractions
-    val bounds = df.agg(
-      expr(s"percentile($value, ${percent / 100.0})").as("__lo"),
-      expr(s"percentile($value, ${(100.0 - percent) / 100.0})").as("__hi"))
-    rowNumberChunked(df, ts, tieBreak, "__rn", chunkUs)
-      .crossJoin(broadcast(bounds))
-      .where((col("__rn") - 1) % sample === 0 || col(value) < col("__lo") || col(value) > col("__hi"))
-      .drop("__rn", "__lo", "__hi")
-      .orderBy(col(ts), col(tieBreak))
-  }
+      percent: Double): DataFrame =
+    decimateToCap(df, ts, tieBreak, value, cap = -1L, sample, percent, maxIters = 1)
 
-  /** Q1 driver loop (webapp.py:396-401): re-apply [[decimate]] until the
-    * series fits the plot cap (reference: 30000 points, sample=3,
-    * percent=15). Each iteration counts — the loop is driver-side control
-    * flow over distributed passes, exactly like the reference's.
+  /** Q1 plot loop (webapp.py:396-401): repeat the [[decimate]] pass until
+    * the series fits the plot cap (reference: 30000 points, sample=3,
+    * percent=15). The loop stops after `maxIters` passes, or as soon as a
+    * pass stops shrinking the series (every survivor is an outlier). A
+    * frame already at or under the cap comes back with all its rows.
     *
-    * Cache lifecycle: every pass is persisted so pass i+1 does not re-run
-    * the whole lineage of passes 1..i (quadratic recomputation); each
-    * intermediate is unpersisted as soon as its successor materializes. The
-    * RETURNED frame is still persisted — the loop has already materialized
-    * it (its final `count()`), so downstream reads are served from cache;
-    * call `.unpersist()` on the result when done with it.
+    * Plan: one exchange to a single partition, Spark's sort on
+    * `(ts, tieBreak)`, and one task that buffers the frame and runs every
+    * pass. The result is that one partition, in `(ts, tieBreak)` order,
+    * with the input schema. Building the frame runs no job, and nothing
+    * is persisted.
+    *
+    * Memory: the task holds the whole frame. That is no new limit: Spark's
+    * exact `percentile` already merges every distinct value of the frame
+    * in one final-aggregate task, and the reference culls a whole series
+    * in memory. Cull one plotted series (a bounded `getData` window), not
+    * an archive.
+    *
+    * Semantics, as Spark SQL would compute them:
+    *  - the band is Spark's exact `percentile` of the non-null values,
+    *    linear interpolation at `(n-1)·p`, taken over the WHOLE frame, so
+    *    a multi-series frame shares one band;
+    *  - `value` is any numeric column, compared as a double; a null is
+    *    never an outlier, NaN sorts above every number (an outlier above
+    *    `hi` unless `hi` is NaN), and -0.0 equals 0.0.
     */
   def decimateToCap(
       df: DataFrame,
@@ -545,23 +508,45 @@ object TimeSeries {
       sample: Int = 3,
       percent: Double = 15.0,
       maxIters: Int = 16): DataFrame = {
-    var cur = df
-    var prev: Option[DataFrame] = None
-    var n = cur.count()
-    var i = 0
-    while (n > cap && i < maxIters) {
-      // persist each pass: without it, iteration i re-executes the whole
-      // lineage of every earlier pass (each holding a percentile agg and a
-      // global window) from the base scan — quadratic recomputation
-      cur = decimate(cur, ts, tieBreak, value, sample, percent).persist()
-      val n2 = cur.count()
-      prev.foreach(_.unpersist())
-      prev = Some(cur)
-      if (n2 >= n) return cur // all survivors are outliers; cannot shrink
-      n = n2
-      i += 1
-    }
-    cur
+    require(sample >= 1, s"sample must be positive, got $sample")
+    val vi = df.schema.fieldIndex(value)
+    df.repartition(1)
+      .sortWithinPartitions(col(ts), col(tieBreak))
+      .mapPartitions { it =>
+        def v(r: Row) = r.getAs[Number](vi).doubleValue
+        var rows = it.toArray
+        var (passes, shrank) = (0, true)
+        while (shrank && rows.length > cap && passes < maxIters) {
+          val xs = rows.collect { case r if !r.isNullAt(vi) => v(r) }
+          java.util.Arrays.sort(xs)
+          // evaluated only for a non-null value, so `xs` is not empty
+          lazy val (lo, hi) = (exactPercentile(xs, percent / 100.0), exactPercentile(xs, (100.0 - percent) / 100.0))
+          val next = rows.zipWithIndex.collect {
+            case (r, k) if k % sample == 0 ||
+                !r.isNullAt(vi) && (sqlCompare(v(r), lo) < 0 || sqlCompare(v(r), hi) > 0) => r
+          }
+          shrank = next.length < rows.length
+          rows = next
+          passes += 1
+        }
+        rows.iterator
+      }(Encoders.row(df.schema))
+  }
+
+  /** Spark SQL's double comparison: -0.0 equals 0.0, and NaN equals NaN and
+    * sorts above every number (Java's `<` and `>` are false on NaN). */
+  private def sqlCompare(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark's exact `percentile` over non-empty `sorted` (ascending, NaN
+    * last): linear interpolation at position `(n-1)·p`, in Spark's own
+    * arithmetic so the result is bit-identical. */
+  private[graft] def exactPercentile(sorted: Array[Double], p: Double): Double = {
+    val pos = (sorted.length - 1).toLong * p
+    val (lower, higher) = (pos.floor.toLong, pos.ceil.toLong)
+    val a = sorted(lower.toInt)
+    val b = sorted(higher.toInt)
+    if (lower == higher || a == b) a else (higher - pos) * a + (pos - lower) * b
   }
 
   /** W3 — batch twin of the T2 deadtime/deadband downsampler

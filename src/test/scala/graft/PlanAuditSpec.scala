@@ -670,4 +670,35 @@ class PlanAuditSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- baseline
     assert(leaked.isEmpty, s"net-new persisted RDDs survived release: $leaked")
   }
+
+  test("decimateToCap builds lazily: no job at construction, even above the cap") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(5000).select(col("id").as("ts"), (col("id") % 97).cast("double").as("v"))
+    val (_, jobs) = jobsOf(
+      operators.TimeSeries.decimateToCap(df, "ts", "ts", "v", cap = 100L).queryExecution.executedPlan)
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+  }
+
+  test("a plot over SampleStore.read -> getData runs a pinned job count, one more than getData") {
+    val sp = spark
+    import sp.implicits._
+    val S = 1000000L
+    val dir = java.nio.file.Files.createTempDirectory("graft_plot_jobs").toString
+    // one hot PV with 4000 points beside 50 others, over two runs
+    val raw = (0 until 6000).map { i =>
+      val pv = if (i % 3 == 0) s"P:pv${i % 50}.VAL" else "P:hot.VAL"
+      (pv, i * S / 10, (i % 101).toString, (i % 101).toString)
+    }.toDF("pvname", "tsUs", "value", "cvalue")
+    store.SampleStore.write(store.SampleStore.normalize(raw, 400 * S), dir)
+    def hot = new Archive(store.SampleStore.read(sp, dir)).getData("P:hot.VAL", 0L, 600 * S)
+    val (rows, getJobs) = jobsOf(hot.collect())
+    val culled = operators.TimeSeries.decimateToCap(hot, "tsUs", "tsUs", "dvalue", cap = 1000L)
+    val (plot, plotJobs) = jobsOf(culled.collect())
+    assert(rows.length == 4000 && plot.length <= 1000 && plot.length > 0)
+    // the single-partition exchange's map stage, then the culling task;
+    // getData's range sort (sampling job included) is gone under the exchange
+    assert(plotJobs.size == 2 && plotJobs.size <= getJobs.size + 1,
+      s"getData ran ${getJobs.size} jobs, the plot ${plotJobs.size}:\n" +
+        culled.queryExecution.executedPlan.treeString)
+  }
 }

@@ -122,17 +122,86 @@ class TimeSeriesSpec extends SparkSpec {
     assert(got.toSeq.sorted == Seq(0L, 60L))
   }
 
-  test("decimate keeps every nth point plus percentile outliers") {
+  // ---- plain-Scala model of Q1 cull_data (web_utils.py:131-161) and the
+  // webapp.py:396-401 loop, under Spark SQL's double semantics ----
+
+  private type Pt = (Long, Long, Option[Double]) // (ts, id, value)
+
+  /** Spark SQL `a < b` on doubles: NaN is the greatest value and equals
+    * itself; -0.0 equals 0.0. */
+  private def sqlLt(a: Double, b: Double): Boolean = !a.isNaN && (b.isNaN || a < b)
+
+  /** Spark's exact `percentile`: linear interpolation at (n-1)·p. */
+  private def modelPercentile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sortWith(sqlLt)
+    val pos = (s.size - 1) * p
+    val (l, h) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+    if (l == h || s(l) == s(h)) s(l) else (h - pos) * s(l) + (pos - l) * s(h)
+  }
+
+  /** One cull_data pass over points already in (ts, id) order. */
+  private def modelPass(pts: Seq[Pt], sample: Int, percent: Double): Seq[Pt] = {
+    val xs = pts.flatMap(_._3)
+    val band = if (xs.isEmpty) None
+      else Some((modelPercentile(xs, percent / 100.0), modelPercentile(xs, (100.0 - percent) / 100.0)))
+    def outlier(v: Double) = band.exists { case (lo, hi) => sqlLt(v, lo) || sqlLt(hi, v) }
+    pts.zipWithIndex.collect { case (p, k) if k % sample == 0 || p._3.exists(outlier) => p }
+  }
+
+  /** The loop to the cap: the survivors, why it stopped, and its passes. */
+  private def modelToCap(pts: Seq[Pt], sample: Int, percent: Double, cap: Long,
+      maxIters: Int): (Seq[Pt], String, Int) = {
+    @annotation.tailrec
+    def go(cur: Seq[Pt], i: Int): (Seq[Pt], String, Int) =
+      if (cur.size <= cap) (cur, "under-cap", i)
+      else if (i == maxIters) (cur, "max-iters", i)
+      else {
+        val next = modelPass(cur, sample, percent)
+        if (next.size >= cur.size) (next, "no-shrink", i + 1) else go(next, i + 1)
+      }
+    go(pts.sortBy(p => (p._1, p._2)), 0)
+  }
+
+  /** `n` points in shuffled order: three per timestamp, ids out of ts
+    * order, quarter-step values (many duplicates), and `special` of them
+    * null, NaN, 0.0 or -0.0. */
+  private def cullInput(seed: Int, n: Int, special: Double = 0.1): Seq[Pt] = {
+    val rng = new scala.util.Random(seed)
+    val odd = Seq(None, Some(Double.NaN), Some(0.0), Some(-0.0))
+    rng.shuffle((0 until n).map { i =>
+      val v = if (rng.nextDouble() < special) odd(rng.nextInt(odd.size))
+        else Some(math.round(rng.nextGaussian() * 40) / 4.0)
+      (i / 3L, i * 7919L % n, v)
+    })
+  }
+
+  private def cullFrame(pts: Seq[Pt]) = {
     val sp = spark
     import sp.implicits._
-    val df = (1 to 100).map(i => (i.toLong, i.toLong, if (i == 50) 1000.0 else i.toDouble))
-      .toDF("ts", "id", "v")
-    val got = TimeSeries.decimate(df, "ts", "id", "v", sample = 10, percent = 5.0)
-      .collect().map(_.getAs[Long]("ts"))
-    // rows 1,11,21,...,91 (every 10th) + outliers: v<=p5 or >=p95 band edges + the spike at 50
-    assert(got.contains(50L))
-    assert(Seq(1L, 11L, 21L, 31L, 41L, 51L, 61L, 71L, 81L, 91L).forall(got.contains))
-    assert(got.length < 30)
+    pts.toDF("ts", "id", "v")
+  }
+
+  /** Rows as points, with values compared bit for bit (-0.0 is not 0.0). */
+  private def asPts(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Option[Long])] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(2)))))
+
+  private def bits(pts: Seq[Pt]) =
+    pts.map(p => (p._1, p._2, p._3.map(java.lang.Double.doubleToLongBits)))
+
+  test("decimate keeps every nth point plus percentile outliers") {
+    // (seed, n, share of null/NaN/±0.0, sample, percent); the 0.6 share
+    // puts NaN inside the band, so the high percentile itself is NaN
+    Seq((1, 100, 0.0, 10, 5.0), (2, 997, 0.1, 5, 10.0), (3, 600, 0.6, 3, 15.0), (4, 2, 0.0, 3, 15.0))
+      .foreach { case (seed, n, special, sample, percent) =>
+        val pts = cullInput(seed, n, special)
+        val got = asPts(TimeSeries.decimate(cullFrame(pts), "ts", "id", "v", sample, percent))
+        assert(got == bits(modelPass(pts.sortBy(p => (p._1, p._2)), sample, percent)), s"seed $seed")
+      }
+    // the spike survives as an outlier between the sample points
+    val spike = (1 to 100).map(i => (i.toLong, i.toLong, Some(if (i == 50) 1000.0 else i.toDouble)))
+    val got = asPts(TimeSeries.decimate(cullFrame(spike), "ts", "id", "v", sample = 10, percent = 5.0))
+    assert(got.map(_._1).contains(50L) && got == bits(modelPass(spike, 10, 5.0)))
   }
 
   test("property: getData/valueAtTime match a brute-force oracle on random series") {
@@ -221,16 +290,44 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("decimateToCap loops until under the plot cap (webapp.py:396-401)") {
+    val wave = (1 to 2000).map(i => (i.toLong, i.toLong, Some(math.sin(i / 10.0) * 100)))
+    val distinct = new scala.util.Random(5).shuffle((0 until 301).map(i => (i.toLong, i.toLong, Some(i * 1.5))))
+    // (input, cap, sample, percent, maxIters, expected stop, expected passes)
+    Seq(
+      (wave, 300L, 3, 15.0, 16, "under-cap", 4),
+      (cullInput(6, 2000), 300L, 3, 15.0, 16, "under-cap", 4),
+      (cullInput(7, 500), 500L, 3, 15.0, 16, "under-cap", 0), // exactly at the cap
+      (cullInput(8, 2000), 10L, 3, 15.0, 2, "max-iters", 2),
+      // percent 50: the band shrinks to the median; once the count is even
+      // the median falls between two values and every row is an outlier
+      (distinct, 1L, 1000, 50.0, 16, "no-shrink", 2)
+    ).zipWithIndex.foreach { case ((pts, cap, sample, percent, maxIters, stop, passes), i) =>
+      val (want, why, n) = modelToCap(pts, sample, percent, cap, maxIters)
+      assert((why, n) == ((stop, passes)), s"case $i: the model stopped by $why after $n passes")
+      val got = TimeSeries.decimateToCap(cullFrame(pts), "ts", "id", "v", cap, sample, percent, maxIters)
+      assert(asPts(got) == bits(want), s"case $i")
+    }
+  }
+
+  test("in-task percentile matches Spark's exact percentile on random doubles with duplicates") {
     val sp = spark
     import sp.implicits._
-    val df = (1 to 2000).map(i => (i.toLong, i.toLong, math.sin(i / 10.0) * 100))
-      .toDF("ts", "id", "v")
-    val out = TimeSeries.decimateToCap(df, "ts", "id", "v", cap = 300, sample = 3, percent = 15.0)
-    val n = out.count()
-    assert(n <= 300 || n < 2000, s"did not shrink: $n")
-    // extremes survive culling
-    val vals = out.select("v").collect().map(_.getDouble(0))
-    assert(vals.max > 99.0 && vals.min < -99.0)
+    (1 to 4).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      val xs = Seq.fill(1 + rng.nextInt(400))(rng.nextInt(40) / 4.0 - 3.0) ++
+        Seq.fill(rng.nextInt(20))(rng.nextGaussian() * 1e6) ++
+        (seed match { case 3 => Seq(Double.NaN, Double.NaN); case 4 => Seq(-0.0, 0.0, 0.0); case _ => Nil })
+      val ps = Seq(0.0, 0.1, 0.15, 0.5, 0.85, 0.9, 1.0, rng.nextDouble())
+      val row = xs.toDF("v").agg(percentile(col("v"), lit(ps.head)), ps.tail.map(p => percentile(col("v"), lit(p))): _*)
+        .head()
+      val sorted = xs.toArray
+      java.util.Arrays.sort(sorted)
+      ps.zipWithIndex.foreach { case (p, i) =>
+        val (got, want) = (TimeSeries.exactPercentile(sorted, p), row.getDouble(i))
+        // NaN equals NaN; the sign of a zero bound changes no comparison
+        assert(got == want || got.isNaN && want.isNaN, s"seed $seed p $p: $got vs Spark $want")
+      }
+    }
   }
 
   test("runsOverlapping derives only runs intersecting the window") {

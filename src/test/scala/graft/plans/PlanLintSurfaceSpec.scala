@@ -43,8 +43,6 @@ class PlanLintSurfaceSpec extends SparkSpec {
     ("q_conformal", "nested-loop-join") -> 1,  // 1-row tau/corrected-level broadcast
     ("q_curriculum", "nested-loop-join") -> 1, // 1-row percentile-thresholds broadcast
     ("q_dataset_card", "nested-loop-join") -> 2,
-    ("q_decimate", "global-window") -> 1,
-    ("q_decimate", "nested-loop-join") -> 1,
     ("q_dq_checks", "nested-loop-join") -> 1,
     ("q_dtw", "nested-loop-join") -> 1,
     ("q_embed_dedup_dist", "nested-loop-join") -> 1,
@@ -76,8 +74,6 @@ class PlanLintSurfaceSpec extends SparkSpec {
     ("q_lsh_recall", "nested-loop-join") -> 1,
     ("q_mixture_weights", "nested-loop-join") -> 1,
     ("q_mmr_rerank", "nested-loop-join") -> 1,
-    ("q_plot_trace", "global-window") -> 1,
-    ("q_plot_trace", "nested-loop-join") -> 1,
     ("q_pv_corr", "global-window") -> 1,
     ("q_quality_buckets", "nested-loop-join") -> 3,
     ("q_rank_agreement", "nested-loop-join") -> 3,
