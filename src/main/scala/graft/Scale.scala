@@ -337,7 +337,7 @@ object Scale {
           System.gc()
           val zipf = doc.where(col("text").isNotNull)
             .select(col("doc_id"),
-              expr(SparkEntry.zipfFixtureSql("DIV", "STRING")).as("text"))
+              expr(queries.DedupQueries.zipfFixtureSql("DIV", "STRING")).as("text"))
           val t0 = System.nanoTime()
           operators.Dedup.ngramJaccardAuto(zipf, "doc_id", "text",
             n = 2, threshold = 0.5, blocks = sweepBlocks).count()

@@ -1,193 +1,80 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators._
+import graft.queries._
+import graft.queries.Shared._
 import graft.sources.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * Every implemented operator from SURVEY.md §2 (and the beyond-reference
-  * LLM-pipeline pack) is exposed here as a named query over the driver's
-  * testdata, with a DuckDB-equivalent oracle in [[oracleSql]]. Column names
-  * and row ordering match the oracle exactly (the driver hash-compares).
+  * LLM-pipeline pack) is exposed as a named query over the driver's
+  * testdata, with a DuckDB-equivalent oracle. A query's plan and its oracle
+  * sit together in one [[graft.queries.Q]] record, in one file per family
+  * under `graft.queries`; the maps here are derived from those records.
+  * Column names and row ordering match the oracle exactly (the driver
+  * hash-compares).
   *
   * Time convention: `events.ts` is parquet TIMESTAMP(NANOS); both engines
   * truncate to epoch **micros** (`ts_us`) — see [[graft.sources.Tables]].
   */
 object SparkEntry {
 
-  // Fixed, sf-independent window inside the events table's Jan-2024 span.
-  private final val T0 = 1704672000000000L // 2024-01-08T00:00:00Z (us)
-  private final val T1 = 1705881600000000L // 2024-01-22T00:00:00Z (us)
+  /** Every registered query, family by family. */
+  lazy val registry: Seq[Q] = Q.registry(Seq(
+    RelationalQueries.all, TimeSeriesQueries.all, DedupQueries.all,
+    TextAnalysisQueries.all, PvFunctionsQueries.all, ArchiveQueries.all,
+    SamplingQueries.all, RetrievalQueries.all, ExportQueries.all,
+    PairsQueries.all, SimilarityQueries.all, StreamingQueries.all,
+    InstrumentsQueries.all, StoreQueries.all, MultimodalQueries.all,
+    SourcesQueries.all, EventAnalyticsQueries.all, DataQualityQueries.all,
+    SkewQueries.all, GraphQueries.all, PatternsQueries.all, WebQueries.all,
+    SketchesQueries.all, AnomalyForestQueries.all, LinkageQueries.all).flatten)
 
-  /** Stores already exported by q_zarr_scan this JVM (keyed by store
-    * path, which embeds the sfDir hash) — the scan query re-reads a store
-    * whose bytes are deterministic, so one export per process serves
-    * every repeat.
-    */
-  private val zarrExported = scala.collection.mutable.Set[String]()
-
-  /** Run dumps already synthesized by [[runDumpRoot]] this JVM (keyed by
-    * root path, which embeds the sfDir SHA) — same one-per-process
-    * convention as [[zarrExported]]. */
-  private val runDumpWritten = scala.collection.mutable.Set[String]()
-
-  /** Synthesize a deterministic `pvarch save`-shaped mysqldump from the
-    * events table (S7 migration round trip, r10 verdict ask #6): the pv
-    * DIMENSION is driver-written (one INSERT line per event type —
-    * dimension-sized by construction, the CacheDump.load convention), the
-    * pvdat SHARD rows are a MAP-ONLY distributed text write (one INSERT
-    * statement per line, exactly the `--skip-extended-insert` grammar
-    * loadRunDump distributes over). Timestamps are written as exact
-    * decimal seconds with 6 fractional digits; at epoch magnitudes the
-    * parse + ×1e6 round trip recovers the original micros exactly (parse
-    * error ≤ 0.12 µs, multiply error ≤ 0.13 µs, both < the 0.5 µs round
-    * threshold) — on BOTH engines, since each computes on the identical
-    * IEEE double. Values are written UNQUOTED (they are numeric renders;
-    * the quote/escape grammar is q_cache_import's job), so DuckDB's
-    * independent csv parse sees the identical field bytes.
+  /** Each registered query's plan, by name.
     *
-    * Layout: `<root>/pv/pv.sql` + `<root>/dat/part-NNN` so the oracle can
-    * glob the two line shapes separately; loadRunDump reads both through
-    * one two-level wildcard glob. Generated once per (sfDir, JVM); returns
-    * the root path.
+    * Every result passes through [[graft.operators.FixedPoint.canonEmit]]
+    * — the signed-zero emission contract (see its scaladoc): no query may
+    * emit a -0.0, because the driver's hash compares raw IEEE values and
+    * engines disagree on the sign of a zero produced by rounding a
+    * negative quantity. The wrapper is a pure per-row Project; ordering and
+    * plans are untouched. The oracle side mirrors `+ 0.0` wherever DuckDB
+    * can produce a negative zero. The surface sweep in QuerySurfaceSpec
+    * asserts the engine half across the whole surface.
     */
-  private def runDumpRoot(s: SparkSession, dir: String): String = {
-    val dirSha = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_run_dump_$dirSha").getAbsolutePath
-    runDumpWritten.synchronized {
-      if (!runDumpWritten.contains(root)) {
-        // ts_us joins value/event_type in the not-null guard: a null ts_us
-        // reaching the concat would null the whole text row (text-writer
-        // error), and silently dropping it here is the honest contract —
-        // the oracle parses the same files (r11 ADVICE)
-        val ev = Tables.events(s, dir)
-          .where(col("value").isNotNull && col("event_type").isNotNull &&
-            col("ts_us").isNotNull)
-        val types = ev.select(col("event_type")).distinct()
-          .orderBy(col("event_type")).collect().map(_.getString(0))
-        val pvLines = types.zipWithIndex.map { case (t, i) =>
-          val shard = "pvdat%03d".format(i % 128 + 1)
-          s"INSERT INTO `pv` VALUES (${i + 1},'EV:$t','migrated','$shard'," +
-            "10.0,1e-08,NULL,NULL,'normal','double','yes');"
-        }
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "pv"))
-        java.nio.file.Files.write(java.nio.file.Paths.get(root, "pv", "pv.sql"),
-          (pvLines.mkString("\n") + "\n").getBytes("UTF-8"))
-        val sp = s
-        import sp.implicits._
-        val dim = broadcast(types.zipWithIndex
-          .map { case (t, i) => (t, i + 1) }.toSeq.toDF("event_type", "__pvid"))
-        // sign-magnitude rendering: a truncating DIV plus always-positive
-        // pmod would write ts_us = -400000 as "0.600000" — wrong by 1 s,
-        // and invisible to the oracle because both engines would parse the
-        // same wrong bytes (r11 self-review finding)
-        ev.join(dim, Seq("event_type"))
-          .select(concat(
-            lit("INSERT INTO `pvdat"),
-            lpad(((col("__pvid") - 1) % 128 + 1).cast("string"), 3, "0"),
-            lit("` VALUES ("),
-            when(col("ts_us") < 0, lit("-")).otherwise(lit("")),
-            expr("abs(ts_us) DIV 1000000L").cast("string"),
-            lit("."),
-            lpad(expr("pmod(abs(ts_us), 1000000L)").cast("string"), 6, "0"),
-            lit(","), col("__pvid").cast("string"),
-            lit(","),
-            // the rendered value field must never contain the dump's
-            // delimiter — a future value rendering with a ','/')' would
-            // silently shift the oracle's read_csv columns, so fail loudly
-            // instead (r11 ADVICE)
-            when(col("value").cast("string").rlike("[,)(']"),
-              raise_error(concat(lit("runDumpRoot: value renders a dump delimiter: "),
-                col("value").cast("string"))))
-              .otherwise(col("value").cast("string")),
-            lit(");")).as("value"))
-          .write.mode("overwrite").text(s"$root/dat")
-        runDumpWritten += root
-      }
-    }
-    root
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { q =>
+      q.name -> ((s: SparkSession, dir: String) => operators.FixedPoint.canonEmit(q.plan(s, dir)))
+    }.toMap
 
-  /** The reference-generated hformat fixture (value, length, expected) —
-    * q_hformat reads it through the native expr and its oracle re-emits the
-    * expected column verbatim, so the 500-case parity becomes a hard
-    * CORRECTNESS row. Resolved relative to the repo root whatever the cwd.
+  /** The oracles whose SQL does not read the data, by query name. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case Q(name, _, _, o: Q.StaticSql) => name -> o.sql }.toMap
+
+  /** The oracles whose SQL embeds values trained on `dir` (centroids,
+    * codebooks, merges) with the engine's own deterministic code, by query
+    * name. */
+  def dataDependentOracles(spark: SparkSession, dir: String): Map[String, String] =
+    registry.collect {
+      case q if !q.oracle.isInstanceOf[Q.StaticSql] => q.name -> q.oracle(spark, dir)
+    }.toMap
+
+  /** The reference checkout's own files that three queries read (the
+    * production cache dump, a PV-list file and a status-page template;
+    * FIXTURES.md §1), by query name. The repo does not hold them; the
+    * whole-surface specs leave out a query whose file is not readable.
     */
-  private lazy val hformatCasesPath: String = {
-    val rel = java.nio.file.Paths.get("src/test/resources/hformat_cases.tsv")
-    if (java.nio.file.Files.exists(rel)) rel.toAbsolutePath.toString
-    else "/root/repo/src/test/resources/hformat_cases.tsv"
-  }
+  val referenceInputs: Map[String, String] = SourcesQueries.referenceInputs
 
-  /** Shared by q_hubness (broadcast kNN path) and q_hubness_blocked (the
-    * distributed 2-D block sweep): hubness in-degrees over the exact kNN
-    * graph (same ranking contract as q_knn_brute); zero-degree vectors
-    * kept by the left join.
-    */
-  private lazy val hubnessSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.v", "b.v")}, 6) AS sim
-       |       FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |deg AS (SELECT nid, CAST(count(*) AS BIGINT) AS in_degree FROM r WHERE rn <= 5 GROUP BY 1)
-       |SELECT e.vec_id, coalesce(deg.in_degree, CAST(0 AS BIGINT)) AS in_degree
-       |FROM e LEFT JOIN deg ON e.vec_id = deg.nid ORDER BY vec_id""".stripMargin
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    queries("q_get_data")(spark, "/root/testdata/sf0.001")
 
-  /** The exact blocked-Jaccard pair set is the single most expensive frame
-    * two audit queries both need: q_jaccard_dist IS it, and q_lsh_recall
-    * joins the banded-LSH candidates against it. Computed and persisted
-    * once per (session, sf-dir) so a bench/verify pass over the whole
-    * surface pays the block sweep once, not twice — the shared-frame
-    * lesson from the mutual-kNN audit family. Keyed by session so a
-    * restarted session never sees another's stale cached plan.
-    */
-  private val exactPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def exactJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    exactPairCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      Dedup.ngramJaccardBlocked(Tables.documents(ss, d), "doc_id", "text",
-        n = 2, threshold = 0.5).persist()
-    })
-
-  /** The k=5 exact kNN graph is the single most multiply-consumed sweep:
-    * PageRank, label propagation, hubness AND the mutual-kNN backbone all
-    * analyze the SAME `(query_id, neighbor_id, sim)` frame. Memoized
-    * materialized (localCheckpoint) so the cosine sweep runs once per
-    * (session, sf-dir), not once per analysis. */
-  private val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def knnGraph5(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      Similarity.knnGraph(Tables.embeddings(ss, d), "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("sim"))
-        .localCheckpoint()
-    })
-
-  /** The k=5 mutual-kNN edge list is the other multiply-consumed expensive
-    * frame: six graph-audit queries (communities, triangles, assortativity,
-    * k-core, negative sampling, link prediction) all analyze the SAME
-    * graph — derived from the shared [[knnGraph5]] frame, so the memo pair
-    * costs ONE cosine sweep total.
-    */
-  private val mutualEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def mutualKnnEdges5(s: SparkSession, dir: String): DataFrame =
-    mutualEdgesCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      Similarity.mutualKnnEdgesFromGraph(knnGraph5(ss, d)).localCheckpoint()
-    })
-
-  /** Drop memoized cross-query frames (JitterSpec calls this between its
-    * two partition-count passes so a cached result can't mask an
-    * order-dependent computation). */
+  /** Drop memoized cross-query frames (the surface sweep calls this before
+    * each run so a cached result can't mask an order-dependent
+    * computation). */
   def clearSharedFrames(): Unit = {
     dropSharedFrame("_shared_jaccard_pairs")
     dropSharedFrame("_shared_knn_graph")
@@ -195,12 +82,12 @@ object SparkEntry {
     dropSharedFrame("_shared_itemsets")
   }
 
-  /** Bench accounting hooks (the r7 judge flagged "cost laundering": the
-    * warm-up pass materialized these two most-expensive frames untimed, so
-    * eleven consumer queries timed cache reads). Bench clears the memos
-    * after warm-up and times each builder ONCE as a '_'-prefixed
-    * pseudo-entry — leading '_' sorts before every 'q_*', so the frames are
-    * rebuilt inside the timed window before their first consumer runs. */
+  /** Bench accounting hooks. A warm-up pass that materialized the shared
+    * frames untimed would leave their consumer queries timing cache reads.
+    * Bench clears the memos after warm-up and times each builder ONCE as a
+    * '_'-prefixed pseudo-entry — leading '_' sorts before every 'q_*', so
+    * the frames are rebuilt inside the timed window before their first
+    * consumer runs. */
   def sharedFrameBuilders: Map[String, (SparkSession, String) => DataFrame] = Map(
     "_shared_jaccard_pairs" -> ((s, d) => exactJaccardPairs(s, d)),
     "_shared_knn_graph" -> ((s, d) => knnGraph5(s, d)),
@@ -210,24 +97,23 @@ object SparkEntry {
   /** Last alphabetical consumer of each shared frame → Bench drops the
     * frame the moment nothing later in a sorted pass will read it, so a
     * persisted frame never competes for executor memory with the ~100
-    * queries that follow (the r7 q_jaccard 6.6 s-suite / 2.1 s-isolated
-    * neighbor effect). */
+    * queries that follow (measured: q_jaccard took 6.6 s inside the suite
+    * and 2.1 s alone). */
   def sharedFrameDropAfter: Map[String, String] = Map(
     "q_source_leakage" -> "_shared_jaccard_pairs",
     "q_pagerank" -> "_shared_knn_graph", // consumers: hits, hubness, label_prop, pagerank (+_shared_mutual_knn)
     "q_triangles" -> "_shared_mutual_knn",
     "q_itemsets" -> "_shared_itemsets") // consumers: assoc_rules, itemsets
 
-  /** Forced-DISTRIBUTED twins of the size-gated operators (r8 verdict: the
-    * sf0.1 bench times only the driver-loop paths once the gates landed, so
-    * a wall-time regression in the plans that actually run at 100× would be
-    * invisible). Bench times each ONCE per full pass as a `_dist_*` entry —
+  /** Forced-DISTRIBUTED twins of the size-gated operators: the sf0.1 bench
+    * runs only the driver-loop paths below the gates, so a wall-time
+    * regression in the plans that actually run at 100× would be invisible.
+    * Bench times each ONCE per full pass as a `_dist_*` entry —
     * correctness is already spec-pinned bit-identical by the gate specs
     * (and q_hubness_blocked / q_jaccard_dist carry oracle rows), these keep
-    * the 100×-scale plans performance-visible round over round. Inputs are
-    * the same memoized frames the gated queries read (rebuilt untimed by
-    * Bench if dropped), so each entry times the distributed OPERATOR, not
-    * an input rebuild. */
+    * the 100×-scale plans performance-visible. Inputs are the same memoized
+    * frames the gated queries read (rebuilt untimed by Bench if dropped),
+    * so each entry times the distributed OPERATOR, not an input rebuild. */
   def distTwinQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "_dist_pagerank" -> ((s, dir) =>
       operators.Graph.pageRank(knnGraph5(s, dir), "query_id", "neighbor_id",
@@ -288,8334 +174,4 @@ object SparkEntry {
       itemsetsCache.clear() // localCheckpoint blocks free once unreferenced
     case other => throw new IllegalArgumentException(s"unknown shared frame: $other")
   }
-
-  /** Order-level brand baskets for the pattern-mining queries: each order
-    * is one basket, its items the DISTINCT part brands it touches (the
-    * part dim is broadcast — [[operators.Patterns.frequentItemsets]] does
-    * the distinct). */
-  private def brandBaskets(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
-    val part = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
-    li.join(broadcast(part), li("l_partkey") === part("p_partkey"))
-      .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
-  }
-
-  /** The full brand-basket Apriori mine (itemsets to size 3, incl. the
-    * size-0 universe row) is consumed by BOTH pattern queries — itemsets
-    * directly, association rules via [[operators.Patterns.associationRulesFrom]]
-    * — so it joins the memoized shared-frame family (bench times the build
-    * as `_shared_itemsets`, consumers honestly time cache reads). */
-  private val itemsetsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def brandItemsets(s: SparkSession, dir: String): DataFrame =
-    itemsetsCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      // traced: the per-level (wall, rows) decomposition rides BENCH_FULL's
-      // probe_trace next to `_shared_itemsets`' timing (r11 verdict ask #4);
-      // overhead is three cached-frame counts at the local job floor
-      operators.Patterns.frequentItemsets(brandBaskets(ss, d), "basket", "item",
-        minSupportPpm = 4000L, maxSize = 3, traced = true)
-    })
-  private final val TMID = 1705276800000000L // 2024-01-15T00:00:00Z (us)
-
-  /** q_iforest feature columns over the derived-`ts_us` events frame:
-    * value, hour-of-day, day-of-week — mirrored verbatim as DuckDB
-    * expressions in [[dataDependentOracles]]. */
-  private def iforestFeatures: Seq[Column] = Seq(
-    col("value"),
-    expr("CAST((ts_us DIV 3600000000L) % 24 AS DOUBLE)"),
-    expr("CAST((ts_us DIV 86400000000L) % 7 AS DOUBLE)"))
-  private final val RUN_WEEK_US = 604800000000L // 7 days in micros
-
-  /** The reference checkout's own files that three queries read (the
-    * production cache dump, a PV-list file and a status-page template;
-    * FIXTURES.md §1), by query name. The repo does not hold them; the
-    * whole-surface specs leave out a query whose file is not readable.
-    */
-  val referenceInputs: Map[String, String] = {
-    val ref = "/root/reference"
-    Map(
-      "q_cache_import" -> s"$ref/sql/pvlist.txt",
-      "q_pvlist_source" -> s"$ref/test/GSE__PVList.txt",
-      "q_template_parse" -> s"$ref/templates/GSE_page1.txt")
-  }
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    queries("q_get_data")(spark, "/root/testdata/sf0.001")
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
-
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Every result passes through [[graft.operators.FixedPoint.canonEmit]]
-    * — the signed-zero emission contract (see its scaladoc): no query may
-    * emit a -0.0, because the driver's hash compares raw IEEE values and
-    * engines disagree on the sign of a zero produced by rounding a
-    * negative quantity (the r7 q_embed_cov red row). The wrapper is a pure
-    * per-row Project; ordering and plans below are untouched. The oracle
-    * side mirrors `+ 0.0` wherever DuckDB can produce a negative zero.
-    * NegZeroSpec asserts the engine half across the whole surface.
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
-      name -> ((s: SparkSession, dir: String) =>
-        operators.FixedPoint.canonEmit(fn(s, dir)))
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- anchor aggregation (A-category; classic pricing summary) ----------
-    "q_agg_pricing" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"), // integral-valued: exact
-          // prices/discounts sit on the cent grid, but cents aren't
-          // binary-exact doubles — fixed-point sums make the 2-dp/6-dp
-          // roundings scheduling-independent (FixedPoint scaladoc)
-          operators.FixedPoint.sum(col("l_extendedprice"), 100.0, 2).as("sum_base_price"),
-          operators.FixedPoint.mean(col("l_discount"), 100.0, 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // ---- S4/P1/O1 time-range scan (archiver.py:185-190) --------------------
-    "q_range_scan" -> ((s, dir) => {
-      TimeSeries.rangeScan(events(s, dir), col("event_type"), "click", "ts_us", T0, T1)
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-        .orderBy(col("ts_us"), col("event_id"))
-    }),
-
-    // ---- W2/Q3 flagship get_data: range + one point before tmin ------------
-    "q_get_data" -> ((s, dir) => {
-      TimeSeries.getData(events(s, dir), col("event_type"), "purchase", "ts_us", "event_id", T0, T1)
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-    }),
-
-    // ---- Q2 get_value_at_time per key --------------------------------------
-    "q_value_at_time" -> ((s, dir) => {
-      TimeSeries.valueAtTime(events(s, dir), "user_id", "ts_us", "event_id", TMID)
-        .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ---- A1 latest-per-key (the reference's cache table) -------------------
-    "q_latest_per_key" -> ((s, dir) => {
-      TimeSeries.latestPerKey(events(s, dir), "user_id", "ts_us", "event_id", Seq("event_type", "value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ---- A2 min/max time + count per series --------------------------------
-    "q_minmax_per_type" -> ((s, dir) => {
-      TimeSeries.minMaxPerKey(events(s, dir), "event_type", "ts_us")
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- P6 count since threshold per key ----------------------------------
-    "q_count_since" -> ((s, dir) => {
-      TimeSeries.countSince(events(s, dir), "event_type", "ts_us", T0)
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- J5 runs overlapping a query interval (dbs_for_time) ---------------
-    "q_runs_overlap" -> ((s, dir) => {
-      TimeSeries.runsOverlapping(events(s, dir), "ts_us", RUN_WEEK_US, T0, T1)
-    }),
-
-    // ---- W3/T2 batch twin of the deadtime/deadband downsampler -------------
-    "q_downsample" -> ((s, dir) => {
-      TimeSeries.downsampleBatch(
-        events(s, dir), "user_id", "ts_us", "event_id", "value",
-        deadtimeUs = 6L * 3600L * 1000000L, deadband = 50.0)
-        .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
-
-    // ---- exact dedup (group identical docs by fingerprint) -----------------
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir), "doc_id", "text").orderBy(col("fp"))
-    }),
-
-    // ---- incremental dedup: a new shard (doc_id ≡ 0 mod 5) against the
-    // existing corpus (the rest) — the append-only crawl-drop question ------
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.incrementalExact(
-        docs.where(col("doc_id") % 5 === 0),
-        docs.where(col("doc_id") % 5 =!= 0),
-        "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- corpus vocabulary head: top-50 word bigrams -----------------------
-    "q_vocab_topk" -> ((s, dir) => {
-      TextAnalysis.vocabTopK(Tables.documents(s, dir), "doc_id", "text", n = 2, k = 50)
-    }),
-
-    // ---- F1/F2/P5/F11 PV-name pack: normalize (clean + .VAL default),
-    // validity predicate, native hashname bucket, reference data-table name —
-    // over pvnames derived from part rows. p_name spaces make some names
-    // invalid; modular suffixes exercise the comment-strip and the
-    // already-dotted branches ------------------------------------------------
-    "q_pv_pack" -> ((s, dir) => {
-      graft.Engine.registerFunctions(s)
-      val key = col("p_partkey")
-      // every third name underscores its spaces so the validity predicate
-      // sees BOTH outcomes (p_name's spaces make the rest invalid)
-      val stem = when(key % 3 === 0,
-        regexp_replace(substring(col("p_name"), 1, 8), " ", "_"))
-        .otherwise(substring(col("p_name"), 1, 8))
-      val raw = concat(lit("P"), key, lit(":"), stem,
-        when(key % 7 === 0, lit("#drop this tail"))
-          .when(key % 5 === 0, lit(".RBV"))
-          .otherwise(lit("")))
-      val norm = graft.functions.PvFunctions.normalizePvName(raw)
-      Tables.part(s, dir)
-        .select(
-          key,
-          norm.as("pvname"),
-          graft.functions.PvFunctions.validPvName(norm).as("valid"),
-          graft.plans.HashNameExpr.hashname(norm).cast("long").as("bucket"))
-        .withColumn("data_table", format_string("pvdat%03d", col("bucket") + 1))
-        .orderBy(key)
-    }),
-
-    // ---- P1/Q6 cache read surface: the latest-value view filtered to rows
-    // newer than a poll horizon (webapp.py:52-76), via the Archive facade ----
-    "q_cache_delta" -> ((s, dir) => {
-      // string pvnames, per Archive's column convention (same u<id> mapping
-      // as the other Archive-shaped entries)
-      val samples = events(s, dir).select(
-        concat(lit("u"), col("user_id")).as("pvname"),
-        col("ts_us").as("tsUs"), col("value"))
-      new graft.Archive(samples).refreshDelta(nowUs = T1, ageUs = T1 - TMID)
-        .select(col("pvname"), col("tsUs").as("ts_us"), col("value"))
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- P2/P3/P4 generic select surface: where-map conjunction + ordering
-    // (util.py:157-240) over a real table -----------------------------------
-    "q_generic_select" -> ((s, dir) => {
-      graft.Generic.getRows(
-        Tables.part(s, dir),
-        Map("p_size" -> 2),
-        orderBy = Some(("p_partkey", true)))
-        .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"))
-    }),
-
-    // ---- P2 key lookup: the primary-key where-overload + limitOne with a
-    // descending order (util.py:157-240's remaining branches) ----------------
-    "q_generic_lookup" -> ((s, dir) => {
-      val part = Tables.part(s, dir).withColumnRenamed("p_partkey", "id")
-      part.where(graft.Generic.handleWhere(42L))
-        .unionByName(graft.Generic.getRows(part, Map("p_brand" -> "Brand#2"),
-          orderBy = Some(("id", false)), limitOne = true))
-        .select(col("id"), col("p_name"), col("p_brand"))
-        .orderBy(col("id"))
-    }),
-
-    // ---- asymmetric containment: docs mostly contained in another ----------
-    "q_containment" -> ((s, dir) => {
-      Dedup.ngramContainment(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, threshold = 0.8)
-        .orderBy(col("src"), col("dst"))
-    }),
-
-    // ---- native text normalization over an adversarially mutated corpus
-    // (NFD combining mark + tab + space runs appended to every doc) ----------
-    "q_text_clean" -> ((s, dir) => {
-      graft.Engine.registerFunctions(s)
-      val mutated = concat(col("text"), lit("  spark\te\u0301 "))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.normalizeText(mutated).as("clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- diversity sampling: per-semantic-cell cap over IVF cells ----------
-    "q_diverse_sample" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", k = 8, seed = 42L)
-      val cells = Similarity.assignCells(emb, "vec_id", "embedding", cents)
-      Sampling.perGroupCap(cells, "vec_id", "cell", cap = 20)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"), col("cap_rank"))
-        .orderBy(col("cell"), col("cap_rank"))
-    }),
-
-    // ---- BM25 lexical retrieval (fixed probe terms, top-20) ----------------
-    "q_bm25" -> ((s, dir) => {
-      TextAnalysis.bm25(Tables.documents(s, dir), "doc_id", "text",
-        BM25_TERMS, k = 20)
-    }),
-
-    // ---- diversified retrieval: per-source cap over the full BM25 run,
-    // then the global top-20 (two-stage re-rank) ----------------------------
-    "q_search_diverse" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val scored = TextAnalysis.bm25(docs, "doc_id", "text", BM25_TERMS, k = Int.MaxValue)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      Retrieval.diversifiedTopK(scored.select(col("doc_id"), col("source"), col("score")),
-        "doc_id", "score", "source", perGroup = 2, k = 20)
-        .orderBy(col("rank"))
-    }),
-
-    // ---- Rocchio pseudo-relevance feedback: BM25 top-10 as the feedback
-    // set, re-rank the corpus by cosine to their embedding centroid ---------
-    "q_rocchio" -> ((s, dir) => {
-      Retrieval.rocchioExpand(Tables.documents(s, dir), "doc_id", "text", BM25_TERMS,
-        Tables.embeddings(s, dir), "vec_id", "embedding", feedbackK = 10, k = 20)
-    }),
-
-    // ---- weight-proportional deterministic Bernoulli sampling (quality-
-    // weighted corpus thinning) ---------------------------------------------
-    "q_weighted_sample" -> ((s, dir) => {
-      val q = TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-      Sampling.weightedSample(q, "doc_id", "quality").orderBy(col("doc_id"))
-    }),
-
-    // ---- CUBE rollup over curation dimensions (subtotals + grand total) ---
-    "q_corpus_cube" -> ((s, dir) => {
-      TextAnalysis.corpusRollup(Tables.documents(s, dir), "text", Seq("lang", "source"))
-        .orderBy(col("lang"), col("source"))
-    }),
-
-    // ---- text stats: tokens / chars / stopword ratio -----------------------
-    "q_text_stats" -> ((s, dir) => {
-      TextAnalysis.stats(Tables.documents(s, dir), "doc_id", "text")
-        .withColumn("n_tokens", col("n_tokens").cast("long"))
-        .withColumn("n_chars", col("n_chars").cast("long"))
-        .withColumn("n_stop", col("n_stop").cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- J2/W1 multi-series LOCF as-of alignment (chunk-parallel form) -----
-    "q_locf_align" -> ((s, dir) => {
-      TimeSeries.locfAlignChunked(events(s, dir), "event_type", "ts_us", "value",
-        Seq("click", "purchase", "view"), T0, T1, chunkUs = 86400000000L)
-    }),
-
-    // ---- F15 mail-template interpolation (cache.py:662-686) over the real
-    // cache snapshot: %PV%/%VALUE%/%LABEL%/%COMP%/%TRIP% plus a nested
-    // %PV(name)% lookup that RESOLVES (EV:click, from the same snapshot)
-    // and one that FAILS (→ the literal `unknown`). The per-alert expansion
-    // is driver-side like the reference's mail path; the snapshot collect
-    // is keys-sized. The oracle rebuilds every body with string concat +
-    // a scalar subquery for the nested lookup ----------------------------
-    "q_mail_template" -> ((s, dir) => {
-      import s.implicits._
-      val latest = TimeSeries.latestPerKey(
-          events(s, dir).where(col("value").isNotNull),
-          "event_type", "ts_us", "event_id", Seq("value"))
-        .select(concat(lit("EV:"), col("event_type")).as("pv"),
-          floor(col("value") * 1000).cast("string").as("v"))
-        .orderBy(col("pv"))
-      val snap = latest.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      val lookup = snap.toMap
-      val tmpl = "Alert for %PV%\nvalue=%VALUE% label=%LABEL%\n" +
-        "condition: %COMP% %TRIP%\nclick=%PV(EV:click)% missing=%PV(EV:nope)%"
-      snap.map { case (pv, v) =>
-        (pv, graft.functions.PvFunctions.mailTemplate(
-          tmpl, pv, v, "lbl:" + pv, "ge", "100", n => lookup.get(n)))
-      }.toDF("pv", "body").orderBy(col("pv"))
-    }),
-
-    // ---- S11 multi-PV aligned EXPORT (scripts/get_pvarch:138-223): the
-    // full aligned-rows line assembly — `%.6f` seconds + one fixed-width
-    // hformat field per series — over the oracled LOCF core. hformat is
-    // value-shape-dependent, so the values are first mapped to a uniform
-    // 6-digit integral grid (100000 + floor(value*100) mod 10000), where
-    // hformat(v, 12) is exactly ' DDDDDD.0000' → trailing-000 trim →
-    // ' DDDDDD.0' — lettting DuckDB mirror the whole line byte-for-byte
-    // (the general hformat surface has its own 500-case fixture oracle,
-    // q_hformat). The `%.6f` ts is safe cross-engine: integral micros
-    // ≤ 2^53 divide to within 1.2e-7 of the true 6-decimal value, so both
-    // formatters round to the same string ---------------------------------
-    "q_export_multi" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type"), col("ts_us"),
-        (lit(100000L) + pmod(floor(col("value") * 100).cast("long"), lit(10000L)))
-          .cast("double").as("value"))
-      val aligned = TimeSeries.locfAlignChunked(ev, "event_type", "ts_us", "value",
-        Seq("click", "purchase", "view"), T0, T1, chunkUs = 86400000000L)
-      Export.alignedRows(aligned, "ts_us", Seq("click", "purchase", "view"))
-    }),
-
-    // ---- S12 save/restore writer (util.py:391-424): the cache snapshot —
-    // latest non-null value per series — rendered through ALL THREE flavor
-    // writers (plain / idl / python), line-exact: flavor headers, the
-    // cmt-prefixed extra header line, per-flavor caput quoting. Values on
-    // an integral grid (floor(value*1000)) so both engines render the same
-    // digits. The collect is keys-sized by construction — a save file has
-    // one line per PV (control-plane artifact, like the reference's) -----
-    "q_save_restore" -> ((s, dir) => {
-      import s.implicits._
-      val latest = TimeSeries.latestPerKey(
-          events(s, dir).where(col("value").isNotNull),
-          "event_type", "ts_us", "event_id", Seq("value"))
-        .select(concat(lit("EV:"), col("event_type")).as("pv"),
-          floor(col("value") * 1000).cast("string").as("v"))
-        .orderBy(col("pv"))
-      val pvvals = latest.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      Seq("plain", "idl", "python").flatMap { f =>
-        Export.saveRestore(pvvals, f, header = Seq("graft snapshot")).zipWithIndex
-          .map { case (l, i) => (f, i.toLong, l) }
-      }.toDF("flavor", "line_no", "line")
-        .orderBy(col("flavor"), col("line_no"))
-    }),
-
-    // ---- Q1 cull_data percentile-preserving decimation ---------------------
-    "q_decimate" -> ((s, dir) => {
-      val e = events(s, dir)
-        .where(col("event_type") === "error" && col("ts_us") >= T0 && col("ts_us") < T1)
-      TimeSeries.decimate(e, "ts_us", "event_id", "value", sample = 5, percent = 10.0)
-        .select(col("ts_us"), col("event_id"), col("value"))
-    }),
-
-    // ---- J3 co-occurrence pair graph (parts sharing an order) --------------
-    "q_pairs_cooccur" -> ((s, dir) => {
-      Pairs.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-        .orderBy(col("m1"), col("m2"))
-    }),
-
-    // ---- J3 with the skew guard engaged: groups capped to their first 4
-    // (sorted) members, bounding per-group pair expansion to k²/2 ≤ 6 — the
-    // viral-group protection a real 100 TB corpus needs ---------------------
-    "q_pairs_cooccur_capped" -> ((s, dir) => {
-      Pairs.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey",
-        maxGroupSize = Some(4))
-        .orderBy(col("m1"), col("m2"))
-    }),
-
-    // ---- J4/O2 top-k related nodes (suppliers sharing orders) --------------
-    "q_pairs_related" -> ((s, dir) => {
-      val edges = Pairs.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_suppkey")
-      Pairs.related(edges, "m1", "m2", "score", lit(1L), k = 5)
-    }),
-
-    // ---- J4 as a point query: same result WITHOUT building the pair graph
-    // (broadcast semi-join on the node's groups — the ad-hoc 100 TB path) --
-    "q_related_direct" -> ((s, dir) => {
-      Pairs.relatedDirect(Tables.lineitem(s, dir), "l_orderkey", "l_suppkey", 1L, k = 5)
-    }),
-
-    // ---- A4 canonical max-merge of duplicate/reversed edges ----------------
-    "q_pairs_merge" -> ((s, dir) => {
-      val edges = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("m1"), col("l_suppkey").as("m2"), col("l_quantity").as("score"))
-      Pairs.mergeScores(edges, "m1", "m2", "score").orderBy(col("m1"), col("m2"))
-    }),
-
-    // ---- J1 broadcast dimension join (samples × pv metadata shape) ---------
-    "q_dim_join" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("l_quantity")).as("sum_qty"),
-          // cents × (100 − discount-cents): both factors exact BIGINTs, so
-          // the 1e-4-grid revenue sum is order-independent
-          round(sum(operators.FixedPoint.q(col("l_extendedprice"), 100.0) *
-            (lit(100L) - operators.FixedPoint.q(col("l_discount"), 100.0))) / 10000.0, 2)
-            .as("revenue"))
-        .orderBy(col("p_brand"))
-    }),
-
-    // ---- multi-hop join chain: lineitem→orders→customer→nation→region ------
-    "q_join_chain" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("r_name"))
-    }),
-
-    // ---- language ID by marker-token hits ----------------------------------
-    "q_lang_id" -> ((s, dir) => {
-      TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text")
-        .withColumn("marker_hits", col("marker_hits").cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- declared-vs-detected language confusion matrix ------------------
-    "q_lang_confusion" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.langId(docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(coalesce(col("lang"), lit("null")).as("declared"),
-          col("lang_pred").as("detected"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("declared"), col("detected"))
-    }),
-
-    // ---- quality score (length + stopword-density heuristic) ---------------
-    "q_quality" -> ((s, dir) => {
-      TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- n-gram Jaccard near-dup pairs (broadcast all-pairs sweep) ---------
-    "q_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccardBroadcast(Tables.documents(s, dir), "doc_id", "text", n = 2, threshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- same output via the DISTRIBUTED block-partitioned sweep — the
-    // 100 TB exact path for dense corpora: no driver collect, no full
-    // broadcast, shuffle O(n·blocks), one task per block pair. (The
-    // prefix-filtered PPJoin form Dedup.ngramJaccard is the Zipfian-corpus
-    // alternative; on this dense small-vocab corpus prefixes prune nothing
-    // and it degenerates to a slower all-pairs.) ---------------------------
-    "q_jaccard_dist" -> ((s, dir) => {
-      exactJaccardPairs(s, dir).orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- the ROUTED Jaccard entry point (r13 ask #4): the df-histogram
-    // gate estimates the PPJoin prefix-candidate volume against C(n,2)/8
-    // and picks the plan — this dense corpus stays on the block sweep
-    // (same oracle as q_jaccard_dist); the Zipfian flip to PPJoin is
-    // pinned by RoutingSpec and drilled as _pairs_ngram_routed -------------
-    "q_jaccard_auto" -> ((s, dir) => {
-      Dedup.ngramJaccardAuto(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, threshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- MinHash signatures (portable universal-hash family) ---------------
-    "q_minhash_sig" -> ((s, dir) => {
-      Dedup.minhashSignature(Tables.documents(s, dir), "doc_id", "text", n = 3, numPerm = NUM_PERM)
-        .orderBy(col("doc"))
-    }),
-
-    // ---- MinHash LSH near-dup pairs (band join + exact-Jaccard verify) -----
-    "q_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashDedup(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, numPerm = NUM_PERM, bands = 4, threshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- chunk-level ("paragraph") dedup with document reassembly ----------
-    "q_chunk_dedup" -> ((s, dir) => {
-      Dedup.chunkDedup(Tables.documents(s, dir), "doc_id", "text", chunkTokens = 25)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- Levenshtein confirmation of the MinHash near-dup candidates -------
-    "q_edit_verify" -> ((s, dir) => {
-      Dedup.editVerify(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, numPerm = NUM_PERM, bands = 4, jaccardThreshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- SimHash 60-bit signatures -----------------------------------------
-    "q_simhash" -> ((s, dir) => {
-      Dedup.simhash(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc"))
-    }),
-
-    // ---- SimHash near-dup pairs: 16-bit prefix bucket join + Hamming cap ---
-    "q_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashDedup(Tables.documents(s, dir), "doc_id", "text",
-        prefixBits = 16, maxHamming = 8)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- prefix-filtered PPJoin Jaccard on its intended SKEWED corpus
-    // (see [[zipfFixtureSql]]) — the prefix filter prunes the Zipf-head
-    // shingles for real; same `jp` oracle CTE as the other two Jaccard
-    // plans, over the identical derived text ---------------------------------
-    "q_jaccard_ppjoin" -> ((s, dir) => {
-      val skewed = Tables.documents(s, dir)
-        .where(col("text").isNotNull) // mirror the oracle CTE's null guard
-        .select(col("doc_id"), expr(zipfFixtureSql("DIV", "STRING")).as("text"))
-      Dedup.ngramJaccard(skewed, "doc_id", "text", n = 2, threshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- brute-force cosine top-k over embeddings --------------------------
-    "q_knn_brute" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 5)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- embedding-cosine near-dup pairs -----------------------------------
-    "q_embed_dedup" -> ((s, dir) => {
-      Similarity.cosinePairs(Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.45)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- same output via the DISTRIBUTED block-partitioned sweep (no
-    // broadcast-size bound, no driver collect) — the exact scale path when
-    // the embedding matrix exceeds executor memory. (cosinePairsJoin is the
-    // declarative fallback; its per-pair UDF invocation over 25M boxed rows
-    // is ~60× this primitive-array sweep.) --------------------------------
-    "q_embed_dedup_dist" -> ((s, dir) => {
-      Similarity.cosinePairsBlocked(Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.45)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- int8 scalar quantization of the embedding corpus ------------------
-    "q_embed_quantize" -> ((s, dir) => {
-      Similarity.quantizeInt8(Tables.embeddings(s, dir), "vec_id", "embedding")
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- per-label embedding norm stats ------------------------------------
-    "q_norm_stats" -> ((s, dir) => {
-      Similarity.normStats(Tables.embeddings(s, dir), "label", "embedding")
-        .orderBy(col("label"))
-    }),
-
-    // ---- JSON props extraction (pvextra-style metadata) --------------------
-    "q_props_json" -> ((s, dir) => {
-      events(s, dir)
-        .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("k")).agg(count(lit(1)).as("n"))
-        .orderBy(col("k"))
-    }),
-
-    // ---- BPE-ish token counting ---------------------------------------------
-    "q_token_count" -> ((s, dir) => {
-      val toks = TextAnalysis.bpeTokens(col("text"))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          size(toks).cast("long").as("n_bpe"),
-          size(array_distinct(toks)).cast("long").as("n_distinct"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- document fingerprints (md5 + rolling hash) ------------------------
-    "q_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp_md5"),
-          TextAnalysis.rollingHash(col("text")).as("fp_roll"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- LSH-bucketed approximate KNN (scale path). Oracle-checked: the
-    // seeded gaussian hyperplanes are embedded in the SQL as literals ------
-    "q_knn_bucketed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bucketedKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        k = 5, planes = 4, dim = 64)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- T2 downsampler replay via the stateful step function. Oracle-
-    // checked: the limbo state machine is re-expressed in DuckDB as a pure
-    // list_reduce fold per PV (see [[downsampleStatefulSql]]) ---------------
-    "q_downsample_stateful" -> ((s, dir) => {
-      import s.implicits._
-      val raw = events(s, dir)
-        .select(concat(lit("u"), col("user_id")).as("pvname"), col("ts_us").as("tsUs"),
-          col("value").cast("string").as("value"), col("value").cast("string").as("cvalue"))
-        .as[graft.streaming.Downsampler.RawSample]
-      graft.streaming.Downsampler.replayBatch(raw, Map.empty,
-        default = graft.streaming.Downsampler.PvConfig("double", 6L * 3600L * 1000000L, 50.0))
-        .toDF()
-        // compare in the value domain: Spark double→string→double round-trips
-        // exactly (shortest-repr cast both ways), and a double column avoids
-        // cross-engine float-formatting parity questions entirely
-        .select(col("pvname"), col("tsUs").as("ts_us"), col("value").cast("double").as("value"))
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- T4 alert state machine replay. Oracle-checked: the per-alert
-    // (status, lastNotice) fold is re-expressed in DuckDB as a list_reduce
-    // over the time-ordered observations with the WHOLE state in one
-    // VARCHAR — the same technique that oracles the T2 limbo machine
-    // (see [[alertsSql]]) ---------------------------------------------------
-    "q_alerts" -> ((s, dir) => {
-      import s.implicits._
-      val obs = events(s, dir)
-        .where(col("user_id") < 8)
-        .select(col("user_id").cast("long").as("alertId"), col("ts_us").as("tsUs"),
-          col("value").cast("string").as("value"))
-        .as[graft.streaming.Alerts.Observation]
-      graft.streaming.Alerts.replayBatch(obs, alertConfigs.map(c => c.alertId -> c).toMap)
-        .toDF()
-        .select(col("alertId").as("alert_id"), col("pvname"), col("tsUs").as("ts_us"),
-          col("value").cast("double").as("value"), col("status"), col("notified"))
-        .orderBy(col("alert_id"), col("ts_us"))
-    }),
-
-    // ---- F5/F8/F10/F12/F13 formatter pack in one projection — pure
-    // codegen'd column functions, per-row, shuffle-free ----------------------
-    "q_format_pack" -> ((s, dir) => {
-      import graft.functions.PvFunctions
-      val labels = map(
-        lit("click"), array(lit("idle"), lit("busy"), lit("fault")),
-        lit("view"), array(lit("off"), lit("on")),
-        lit("purchase"), array(lit("zero"), lit("one"), lit("two"), lit("three")))
-      val sec = expr("ts_us DIV 1000000L")
-      events(s, dir).select(
-        col("event_id"),
-        PvFunctions.tformat(sec).as("t_fmt"),
-        PvFunctions.ts2iso(col("ts_us")).as("iso"),
-        PvFunctions.timehash(sec).as("thash"),
-        PvFunctions.yesNo((col("event_id") % 3).cast("string")).as("yn"),
-        PvFunctions.yesNo(col("event_type")).as("yn_raw"),
-        // missing key / out-of-range ordinal decode to null; a sentinel keeps
-        // the compare null-free (the gate sorts row tuples)
-        coalesce(PvFunctions.enumLabel(labels, col("event_type"), col("event_id") % 5),
-          lit("(none)")).as("enum_label"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ---- F6/F7 lenient time parsing. The web-request parse is driver-side
-    // in the reference too (form fields → epoch range); the oracle is an
-    // INDEPENDENT SQL restatement of each input's resolution (strptime +
-    // epoch arithmetic), so a parse bug on either side hash-mismatches ------
-    // ---- F4 hformat through the native codegen expression, oracled against
-    // the reference-generated fixture table (expected column verbatim) ------
-    "q_hformat" -> ((s, dir) => {
-      s.read.schema("value DOUBLE, fmt_len INT, expected STRING")
-        .option("sep", "\t").csv(hformatCasesPath)
-        .select(col("value"), col("fmt_len"),
-          graft.plans.HFormatExpr.hformat(col("value"), col("fmt_len")).as("got"))
-        .orderBy(col("value"), col("fmt_len"), col("got"))
-    }),
-
-    "q_time_parse" -> ((s, dir) => {
-      import s.implicits._
-      val today = TMID / 1000000L
-      timeParseInputs.map { case (id, d1, d2) =>
-        val (t1, t2) = graft.functions.PvFunctions.parseTimes(d1, d2, today)
-        (id, d1, d2, t1, t2)
-      }.toDF("id", "d1", "d2", "t1_sec", "t2_sec").orderBy(col("id"))
-    }),
-
-    // ---- instrument snapshot: named PV-set catalog + point-in-time values
-    // (WebInstruments.py) — broadcast membership join + map-side argmax ------
-    "q_instrument_snapshot" -> ((s, dir) => {
-      import s.implicits._
-      val samples = events(s, dir).select(col("event_type").as("pvname"),
-        col("ts_us").as("tsUs"), col("event_id"), col("value"))
-      Instruments.snapshot(samples, instrumentSets.toDF("set_name", "pvname"), TMID,
-        ts = "tsUs", tieBreak = "event_id")
-        .select(col("set_name"), col("pvname"), col("tsUs").as("ts_us"),
-          col("event_id"), col("value"))
-        .orderBy(col("set_name"), col("pvname"))
-    }),
-
-    // ---- T3 heartbeat batch replay. Oracle-checked: emissions in a gap are
-    // prev.ts + cumulative seeded intervals — the cumulative table is
-    // precomputed here (same PRNG) and embedded in the SQL as VALUES --------
-    "q_heartbeat" -> ((s, dir) => {
-      import s.implicits._
-      val samples = events(s, dir)
-        .where(col("user_id") < 5)
-        .select(concat(lit("u"), col("user_id")).as("pvname"), col("ts_us").as("tsUs"),
-          col("value").cast("string").as("value"), col("value").cast("string").as("cvalue"))
-        .as[graft.streaming.Downsampler.Sample]
-      graft.streaming.Heartbeat.replayBatch(samples, horizonUs = T1)
-        .toDF()
-        .select(col("pvname"), col("tsUs").as("ts_us"), col("value").cast("double").as("value"))
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- T5/A2 run registry over derived runs ------------------------------
-    "q_run_registry" -> ((s, dir) => {
-      val samples = events(s, dir).select(col("ts_us").as("tsUs"),
-        expr(s"ts_us DIV ${RUN_WEEK_US}L").as("run"))
-      graft.store.SampleStore.runRegistry(samples)
-    }),
-
-    // ---- IVF approximate KNN. Oracle-checked via dataDependentOracles:
-    // Verify trains the same seeded quantizer and embeds the centroids -----
-    "q_knn_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        k = 5, nCells = 8, nprobe = 3)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- PQ approximate KNN (codes + ADC). Oracle-checked via
-    // dataDependentOracles: the same seeded sub-quantizers embedded as
-    // SQL literals -----------------------------------------------------------
-    "q_knn_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.pqKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        topK = 10)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- leave-one-out kNN majority-vote label audit (confusion matrix) ----
-    "q_knn_classify" -> ((s, dir) => {
-      Similarity.knnClassify(Tables.embeddings(s, dir), "vec_id", "embedding",
-        "label", k = 10)
-        .orderBy(col("label"), col("pred"))
-    }),
-
-    // ---- composite training-data curation pipeline: exact-dedup survivors
-    // with language + quality gates, joined to their embedding labels -------
-    "q_curation" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val reps = Dedup.exact(docs, "doc_id", "text").select(col("rep_id"))
-      val quality = TextAnalysis.qualityScore(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality"), col("n_tokens").cast("long").as("n_tokens"))
-      val lang = TextAnalysis.langId(docs, "doc_id", "text").select(col("doc_id"), col("lang_pred"))
-      docs.join(reps, col("doc_id") === col("rep_id"))
-        .join(quality, "doc_id")
-        .join(lang, "doc_id")
-        .where(col("quality") > lit(2.0) && col("lang_pred") =!= "und")
-        .join(Tables.embeddings(s, dir), col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("quality"), col("n_tokens"), col("lang_pred"),
-          col("label").cast("long").as("label"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- multimodal metadata stats over a derived binary table -------------
-    // (documents' text bytes stand in for media payloads — the binary-column
-    // plumbing is what's exercised; codecs are stubbed, TESTDATA has no
-    // real media)
-    "q_media_stats" -> ((s, dir) => {
-      val media = Tables.documents(s, dir).select(
-        col("doc_id").as("media_id"),
-        when(col("doc_id") % 3 === 0, "image")
-          .when(col("doc_id") % 3 === 1, "audio").otherwise("video").as("kind"),
-        encode(col("text"), "UTF-8").as("payload"))
-      Multimodal.mediaStats(media).orderBy(col("kind"))
-    }),
-
-    // ---- multimodal feature extraction. Oracle-checked: the stub-codec
-    // byte histogram is portable SQL over ASCII payloads; bins 1 and 3
-    // (bytes 32-63 / 96-127: punctuation+digits vs lowercase) carry the
-    // signal for text payloads, and the oracle mirrors the FLOAT division
-    // so round(.., 6) agrees bit-for-bit ------------------------------------
-    "q_media_features" -> ((s, dir) => {
-      import s.implicits._
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          Multimodal.MediaRow(id, Seq("image", "audio", "video")(id.toInt % 3),
-            text.getBytes("UTF-8"), "stub", 8, 4, 1000L)
-        }
-      Multimodal.extractFeatures(media, bins = 8)
-        .toDF()
-        .select(col("media_id"), col("kind"),
-          round(element_at(col("feature"), 2).cast("double"), 6).as("f1"),
-          round(element_at(col("feature"), 4).cast("double"), 6).as("f3"))
-        .orderBy(col("media_id"))
-    }),
-
-    // ---- distinct-cardinality per series ------------------------------------
-    "q_distinct_users" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- top-k by aggregate (order by score desc, deterministic tie-break) --
-    "q_topk_users" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(operators.FixedPoint.sum(col("value"), 1e6, 3).as("total"),
-          count(lit(1)).as("n"))
-        .orderBy(col("total").desc, col("user_id"))
-        .limit(10)
-    }),
-
-    // ---- tumbling-window counts (streaming-ready windowed aggregation) -----
-    "q_windowed_counts" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(
-          window(timestamp_micros(col("ts_us")), "1 day").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          operators.FixedPoint.sum(col("value"), 1e6, 3).as("sum_value"))
-        .select(
-          expr("unix_micros(w.start)").as("day_us"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy(col("day_us"), col("event_type"))
-    }),
-
-    // ---- Q5 string-PV table: char-array waveform decoded to (iso, value)
-    // rows; the waveform is derived from event_type with a NUL + trailing
-    // junk so the F9 truncation path is what the oracle actually checks ----
-    "q_string_table" -> ((s, dir) => {
-      val wave = events(s, dir)
-        .where(col("event_type") === "view" && col("ts_us") >= T0 && col("ts_us") < TMID)
-        .withColumn("wave",
-          concat(
-            transform(split(col("event_type"), ""), c => ascii(c)),
-            array(lit(0), lit(88), lit(89))))
-      Export.stringPvTable(wave, "ts_us", "wave")
-    }),
-
-    // ---- Q4 plot-trace assembly: cull (Q1) + iso x-axis + numeric y ------
-    "q_plot_trace" -> ((s, dir) => {
-      val e = events(s, dir)
-        .where(col("event_type") === "error" && col("ts_us") >= T0 && col("ts_us") < T1)
-      Export.plotTrace(e, "ts_us", "event_id", "value", sample = 5, percent = 10.0)
-    }),
-
-    // ---- S10 export projection (time formatting pack) ----------------------
-    "q_export_rows" -> ((s, dir) => {
-      events(s, dir)
-        .where(col("event_type") === "signup" && col("ts_us") >= T0 && col("ts_us") < T1)
-        .select(
-          col("event_id"),
-          col("ts_us"),
-          date_format(timestamp_micros(col("ts_us")), "yyyyMMdd HHmmss").as("datestr"),
-          date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd HH:mm:ss.SSS").as("iso"),
-          col("value"))
-        .orderBy(col("ts_us"), col("event_id"))
-    }),
-
-    // ---- reference cache-dump importer: the ACTUAL production pvlist
-    // dump (3,671 records with embedded newlines, \' escapes, an id gap)
-    // parsed by the engine's character-level scanner, hash-matched against
-    // DuckDB's INDEPENDENT csv parse of the same file (quote=''',
-    // escape=\) — two parsers agreeing field-exactly on the reference's
-    // own data-at-rest is the migration-path correctness gate ---------------
-    "q_cache_import" -> ((s, _) => {
-      graft.sources.CacheDump.load(s, referenceInputs("q_cache_import"))
-        .orderBy(col("id"))
-    }),
-
-    // ---- S8 PV-list file source over the reference's OWN test fixture
-    // (test/GSE__PVList.txt): comment/blank stripping + comma/whitespace
-    // splitting, distributed text scan (cache.py:570-588). line_id is
-    // engine-specific (monotonically_increasing_id), so the oracle compares
-    // the parsed pvname stream — DuckDB re-parses the same file with its
-    // own regexp machinery -------------------------------------------------
-    "q_pvlist_source" -> ((s, _) => {
-      graft.sources.PvListFile.pvNames(s, referenceInputs("q_pvlist_source"))
-        .select(col("pvname")).orderBy(col("pvname"))
-    }),
-
-    // ---- S9 template page RENDER over the reference's OWN production
-    // template (templates/GSE_page1.txt): line classification PLUS the
-    // tmpl2jinja row semantics (web_utils.py:283-322) — every row carries
-    // the section opened by the last preceding `[Section]` header
-    // (last-ignoreNulls carry-forward over line order), PV names are
-    // normalize_pvname'd, a missing description defaults to the
-    // comma-joined normalized names, and `yes/no` format marks each PV
-    // yesno. line_id is engine-specific so row order is content-determined;
-    // the pvs struct array renders to `name=0/1` scalars (the driver's row
-    // hash needs scalar columns); nullable fields coalesce to '' on BOTH
-    // sides (Spark sorts nulls first, DuckDB last). The oracle re-derives
-    // line order with row_number() over a parallel=false csv scan (DuckDB
-    // preserves insertion order) and mirrors the fill with
-    // last_value IGNORE NULLS --------------------------------------------
-    "q_template_parse" -> ((s, _) => {
-      graft.sources.PvListFile.render(s, referenceInputs("q_template_parse"))
-        .select(col("kind"),
-          coalesce(col("section"), lit("")).as("section"),
-          coalesce(concat_ws(",", transform(col("pvs"),
-            x => concat(x.getField("pvname"), lit("="),
-              when(x.getField("yesno"), lit("1")).otherwise(lit("0"))))),
-            lit("")).as("pvs"),
-          coalesce(col("description"), lit("")).as("description"))
-        .orderBy(col("kind"), col("section"), col("pvs"), col("description"))
-    }),
-
-    // ---- F3 clean_value (archiver.py:34-44): the stored-string → double
-    // parse incl. the mangled b'..' byte-literal recovery, over a
-    // deterministic rendering of the events values (floor(value*100) as
-    // BIGINT — integer strings render identically on both engines; a
-    // double cast would not). Every third row is b'..'-wrapped, every
-    // third is bare numeric, the rest are non-numeric junk → null --------
-    "q_clean_value" -> ((s, dir) => {
-      val raw = events(s, dir).select(col("event_id"),
-        expr("""coalesce(CASE WHEN event_id % 3 = 0
-                |  THEN concat('b\'', CAST(CAST(floor(value * 100) AS BIGINT) AS STRING), '\'')
-                |WHEN event_id % 3 = 1
-                |  THEN CAST(CAST(floor(value * 100) AS BIGINT) AS STRING)
-                |ELSE concat('x', event_type) END, '')""".stripMargin).as("stored"))
-      raw.select(col("event_id"), col("stored"),
-          graft.functions.PvFunctions.cleanValue(col("stored")).as("parsed"))
-        .orderBy(col("event_id"), col("stored"))
-    }),
-
-    // ---- F2 clean_string (util.py:295-309): the `;`/`#` tail guard +
-    // trim, applied over the documents corpus — DOTALL, so a tail spanning
-    // newlines is cut too --------------------------------------------------
-    "q_clean_string" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.functions.PvFunctions.cleanString(col("text")).as("clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- S7 run-dump migration round trip: a `pvarch save`-shaped
-    // mysqldump synthesized from the events table (distributed map-only
-    // writer — see runDumpRoot), replayed through the DISTRIBUTED
-    // loadRunDump scanner (per-INSERT-line executor parsing + broadcast
-    // dimension join + float-seconds → micros quantization). The oracle
-    // (dataDependentOracles — the dump path embeds the sfDir SHA) parses
-    // the SAME files with DuckDB's independent csv reader, so a hash match
-    // proves the grammar, the join and the quantization on corpus-scale
-    // data. Generation runs once per JVM when the fn is invoked, by
-    // documented design (the q_zarr_scan convention) ----------------------
-    "q_run_import" -> ((s, dir) => {
-      graft.sources.CacheDump.loadRunDump(s, s"${runDumpRoot(s, dir)}/*/*")
-        .orderBy(col("pvname"), col("tsUs"), col("value"))
-    }),
-
-    // ---- S5/S6 zarr round trip: export a samples frame as a zarr v2
-    // DirectoryStore (distributed writer), re-read it DISTRIBUTED via
-    // binaryFile scans, and window with the reference's argsort +
-    // one-before-tmin slice quirks (archiver.py:152-175). Runs the export
-    // job when the fn is invoked, by documented design (the
-    // ngramJaccardBroadcast convention) — the oracle applies the identical
-    // selection to the parquet directly, so a hash match proves the store
-    // round-trips bit-exactly (ts = tsUs/1e6 and value doubles survive
-    // unchanged through f8 chunks) -------------------------------------------
-    "q_zarr_scan" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("value").isNotNull)
-        .select(concat(lit("EV:"), col("event_type")).as("pvname"),
-          col("ts_us").as("tsUs"), col("value"))
-        .groupBy(col("pvname"), col("tsUs")) // unique ts per PV: argsort tie-free
-        .agg(max(col("value")).cast("string").as("value"))
-      // collision-free store key (r10 ADVICE): a full SHA-1 of the sfDir
-      // path — 32-bit hashCode collisions between two scales would reuse
-      // the first scale's export and scan the wrong data
-      val dirSha = java.security.MessageDigest.getInstance("SHA-1")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      val store = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_zarr_scan_$dirSha").getAbsolutePath
-      // export ONCE per (sfDir, JVM): the query under test is the S5 SCAN
-      // (re-read + slice); re-exporting identical deterministic bytes on
-      // every bench repeat would time the writer instead. Verify invokes
-      // each query once, so correctness still covers the full round trip.
-      zarrExported.synchronized {
-        if (!zarrExported.contains(store)) {
-          graft.store.ZarrExport.exportDirectoryStore(samples, store)
-          zarrExported += store
-        }
-      }
-      // T0+4d / T0+9d in float seconds — exact integers, embedded as the
-      // same literals in the oracle
-      graft.store.ZarrExport.sliceWindow(
-        graft.store.ZarrExport.readDirectoryStore(s, store),
-        tmin = 1705017600.0, tmax = 1705449600.0)
-        .select(col("pvname"), col("ts"), col("dvalue"))
-        .orderBy(col("pvname"), col("ts"))
-    }),
-
-    // ---- deterministic train/val/test split: pure map, no shuffle, stable
-    // under corpus growth -----------------------------------------------------
-    "q_split_assign" -> ((s, dir) => {
-      Sampling.splitAssign(Tables.documents(s, dir), "doc_id")
-        .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- per-language stratified downsampling (driver-resolved integer
-    // thresholds; membership reproducible by any engine) ----------------------
-    "q_sample_stratified" -> ((s, dir) => {
-      Sampling.sampleStratified(Tables.documents(s, dir), "doc_id", "lang",
-        Map("en" -> 0.5, "fr" -> 0.25), defaultRate = 0.1)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- per-source cap: no single domain dominates the corpus --------------
-    "q_source_cap" -> ((s, dir) => {
-      Sampling.perGroupCap(Tables.documents(s, dir), "doc_id", "source", cap = 20)
-        .select(col("doc_id"), col("source"), col("cap_rank"))
-        .orderBy(col("source"), col("cap_rank"))
-    }),
-
-    // ---- token-budget mixing: ~3000 chars per source, hash-drawn -----------
-    "q_token_budget" -> ((s, dir) => {
-      Sampling.perGroupTokenCap(Tables.documents(s, dir), "doc_id", "source",
-        col("n_chars"), budget = 3000)
-        .select(col("doc_id"), col("source"), col("cum_tokens").as("cum_chars"))
-        .orderBy(col("source"), col("cum_chars"))
-    }),
-
-    // ---- benchmark-contamination scan: docs sharing a 4-gram with the
-    // "eval set" (stand-in: doc_id < 10), broadcast semi-join ----------------
-    "q_contamination" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.contamination(
-        docs.where(col("doc_id") >= 10), docs.where(col("doc_id") < 10),
-        "doc_id", "text", n = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- Gopher-style repetition quality signals ---------------------------
-    "q_repetition" -> ((s, dir) => {
-      TextAnalysis.repetition(Tables.documents(s, dir), "doc_id", "text", n = 2)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- near-dup clusters: pairwise Jaccard output resolved to connected
-    // components (min-id representative per cluster) — pairs (1,2)+(2,3)
-    // are ONE cluster, the decision a dedup pipeline actually needs --------
-    "q_dedup_clusters" -> ((s, dir) => {
-      val pairs = exactJaccardPairs(s, dir)
-      Dedup.connectedComponents(pairs, "d1", "d2").orderBy(col("doc"))
-    }),
-
-    // ---- semantic near-dup clusters: the same CC core over embedding-cosine
-    // pairs instead of n-gram Jaccard — SimClusters-style dedup ---------------
-    "q_semantic_clusters" -> ((s, dir) => {
-      val pairs = Similarity.cosinePairsBlocked(
-        Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.45)
-      Dedup.connectedComponents(pairs, "d1", "d2").orderBy(col("doc"))
-    }),
-
-    // ---- the full curation pipeline composed end-to-end: near-dup cluster
-    // survivors, minus high-repetition docs, minus eval-contaminated docs,
-    // capped per source, split train/val/test — the manifest a training job
-    // would actually consume. Every stage is an operator oracled on its own
-    // above; this proves they COMPOSE. -----------------------------------------
-    "q_corpus_manifest" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = exactJaccardPairs(s, dir)
-      val surv = Dedup.clusterSurvivors(
-        docs, "doc_id", Dedup.connectedComponents(pairs, "d1", "d2"))
-      val lowRep = TextAnalysis.repetition(docs, "doc_id", "text", n = 2)
-        .where(col("dup_frac") <= 0.05).select(col("doc_id"))
-      val contaminated = TextAnalysis.contamination(
-        docs.where(col("doc_id") >= 10), docs.where(col("doc_id") < 10),
-        "doc_id", "text", n = 4).select(col("doc_id"))
-      val kept = surv.where(col("doc_id") >= 10) // the eval set never trains
-        .join(lowRep, "doc_id")
-        .join(contaminated, Seq("doc_id"), "left_anti")
-      Sampling.splitAssign(Sampling.perGroupCap(kept, "doc_id", "source", cap = 40), "doc_id")
-        .select(col("doc_id"), col("source"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- sequence packing: concat-and-chunk docs into 512-token context
-    // windows across 8 shards (hash order = the training shuffle) ------------
-    "q_pack_sequences" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Sampling.packSequences(docs, "doc_id",
-        size(split(col("text"), " ")), seqLen = 512, shards = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- PII scrub over a deterministically PII-laced corpus (the synthetic
-    // documents carry no PII, so the gate splices an email/phone/IP per doc
-    // from doc_id — identically in the oracle — and hash-checks the counts
-    // AND the redacted text) --------------------------------------------------
-    "q_pii_redact" -> ((s, dir) => {
-      val laced = Tables.documents(s, dir).select(
-        col("doc_id"),
-        concat(
-          col("text"), lit(" contact user"), col("doc_id"),
-          lit("@mail.example.com or +1 (555) 000-"), col("doc_id"),
-          lit(" ip 10.0."), col("doc_id") % 256, lit(".7")).as("text"))
-      TextAnalysis.piiRedact(laced, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- T6 request queue merged onto a PV dimension (cache.py:705-752):
-    // last request per PV wins, adds create, suspends deactivate, drops
-    // remove, and suspend/drop naming an absent PV is ignored ---------------
-    "q_requests" -> ((s, dir) => {
-      val dim = Tables.supplier(s, dir).select(
-        concat(lit("s"), col("s_suppkey")).as("pvname"),
-        when(col("s_suppkey") % 3 === 0, lit("no")).otherwise(lit("yes")).as("active"),
-        col("s_nationkey").cast("long").as("nation"))
-      val reqs = Tables.orders(s, dir).select(
-        concat(lit("s"), col("o_custkey") % 150).as("pvname"),
-        element_at(array(lit("add"), lit("suspend"), lit("drop")),
-          (col("o_orderkey") % 3).cast("int") + 1).as("action"),
-        col("o_orderkey").cast("long").as("tsUs"))
-      graft.sources.Requests(dim, reqs)
-        // adds of PVs absent from the dimension have no nation; a sentinel
-        // keeps the compare null-free (the gate sorts row tuples)
-        .select(col("pvname"), col("active"), coalesce(col("nation"), lit(-1L)).as("nation"))
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- fixed-window document chunking with overlap — map-only, the
-    // training-sequence producer upstream of q_pack_sequences ---------------
-    "q_chunk_docs" -> ((s, dir) => {
-      TextAnalysis.chunkDocs(Tables.documents(s, dir), "doc_id", "text",
-        chunkTokens = 64, overlap = 16)
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-
-    // ---- TextRank centrality over each document's chunks: which windows
-    // are most representative (RAG extractive selection)? Doc-local
-    // overlap graph + weighted integer PageRank, vectorized across docs --
-    "q_textrank" -> ((s, dir) => {
-      TextAnalysis.textRank(Tables.documents(s, dir), "doc_id", "text",
-        chunkTokens = 64, overlap = 16, iters = 5, topK = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // ---- bigram-LM cross-entropy (perplexity-proxy quality score),
-    // self-trained on the corpus with add-k smoothing ------------------------
-    "q_lm_xent" -> ((s, dir) => {
-      TextAnalysis.lmCrossEntropy(Tables.documents(s, dir), "doc_id", "text", addK = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- liveness/activity check (pvarch.py:184-192): per-PV trailing-
-    // window update counts + the reference's alive verdict; the click-only
-    // sample stream vs the all-events dimension leaves some PVs silent ------
-    "q_activity" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val samples = ev.where(col("event_type") === "click").select(
-        concat(lit("u"), col("user_id")).as("pvname"), col("ts_us").as("tsUs"),
-        col("value"))
-      val dim = ev.select(concat(lit("u"), col("user_id")).as("pvname"))
-      new graft.Archive(samples)
-        .activity(tUs = TMID, windowUs = 6L * 3600L * 1000000L, minUpdates = 2L,
-          pvDim = Some(dim))
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- tokenizer-vocabulary coverage: per-doc OOV fraction against the
-    // self-derived top-100 unigram head (L14 composed with L28) --------------
-    "q_oov" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val vocab = TextAnalysis.vocabTopK(docs, "doc_id", "text", n = 1, k = 100)
-        .select(col("gram").as("token"))
-      TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- cross-corpus NEAR-dup incremental dedup: the odd-id shard deduped
-    // against the even-id corpus — LSH banding on both sides, bucket-keyed
-    // candidate join, exact-Jaccard verify, survivors by anti-join ----------
-    "q_minhash_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.incrementalMinhash(
-        docs.where(col("doc_id") % 2 === 1), docs.where(col("doc_id") % 2 === 0),
-        "doc_id", "text", n = 2, numPerm = NUM_PERM, bands = 4, threshold = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- gap-based sessionization per user (30 min idle timeout) ----------
-    "q_sessions" -> ((s, dir) => {
-      val samples = events(s, dir).select(
-        concat(lit("u"), col("user_id")).as("pvname"), col("ts_us"))
-      TimeSeries.sessionStats(samples, "pvname", "ts_us", gapUs = 30L * 60L * 1000000L)
-        .orderBy(col("pvname"), col("session_idx"))
-    }),
-
-    // ---- ordered conversion funnel view -> click -> purchase (7-day step
-    // horizon, first-touch completion times) --------------------------------
-    "q_funnel" -> ((s, dir) => {
-      EventAnalytics.funnel(events(s, dir), "user_id", "ts_us", "event_type",
-        Seq("view", "click", "purchase"), horizonUs = RUN_WEEK_US)
-        .orderBy(col("stage"))
-    }),
-
-    // ---- day-cohort retention triangle (first-activity cohorts, k <= 13) --
-    "q_retention" -> ((s, dir) => {
-      EventAnalytics.retention(events(s, dir), "user_id", "ts_us", maxDays = 13)
-        .orderBy(col("cohort_day"), col("k"))
-    }),
-
-    // ---- declarative data-quality expectations: one scan per table, a
-    // keyed anti-join for referential integrity, three-valued-logic
-    // violation semantics -----------------------------------------------------
-    "q_dq_checks" -> ((s, dir) => {
-      import DataQuality.Rule
-      val ev = DataQuality.check(events(s, dir), Seq(
-        Rule("events.user_id_present", col("user_id").isNotNull),
-        Rule("events.value_in_range", col("value").between(0, 400)),
-        Rule("events.value_present", col("value").isNotNull)))
-      val li = DataQuality.check(Tables.lineitem(s, dir), Seq(
-        Rule("lineitem.discount_le_8pct", col("l_discount") <= 0.08),
-        Rule("lineitem.quantity_1_50", col("l_quantity").between(1, 50))))
-      val docs = DataQuality.check(Tables.documents(s, dir), Seq(
-        Rule("documents.lang_allowed", col("lang").isin("en", "zh", "fr", "es", "de")),
-        Rule("documents.min_chars_100", col("n_chars") >= 100),
-        Rule("documents.nchars_consistent", col("n_chars") === length(col("text")))))
-      val ref = DataQuality.refIntegrity("orders.custkey_resolves",
-        Tables.orders(s, dir), "o_custkey", Tables.customer(s, dir), "c_custkey")
-      ev.unionByName(li).unionByName(docs).unionByName(ref)
-        .orderBy(col("rule"))
-    }),
-
-    // ---- per-source quality calibration (percent_rank within source) ------
-    "q_quality_calibrated" -> ((s, dir) => {
-      TextAnalysis.calibrateByGroup(Tables.documents(s, dir), "doc_id", "text", "source")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- generic keyed as-of join (vectorized Q2): every view event picks
-    // up the user's latest click value at or before its time ----------------
-    "q_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val views = ev.where(col("event_type") === "view").select(
-        concat(lit("u"), col("user_id")).as("pvname"),
-        col("ts_us"), col("event_id"))
-      val clicks = ev.where(col("event_type") === "click").select(
-        concat(lit("u"), col("user_id")).as("pvname"),
-        col("ts_us").as("click_ts"), col("value"))
-        // unique per (key, ts): max tie-break, mirrored in the oracle
-        .groupBy(col("pvname"), col("click_ts"))
-        .agg(max(col("value")).as("click_value"))
-      TimeSeries.asofJoin(views, clicks, "pvname", "ts_us", "click_ts",
-        Seq("click_value"))
-        // views before any click carry null; a sentinel keeps the compare
-        // null-free (the gate sorts row tuples)
-        .select(col("pvname"), col("ts_us"), col("event_id"),
-          coalesce(col("click_value"), lit(-1.0)).as("click_value"))
-        .orderBy(col("pvname"), col("ts_us"), col("event_id"))
-    }),
-
-    // ---- corpus drift between two snapshots (even vs odd doc ids): tokens
-    // with the largest smoothed log2 frequency-ratio shift ------------------
-    "q_vocab_shift" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.vocabShift(
-        docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 50, addK = 0.5)
-    }),
-
-    // ---- ANN quality gate: recall@k of the LSH-bucketed KNN against the
-    // exact brute-force ranking on the same query sample ---------------------
-    "q_knn_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val qs = emb.where(col("vec_id") < 5)
-      Similarity.recallAtK(
-        Similarity.bruteForceKnn(emb, qs, "vec_id", "embedding", k = 5),
-        Similarity.bucketedKnn(emb, qs, "vec_id", "embedding", k = 5, planes = 4, dim = 64),
-        k = 5)
-        .orderBy(col("query_id"))
-    }),
-
-    // ---- repeated-span (exact substring) duplication profile: per-doc
-    // coverage by 8-token spans seen verbatim in >= 2 distinct docs --------
-    "q_span_dedup" -> ((s, dir) => {
-      Dedup.repeatedSpans(Tables.documents(s, dir), "doc_id", "text", k = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- semantic outliers: the 25 vectors farthest from their nearest
-    // IVF centroid (the curation pipeline's "weird tail" report) -----------
-    "q_semantic_outliers" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", k = 8, seed = 42L)
-      Similarity.semanticOutliers(emb, "vec_id", "embedding", cents, topN = 25)
-    }),
-
-    // ---- temperature-scaled source mixture (mT5/XLM-R alpha sampling) ----
-    "q_mixture_weights" -> ((s, dir) => {
-      Sampling.mixtureWeights(Tables.documents(s, dir), "source",
-        size(TextAnalysis.tokens(col("text"))), alpha = 0.5, budgetTokens = 1000000L)
-        .orderBy(col("source"))
-    }),
-
-    // ---- BPE merge statistics: corpus-weighted adjacent char pairs,
-    // expanded over the VOCAB (the corpus pays one agg) ---------------------
-    "q_bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpePairCounts(Tables.documents(s, dir), "text", k = 50)),
-
-    // ---- learned BPE: greedy merge learning on the word-vocabulary frame,
-    // then the deterministic per-word encode fold over the merge list ------
-    "q_bpe_encode" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val merges = TextAnalysis.bpeLearn(docs, "text", nMerges = 20)
-      docs.where(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.bpeEncode(col("text"), merges).as("__t"))
-        .select(col("doc_id"), array_join(col("__t"), " ").as("encoded"),
-          size(col("__t")).cast("long").as("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- per-source length profile: exact interpolated percentiles ------
-    "q_source_profile" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          round(avg(col("n_chars")), 6).as("avg_chars"),
-          round(expr("percentile(n_chars, 0.5D)"), 6).as("p50_chars"),
-          round(expr("percentile(n_chars, 0.9D)"), 6).as("p90_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // ---- per-label mean embeddings (class centroids), long format --------
-    "q_label_centroids" -> ((s, dir) => {
-      Similarity.labelCentroids(Tables.embeddings(s, dir), "label", "embedding")
-        .orderBy(col("label"), col("dim"))
-    }),
-
-    // ---- salted exact count-distinct: same oracle as q_distinct_users,
-    // skew-proof two-phase plan (salt derived from the dedup column) -------
-    "q_distinct_users_salted" -> ((s, dir) => {
-      Skew.saltedDistinct(events(s, dir), "event_type", "user_id", salts = 16)
-        .select(col("event_type"), col("n_distinct").as("n_users"), col("n"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- linear-interpolation resampling to an hourly grid (the smooth-
-    // plot twin of the LOCF alignment family) ------------------------------
-    "q_interpolate" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click" && col("ts_us") >= T0 && col("ts_us") < TMID)
-        .where(col("user_id") < 40)
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.interpolateLinear(samples, "pvname", "ts_us", "value",
-        t0 = T0, t1 = TMID, stepUs = 6L * 3600L * 1000000L)
-        .select(col("pvname"), col("ts_us"),
-          coalesce(col("value"), lit(Double.NaN)).as("value"))
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- per-series daily OHLC rollup (first/last/min/max per bucket) ------
-    "q_ohlc" -> ((s, dir) => {
-      TimeSeries.bucketRollup(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", widthUs = 86400000000L)
-        .orderBy(col("pvname"), col("bucket"))
-    }),
-
-    // ---- per-series fixed-range value histogram (20 bins over [0, 500],
-    // out-of-range clamped into the edge bins) -----------------------------
-    "q_histogram" -> ((s, dir) => {
-      TimeSeries.histogram(
-        events(s, dir).select(col("event_type").as("pvname"), col("value")),
-        "pvname", "value", lo = 0.0, hi = 500.0, bins = 20)
-        .orderBy(col("pvname"), col("bin"))
-    }),
-
-    // ---- per-key sample-to-sample delta / rate of change -------------------
-    "q_delta_rate" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click" && col("ts_us") >= T0 && col("ts_us") < TMID)
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.deltaRate(samples, "pvname", "ts_us", "value")
-        // first-of-key rows carry no rate; drop them here so the oracled
-        // output has no NULLs (driver row-sort hygiene, like q_trailing_stats)
-        .where(col("delta").isNotNull)
-        .select(col("pvname"), col("ts_us"), col("value"), col("delta"),
-          col("dt_us"),
-          coalesce(col("rate_per_sec"), lit(Double.NaN)).as("rate_per_sec"))
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- per-key EWMA smoothing (sequential fold; secondary-sort linear
-    // scan in Spark, list_reduce fold in the oracle — identical op order,
-    // bit-identical doubles before the shared round) -----------------------
-    "q_ewma" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.ewma(samples, "pvname", "ts_us", "value", alpha = 0.25)
-        // floor-quantize, not round: alpha=0.25 makes many ewma values exact
-        // dyadics sitting ON decimal half-points, where Spark (BigDecimal
-        // HALF_UP) and DuckDB (float rounding) disagree; floor of the
-        // bit-identical fold output is engine-invariant
-        .withColumn("ewma", floor(col("ewma") * 1000000.0) / 1000000.0)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- per-key Holt level+trend smoothing (sequential two-scalar fold;
-    // same secondary-sort linear scan as q_ewma, struct-state list_reduce
-    // in the oracle — identical op order, bit-identical doubles before the
-    // shared floor quantization) -------------------------------------------
-    "q_holt" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.holt(samples, "pvname", "ts_us", "value", alpha = 0.5, beta = 0.25)
-        .withColumn("level", floor(col("level") * 1000000.0) / 1000000.0)
-        .withColumn("trend", floor(col("trend") * 1000000.0) / 1000000.0)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- per-event-type winsorized robust stats (exact percentile fences,
-    // clamp, one combinable moment pass) -----------------------------------
-    "q_winsorize" -> ((s, dir) => {
-      TimeSeries.winsorize(
-        events(s, dir).select(col("event_type"), col("value")),
-        "event_type", "value", pLo = 0.05, pHi = 0.95)
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- correlation matrix over the LOCF-aligned series ("do these PVs
-    // move together") — explicit-sum Pearson from ONE shared agg pass ------
-    "q_pv_corr" -> ((s, dir) => {
-      val aligned = TimeSeries.locfAlign(
-        events(s, dir).select(col("event_type"), col("ts_us"), col("value")),
-        "event_type", "ts_us", "value", Seq("click", "purchase", "view"), T0, T1)
-      TimeSeries.correlationMatrix(aligned, Seq("click", "purchase", "view"))
-        .select(col("k1"), col("k2"), col("n"),
-          coalesce(col("corr"), lit(Double.NaN)).as("corr"))
-        .orderBy(col("k1"), col("k2"))
-    }),
-
-    // ---- downtime/gap report (where the data ISN'T) -----------------------
-    "q_gaps" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"), col("ts_us"))
-      TimeSeries.gaps(samples, "pvname", "ts_us", minGapUs = 5L * 86400000000L)
-        .orderBy(col("pvname"), col("gap_start"))
-    }),
-
-    // ---- per-day percentile bands (ribbon-plot envelope) ------------------
-    "q_bands" -> ((s, dir) => {
-      TimeSeries.percentileBands(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", widthUs = 86400000000L)
-        .orderBy(col("pvname"), col("bucket"))
-    }),
-
-    // ---- per-series autocorrelation at lags 1..3 --------------------------
-    "q_acf" -> ((s, dir) => {
-      TimeSeries.autocorrelation(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", maxLag = 3)
-        .select(col("pvname"), col("lag"), col("n"),
-          coalesce(col("acf"), lit(Double.NaN)).as("acf"))
-        .orderBy(col("pvname"), col("lag"))
-    }),
-
-    // ---- per-key per-day ingest throttle (hard rate cap, first-2 kept) ----
-    "q_throttle" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("event_id"), col("value"))
-      TimeSeries.throttle(samples, "pvname", "ts_us", "event_id",
-        windowUs = 86400000000L, perWindow = 2)
-        .orderBy(col("pvname"), col("ts_us"), col("event_id"))
-    }),
-
-    // ---- flatline / staleness report (stuck-sensor detector) over a
-    // 50-quantized value so runs actually form ------------------------------
-    "q_flatline" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), floor(col("value") / 50.0).as("value"))
-      TimeSeries.flatline(samples, "pvname", "ts_us", "value")
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- two-sided CUSUM drift detection (sequential control-chart fold,
-    // floor-quantized accumulators like q_ewma) ----------------------------
-    "q_cusum" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.cusum(samples, "pvname", "ts_us", "value",
-        target = 50.0, slack = 5.0, h = 200.0)
-        .withColumn("s_pos", floor(col("s_pos") * 1000000.0) / 1000000.0)
-        .withColumn("s_neg", floor(col("s_neg") * 1000000.0) / 1000000.0)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- Spearman rank-correlation matrix over the LOCF grid (integer-
-    // exact average ranks into the shared explicit-sum Pearson pass) -------
-    "q_spearman" -> ((s, dir) => {
-      val aligned = TimeSeries.locfAlign(
-        events(s, dir).select(col("event_type"), col("ts_us"), col("value")),
-        "event_type", "ts_us", "value", Seq("click", "purchase", "view"), T0, T1)
-      TimeSeries.spearmanMatrix(aligned, Seq("click", "purchase", "view"))
-        .select(col("k1"), col("k2"), col("n"),
-          coalesce(col("corr"), lit(Double.NaN)).as("corr"))
-        .orderBy(col("k1"), col("k2"))
-    }),
-
-    // ---- hour-of-day x day-of-week seasonal profile (pure integer
-    // calendar arithmetic — no timezone library in the hash path) ----------
-    "q_seasonal" -> ((s, dir) => {
-      TimeSeries.seasonalProfile(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value")
-        .orderBy(col("pvname"), col("hour"), col("dow"))
-    }),
-
-    // ---- PSI distribution drift between the two halves of the month ------
-    "q_psi" -> ((s, dir) => {
-      TimeSeries.psiDrift(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", tSplit = TMID, lo = 0.0, hi = 500.0, bins = 20)
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- rolling day-over-day PSI drift series per event type ------------
-    "q_psi_rolling" -> ((s, dir) => {
-      TimeSeries.psiRolling(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"),
-          col("value")),
-        "pvname", "ts_us", "value", lo = 0.0, hi = 500.0, bins = 20,
-        stepUs = 86400000000L)
-    }),
-
-    // ---- one-row-per-key drift panel: PSI and KS side by side, from ONE
-    // fused histogram pass (joining the two operators scans events 3×) ----
-    "q_drift_panel" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type").as("pvname"),
-        col("ts_us"), col("value"))
-      TimeSeries.driftPanel(ev, "pvname", "ts_us", "value",
-        tSplit = TMID, lo = 0.0, hi = 500.0, bins = 20)
-        .select(col("pvname"), col("psi"), col("ks"))
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- rolling-median despiking filter ----------------------------------
-    "q_despike" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click" && col("ts_us") >= T0 && col("ts_us") < TMID)
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.medianFilter(samples, "pvname", "ts_us", "value",
-        halfWindow = 2, spikeThresh = 50.0)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- time-bucket x value-bin heatmap (waterfall plot frame) -----------
-    "q_heatmap" -> ((s, dir) => {
-      TimeSeries.heatmap(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value",
-        widthUs = 86400000000L, lo = 0.0, hi = 500.0, bins = 10)
-        .orderBy(col("pvname"), col("bucket"), col("bin"))
-    }),
-
-    // ---- time-weighted average (LOCF weighting + W2 pre-window seed) ------
-    "q_twa" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click")
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.timeWeightedAvg(samples, "pvname", "ts_us", "value", T0, TMID)
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- largest-triangle plot decimation (parallel fixed-anchor LTTB) ----
-    "q_lttb" -> ((s, dir) => {
-      Export.lttb(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", buckets = 48)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- trailing-window moving stats + z-score anomaly flag (the
-    // "suddenly 6-sigma off its last 6 hours" monitoring primitive) --------
-    "q_trailing_stats" -> ((s, dir) => {
-      val samples = events(s, dir)
-        .where(col("event_type") === "click" && col("ts_us") >= T0 && col("ts_us") < TMID)
-        .select(concat(lit("u"), col("user_id")).as("pvname"),
-          col("ts_us"), col("value"))
-      TimeSeries.trailingStats(samples, "pvname", "ts_us", "value",
-        windowUs = 6L * 3600L * 1000000L)
-        // driver-compare hygiene: no NULLs in oracle-checked outputs (the
-        // row sort can't order None against values) — absent baselines
-        // surface as NaN on both engines
-        .select(col("pvname"), col("ts_us"), col("value"), col("n_prev"),
-          coalesce(col("mean_prev"), lit(Double.NaN)).as("mean_prev"),
-          coalesce(col("std_prev"), lit(Double.NaN)).as("std_prev"),
-          coalesce(col("z"), lit(Double.NaN)).as("z"))
-        .orderBy(col("pvname"), col("ts_us"), col("value"))
-    }),
-
-    // ---- perplexity-quartile profile: exact quantile thresholds over the
-    // (identically rounded) lm_xent scores, then per-bucket stats ----------
-    "q_quality_buckets" -> ((s, dir) => {
-      val xent = TextAnalysis.lmCrossEntropy(Tables.documents(s, dir), "doc_id", "text",
-        addK = 0.5)
-      val qs = xent.agg(expr("percentile(xent, array(0.25D, 0.5D, 0.75D))").as("__q"))
-      xent.crossJoin(broadcast(qs))
-        .select(col("xent"),
-          when(col("xent") <= col("__q").getItem(0), 0L)
-            .when(col("xent") <= col("__q").getItem(1), 1L)
-            .when(col("xent") <= col("__q").getItem(2), 2L)
-            .otherwise(3L).as("bucket"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          operators.FixedPoint.mean6(col("xent")).as("avg_xent"),
-          round(min(col("xent")), 6).as("min_xent"), round(max(col("xent")), 6).as("max_xent"))
-        .orderBy(col("bucket"))
-    }),
-
-    // ---- one-row corpus dataset card ------------------------------------
-    "q_dataset_card" -> ((s, dir) =>
-      TextAnalysis.datasetCard(Tables.documents(s, dir), "text", "lang", "source")),
-
-    // ---- per-source top terms (exact heavy hitters; window over the
-    // vocab-sized count table, never the corpus) ---------------------------
-    "q_source_top_terms" -> ((s, dir) =>
-      TextAnalysis.topTermsPerGroup(Tables.documents(s, dir), "source", "text", k = 5)
-        .orderBy(col("source"), col("rank"))),
-
-    // ---- source-vocabulary cosine: which sources read alike --------------
-    "q_source_similarity" -> ((s, dir) =>
-      TextAnalysis.groupVocabCosine(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("g1"), col("g2"))),
-
-    // ---- hybrid retrieval: RRF fusion of the BM25 lexical run and the
-    // cosine KNN semantic run (doc ids and vec ids share a domain) ---------
-    "q_hybrid_rrf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val lex = TextAnalysis.bm25(Tables.documents(s, dir), "doc_id", "text",
-        BM25_TERMS, k = 20)
-        .select(col("doc_id"), row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long").as("rank"))
-      val emb = Tables.embeddings(s, dir)
-      val sem = Similarity.bruteForceKnn(emb, emb.where(col("vec_id") === 0),
-        "vec_id", "embedding", k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank").cast("long").as("rank"))
-      Retrieval.rrfFuse(Seq(lex, sem), "doc_id", c = 60, k = 15)
-    }),
-
-    // ---- hard-negative mining: for each query vector, the nearest
-    // DIFFERENT-label vectors (the contrastive-training near-misses) -------
-    "q_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.hardNegatives(emb, emb.where(col("vec_id") < 8),
-        "vec_id", "embedding", "label", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- matryoshka truncation audit: recall@5 of prefix-d cosine KNN vs
-    // the full 64-dim truth, the gate for searching truncated vectors ------
-    "q_trunc_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.truncatedRecall(emb, emb.where(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, dims = Seq(8, 16, 32))
-        .orderBy(col("dims"))
-    }),
-
-    // ---- filter-funnel attrition: per-stage doc/char survival through an
-    // ordered curation gauntlet — one scan, one combinable agg -------------
-    "q_filter_funnel" -> ((s, dir) => {
-      val toks = TextAnalysis.tokens(col("text"))
-      TextAnalysis.filterFunnel(Tables.documents(s, dir), "text", Seq(
-        "nonempty" -> (length(col("text")) > 0),
-        "lang_en" -> (col("lang") === "en"),
-        "min_tokens" -> (size(filter(toks, t => t =!= "")) >= 30),
-        "max_chars" -> (length(col("text")) <= 400),
-        "no_dup_marker" -> !col("text").contains("dup")))
-        .orderBy(col("stage_idx"))
-    }),
-
-    // ---- weighted (tf-idf) near-dup pairs. This corpus is the SMALL-VOCAB
-    // regime (31 terms, dense postings), so the headline entry runs the
-    // broadcast JIT sweep; the inverted-index plan — the Zipfian-corpus
-    // path — is oracled on a subset below (vs the same oracle shape) ------
-    // ---- per-document TF-IDF keyword extraction (integer-exact weights;
-    // the df-gate IS the stopword list) -----------------------------------
-    "q_keywords" -> ((s, dir) => {
-      TextAnalysis.keywords(Tables.documents(s, dir), "doc_id", "text",
-        k = 5, maxDfPct = 60)
-        .orderBy(col("doc"), col("rank"))
-    }),
-
-    // ---- corpus keyphrases, RAKE-style: maximal runs between stopwords
-    // (df-gate ∪ the closed-class list), integer degree/freq scores -------
-    "q_keyphrases" -> ((s, dir) => {
-      TextAnalysis.keyphrases(Tables.documents(s, dir), "doc_id", "text",
-        k = 20, stopDfPct = 90, maxPhraseLen = 4,
-        extraStops = TextAnalysis.stopwords)
-    }),
-
-    "q_tfidf_pairs" -> ((s, dir) => {
-      TextAnalysis.tfidfSimilarDense(Tables.documents(s, dir), "doc_id", "text",
-        threshold = 0.9, maxDfPct = 78)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- the inverted-index twin, unchanged semantics; route PINNED to
-    // the index so the salted posting-list plan stays oracle-checked (the
-    // auto gate would route this dense corpus to the dense sweep) ----------
-    "q_tfidf_pairs_inv" -> ((s, dir) => {
-      TextAnalysis.tfidfSimilar(
-        Tables.documents(s, dir).where(col("doc_id") % 10 === 0), "doc_id", "text",
-        threshold = 0.9, maxDfPct = 78, route = "index")
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- the ROUTED entry point (r13 ask #1): the density gate compares
-    // Σ C(df,2) against C(n,2) and picks the physical plan — on this dense
-    // small-vocab corpus it flips to the dense sweep; same oracle as the
-    // pinned index twin proves hash equality across the routes -------------
-    "q_tfidf_auto" -> ((s, dir) => {
-      TextAnalysis.tfidfSimilar(
-        Tables.documents(s, dir).where(col("doc_id") % 10 === 0), "doc_id", "text",
-        threshold = 0.9, maxDfPct = 78)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- boilerplate n-gram coverage: per-doc fraction of 3-gram
-    // occurrences that appear in > 60% of documents ------------------------
-    "q_boilerplate" -> ((s, dir) => {
-      TextAnalysis.boilerplateCoverage(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, minDfPct = 60)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- semantic source map: cosine between per-source mean embeddings --
-    "q_source_centroids" -> ((s, dir) => {
-      val joined = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-        .join(Tables.embeddings(s, dir), col("doc_id") === col("vec_id"))
-      Similarity.groupCentroidCosine(joined, "source", "embedding")
-        .orderBy(col("g1"), col("g2"))
-    }),
-
-    // ---- retrieval eval: MRR / DCG@5 / nDCG@5 under label relevance ------
-    "q_rank_metrics" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val run = Similarity.bruteForceKnn(emb, emb.where(col("vec_id") < 8),
-        "vec_id", "embedding", k = 5)
-      Retrieval.rankMetrics(run, emb, "vec_id", "label", k = 5)
-        .orderBy(col("query_id"))
-    }),
-
-    // ---- order preservation: Kendall tau between the exact and the LSH-
-    // bucketed rankings (the quality axis recall@k cannot see) -------------
-    "q_rank_agreement" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val qs = emb.where(col("vec_id") < 8)
-      Retrieval.rankAgreement(
-        Similarity.bruteForceKnn(emb, qs, "vec_id", "embedding", k = 5),
-        Similarity.bucketedKnn(emb, qs, "vec_id", "embedding", k = 5, planes = 4, dim = 64),
-        k = 5)
-        .orderBy(col("query_id"))
-    }),
-
-    // ---- quality-aware dedup representative: per near-dup cluster, keep
-    // the highest-quality member (not the lowest id) -----------------------
-    "q_cluster_best" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      // same pair set as q_jaccard/q_jaccard_dist (one oracle, three plans);
-      // the broadcast twin keeps its own row via q_jaccard, so the shared
-      // blocked frame serves the cluster queries
-      val comps = Dedup.connectedComponents(exactJaccardPairs(s, dir), "d1", "d2")
-      val q = TextAnalysis.qualityScore(d, "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-      Dedup.clusterBestSurvivors(comps, q, "doc_id", "quality")
-        .orderBy(col("component"))
-    }),
-
-    // ---- decontaminated eval split: the 'val' shard minus near-dups of
-    // anything in 'train' (split leakage is the subtle eval-inflation bug
-    // every careful pipeline screens for) ----------------------------------
-    "q_clean_eval_split" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val split = Sampling.splitAssign(d, "doc_id")
-      Dedup.incrementalMinhash(
-        split.where(col("split") === "val"), split.where(col("split") === "train"),
-        "doc_id", "text", n = 2, numPerm = NUM_PERM, bands = 4, threshold = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- dataset snapshot diff: churn between two corpus versions --------
-    // (old = doc_id%10 in 0..7, new = 2..9 with %10==5 texts mutated, so
-    // added/removed/changed all appear)
-    "q_snapshot_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val oldS = d.where(col("doc_id") % 10 < 8)
-      val newS = d.where(col("doc_id") % 10 >= 2)
-        .withColumn("text", when(col("doc_id") % 10 === 5,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      Dedup.snapshotDiff(oldS, newS, "doc_id", "text").orderBy(col("doc_id"))
-    }),
-
-    // ---- cross-source duplication (leakage) matrix over near-dup pairs ---
-    "q_source_leakage" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.leakageMatrix(exactJaccardPairs(s, dir), d, "doc_id", "source")
-        .orderBy(col("g1"), col("g2"))
-    }),
-
-    // ---- per-source bigram diversity (type-token ratio) ------------------
-    "q_ngram_diversity" -> ((s, dir) => {
-      TextAnalysis.ngramDiversity(Tables.documents(s, dir), "source", "text", n = 2)
-        .orderBy(col("source"))
-    }),
-
-    // ---- embedding dimension covariance/correlation matrix (the leading
-    // 16-dim block: 136 pair moments over the whole corpus) ----------------
-    "q_embed_cov" -> ((s, dir) => {
-      Similarity.covarianceMatrix(
-        Tables.embeddings(s, dir).withColumn("embedding", slice(col("embedding"), 1, 16)),
-        "embedding")
-        .orderBy(col("i"), col("j"))
-    }),
-
-    // ---- embedding hubness: in-degree over the full exact kNN graph ------
-    "q_hubness" -> ((s, dir) => {
-      // Similarity.hubness's exact shape, over the shared kNN-graph frame
-      val degrees = knnGraph5(s, dir)
-        .groupBy(col("neighbor_id")).agg(count(lit(1)).as("in_degree"))
-      Tables.embeddings(s, dir).where(col("embedding").isNotNull)
-        .select(col("vec_id").cast("long").as("vec_id"))
-        .join(degrees.withColumnRenamed("neighbor_id", "vec_id"), Seq("vec_id"), "left_outer")
-        .select(col("vec_id"), coalesce(col("in_degree"), lit(0L)).as("in_degree"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- the SAME hubness oracle through the distributed 2-D block sweep
-    // (knnGraph's beyond-broadcast path, pinned at 4 blocks), so the 100 TB
-    // plan shape gets its own hard CORRECTNESS row against the exact oracle
-    "q_hubness_blocked" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val degrees = Similarity.knnGraphBlocked(emb, "vec_id", "embedding", 5, 4)
-        .groupBy(col("neighbor_id")).agg(count(lit(1)).as("in_degree"))
-      emb.where(col("embedding").isNotNull)
-        .select(col("vec_id").cast("long").as("vec_id"))
-        .join(degrees.withColumnRenamed("neighbor_id", "vec_id"), Seq("vec_id"), "left_outer")
-        .select(col("vec_id"), coalesce(col("in_degree"), lit(0L)).as("in_degree"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- token co-occurrence lift (exp-PMI association table) ------------
-    "q_cooccur_lift" -> ((s, dir) => {
-      TextAnalysis.cooccurrenceLift(Tables.documents(s, dir), "doc_id", "text", minCount = 5L)
-        .orderBy(col("t1"), col("t2"))
-    }),
-
-    // ---- behavior-sequence corpus: per-user ordered event-type stream ----
-    "q_user_sequences" -> ((s, dir) => {
-      EventAnalytics.userSequences(events(s, dir).where(col("user_id") < 40),
-        "user_id", "ts_us", "event_id", "event_type", maxLen = 50)
-        .orderBy(col("user_id"))
-    }),
-
-    // ---- MMR diversified re-rank of the top-20 ANN candidates. The
-    // candidate CUT uses the rounded knn sim (discrete, engine-stable); the
-    // greedy fold's relevance is the RAW cosine recomputed from the vectors
-    // (see Retrieval.mmr's determinism contract) ---------------------------
-    "q_mmr_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cands = Similarity.bruteForceKnn(emb, emb.where(col("vec_id") < 3),
-        "vec_id", "embedding", k = 20)
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")), Seq("neighbor_id"))
-        .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("__qv")), Seq("query_id"))
-        .withColumn("rel", Similarity.cosineFast(col("__qv"), col("embedding")))
-      Retrieval.mmr(cands, "query_id", "neighbor_id", "rel", "embedding",
-        k = 8, lambda = 0.7)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- first-order Markov transition matrix over per-user event streams
-    "q_event_transitions" -> ((s, dir) => {
-      EventAnalytics.transitionMatrix(events(s, dir), "user_id", "ts_us",
-        "event_id", "event_type")
-        .orderBy(col("prev_type"), col("next_type"))
-    }),
-
-    // ---- DAU / trailing-7-day rolling WAU / stickiness -------------------
-    "q_active_users" -> ((s, dir) => {
-      EventAnalytics.activeUsers(events(s, dir), "user_id", "ts_us")
-        .orderBy(col("day"))
-    }),
-
-    // ---- MAD robust outliers (modified z-score, median/MAD fences) -------
-    "q_mad_outliers" -> ((s, dir) => {
-      TimeSeries.madOutliers(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", zThresh = 3.5)
-        .orderBy(col("pvname"), col("ts_us"))
-    }),
-
-    // ---- calendar-adjusted anomalies vs the hour x dow seasonal profile --
-    "q_seasonal_residual" -> ((s, dir) => {
-      TimeSeries.seasonalResidual(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", topN = 50)
-    }),
-
-    // ---- UniMax water-filling token-budget allocation --------------------
-    "q_unimax_budget" -> ((s, dir) => {
-      Sampling.unimaxAllocate(Tables.documents(s, dir), "source", col("n_chars"),
-        budgetTokens = 280000L, maxEpochs = 2L)
-        .orderBy(col("source"))
-    }),
-
-    // ---- Flesch / Flesch-Kincaid readability ------------------------------
-    "q_readability" -> ((s, dir) => {
-      TextAnalysis.readability(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- PCA 2-D semantic map. Oracle-checked via dataDependentOracles:
-    // Verify trains the same deterministic power-iteration components and
-    // embeds them (and the mean offsets) as SQL literals ------------------
-    "q_pca_project" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val (means, comps, _) = Similarity.trainPca(emb, "vec_id", "embedding",
-        nComponents = 2)
-      Similarity.pcaProject(emb, "vec_id", "embedding", means, comps)
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- mutual-kNN graph communities (same CC core as the Jaccard and
-    // semantic clusters; the mutuality filter keeps hubs from fusing
-    // everything) ----------------------------------------------------------
-    "q_knn_communities" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Dedup.connectedComponents(edges, "d1", "d2").orderBy(col("doc"))
-    }),
-
-    // ---- resource-allocation link prediction over the mutual-kNN graph
-    // ("which neighbors did ANN miss"); integer-exact fixed-point scores --
-    "q_link_predict" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Graph.linkPredict(edges, "d1", "d2", maxDegree = 64, topK = 100)
-    }),
-
-    // ---- per-source Pareto front over (n_tokens, quality) ----------------
-    "q_pareto_front" -> ((s, dir) => {
-      val q = TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"), col("quality"))
-      val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      Sampling.paretoFront(q.join(src, "doc_id"), "source", "n_tokens", "quality")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- event-rate burst detection (6-hour buckets, trailing-8 baseline)
-    "q_bursts" -> ((s, dir) => {
-      TimeSeries.bursts(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us")),
-        "pvname", "ts_us", bucketUs = 21600000000L, trailing = 8, zThresh = 2.0)
-        .orderBy(col("pvname"), col("bucket"))
-    }),
-
-    // ---- per-dimension z-score standardization of the embeddings ---------
-    "q_embed_standardize" -> ((s, dir) => {
-      Similarity.standardize(Tables.embeddings(s, dir), "vec_id", "embedding")
-        .orderBy(col("vec_id"), col("dim"))
-    }),
-
-    // ---- per-source Simpson token diversity ------------------------------
-    "q_token_diversity" -> ((s, dir) => {
-      TextAnalysis.tokenDiversity(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))
-    }),
-
-    // ---- top 3-event paths (order-2 behavior sequences) ------------------
-    "q_event_paths" -> ((s, dir) => {
-      EventAnalytics.topPaths(events(s, dir), "user_id", "ts_us", "event_id",
-        "event_type", n = 3, k = 20)
-    }),
-
-    // ---- Theil-Sen robust daily trend per event type ---------------------
-    "q_theil_sen" -> ((s, dir) => {
-      TimeSeries.theilSen(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", bucketUs = 86400000000L)
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- integer-exact PageRank over the exact kNN graph (hub/authority
-    // scores for retrieval-quality audits; all-BIGINT arithmetic) ----------
-    "q_pagerank" -> ((s, dir) => {
-      Graph.pageRank(knnGraph5(s, dir), "query_id", "neighbor_id", iters = 10)
-        .select(col("node").as("vec_id"), col("pagerank"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- integer-exact HITS over the same kNN graph: the auth/hub split
-    // PageRank's single score conflates (authority ≈ eigenvector-weighted
-    // hubness; hub ≈ "do my neighbors matter") ----------------------------
-    "q_hits" -> ((s, dir) => {
-      Graph.hits(knnGraph5(s, dir), "query_id", "neighbor_id", iters = 5)
-        .select(col("node").as("vec_id"), col("auth"), col("hub"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- unique-column-combination discovery (candidate keys) over the
-    // orders profile columns: the third Metanome-trio primitive ----------
-    "q_ucc_audit" -> ((s, dir) => {
-      DataQuality.uniqueCombinations(Tables.orders(s, dir),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
-        .orderBy(col("size"), col("columns"))
-    }),
-
-    // ---- order-dependency discovery over the events time profile: does
-    // sorting by one column sort the other (lexicographic OD)? hour ~> day
-    // and day ~> hour hold (nested time grids); every value pair doesn't —
-    // completes the Metanome profiling quartet (FD/IND/UCC/OD) ------------
-    "q_od_audit" -> ((s, dir) => {
-      val ev = events(s, dir).select(
-        expr("ts_us DIV 3600000000L").as("hour_b"),
-        expr("ts_us DIV 86400000000L").as("day_b"),
-        col("value"))
-      DataQuality.orderDependencies(ev, Seq("hour_b", "day_b", "value"))
-        .orderBy(col("lhs"), col("rhs"))
-    }),
-
-    // ---- inclusion-dependency discovery across the star schema's key
-    // columns: foreign-key inference (from ⊆ to iff violations = 0) -------
-    "q_ind_audit" -> ((s, dir) => {
-      DataQuality.inclusionDependencies(Seq(
-        ("o_custkey", Tables.orders(s, dir), "o_custkey"),
-        ("c_custkey", Tables.customer(s, dir), "c_custkey"),
-        ("c_nationkey", Tables.customer(s, dir), "c_nationkey"),
-        ("n_nationkey", Tables.nation(s, dir), "n_nationkey"),
-        ("n_regionkey", Tables.nation(s, dir), "n_regionkey"),
-        ("r_regionkey", Tables.region(s, dir), "r_regionkey")))
-        .orderBy(col("from_col"), col("to_col"))
-    }),
-
-    // ---- functional-dependency discovery over the customer geography
-    // profile: minimal-repair violation counts per ordered attribute pair -
-    "q_fd_audit" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-        .select(col("c_mktsegment"), col("c_nationkey"))
-      val nat = Tables.nation(s, dir)
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      val reg = Tables.region(s, dir).select(col("r_regionkey"), col("r_name"))
-      val j = cust
-        .join(broadcast(nat), cust("c_nationkey") === nat("n_nationkey"))
-        .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
-      DataQuality.functionalDependencies(j,
-        Seq("c_mktsegment", "c_nationkey", "n_name", "n_regionkey", "r_name"))
-        .orderBy(col("determinant"), col("dependent"))
-    }),
-
-    // ---- offline change-point detection: binary segmentation with the
-    // integer CUSUM mean-shift statistic (depth 2, earliest-tie splits) ---
-    "q_cpd" -> ((s, dir) => {
-      TimeSeries.changePoints(events(s, dir), "event_type", "ts_us", "value",
-        minSeg = 100, depth = 2, quantum = 1e-3)
-        .orderBy(col("key"), col("level"), col("split_rn"))
-    }),
-
-    // ---- deterministic DBSCAN over cosine similarity: density family
-    // (kmeans is the centroid family); min-label border attachment --------
-    "q_dbscan" -> ((s, dir) => {
-      Similarity.dbscan(Tables.embeddings(s, dir), "vec_id", "embedding",
-        simEps = 0.35, minPts = 4)
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- integer-exact Lloyd k-means over the embedding corpus:
-    // deterministic smallest-id init, BIGINT distances, integer means ------
-    "q_kmeans" -> ((s, dir) => {
-      Similarity.kmeans(Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = 8, iters = 5)
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- landmark harmonic centrality over the mutual-kNN backbone:
-    // "which vectors sit closest to the whole corpus" — integer-exact BFS
-    // contributions (scale = lcm(1..16)), seeds a deterministic modulus ----
-    "q_harmonic" -> ((s, dir) => {
-      val m = mutualKnnEdges5(s, dir)
-      val und = m.select(col("d1").as("src"), col("d2").as("dst"))
-        .unionByName(m.select(col("d2").as("src"), col("d1").as("dst")))
-      Graph.harmonicCentrality(und, "src", "dst", seedMod = 5L, maxHops = 4)
-        .select(col("node").as("vec_id"), col("harmonic"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- level-wise Apriori over order baskets at brand granularity:
-    // relative support, transaction trimming, frequent-pair-pruned triples --
-    "q_itemsets" -> ((s, dir) => {
-      brandItemsets(s, dir).orderBy(col("size"), col("items"))
-    }),
-
-    // ---- association rules from the frequent pairs: directional
-    // confidence + lift vs independence, all ppm-integer ------------------
-    "q_assoc_rules" -> ((s, dir) => {
-      Patterns.associationRulesFrom(brandItemsets(s, dir))
-        .orderBy(col("antecedent"), col("consequent"))
-    }),
-
-    // ---- funnel time-to-convert distribution per transition --------------
-    "q_funnel_latency" -> ((s, dir) => {
-      EventAnalytics.funnelLatency(events(s, dir), "user_id", "ts_us", "event_type",
-        Seq("view", "click", "purchase"), horizonUs = RUN_WEEK_US)
-        .orderBy(col("stage"))
-    }),
-
-    // ---- MinHash estimate-vs-exact calibration over the LSH candidates ----
-    "q_minhash_error" -> ((s, dir) => {
-      Dedup.minhashEstimateAudit(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, numPerm = NUM_PERM, bands = 4)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- lexical (MinHash) vs semantic (embedding-cosine) near-dup
-    // agreement — which dedup pass does this corpus actually need? --------
-    "q_dedup_agreement" -> ((s, dir) => {
-      val lex = Dedup.minhashDedup(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, numPerm = NUM_PERM, bands = 4, threshold = 0.5)
-      val sem = Similarity.cosinePairs(Tables.embeddings(s, dir), "vec_id", "embedding",
-        threshold = 0.45)
-      Dedup.pairAgreement(lex, sem).orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- LASER-style margin-scored cross-group pair mining (label parity
-    // stands in for the two languages of a bitext-mining run) -------------
-    "q_margin_mining" -> ((s, dir) => {
-      Similarity.marginMining(Tables.embeddings(s, dir), "vec_id", "embedding",
-        col("label") % 2, srcGroup = "0", k = 3, threshold = 1.0)
-        .orderBy(col("src_id"))
-    }),
-
-    // ---- Z-order clustering key (write-time layout for 2-D data skipping) --
-    "q_zorder" -> ((s, dir) => {
-      graft.store.Layout.zOrderKey(
-        events(s, dir).select(col("event_id"), col("user_id"), col("ts_us")),
-        "user_id", "ts_us", bits = 16)
-        .select(col("event_id"), col("zkey"))
-        .orderBy(col("zkey"), col("event_id"))
-        .limit(500)
-    }),
-
-    // ---- cross-document shared-span (plagiarism/quotation) pair matrix ----
-    "q_span_pairs" -> ((s, dir) => {
-      Dedup.spanPairs(Tables.documents(s, dir), "doc_id", "text", k = 8,
-        maxDocsPerSpan = 10, minShared = 2)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- two-stage ANN: PQ/ADC shortlist -> exact cosine re-rank ---------
-    "q_knn_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.pqRerankKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        topK = 10, shortlist = 30)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- tokenizer fertility per language (subword cost report) ----------
-    "q_fertility" -> ((s, dir) => {
-      TextAnalysis.tokenizerFertility(Tables.documents(s, dir), "text", col("lang"))
-        .orderBy(col("lang"))
-    }),
-
-    // ---- packing-efficiency sweep over candidate sequence lengths --------
-    "q_pack_efficiency" -> ((s, dir) => {
-      Sampling.packingEfficiency(
-        Tables.documents(s, dir).where(col("text").isNotNull),
-        size(TextAnalysis.tokens(col("text"))), Seq(128, 256, 512, 1024))
-        .orderBy(col("seq_len"))
-    }),
-
-    // ---- content-defined chunking dedup (insertion-robust sub-document
-    // dedup: boundaries follow the content, not the offsets) ---------------
-    "q_cdc_dedup" -> ((s, dir) => {
-      Dedup.cdcDedup(Tables.documents(s, dir), "doc_id", "text", window = 4, divisor = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- cluster-label purity scorecard over the semantic clusters -------
-    "q_cluster_purity" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val pairs = Similarity.cosinePairsBlocked(emb, "vec_id", "embedding", threshold = 0.45)
-      Graph.clusterPurity(Dedup.connectedComponents(pairs, "d1", "d2"),
-        emb, "vec_id", "label")
-        .orderBy(col("component"))
-    }),
-
-    // ---- RFM quintile segmentation over purchase events ------------------
-    "q_rfm" -> ((s, dir) => {
-      EventAnalytics.rfm(events(s, dir), "user_id", "ts_us", "event_type",
-        conversion = "purchase", value = "value", nowUs = T1)
-        .orderBy(col("user_id"))
-    }),
-
-    // ---- SCD type-2 dimension merge (point-in-time history maintenance) --
-    "q_scd2" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-      val history = cust.select(col("c_custkey"), col("c_mktsegment"),
-        lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"))
-      // snapshot at T0: every 10th customer switches segment, every 7th churns
-      val snapshot = cust.where(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 10 === 0, concat(lit("NEW-"), col("c_mktsegment")))
-            .otherwise(col("c_mktsegment")).as("c_mktsegment"))
-      graft.store.Scd2.merge(history, snapshot, "c_custkey", "c_mktsegment", T0)
-        .orderBy(col("c_custkey"), col("valid_from"))
-    }),
-
-    // ---- U-shaped multi-touch attribution over the event stream ----------
-    "q_attribution" -> ((s, dir) => {
-      EventAnalytics.attribution(events(s, dir), "user_id", "ts_us", "event_id",
-        "event_type", conversion = "purchase", touches = Seq("view", "click"),
-        lookbackUs = RUN_WEEK_US)
-        .orderBy(col("channel"))
-    }),
-
-    // ---- multi-probe LSH KNN (single-bit-flip neighbor buckets) ----------
-    "q_knn_multiprobe" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.multiProbeKnn(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        k = 5, planes = 4, dim = 64)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ---- k-anonymity audit over customer quasi-identifiers ---------------
-    "q_k_anonymity" -> ((s, dir) => {
-      DataQuality.kAnonymity(Tables.customer(s, dir),
-        Seq("c_nationkey", "c_mktsegment"), k = 5)
-    }),
-
-    // ---- l-diversity over the same release-gate shape: is the sensitive
-    // attribute (length bucket) actually varied inside each QI cell? ------
-    "q_l_diversity" -> ((s, dir) => {
-      DataQuality.lDiversity(
-        Tables.documents(s, dir).select(col("lang"), col("source"),
-          (col("n_chars") / 200L).cast("long").as("len_bucket")),
-        Seq("lang", "source"), "len_bucket", l = 3)
-    }),
-
-    // ---- Benford first-digit forensic audit over the pricing column ------
-    "q_benford" -> ((s, dir) => {
-      DataQuality.benford(Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice")
-        .orderBy(col("l_returnflag"), col("digit"))
-    }),
-
-    // ---- small-file compaction planner over the per-(type, day) "file"
-    // listing (first-fit contiguous groups of ~2000 rows) ------------------
-    "q_compaction_plan" -> ((s, dir) => {
-      val files = events(s, dir)
-        .groupBy(col("event_type"), expr("ts_us DIV 86400000000L").as("day"))
-        .agg(count(lit(1)).as("rows"))
-        .select(col("event_type"),
-          concat(col("event_type"), lit("/"), lpad(col("day").cast("string"), 6, "0")).as("file"),
-          col("rows"))
-      graft.store.Layout.compactionPlan(files, "event_type", "file", "rows",
-        targetRows = 2000L)
-        .orderBy(col("event_type"), col("file"))
-    }),
-
-    // ---- Count-Min sketch accuracy audit over the event user stream ------
-    "q_cm_sketch" -> ((s, dir) => {
-      Skew.countMinAudit(events(s, dir), "user_id", width = 64, depth = 4, topN = 20)
-    }),
-
-    // ---- URL canonicalization dedup ledger (variants derived per doc) ----
-    "q_url_canon" -> ((s, dir) => {
-      val g = expr("doc_id DIV 3").cast("string")
-      val src = concat(lit("g"), pmod(expr("doc_id DIV 3"), lit(4)).cast("string"))
-      val url = when(col("doc_id") % 3 === 0,
-          concat(lit("https://www."), src, lit(".example.com/docs/"), g,
-            lit("?id="), g, lit("&a=1")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("HTTPS://WWW."), src, lit(".EXAMPLE.COM:443/docs/"), g,
-            lit("/?a=1&utm_source=feed&id="), g))
-        .otherwise(
-          concat(lit("https://www."), src, lit(".example.com/docs/"), g,
-            lit("?utm_campaign=x&id="), g, lit("&a=1#frag")))
-      Web.urlDedup(
-        Tables.documents(s, dir).select(col("doc_id"), url.as("url")),
-        "doc_id", "url")
-    }),
-
-    // ---- salted fact-dimension join (skew spread; result == plain join) --
-    "q_salted_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("okey"), col("l_extendedprice"))
-      val os = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus"))
-      Skew.saltedJoin(li, os, "okey", salts = 8, tieBreak = "l_extendedprice")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          operators.FixedPoint.sum(col("l_extendedprice"), 100.0, 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // ---- Bloom runtime-filter audit: prune the fact scan pre-shuffle -----
-    "q_bloom_join" -> ((s, dir) => {
-      Sketches.bloomAudit(Tables.lineitem(s, dir),
-        Tables.orders(s, dir).where(col("o_totalprice") > 150000.0),
-        "l_orderkey", "o_orderkey", mBits = 1 << 20, kHashes = 3)
-    }),
-
-    // ---- HyperLogLog distinct-user audit per event type ------------------
-    "q_hll" -> ((s, dir) => {
-      Sketches.hllAudit(events(s, dir), "event_type", "user_id", p = 8)
-        .orderBy(col("event_type"))
-    }),
-
-    // ---- positional phrase search (repeated-term phrase, anchor merge) ---
-    "q_phrase_search" -> ((s, dir) => {
-      Retrieval.phraseSearch(Tables.documents(s, dir), "doc_id", "text",
-        Seq("table", "table"))
-    }),
-
-    // ---- backfill planner: missing day-windows per sparse key ------------
-    "q_backfill_plan" -> ((s, dir) => {
-      graft.store.Layout.backfillPlan(
-        events(s, dir).where(col("user_id").isNotNull)
-          .select(pmod(col("user_id"), lit(2000L)).as("pv"), col("ts_us")),
-        "pv", "ts_us", tminUs = T0, tmaxUs = T0 + 14L * 86400000000L,
-        widthUs = 86400000000L)
-    }),
-
-    // ---- clustering-depth audit of the day-file layout's value ranges ----
-    "q_cluster_depth" -> ((s, dir) => {
-      val files = events(s, dir).where(col("value").isNotNull)
-        .groupBy(col("event_type"), expr("ts_us DIV 86400000000L").as("f"))
-        .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-      graft.store.Layout.clusteringDepth(files, "event_type", "f", "lo", "hi")
-    }),
-
-    // ---- DP-style noised count release (seeded Laplace, eps = 0.5) -------
-    "q_dp_release" -> ((s, dir) => {
-      DataQuality.dpNoisedCounts(events(s, dir), "event_type", epsilon = 0.5)
-    }),
-
-    // ---- dwell-time profile per adjacent event-type transition -----------
-    "q_transition_latency" -> ((s, dir) => {
-      EventAnalytics.transitionLatency(events(s, dir), "user_id", "ts_us",
-        "event_id", "event_type")
-    }),
-
-    // ---- Simpson's-paradox audit: per-segment vs pooled value~hour slope -
-    "q_simpson" -> ((s, dir) => {
-      DataQuality.simpsonAudit(
-        events(s, dir).select(col("event_type"),
-          expr("CAST((ts_us DIV 3600000000L) % 24 AS DOUBLE)").as("hour"),
-          col("value")),
-        "event_type", "hour", "value")
-    }),
-
-    // ---- leakage-safe churn dataset: trailing features, future label -----
-    "q_churn_labels" -> ((s, dir) => {
-      EventAnalytics.churnLabels(events(s, dir), "user_id", "ts_us",
-        cutoffUs = TMID, labelUs = 7L * 86400000000L)
-    }),
-
-    // ---- A/B experiment readout: two-proportion z on purchase conversion -
-    "q_ab_test" -> ((s, dir) => {
-      // plain 'purchase' converts EVERY sampled user — test a high-value
-      // conversion so the proportions are informative
-      val ev = events(s, dir).withColumn("__conv",
-        when(col("event_type") === "purchase" && col("value") >= 300.0,
-          "bigbuy").otherwise(col("event_type")))
-      EventAnalytics.abTest(ev, "user_id",
-        when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B"),
-        "__conv", "bigbuy")
-    }),
-
-    // ---- purged temporal split with a 1-day embargo band -----------------
-    "q_purged_split" -> ((s, dir) => {
-      Sampling.purgedTemporalSplit(events(s, dir), "ts_us", tSplit = TMID,
-        embargoUs = 86400000000L)
-    }),
-
-    // ---- medoid exemplar per IVF cell ------------------------------------
-    "q_cluster_medoids" -> ((s, dir) => {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(s, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      Similarity.clusterMedoids(Tables.embeddings(s, dir), "vec_id",
-        "embedding", cents)
-    }),
-
-    // ---- per-cluster silhouette over the trained IVF cells ---------------
-    "q_silhouette" -> ((s, dir) => {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(s, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      Similarity.silhouetteByCentroid(Tables.embeddings(s, dir), "vec_id",
-        "embedding", cents)
-    }),
-
-    // ---- ridge linear probe: label-noise screen by |residual| ------------
-    "q_linear_probe" -> ((s, dir) => {
-      Similarity.linearProbeResiduals(Tables.embeddings(s, dir), "vec_id",
-        "embedding", "label", dim = 64, lambda = 1.0, topN = 20)
-    }),
-
-    // ---- int8-compression retrieval quality gate (recall vs full float) --
-    "q_int8_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val recon = Similarity.int8Reconstruct(emb, "vec_id", "embedding")
-      val qsE = emb.where(col("vec_id") < 50)
-      val qsR = recon.where(col("vec_id") < 50)
-      Similarity.recallAtK(
-        Similarity.bruteForceKnn(emb, qsE, "vec_id", "embedding", k = 5),
-        Similarity.bruteForceKnn(recon, qsR, "vec_id", "recon", k = 5),
-        k = 5)
-        .orderBy(col("query_id"))
-    }),
-
-    // ---- JL sparse-projection distortion audit over the embeddings -------
-    "q_jl_audit" -> ((s, dir) => {
-      Similarity.jlDistortionAudit(Tables.embeddings(s, dir), "vec_id",
-        "embedding", inDim = 64, outDim = 16)
-    }),
-
-    // ---- isolation-forest anomaly ranking (driver-trained, codegen apply)
-    "q_iforest" -> ((s, dir) => {
-      AnomalyForest.anomalies(events(s, dir), "event_id", iforestFeatures,
-        nTrees = 25, sampleSize = 256, maxDepth = 6, topN = 50)
-    }),
-
-    // ---- DTW shape distance of each event-type series vs the click trace -
-    "q_dtw" -> ((s, dir) => {
-      TimeSeries.dtwProfile(events(s, dir), "event_type", "ts_us", "value",
-        refKey = "click", bucketUs = 21600000000L)
-    }),
-
-    // ---- sliding 7-day distinct users via daily HLL register merge -------
-    "q_hll_sliding" -> ((s, dir) => {
-      Sketches.hllSlidingDistinct(events(s, dir), "ts_us", "user_id",
-        windowDays = 7)
-        .orderBy(col("day"))
-    }),
-
-    // ---- audience overlap via HLL register merge (inclusion-exclusion) ---
-    "q_hll_overlap" -> ((s, dir) => {
-      Sketches.hllOverlap(events(s, dir), "event_type", "user_id", p = 8)
-    }),
-
-    // ---- time-decayed trending users (bucketed half-life decay) ----------
-    "q_trending" -> ((s, dir) => {
-      EventAnalytics.trendingTopK(events(s, dir), "user_id", "ts_us",
-        halfLifeUs = 172800000000L, k = 20)
-    }),
-
-    // ---- log2-bucket (HDR-style) quantile estimates vs exact ranks -------
-    "q_hdr_quantiles" -> ((s, dir) => {
-      Sketches.hdrQuantiles(events(s, dir), "event_type", "value",
-        Seq(0.5, 0.9, 0.99))
-        .orderBy(col("event_type"), col("q"))
-    }),
-
-    // ---- lead-lag cross-correlation: does click volume lead purchases? ---
-    "q_lead_lag" -> ((s, dir) => {
-      TimeSeries.leadLagCorr(events(s, dir), "event_type", "ts_us", "value",
-        k1 = "click", k2 = "purchase", bucketUs = 3600000000L, maxLag = 6)
-        .orderBy(col("lag"))
-    }),
-
-    // ---- binned two-sample KS drift between the two halves of the month --
-    "q_ks_drift" -> ((s, dir) => {
-      TimeSeries.ksDrift(
-        events(s, dir).select(col("event_type").as("pvname"), col("ts_us"), col("value")),
-        "pvname", "ts_us", "value", tSplit = TMID, lo = 0.0, hi = 500.0, bins = 20)
-        .orderBy(col("pvname"))
-    }),
-
-    // ---- chance-corrected labeling-function agreement (Cohen's kappa) ----
-    "q_lf_kappa" -> ((s, dir) => {
-      TextAnalysis.kappaMatrix(Tables.documents(s, dir), Seq(
-        "len_ok" -> when(col("n_chars") >= 300, 1).otherwise(-1),
-        "is_en" -> when(col("lang").isNull, 0).when(col("lang") === "en", 1).otherwise(-1),
-        "mentions_spark" -> when(col("text").isNull, 0)
-          .when(col("text").contains("spark"), 1).otherwise(0)))
-        .orderBy(col("lf_a"), col("lf_b"))
-    }),
-
-    // ---- stratified k-fold CV assignment balance -------------------------
-    "q_cv_folds" -> ((s, dir) => {
-      Sampling.cvFoldReport(Tables.embeddings(s, dir), "vec_id", "label", k = 5)
-        .orderBy(col("fold"), col("label"))
-    }),
-
-    // ---- triangle census + clustering coefficient of the mutual-kNN graph
-    "q_triangles" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Graph.triangleStats(edges, "d1", "d2")
-    }),
-
-    // ---- degree assortativity of the mutual-kNN graph --------------------
-    "q_assortativity" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Graph.assortativity(edges, "d1", "d2")
-    }),
-
-    // ---- k-core backbone of the mutual-kNN graph -------------------------
-    "q_kcore" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Graph.kCore(edges, "d1", "d2", k = 3)
-    }),
-
-    // ---- deterministic negative-edge sampling over the mutual-kNN graph --
-    "q_neg_sample" -> ((s, dir) => {
-      val edges = mutualKnnEdges5(s, dir)
-      Graph.negativeSample(edges, "d1", "d2", perNode = 3)
-    }),
-
-    // ---- key-skew Gini report (pre-flight salting decision) --------------
-    "q_skew_gini" -> ((s, dir) => {
-      Skew.giniReport(events(s, dir), "user_id")
-    }),
-
-    // ---- active-learning uncertainty sampling (kNN vote margin) ----------
-    "q_uncertainty" -> ((s, dir) => {
-      Similarity.uncertaintySampling(Tables.embeddings(s, dir), "vec_id", "embedding",
-        "label", k = 5, topN = 50)
-    }),
-
-    // ---- rendezvous-hash shard rebalance matrix (4 -> 5 shards) ----------
-    "q_shard_rebalance" -> ((s, dir) => {
-      val before = Sampling.rendezvousShard(Tables.documents(s, dir), "doc_id",
-        (0 until 4).map("s" + _), "shard_before")
-      Sampling.rendezvousShard(before, "doc_id", (0 until 5).map("s" + _), "shard_after")
-        .groupBy(col("shard_before"), col("shard_after"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("shard_before"), col("shard_after"))
-    }),
-
-    // ---- range-partition boundary planner (equal-row write splits).
-    // Bounds the `value` domain: percentile interpolation above ~2^53 a
-    // ulp (ts_us micros) is not engine-stable, so plan integer-time splits
-    // on `div`-bucketed days instead ----------------------------------------
-    "q_range_bounds" -> ((s, dir) => {
-      graft.store.Layout.rangeBounds(
-        events(s, dir).where(col("value").isNotNull), "value", parts = 8)
-        .orderBy(col("boundary"))
-    }),
-
-    // ---- crawl page-stitch seams (pagination artifacts) ------------------
-    "q_page_stitch" -> ((s, dir) => {
-      Dedup.stitchCandidates(Tables.documents(s, dir), "doc_id", "text",
-        k = 8, maxPerSeam = 10)
-        .orderBy(col("prev_id"), col("next_id"))
-    }),
-
-    // ---- LSH recall audit vs the exact thresholded pair set (the exact
-    // side reuses q_jaccard_dist's persisted block sweep) ------------------
-    "q_lsh_recall" -> ((s, dir) => {
-      Dedup.lshRecallAudit(Tables.documents(s, dir), "doc_id", "text",
-        n = 2, numPerm = NUM_PERM, bands = 4, threshold = 0.5,
-        exactPairs = Some(exactJaccardPairs(s, dir)))
-    }),
-
-    // ---- incremental rollup maintenance: prior + delta == full (the
-    // oracle recomputes from scratch — implementation-divergent check) -----
-    "q_rollup_merge" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val prior = EventAnalytics.dailyRollup(
-        ev.where(col("ts_us") < TMID), "ts_us", "event_type", "value")
-      val delta = EventAnalytics.dailyRollup(
-        ev.where(col("ts_us") >= TMID), "ts_us", "event_type", "value")
-      EventAnalytics.mergeRollup(prior, delta, Seq("day", "event_type"))
-        .select(col("day"), col("event_type"), col("n"),
-          round(col("sum_value").cast("double"), 6).as("sum_value"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    // ---- per-column statistics profile (table-stats collector) -----------
-    "q_column_profile" -> ((s, dir) => {
-      DataQuality.profile(Tables.orders(s, dir),
-        Seq("o_orderstatus", "o_orderpriority", "o_custkey"))
-        .orderBy(col("col_name"))
-    }),
-
-    // ---- parent/child join-cardinality statistics ------------------------
-    "q_join_stats" -> ((s, dir) => {
-      DataQuality.joinStats(Tables.orders(s, dir), "o_custkey",
-        Tables.customer(s, dir), "c_custkey")
-    }),
-
-    // ---- weak-supervision labeling-function agreement matrix -------------
-    "q_labeling_matrix" -> ((s, dir) => {
-      TextAnalysis.labelingMatrix(Tables.documents(s, dir), Seq(
-        "len_ok" -> when(col("n_chars") >= 300, 1).otherwise(-1),
-        "is_en" -> when(col("lang").isNull, 0).when(col("lang") === "en", 1).otherwise(-1),
-        "mentions_spark" -> when(col("text").isNull, 0)
-          .when(col("text").contains("spark"), 1).otherwise(0)))
-        .orderBy(col("lf_a"), col("lf_b"))
-    }),
-
-    // ---- per-cluster provenance rollup (survivorship audit record) -------
-    "q_cluster_provenance" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = exactJaccardPairs(s, dir)
-      Dedup.clusterProvenance(Dedup.connectedComponents(pairs, "d1", "d2"),
-        docs, "doc_id", "source", "n_chars")
-        .orderBy(col("component"))
-    }),
-
-    // ---- sorted-neighborhood near-dup pairs (sort-merge blocking) --------
-    "q_snm_dedup" -> ((s, dir) => {
-      Dedup.sortedNeighborhood(Tables.documents(s, dir), "doc_id", "text",
-        windowSize = 6, threshold = 0.5)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- perceptual dHash over the decoded image planes (stub decode on
-    // the synthetic corpus; the SAME operator hashes real BMP/PPM decodes
-    // in MultimodalSpec) ---------------------------------------------------
-    "q_media_dhash" -> ((s, dir) => {
-      import s.implicits._
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          Multimodal.MediaRow(id, Seq("image", "audio", "video")(id.toInt % 3),
-            text.getBytes("UTF-8"), "stub", 8, 4, 1000L)
-        }
-      Multimodal.dhash(Multimodal.decodeImages(media), hashW = 8, hashH = 8)
-        .orderBy(col("media_id"))
-    }),
-
-    // ---- perceptual near-dup IMAGE pairs: the generic Hamming-LSH bucket
-    // join over the dHash frame — closes the multimodal dedup loop (the
-    // signature query above feeds the same never-all-pairs path text
-    // signatures use) -----------------------------------------------------
-    "q_dhash_pairs" -> ((s, dir) => {
-      import s.implicits._
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          Multimodal.MediaRow(id, Seq("image", "audio", "video")(id.toInt % 3),
-            text.getBytes("UTF-8"), "stub", 8, 4, 1000L)
-        }
-      val sig = Multimodal.dhash(Multimodal.decodeImages(media), hashW = 8, hashH = 8)
-      Dedup.hammingPairs(sig, "media_id", "dhash", prefixBits = 8, maxHamming = 10)
-        .orderBy(col("d1"), col("d2"))
-    }),
-
-    // ---- semi-supervised label propagation over the symmetrized kNN graph
-    // (10% frozen seeds label the rest of the corpus; integer votes) -------
-    "q_label_prop" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val g = knnGraph5(s, dir)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      val sym = g.unionByName(g.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      val seeds = emb.where(col("vec_id") % 10 === 0).select(col("vec_id"), col("label"))
-      Graph.labelPropagation(sym, "src", "dst", seeds, "vec_id", "label", iters = 5)
-        .orderBy(col("node"))
-    }),
-
-    // ---- blocked fuzzy entity resolution: re-link deterministically
-    // corrupted customer records (one substituted name char at position
-    // custkey % len; a segment suffix on odd keys). Three "blocking by
-    // omission" passes — each key drops a different third of the name's
-    // digit section — so a single-char corruption can never break every
-    // pass at once; candidate work stays block-bounded, never |L|×|R| ----
-    "q_entity_resolution" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      def blockKeys(name: Column) = Seq(
-        concat(col("c_nationkey").cast("string"), lit(":"),
-          name.substr(lit(13), lit(6))).as("bk_a"),
-        concat(col("c_nationkey").cast("string"), lit(":"),
-          name.substr(lit(10), lit(3)), name.substr(lit(16), lit(3))).as("bk_b"),
-        concat(col("c_nationkey").cast("string"), lit(":"),
-          name.substr(lit(10), lit(6))).as("bk_c"))
-      val left = c.select(col("c_custkey").as("cid") +: col("c_name").as("name") +:
-        col("c_mktsegment").as("segment") +: blockKeys(col("c_name")): _*)
-      val pos = (col("c_custkey") % length(col("c_name"))).cast("int")
-      val corrupted = concat(
-        col("c_name").substr(lit(1), pos), lit("x"),
-        col("c_name").substr(pos + lit(2), length(col("c_name"))))
-      val segNoise = when(col("c_custkey") % 2 === 1,
-        concat(col("c_mktsegment"), lit("x"))).otherwise(col("c_mktsegment"))
-      val right = c
-        .select(col("c_custkey").as("rid"), col("c_nationkey"),
-          corrupted.as("name"), segNoise.as("segment"))
-        .select(col("rid") +: col("name") +: col("segment") +:
-          blockKeys(col("name")): _*)
-      Linkage.bestMatches(left, right, "cid", "rid",
-        Seq("bk_a", "bk_b", "bk_c"), Seq("name", "segment"), minScore = 0.9)
-        .orderBy(col("left_id"))
-    }),
-
-    // ---- curriculum schedule: quartile difficulty stages over the shared
-    // 6-dp quality score, deterministic within-stage shuffle key — stage
-    // thresholds are ONE broadcast percentile row, assignment is map-only -
-    "q_curriculum" -> ((s, dir) => {
-      val q = TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-      Sampling.curriculumSchedule(q, "doc_id", col("quality"), stages = 4)
-        .orderBy(col("stage"), col("ord"), col("doc_id"))
-    }),
-
-    // ---- split-conformal filter calibration: tau at the alpha-quantile of
-    // a 20% hash-bucket calibration slice; per-source eval coverage -------
-    "q_conformal" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val q = TextAnalysis.qualityScore(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      DataQuality.conformalAudit(q, "doc_id", "source", col("quality"),
-        alpha = 0.1, calPct = 20)
-    })
-  )
-
-  // ---- shared constants + generated oracle fragments -----------------------
-
-  /** Probe terms for q_bm25 (words of the synthetic corpus vocabulary). */
-  private final val BM25_TERMS = Seq("spark", "query", "merge")
-
-  /** DuckDB mirror of [[TextAnalysis.bm25]]. Every floating-point constant
-    * is interpolated from the SAME Scala doubles the Column plan uses
-    * (shortest-round-trip toString), and term contributions add in `terms`
-    * order with the Column operator precedence spelled out — double
-    * arithmetic is order-sensitive, so the SQL must be the same expression
-    * tree, not just the same formula. Null-text docs are filtered on BOTH
-    * sides (the text operators' shared convention), so N/avgdl exclude
-    * them regardless of engine null semantics.
-    */
-  private def bm25Sql(terms: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75): String = {
-    val tfCols = terms.indices.map(i =>
-      s"CAST(len(list_filter(toks, x -> x = '${terms(i)}')) AS DOUBLE) AS tf$i").mkString(",\n  ")
-    val dfAggs = terms.indices.map(i =>
-      s"sum(CASE WHEN tf$i > 0 THEN 1.0 ELSE 0.0 END) AS df$i").mkString(", ")
-    val score = terms.indices.map { i =>
-      s"ln(1.0 + (n - df$i + 0.5) / (df$i + 0.5)) * (tf$i * ${k1 + 1.0}) / " +
-        s"(tf$i + $k1 * (1.0 - $b + $b * dl / avgdl))"
-    }.mkString("\n    + ")
-    val nTerms = terms.indices.map(i => s"(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents WHERE text IS NOT NULL),
-       |tf AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-       |  $tfCols FROM t),
-       |s AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl, $dfAggs FROM tf),
-       |sc AS (SELECT doc_id,
-       |  round($score, 6) AS score,
-       |  CAST($nTerms AS BIGINT) AS n_terms
-       |  FROM tf, s)
-       |SELECT doc_id, score, n_terms FROM sc WHERE score > 0
-       |ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
-  }
-
-  /** MinHash width used by q_minhash_sig / q_minhash_lsh. */
-  private final val NUM_PERM = 16
-  private final val MERSENNE = 2305843009213693951L // 2^61 - 1
-
-  /** DuckDB fragment: distinct (doc, shingle) pairs, n-token shingles —
-    * mirrors [[Dedup.docShingles]] / [[TextAnalysis.shingles]] INCLUDING
-    * their null-text behavior (a null doc contributes no shingles: the
-    * Spark sides guard or return empty arrays, while unguarded DuckDB
-    * `greatest(len(NULL)-n, 0)` would ignore the null and mint one NULL
-    * gram). `suffix` renames the CTEs so two shingle widths can coexist in
-    * one composed query.
-    */
-  /** [[bm25Sql]]'s scoring chain (no limit) + source join + the per-source
-    * cap and global top-k windows — the oracle of
-    * [[graft.operators.Retrieval.diversifiedTopK]] over the BM25 run.
-    */
-  private def searchDiverseSql(terms: Seq[String], perGroup: Int, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): String = {
-    val tfCols = terms.indices.map(i =>
-      s"CAST(len(list_filter(toks, x -> x = '${terms(i)}')) AS DOUBLE) AS tf$i").mkString(",\n  ")
-    val dfAggs = terms.indices.map(i =>
-      s"sum(CASE WHEN tf$i > 0 THEN 1.0 ELSE 0.0 END) AS df$i").mkString(", ")
-    val score = terms.indices.map { i =>
-      s"ln(1.0 + (n - df$i + 0.5) / (df$i + 0.5)) * (tf$i * ${k1 + 1.0}) / " +
-        s"(tf$i + $k1 * (1.0 - $b + $b * dl / avgdl))"
-    }.mkString("\n    + ")
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents WHERE text IS NOT NULL),
-       |tf AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-       |  $tfCols FROM t),
-       |s AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl, $dfAggs FROM tf),
-       |sc AS (SELECT doc_id, round($score, 6) AS score FROM tf, s),
-       |j AS (SELECT sc.doc_id, d.source, score
-       |      FROM sc JOIN documents d USING (doc_id) WHERE score > 0),
-       |g AS (SELECT doc_id, source, score,
-       |        row_number() OVER (PARTITION BY source ORDER BY score DESC, doc_id) AS gr
-       |      FROM j),
-       |c AS (SELECT * FROM g WHERE gr <= $perGroup ORDER BY score DESC, doc_id LIMIT $k)
-       |SELECT doc_id, source, score, CAST(gr AS BIGINT) AS group_rank,
-       |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-       |FROM c ORDER BY rank""".stripMargin
-  }
-
-  private def shingleCte(n: Int, suffix: String = "", textExpr: String = "text"): String =
-    s"""t$suffix AS (SELECT doc_id AS doc, string_split($textExpr, ' ') AS toks
-       |      FROM documents WHERE text IS NOT NULL),
-       |s$suffix AS (SELECT doc, unnest(list_distinct(list_transform(
-       |        generate_series(0, greatest(len(toks) - $n, 0)),
-       |        i -> array_to_string(toks[i + 1 : i + $n], ' ')))) AS shingle FROM t$suffix)""".stripMargin
-
-  /** DuckDB fragment: NON-distinct per-doc n-grams `g(doc_id, g)` —
-    * mirrors [[TextAnalysis.repetition]]'s exploded grams (same null-text
-    * rule as [[shingleCte]]).
-    */
-  private def gramCte(n: Int): String =
-    s"""tg AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |      FROM documents WHERE text IS NOT NULL),
-       |g AS (SELECT doc_id, unnest(list_transform(
-       |        generate_series(0, greatest(len(toks) - $n, 0)),
-       |        i -> array_to_string(toks[i + 1 : i + $n], ' '))) AS g FROM tg)""".stripMargin
-
-  /** DuckDB fragment mirroring [[Dedup.shingleHash]]. */
-  private val shingleHashSql = "CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT)"
-
-  /** Shared by q_pairs_related (graph then point lookup) and
-    * q_related_direct (graph-free semi-join): both plans must produce THIS
-    * result.
-    */
-  private lazy val relatedOracleSql: String =
-    """WITH edges AS (
-      |  SELECT a.l_suppkey AS m1, b.l_suppkey AS m2, count(*) AS score
-      |  FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) a
-      |  JOIN (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      |  GROUP BY 1, 2)
-      |SELECT other, score FROM (
-      |  SELECT m2 AS other, score FROM edges WHERE m1 = 1
-      |  UNION ALL
-      |  SELECT m1 AS other, score FROM edges WHERE m2 = 1)
-      |ORDER BY score DESC, other LIMIT 5""".stripMargin
-
-  /** CTE chain ending in `jp(d1, d2, jaccard)` — the thresholded near-dup
-    * pairs, reused by the pair queries and the clustering oracle.
-    * `textExpr` lets the PPJoin fixture derive a skewed corpus in place.
-    */
-  private def jaccardPairsCtes(textExpr: String = "text"): String =
-    s"""${shingleCte(2, textExpr = textExpr)},
-       |sz AS (SELECT doc, count(*) AS sz FROM s GROUP BY doc),
-       |inter AS (SELECT a.doc AS d1, b.doc AS d2, count(*) AS i
-       |          FROM s a JOIN s b ON a.shingle = b.shingle AND a.doc < b.doc
-       |          GROUP BY 1, 2),
-       |jp AS (SELECT d1, d2, round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) AS jaccard
-       |       FROM inter JOIN sz a ON d1 = a.doc JOIN sz b ON d2 = b.doc
-       |       WHERE round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) >= 0.5)""".stripMargin
-
-  /** Shared by q_jaccard (broadcast sweep), q_jaccard_dist (block-
-    * partitioned sweep) and q_jaccard_auto (the df-histogram-routed entry):
-    * all plans must produce THIS naive-join result.
-    */
-  private lazy val jaccardOracleSql: String =
-    s"""WITH ${jaccardPairsCtes()}
-       |SELECT d1, d2, jaccard FROM jp ORDER BY d1, d2""".stripMargin
-
-  /** Shared by q_tfidf_pairs_inv (route pinned to the salted inverted
-    * index) and q_tfidf_auto (the density-routed entry, which flips this
-    * dense corpus to the dense sweep): both physical plans must produce
-    * THIS result — the r13 ask #1 hash-equality proof rides the oracle.
-    */
-  private lazy val tfidfPairsInvOracleSql: String =
-    """WITH t AS (SELECT doc_id AS d, unnest(string_split(text, ' ')) AS tok
-      |  FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0),
-      |tf AS (SELECT d, tok, CAST(count(*) AS BIGINT) AS c FROM t WHERE tok <> '' GROUP BY 1, 2),
-      |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-      |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0),
-      |w AS (SELECT d, tok, c * ((n.n * 100) // df.df) AS w
-      |      FROM tf JOIN df USING (tok) CROSS JOIN n WHERE df.df * 100 <= n.n * 78),
-      |nm AS (SELECT d, sum(w * w) AS n2 FROM w GROUP BY 1),
-      |p AS (SELECT a.d AS d1, b.d AS d2, sum(a.w * b.w) AS dot
-      |      FROM w a JOIN w b ON a.tok = b.tok AND a.d < b.d GROUP BY 1, 2)
-      |SELECT d1, d2, sim FROM (
-      |  SELECT d1, d2, round(dot::DOUBLE / (sqrt(na.n2::DOUBLE) * sqrt(nb.n2::DOUBLE)), 6) AS sim
-      |  FROM p JOIN nm na ON p.d1 = na.d JOIN nm nb ON p.d2 = nb.d)
-      |WHERE sim >= 0.9 ORDER BY d1, d2""".stripMargin
-
-  /** Shared by q_embed_dedup (broadcast triangle) and q_embed_dedup_dist
-    * (block-partitioned sweep): both plans must produce THIS all-pairs
-    * result.
-    */
-  private lazy val embedDedupOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
-       |        round(${cosineSql("a.v", "b.v")}, 6) AS sim
-       |      FROM e a, e b WHERE a.vec_id < b.vec_id)
-       |SELECT d1, d2, sim FROM p WHERE sim >= 0.45 ORDER BY d1, d2""".stripMargin
-
-  private def minhashSigSql(numPerm: Int, n: Int): String = {
-    val mins = (0 until numPerm).map { i =>
-      val (a, b) = Dedup.perm(i)
-      s"min((h * $a + $b) % $MERSENNE) AS mh$i"
-    }
-    s"""WITH ${shingleCte(n)},
-       |h AS (SELECT doc, $shingleHashSql AS h FROM s)
-       |SELECT doc, ${mins.mkString(", ")} FROM h GROUP BY doc ORDER BY doc""".stripMargin
-  }
-
-  private def minhashLshSql(numPerm: Int, bands: Int, n: Int, threshold: Double): String = {
-    val rows = numPerm / bands
-    val bandJoins = (0 until bands).map { b =>
-      val eqs = (b * rows until (b + 1) * rows).map(i => s"a.mh$i = b.mh$i").mkString(" AND ")
-      s"SELECT a.doc AS d1, b.doc AS d2 FROM sig a JOIN sig b ON $eqs AND a.doc < b.doc"
-    }
-    s"""WITH ${shingleCte(n)},
-       |h AS (SELECT doc, $shingleHashSql AS h FROM s),
-       |sig AS (SELECT doc, ${(0 until numPerm).map { i =>
-          val (a, bb) = Dedup.perm(i)
-          s"min((h * $a + $bb) % $MERSENNE) AS mh$i"
-        }.mkString(", ")} FROM h GROUP BY doc),
-       |cand AS (SELECT DISTINCT d1, d2 FROM (${bandJoins.mkString(" UNION ALL ")})),
-       |sz AS (SELECT doc, count(*) AS sz FROM s GROUP BY doc),
-       |inter AS (SELECT c.d1, c.d2, count(*) AS i
-       |          FROM cand c JOIN s x ON c.d1 = x.doc JOIN s y ON c.d2 = y.doc AND x.shingle = y.shingle
-       |          GROUP BY c.d1, c.d2)
-       |SELECT d1, d2, round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) AS jaccard
-       |FROM inter JOIN sz a ON d1 = a.doc JOIN sz b ON d2 = b.doc
-       |WHERE round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) >= $threshold
-       |ORDER BY d1, d2""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Sampling.packingEfficiency]]: one aggregate CTE,
-    * one UNION ALL branch per candidate length with the identical integer
-    * ceiling arithmetic.
-    */
-  private def packEfficiencySql(seqLens: Seq[Int]): String = {
-    val pads = seqLens.map(l => s"CAST(sum((t + ${l - 1}) // $l) AS BIGINT) AS pad$l").mkString(",\n  ")
-    val branches = seqLens.map { l =>
-      val packed = s"(total + ${l - 1}) // $l"
-      s"""SELECT CAST($l AS BIGINT) AS seq_len, n_docs, total AS total_tokens,
-         |  $packed AS packed_seqs, pad$l AS padded_seqs,
-         |  CASE WHEN $packed = 0 THEN NULL
-         |       ELSE round(CAST(total AS DOUBLE) / CAST(($packed) * $l AS DOUBLE), 6) END AS packed_fill,
-         |  CASE WHEN pad$l = 0 THEN NULL
-         |       ELSE round(CAST(total AS DOUBLE) / CAST(pad$l * $l AS DOUBLE), 6) END AS padded_fill
-         |FROM a""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH d AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS t
-       |  FROM documents WHERE text IS NOT NULL),
-       |a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(t) AS BIGINT) AS total,
-       |  $pads FROM d)
-       |$branches
-       |ORDER BY seq_len""".stripMargin
-  }
-
-  /** DuckDB mirror of [[graft.store.Layout.zOrderKey]] over
-    * `(user_id, ts_us)`: same null filter, same integer bucket width, and
-    * the Morton interleave unrolled to the identical BIGINT bit expression.
-    */
-  private def zorderSql(bits: Int): String = {
-    val pow = 1L << bits
-    val inter = (0 until bits).flatMap { i =>
-      Seq(s"(((b1 >> $i) & 1) << ${2 * i})", s"(((b2 >> $i) & 1) << ${2 * i + 1})")
-    }.mkString(" | ")
-    s"""WITH src AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-       |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-       |mm AS (SELECT min(user_id) AS min1, max(user_id) AS max1,
-       |         min(ts_us) AS min2, max(ts_us) AS max2 FROM src),
-       |b AS (SELECT event_id,
-       |        (user_id - min1) // greatest(CAST(1 AS BIGINT), ((max1 - min1) // $pow) + 1) AS b1,
-       |        (ts_us - min2) // greatest(CAST(1 AS BIGINT), ((max2 - min2) // $pow) + 1) AS b2
-       |      FROM src CROSS JOIN mm)
-       |SELECT event_id, CAST($inter AS BIGINT) AS zkey FROM b
-       |ORDER BY zkey, event_id LIMIT 500""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Similarity.uncertaintySampling]]: the hubness kNN
-    * CTE over the labeled vectors, an integer vote table, the same
-    * `(count DESC, best rank, label)` ordering, margin = top − second.
-    */
-  private def uncertaintySql(k: Int, topN: Int): String =
-    s"""WITH emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM embeddings
-       |  WHERE embedding IS NOT NULL AND label IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM emb a JOIN emb b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |t AS (SELECT qid, nid, rn FROM r WHERE rn <= $k),
-       |v AS (SELECT t.qid, CAST(e.label AS BIGINT) AS lab, CAST(count(*) AS BIGINT) AS c,
-       |        CAST(min(t.rn) AS BIGINT) AS br
-       |      FROM t JOIN emb e ON t.nid = e.vec_id GROUP BY 1, 2),
-       |o AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY c DESC, br, lab) AS lr FROM v),
-       |f AS (SELECT qid AS vec_id,
-       |        max(CASE WHEN lr = 1 THEN lab END) AS pred_label,
-       |        max(CASE WHEN lr = 1 THEN c END) AS n_top,
-       |        coalesce(max(CASE WHEN lr = 2 THEN c END), 0) AS n_second
-       |      FROM o GROUP BY 1)
-       |SELECT vec_id, pred_label, n_top, CAST(n_second AS BIGINT) AS n_second,
-       |  CAST(n_top - n_second AS BIGINT) AS margin
-       |FROM f ORDER BY margin, vec_id LIMIT $topN""".stripMargin
-
-  /** DuckDB mirror of [[Sampling.rendezvousShard]]'s 4→5 shard movement
-    * matrix.
-    */
-  private lazy val shardRebalanceSql: String = {
-    def pick(shards: Seq[String]): String = {
-      val tagged = shards.map(s => s"md5(CAST(doc_id AS VARCHAR) || ':$s') || '|$s'")
-      s"substr(greatest(${tagged.mkString(", ")}), 34)"
-    }
-    s"""WITH a AS (SELECT ${pick((0 until 4).map("s" + _))} AS shard_before,
-       |  ${pick((0 until 5).map("s" + _))} AS shard_after FROM documents)
-       |SELECT shard_before, shard_after, CAST(count(*) AS BIGINT) AS n
-       |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
-
-  /** DuckDB mirror of [[graft.store.Layout.rangeBounds]] over `ts_us`: one
-    * `quantile_cont` branch per split with the identical Scala-computed
-    * fraction literal (the q_bands percentile parity).
-    */
-  private def rangeBoundsSql(parts: Int): String =
-    (1 until parts).map { i =>
-      val f = i.toDouble / parts
-      s"""SELECT CAST($i AS BIGINT) AS boundary,
-         |  round(quantile_cont(CAST(value AS DOUBLE), CAST($f AS DOUBLE)), 6) AS bound
-         |FROM events WHERE value IS NOT NULL""".stripMargin
-    }.mkString("\nUNION ALL\n") + "\nORDER BY boundary"
-
-  /** DuckDB mirror of [[DataQuality.profile]]: one value-counts CTE per
-    * column, the same BIGINT Simpson arithmetic, and the top value as a
-    * `(count DESC, value)` scalar subquery.
-    */
-  private def columnProfileSql(table: String, cols: Seq[String]): String =
-    cols.map { c =>
-      s"""SELECT * FROM (
-         |  WITH vc AS (SELECT CAST($c AS VARCHAR) AS v, count(*) AS cnt FROM $table GROUP BY 1),
-         |  s AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
-         |          CAST(sum(CASE WHEN v IS NULL THEN cnt ELSE 0 END) AS BIGINT) AS nn,
-         |          CAST(count(CASE WHEN v IS NOT NULL THEN 1 END) AS BIGINT) AS ndv,
-         |          CAST(sum(CASE WHEN v IS NOT NULL THEN cnt * cnt ELSE 0 END) AS BIGINT) AS sq,
-         |          CAST(max(CASE WHEN v IS NOT NULL THEN cnt END) AS BIGINT) AS topc
-         |        FROM vc)
-         |  SELECT '$c' AS col_name, n AS n_rows, nn AS n_nulls, ndv,
-         |    CASE WHEN sq IS NULL OR sq = 0 THEN NULL
-         |         ELSE round(CAST((n - nn) * (n - nn) AS DOUBLE) / sq, 6) END AS eff_card,
-         |    (SELECT v FROM vc WHERE v IS NOT NULL ORDER BY cnt DESC, v LIMIT 1) AS top_value,
-         |    topc AS top_count
-         |  FROM s)""".stripMargin
-    }.mkString("\nUNION ALL\n") + "\nORDER BY col_name"
-
-  /** DuckDB mirror of [[TextAnalysis.labelingMatrix]] over the three
-    * q_labeling_matrix functions — identical CASE votes, one aggregate of
-    * conditional sums, pair rows as UNION ALL branches.
-    */
-  private lazy val labelingMatrixSql: String = {
-    val names = Seq("len_ok", "is_en", "mentions_spark")
-    val votes = Seq(
-      "CASE WHEN n_chars >= 300 THEN 1 ELSE -1 END",
-      "CASE WHEN lang IS NULL THEN 0 WHEN lang = 'en' THEN 1 ELSE -1 END",
-      "CASE WHEN text IS NULL THEN 0 WHEN contains(text, 'spark') THEN 1 ELSE 0 END")
-    val pairs = for (i <- names.indices; j <- names.indices if i <= j) yield (i, j)
-    val sums = pairs.flatMap { case (i, j) =>
-      val f = s"l$i <> 0 AND l$j <> 0"
-      Seq(
-        s"CAST(sum(CASE WHEN $f THEN 1 ELSE 0 END) AS BIGINT) AS b${i}_$j",
-        s"CAST(sum(CASE WHEN $f AND l$i = l$j THEN 1 ELSE 0 END) AS BIGINT) AS a${i}_$j",
-        s"CAST(sum(CASE WHEN $f AND l$i <> l$j THEN 1 ELSE 0 END) AS BIGINT) AS c${i}_$j")
-    }.mkString(",\n  ")
-    val branches = pairs.map { case (i, j) =>
-      s"""SELECT '${names(i)}' AS lf_a, '${names(j)}' AS lf_b, n AS n_rows,
-         |  b${i}_$j AS n_both, a${i}_$j AS n_agree, c${i}_$j AS n_conflict FROM agg""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH v AS (SELECT ${votes.zipWithIndex.map { case (v, i) => s"$v AS l$i" }.mkString(", ")}
-       |  FROM documents),
-       |agg AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |  $sums FROM v)
-       |$branches
-       |ORDER BY lf_a, lf_b""".stripMargin
-  }
-
-  /** DuckDB mirror of [[TextAnalysis.kappaMatrix]] over the same three
-    * labeling functions as [[labelingMatrixSql]]: one aggregate of
-    * conditional sums (co-fire count, agreement, both marginals), kappa
-    * assembled per pair as UNION ALL branches with the engine's exact
-    * expression shape (`pe` from the two +1 marginal shares).
-    */
-  private lazy val lfKappaSql: String = {
-    val names = Seq("len_ok", "is_en", "mentions_spark")
-    val votes = Seq(
-      "CASE WHEN n_chars >= 300 THEN 1 ELSE -1 END",
-      "CASE WHEN lang IS NULL THEN 0 WHEN lang = 'en' THEN 1 ELSE -1 END",
-      "CASE WHEN text IS NULL THEN 0 WHEN contains(text, 'spark') THEN 1 ELSE 0 END")
-    val pairs = for (i <- names.indices; j <- names.indices if i < j) yield (i, j)
-    val sums = pairs.flatMap { case (i, j) =>
-      val f = s"l$i <> 0 AND l$j <> 0"
-      Seq(
-        s"CAST(sum(CASE WHEN $f THEN 1 ELSE 0 END) AS BIGINT) AS n${i}_$j",
-        s"CAST(sum(CASE WHEN $f AND l$i = l$j THEN 1 ELSE 0 END) AS BIGINT) AS o${i}_$j",
-        s"CAST(sum(CASE WHEN $f AND l$i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ap${i}_$j",
-        s"CAST(sum(CASE WHEN $f AND l$j = 1 THEN 1 ELSE 0 END) AS BIGINT) AS bp${i}_$j")
-    }.mkString(",\n  ")
-    val branches = pairs.map { case (i, j) =>
-      val n = s"n${i}_$j"
-      val po = s"(CAST(o${i}_$j AS DOUBLE) / $n)"
-      val ap = s"(CAST(ap${i}_$j AS DOUBLE) / $n)"
-      val bp = s"(CAST(bp${i}_$j AS DOUBLE) / $n)"
-      val pe = s"($ap * $bp + (1.0 - $ap) * (1.0 - $bp))"
-      s"""SELECT '${names(i)}' AS lf_a, '${names(j)}' AS lf_b, $n AS n_both,
-         |  CASE WHEN $n > 0 THEN round($po, 6) END AS po,
-         |  CASE WHEN $n > 0 THEN round($pe, 6) END AS pe,
-         |  CASE WHEN $n > 0 AND $pe < 1.0
-         |       THEN round(($po - $pe) / (1.0 - $pe), 6) END AS kappa
-         |FROM agg""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH v AS (SELECT ${votes.zipWithIndex.map { case (v, i) => s"$v AS l$i" }.mkString(", ")}
-       |  FROM documents),
-       |agg AS (SELECT $sums FROM v)
-       |$branches
-       |ORDER BY lf_a, lf_b""".stripMargin
-  }
-
-  /** DuckDB mirror of [[DataQuality.benford]]: the Benford probabilities
-    * are interpolated as Scala-computed shortest-roundtrip double literals
-    * (NOT recomputed via the oracle's `log10`, whose last ULP is
-    * libm-dependent), so both engines run the identical constants through
-    * the identical chi-square expression.
-    */
-  private lazy val benfordSql: String = {
-    val pCase = (1 to 9).map(d =>
-      s"WHEN $d THEN CAST(${math.log10(1.0 + 1.0 / d)} AS DOUBLE)")
-      .mkString("CASE digit ", " ", " END")
-    s"""WITH d AS (SELECT l_returnflag,
-       |    CAST(substr(CAST(CAST(floor(abs(CAST(l_extendedprice AS DOUBLE))) AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit
-       |  FROM lineitem
-       |  WHERE l_extendedprice IS NOT NULL AND abs(CAST(l_extendedprice AS DOUBLE)) >= 1.0),
-       |c AS (SELECT l_returnflag, digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
-       |t AS (SELECT l_returnflag, sum(n) AS t FROM c GROUP BY 1),
-       |p AS (SELECT c.l_returnflag, digit, n, t, $pCase AS ep
-       |      FROM c JOIN t USING (l_returnflag))
-       |SELECT l_returnflag, digit, n,
-       |  floor((CAST(n AS DOUBLE) / t) * 1000000.0) / 1000000.0 AS obs_p,
-       |  round(ep, 6) AS benford_p,
-       |  round((n - ep * t) * (n - ep * t) / (ep * t), 6) AS chi2_term
-       |FROM p ORDER BY l_returnflag, digit""".stripMargin
-  }
-
-  /** DuckDB mirror of [[TextAnalysis.bpeEncode]] around Verify-time learned
-    * merges: the identical wrapped-symbol replace fold, as nested built-in
-    * `replace` calls per word (list_transform keeps word order; no explode).
-    * Merge symbols interpolate as SQL literals with quotes doubled.
-    */
-  private def bpeEncodeSql(merges: Seq[(String, String)]): String = {
-    def esc(s: String) = s.replace("'", "''")
-    val wrapped = "'·' || array_to_string(string_split(w, ''), '··') || '·'"
-    val folded = merges.foldLeft(wrapped) { case (c, (a, b)) =>
-      s"replace($c, '·${esc(a)}··${esc(b)}·', '·${esc(a)}${esc(b)}·')"
-    }
-    s"""WITH e AS (SELECT doc_id,
-       |    flatten(list_transform(string_split(text, ' '),
-       |      w -> string_split(regexp_replace($folded, '^·|·$$', '', 'g'), '··'))) AS toks
-       |  FROM documents WHERE text IS NOT NULL)
-       |SELECT doc_id, array_to_string(toks, ' ') AS encoded,
-       |  CAST(len(toks) AS BIGINT) AS n_tokens
-       |FROM e ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Similarity.jlDistortionAudit]] (64 → 16, seed 42):
-    * the identical seeded ±1/0 matrix as a list literal, the same
-    * fixed-order scalar folds (init prepended — DuckDB 1.0 list_reduce has
-    * no init arg), every float CAST to DOUBLE before arithmetic.
-    */
-  private lazy val jlAuditSql: String = {
-    val rl = Similarity.jlMatrix(64, 16, 42L).mkString("[", ",", "]")
-    val scale = s"CAST(${math.sqrt(3.0 / 16)} AS DOUBLE)"
-    s"""WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-       |           WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-       |             AND len(embedding) = 64),
-       |p AS (SELECT a.id AS id_a, b.id AS id_b, a.v AS va, b.v AS vb
-       |      FROM e a JOIN e b ON b.id = a.id + 1 WHERE a.id % 2 = 0),
-       |m AS (SELECT $rl AS rl),
-       |pr AS (SELECT id_a, id_b, va, vb,
-       |         list_transform(generate_series(0, 15), j ->
-       |           list_reduce(list_concat([0.0::DOUBLE],
-       |             list_transform(generate_series(1, 64), i ->
-       |               CAST(va[i] AS DOUBLE) * rl[j * 64 + i])),
-       |             (acc, x) -> acc + x)) AS pa,
-       |         list_transform(generate_series(0, 15), j ->
-       |           list_reduce(list_concat([0.0::DOUBLE],
-       |             list_transform(generate_series(1, 64), i ->
-       |               CAST(vb[i] AS DOUBLE) * rl[j * 64 + i])),
-       |             (acc, x) -> acc + x)) AS pb
-       |       FROM p, m),
-       |c AS (SELECT id_a, id_b,
-       |        sqrt(list_reduce(list_concat([0.0::DOUBLE],
-       |          list_transform(generate_series(1, 64), i ->
-       |            (CAST(va[i] AS DOUBLE) - CAST(vb[i] AS DOUBLE)) *
-       |            (CAST(va[i] AS DOUBLE) - CAST(vb[i] AS DOUBLE)))),
-       |          (acc, x) -> acc + x)) AS dor,
-       |        $scale * sqrt(list_reduce(list_concat([0.0::DOUBLE],
-       |          list_transform(generate_series(1, 16), j ->
-       |            (pa[j] - pb[j]) * (pa[j] - pb[j]))),
-       |          (acc, x) -> acc + x)) AS dpr
-       |      FROM pr)
-       |SELECT id_a, id_b, round(dor, 6) AS d_orig, round(dpr, 6) AS d_proj,
-       |  CASE WHEN dor > 0.0 THEN round(dpr / dor, 6) END AS ratio
-       |FROM c ORDER BY id_a""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Sketches.bloomAudit]] (2²⁰ bits, 3 hashes, seed 42,
-    * orders over 150k against lineitem): bit membership restated as set
-    * membership over the distinct bit POSITIONS — a key passes iff all 3 of
-    * its hash rows find their position in the build side's position set,
-    * which is exactly the word-array bit test.
-    */
-  private lazy val bloomJoinSql: String = {
-    val (as, bs) = Sketches.hashConsts(3, 42L)
-    val structs = (0 until 3).map(i =>
-      s"{'r': $i, 'a': ${as(i)}, 'b': ${bs(i)}}").mkString(", ")
-    val m = 1 << 20
-    val hash = "CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 8) AS BIGINT)"
-    s"""WITH bk AS (SELECT DISTINCT o_orderkey AS k FROM orders
-       |            WHERE o_orderkey IS NOT NULL AND o_totalprice > 150000.0),
-       |bh AS (SELECT $hash AS x, unnest([$structs]) AS u FROM bk),
-       |bpos AS (SELECT DISTINCT ((u.a * x + u.b) % 2147483647) % $m AS pos FROM bh),
-       |pk AS (SELECT DISTINCT l_orderkey AS k FROM lineitem
-       |       WHERE l_orderkey IS NOT NULL),
-       |ph AS (SELECT k, $hash AS x, unnest([$structs]) AS u FROM pk),
-       |ppos AS (SELECT k, u.r AS r, ((u.a * x + u.b) % 2147483647) % $m AS pos FROM ph),
-       |pass AS (SELECT k FROM ppos JOIN bpos USING (pos)
-       |         GROUP BY k HAVING count(DISTINCT r) = 3),
-       |pr AS (SELECT l_orderkey AS k FROM lineitem WHERE l_orderkey IS NOT NULL),
-       |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_probe,
-       |          CAST(count(*) FILTER (WHERE k IN (SELECT k FROM pass)) AS BIGINT) AS n_pass,
-       |          CAST(count(*) FILTER (WHERE k IN (SELECT k FROM bk)) AS BIGINT) AS n_match
-       |        FROM pr)
-       |SELECT n_probe, n_pass, n_match, n_pass - n_match AS n_false_pos,
-       |  CASE WHEN n_probe = n_match THEN 0.0
-       |       ELSE round((n_pass - n_match) / CAST(n_probe - n_match AS DOUBLE), 6)
-       |  END AS fp_rate
-       |FROM agg""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Sketches.hllAudit]] (p = 8 over
-    * `events.user_id` by event_type): identical md5-prefix hash, bucket/rank
-    * split via the engines' shared `length(bin(x))` msb, the EXACT
-    * 2^(24−M)-scaled BIGINT harmonic sum, and the same one-expression
-    * bias-corrected estimate with linear-counting fallback.
-    */
-  private lazy val hllSql: String = {
-    s"""WITH b AS (SELECT event_type AS g, user_id AS k,
-       |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS x
-       |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-       |r AS (SELECT g, x // 16777216 AS bk,
-       |        CASE WHEN x % 16777216 = 0 THEN 25
-       |             ELSE 25 - length(bin(x % 16777216)) END AS rk
-       |      FROM b),
-       |regs AS (SELECT g, bk, max(rk) AS m FROM r GROUP BY 1, 2),
-       |pg AS (SELECT g, CAST(sum(1::BIGINT << CAST(25 - m AS INTEGER)) AS BIGINT) AS s,
-       |         CAST(count(*) AS BIGINT) AS nb
-       |       FROM regs GROUP BY 1),
-       |ex AS (SELECT g, CAST(count(DISTINCT k) AS BIGINT) AS n_exact FROM b GROUP BY 1),
-       |est AS (SELECT g,
-       |    0.7213 / (1.0 + 1.079 / 256) * 256.0 * 256.0 * 33554432.0 /
-       |      CAST(s + (256 - nb) * 33554432 AS DOUBLE) AS raw,
-       |    256 - nb AS zeros
-       |  FROM pg),
-       |e2 AS (SELECT g, CASE WHEN raw <= 640.0 AND zeros > 0
-       |                      THEN 256.0 * ln(256.0 / CAST(zeros AS DOUBLE))
-       |                      ELSE raw END AS est
-       |       FROM est)
-       |SELECT g AS event_type, n_exact, round(est, 4) AS n_est,
-       |  round(abs(est - n_exact) / n_exact, 4) AS rel_err
-       |FROM e2 JOIN ex USING (g) ORDER BY event_type""".stripMargin
-  }
-
-  /** q_psi oracle body (also composed into q_drift_panel). */
-  private lazy val psiOracleSql: String =
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL),
-         |b AS (SELECT pvname,
-         |    CAST(least(greatest(floor((v - 0.0) / 25.0), 0), 19) AS BIGINT) AS bin,
-         |    count(*) FILTER (WHERE ts_us < $TMID) AS n1,
-         |    count(*) FILTER (WHERE ts_us >= $TMID) AS n2
-         |  FROM s GROUP BY 1, 2),
-         |t AS (SELECT pvname, sum(n1) AS t1, sum(n2) AS t2, count(*) AS cells
-         |  FROM b GROUP BY pvname),
-         |pr AS (SELECT b.pvname,
-         |    (n1 + CAST(0.5 AS DOUBLE)) / (t1 + CAST(0.5 AS DOUBLE) * cells) AS p1,
-         |    (n2 + CAST(0.5 AS DOUBLE)) / (t2 + CAST(0.5 AS DOUBLE) * cells) AS p2
-         |  FROM b JOIN t ON b.pvname = t.pvname)
-         |SELECT pvname, round(sum((p1 - p2) * ln(p1 / p2)), 6) AS psi
-         |FROM pr GROUP BY pvname ORDER BY pvname""".stripMargin
-
-  /** q_ks_drift oracle body (also composed into q_drift_panel). */
-  private lazy val ksDriftOracleSql: String =
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL),
-         |b AS (SELECT pvname,
-         |    CAST(least(greatest(floor((v - 0.0) / 25.0), 0), 19) AS BIGINT) AS bin,
-         |    count(*) FILTER (WHERE ts_us < $TMID) AS n1,
-         |    count(*) FILTER (WHERE ts_us >= $TMID) AS n2
-         |  FROM s GROUP BY 1, 2),
-         |c AS (SELECT pvname, bin, n1, n2,
-         |    sum(n1) OVER (PARTITION BY pvname ORDER BY bin) AS c1,
-         |    sum(n2) OVER (PARTITION BY pvname ORDER BY bin) AS c2,
-         |    sum(n1) OVER (PARTITION BY pvname) AS t1,
-         |    sum(n2) OVER (PARTITION BY pvname) AS t2
-         |  FROM b)
-         |SELECT pvname, CAST(max(t1) AS BIGINT) AS n1, CAST(max(t2) AS BIGINT) AS n2,
-         |  round(max(abs(CAST(c1 AS DOUBLE) / t1 - CAST(c2 AS DOUBLE) / t2)), 6) AS ks
-         |FROM c WHERE t1 > 0 AND t2 > 0
-         |GROUP BY pvname ORDER BY pvname""".stripMargin
-
-  /** The shared DuckDB HLL estimate expression over a scaled harmonic sum
-    * column `s` and present-register count `nb` (p = 8) — mirrors
-    * `Sketches.hllEstimate` term for term. */
-  private def hllEstSql(s: String, nb: String): String =
-    s"""(CASE WHEN (0.7213 / (1.0 + 1.079 / 256) * 256.0 * 256.0 * 33554432.0 /
-       |         CAST($s + (256 - $nb) * 33554432 AS DOUBLE)) <= 640.0
-       |        AND (256 - $nb) > 0
-       |  THEN 256.0 * ln(256.0 / CAST(256 - $nb AS DOUBLE))
-       |  ELSE 0.7213 / (1.0 + 1.079 / 256) * 256.0 * 256.0 * 33554432.0 /
-       |       CAST($s + (256 - $nb) * 33554432 AS DOUBLE) END)""".stripMargin
-
-  /** DuckDB mirror of [[Sketches.hllOverlap]] over
-    * `events.(event_type, user_id)`: identical registers, pair-attached
-    * bucket-max union merge, the same estimate expression three ways, and
-    * the exact intersection from the raw distinct self-join.
-    */
-  private lazy val hllOverlapSql: String = {
-    s"""WITH b AS (SELECT event_type AS g, user_id AS k,
-       |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS x
-       |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-       |r AS (SELECT g, x // 16777216 AS bk,
-       |        CASE WHEN x % 16777216 = 0 THEN 25
-       |             ELSE 25 - length(bin(x % 16777216)) END AS rk
-       |      FROM b),
-       |regs AS (SELECT g, bk, max(rk) AS m FROM r GROUP BY 1, 2),
-       |gs AS (SELECT DISTINCT g FROM regs),
-       |pr AS (SELECT a.g AS ga, b2.g AS gb FROM gs a JOIN gs b2 ON a.g < b2.g),
-       |ur AS (SELECT ga, gb, bk, max(m) AS m
-       |       FROM regs JOIN pr ON regs.g = pr.ga OR regs.g = pr.gb
-       |       GROUP BY 1, 2, 3),
-       |hu AS (SELECT ga, gb,
-       |         CAST(sum(1::BIGINT << CAST(25 - m AS INTEGER)) AS BIGINT) AS s,
-       |         CAST(count(*) AS BIGINT) AS nb
-       |       FROM ur GROUP BY 1, 2),
-       |hg AS (SELECT g,
-       |         CAST(sum(1::BIGINT << CAST(25 - m AS INTEGER)) AS BIGINT) AS s,
-       |         CAST(count(*) AS BIGINT) AS nb
-       |       FROM regs GROUP BY 1),
-       |eu AS (SELECT ga, gb, ${hllEstSql("s", "nb")} AS e FROM hu),
-       |eg AS (SELECT g, ${hllEstSql("s", "nb")} AS e FROM hg),
-       |dk AS (SELECT DISTINCT g, k FROM b),
-       |ex AS (SELECT a.g AS ga, b2.g AS gb,
-       |         CAST(count(DISTINCT a.k) AS BIGINT) AS n_exact
-       |       FROM dk a JOIN dk b2 ON a.k = b2.k AND a.g < b2.g
-       |       GROUP BY 1, 2)
-       |SELECT eu.ga AS group_a, eu.gb AS group_b,
-       |  coalesce(ex.n_exact, 0) AS n_exact,
-       |  round(ea.e + eb.e - eu.e, 4) AS n_est
-       |FROM eu
-       |JOIN eg ea ON ea.g = eu.ga
-       |JOIN eg eb ON eb.g = eu.gb
-       |LEFT JOIN ex ON ex.ga = eu.ga AND ex.gb = eu.gb
-       |ORDER BY group_a, group_b""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Sketches.hdrQuantiles]] (q ∈ {0.5, 0.9, 0.99} over
-    * `events.value` by event_type): same log₂ buckets via `length(bin(v))`,
-    * same cumulative-count bucket election, same ⌈q·n⌉ rank statistic.
-    * Quantiles are DOUBLE on both sides (a DuckDB DECIMAL literal would do
-    * exact `q·n` arithmetic where Spark does IEEE).
-    */
-  private lazy val hdrQuantilesSql: String = {
-    s"""WITH b AS (SELECT event_type AS g, CAST(floor(value) AS BIGINT) AS v
-       |  FROM events
-       |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND value > 0),
-       |b2 AS (SELECT g, v FROM b WHERE v > 0),
-       |h AS (SELECT g, CAST(length(bin(v)) AS BIGINT) AS bk,
-       |        CAST(count(*) AS BIGINT) AS c
-       |      FROM b2 GROUP BY 1, 2),
-       |qs AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q),
-       |cum AS (SELECT g, bk, sum(c) OVER (PARTITION BY g ORDER BY bk) AS cm,
-       |          sum(c) OVER (PARTITION BY g) AS n
-       |        FROM h),
-       |est AS (SELECT g, q, CAST(n AS BIGINT) AS n,
-       |          (1::BIGINT << CAST(min(bk) AS INTEGER)) - 1 AS est_hi
-       |        FROM cum JOIN qs ON cm >= ceil(q * n) GROUP BY g, q, n),
-       |rk AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn
-       |       FROM b2),
-       |np AS (SELECT g, CAST(count(*) AS BIGINT) AS nn FROM b2 GROUP BY 1),
-       |want AS (SELECT g, q, CAST(ceil(q * nn) AS INTEGER) AS rn FROM np, qs),
-       |exq AS (SELECT g, q, v AS exact FROM rk JOIN want USING (g, rn))
-       |SELECT g AS event_type, q, n, est_hi, exact
-       |FROM est JOIN exq USING (g, q) ORDER BY event_type, q""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Skew.countMinAudit]] (width 64, depth 4, top 20
-    * over `events.user_id`): the engine's seeded hash rows interpolated as
-    * struct literals so both engines run identical integer arithmetic.
-    */
-  private lazy val cmSketchSql: String = {
-    val (as, bs) = Skew.cmHashes(4)
-    val structs = (0 until 4).map(i =>
-      s"{'r': $i, 'a': ${as(i)}, 'b': ${bs(i)}}").mkString(", ")
-    s"""WITH r AS (SELECT user_id,
-       |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS x
-       |  FROM events WHERE user_id IS NOT NULL),
-       |h AS (SELECT x, unnest([$structs]) AS u FROM r),
-       |hc AS (SELECT u.r AS rw, ((u.a * x + u.b) % 2147483647) % 64 AS cell FROM h),
-       |counters AS (SELECT rw, cell, CAST(count(*) AS BIGINT) AS cnt
-       |             FROM hc GROUP BY 1, 2),
-       |heavy AS (SELECT user_id, x, CAST(count(*) AS BIGINT) AS exact
-       |          FROM r GROUP BY 1, 2 ORDER BY exact DESC, user_id LIMIT 20),
-       |hp AS (SELECT user_id, exact, x, unnest([$structs]) AS u FROM heavy),
-       |pp AS (SELECT user_id, exact, u.r AS rw,
-       |         ((u.a * x + u.b) % 2147483647) % 64 AS cell FROM hp),
-       |est AS (SELECT user_id, exact, min(cnt) AS estimate
-       |        FROM pp JOIN counters USING (rw, cell) GROUP BY 1, 2)
-       |SELECT user_id, exact, estimate, estimate - exact AS overcount
-       |FROM est ORDER BY exact DESC, user_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Dedup.cdcDedup]]: identical window hash (8 hex
-    * chars of md5 as BIGINT), cut predicate, cumulative-sum chunk ids and
-    * first-occurrence election.
-    */
-  private def cdcDedupSql(window: Int, divisor: Int): String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
-       |  FROM documents WHERE text IS NOT NULL),
-       |b AS (SELECT doc_id, ws, len(ws) AS n FROM t),
-       |cuts AS (SELECT doc_id, u.i + 1 AS sp
-       |         FROM b, unnest(generate_series($window - 1, n - 2)) AS u(i)
-       |         WHERE n >= $window + 1
-       |           AND CAST('0x' || substr(md5(array_to_string(ws[u.i - $window + 2 : u.i + 1], ' ')), 1, 8) AS BIGINT) % $divisor = 0),
-       |toks AS (SELECT doc_id, u.pos, ws[u.pos + 1] AS tok
-       |         FROM b, unnest(generate_series(0, n - 1)) AS u(pos)),
-       |fl AS (SELECT tk.doc_id, tk.pos, tk.tok,
-       |         CASE WHEN c.sp IS NOT NULL THEN 1 ELSE 0 END AS f
-       |       FROM toks tk LEFT JOIN cuts c ON tk.doc_id = c.doc_id AND tk.pos = c.sp),
-       |ch AS (SELECT doc_id, pos, tok, sum(f) OVER (PARTITION BY doc_id ORDER BY pos) AS cidx FROM fl),
-       |cg AS (SELECT doc_id, cidx, string_agg(tok, ' ' ORDER BY pos) AS chunk
-       |       FROM ch GROUP BY doc_id, cidx),
-       |r AS (SELECT doc_id, cidx, chunk,
-       |        row_number() OVER (PARTITION BY chunk ORDER BY doc_id, cidx) AS rn FROM cg)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-       |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       |  coalesce(string_agg(chunk, ' ' ORDER BY cidx) FILTER (WHERE rn = 1), '') AS text_dedup
-       |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** DuckDB mirror of [[Multimodal.dhash]] over the STUB decode (payload =
-    * the doc's bytes cycled into a `w × h` luma plane): the grid-sample
-    * indices are precomputed with the identical integer geometry, and each
-    * bit is one strict integer comparison — no floats anywhere.
-    */
-  /** CTE chain ending in `sig(media_id, dhash)` — the stub-plane dHash
-    * shared by the signature and pair queries (the [[simhashSigCtes]]
-    * pattern). Bit 63 IS populated (an 8×8 grid uses all 64 bits), so the
-    * signed sum reproduces the engine's two's-complement long exactly.
-    */
-  private def mediaDhashCtes(hashW: Int, hashH: Int, w: Int, h: Int): String = {
-    val n = w * h
-    val terms = for (y <- 0 until hashH; x <- 0 until hashW) yield {
-      val sy = math.min(h - 1, y * h / hashH)
-      val sx1 = math.min(w - 1, x * w / (hashW + 1))
-      val sx2 = math.min(w - 1, (x + 1) * w / (hashW + 1))
-      val bit = 1L << (y * hashW + x)
-      s"(CASE WHEN pix[${sy * w + sx1 + 1}] > pix[${sy * w + sx2 + 1}] THEN CAST($bit AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    }
-    s"""b AS (SELECT doc_id AS media_id,
-       |    list_transform(generate_series(0, ${n - 1}),
-       |      i -> CASE WHEN length(text) = 0 THEN 0
-       |                ELSE unicode(substr(text, (i % length(text)) + 1, 1)) END) AS pix
-       |  FROM documents WHERE doc_id % 3 = 0),
-       |sig AS (SELECT media_id, CAST(${terms.mkString("\n  + ")} AS BIGINT) AS dhash FROM b)""".stripMargin
-  }
-
-  private def mediaDhashSql(hashW: Int, hashH: Int, w: Int, h: Int): String =
-    s"""WITH ${mediaDhashCtes(hashW, hashH, w, h)}
-       |SELECT media_id, dhash FROM sig ORDER BY media_id""".stripMargin
-
-  /** Mirrors [[Dedup.hammingPairs]] over the media dHash frame: low-bit
-    * mask bucket join, pairs kept at Hamming ≤ cap over all 64 bits. */
-  private def dhashPairsSql(prefixBits: Int, maxHamming: Int): String = {
-    val mask = (1L << prefixBits) - 1L
-    s"""WITH ${mediaDhashCtes(hashW = 8, hashH = 8, w = 8, h = 4)},
-       |m AS (SELECT media_id, dhash, dhash & $mask AS bucket FROM sig)
-       |SELECT a.media_id AS d1, c.media_id AS d2,
-       |       CAST(bit_count(xor(a.dhash, c.dhash)) AS BIGINT) AS hamming
-       |FROM m a JOIN m c ON a.bucket = c.bucket AND a.media_id < c.media_id
-       |WHERE bit_count(xor(a.dhash, c.dhash)) <= $maxHamming
-       |ORDER BY d1, d2""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.Graph.labelPropagation]] over the
-    * symmetrized kNN graph with `vec_id % 10 == 0` seeds: `iters` unrolled
-    * integer-vote rounds; the per-node argmax is a `(count DESC, label)`
-    * row_number — the exact tie-break `min_by` applies engine-side.
-    */
-  private def labelPropSql(iters: Int, k: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""p$i AS (SELECT n.node, coalesce(s.seed, w.best, p.label) AS label
-         |  FROM nodes n
-         |  LEFT JOIN p${i - 1} p ON n.node = p.node
-         |  LEFT JOIN seeds s ON n.node = s.node
-         |  LEFT JOIN (SELECT node, best FROM (
-         |      SELECT e.dst AS node, q.label AS best, count(*) AS cnt,
-         |             row_number() OVER (PARTITION BY e.dst ORDER BY count(*) DESC, q.label) AS rn
-         |      FROM p${i - 1} q JOIN ed e ON e.src = q.node WHERE q.label IS NOT NULL
-         |      GROUP BY e.dst, q.label) t WHERE rn = 1) w ON n.node = w.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings WHERE embedding IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM emb a JOIN emb b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |e0 AS (SELECT qid AS src, nid AS dst FROM r WHERE rn <= $k),
-       |ed AS (SELECT DISTINCT src, dst FROM
-       |       (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)),
-       |nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
-       |seeds AS (SELECT vec_id AS node, CAST(label AS BIGINT) AS seed FROM embeddings
-       |          WHERE vec_id % 10 = 0 AND label IS NOT NULL),
-       |p0 AS (SELECT n.node, s.seed AS label FROM nodes n LEFT JOIN seeds s ON n.node = s.node),
-       |$steps
-       |SELECT node, label FROM p$iters ORDER BY node""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Similarity.marginMining]] over label-parity groups:
-    * cross-group exact top-k, integer neighborhood sums, one double
-    * division per pair, per-source argmax window with the same tie-break.
-    */
-  private def marginMiningSql(k: Int, threshold: Double): String = {
-    val denomScale = 2.0 * k * 1000000.0
-    s"""WITH emb AS (SELECT vec_id, label % 2 AS g, embedding::DOUBLE[] AS ev
-       |  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, a.g AS ga,
-       |         round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM emb a JOIN emb b ON a.g <> b.g),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |t AS (SELECT * FROM r WHERE rn <= $k),
-       |su AS (SELECT qid, CAST(sum(CAST(round(sim * 1000000.0) AS BIGINT)) AS BIGINT) AS isum
-       |       FROM t GROUP BY qid),
-       |m AS (SELECT c.qid AS src_id, c.nid AS dst_id, c.sim,
-       |        round(c.sim / (CAST(sa.isum + sb.isum AS DOUBLE) / $denomScale), 6) AS margin
-       |      FROM t c JOIN su sa ON c.qid = sa.qid JOIN su sb ON c.nid = sb.qid
-       |      WHERE c.ga = 0),
-       |best AS (SELECT *, row_number() OVER (PARTITION BY src_id ORDER BY margin DESC, dst_id) AS rb
-       |         FROM m)
-       |SELECT src_id, dst_id, sim AS cos, margin
-       |FROM best WHERE rb = 1 AND margin >= $threshold ORDER BY src_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Dedup.minhashEstimateAudit]]: the [[minhashLshSql]]
-    * candidate chain, the per-pair signature-agreement count as an integer
-    * CASE sum, and the exact-Jaccard verify with no threshold. The estimate
-    * `n_match / numPerm` is an exact binary fraction (numPerm a power of
-    * two), so the doubles agree bit-for-bit across engines.
-    */
-  private def minhashErrorSql(numPerm: Int, bands: Int, n: Int): String = {
-    val rows = numPerm / bands
-    val bandJoins = (0 until bands).map { b =>
-      val eqs = (b * rows until (b + 1) * rows).map(i => s"a.mh$i = b.mh$i").mkString(" AND ")
-      s"SELECT a.doc AS d1, b.doc AS d2 FROM sig a JOIN sig b ON $eqs AND a.doc < b.doc"
-    }
-    val matches = (0 until numPerm)
-      .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)").mkString(" + ")
-    val jac = "CAST(coalesce(i.i, 0) AS DOUBLE) / (a.sz + b.sz - coalesce(i.i, 0))"
-    s"""WITH ${shingleCte(n)},
-       |h AS (SELECT doc, $shingleHashSql AS h FROM s),
-       |sig AS (SELECT doc, ${(0 until numPerm).map { i =>
-          val (a, bb) = Dedup.perm(i)
-          s"min((h * $a + $bb) % $MERSENNE) AS mh$i"
-        }.mkString(", ")} FROM h GROUP BY doc),
-       |cand AS (SELECT DISTINCT d1, d2 FROM (${bandJoins.mkString(" UNION ALL ")})),
-       |m AS (SELECT c.d1, c.d2, $matches AS n_match
-       |      FROM cand c JOIN sig a ON c.d1 = a.doc JOIN sig b ON c.d2 = b.doc),
-       |sz AS (SELECT doc, count(*) AS sz FROM s GROUP BY doc),
-       |inter AS (SELECT c.d1, c.d2, count(*) AS i
-       |          FROM cand c JOIN s x ON c.d1 = x.doc JOIN s y ON c.d2 = y.doc AND x.shingle = y.shingle
-       |          GROUP BY c.d1, c.d2)
-       |SELECT m.d1, m.d2, CAST(m.n_match AS BIGINT) AS n_match,
-       |  round(CAST(m.n_match AS DOUBLE) / $numPerm, 6) AS est_jaccard,
-       |  round($jac, 6) AS jaccard,
-       |  round(abs(CAST(m.n_match AS DOUBLE) / $numPerm - round($jac, 6)), 6) AS abs_err
-       |FROM m LEFT JOIN inter i ON m.d1 = i.d1 AND m.d2 = i.d2
-       |  JOIN sz a ON m.d1 = a.doc JOIN sz b ON m.d2 = b.doc
-       |ORDER BY m.d1, m.d2""".stripMargin
-  }
-
-  /** [[minhashLshSql]]'s candidate chain extended with the Levenshtein
-    * verify: same banded candidates + exact-Jaccard gate, then integer
-    * `levenshtein` on the pair texts and a floor-quantized normalized
-    * similarity (a ratio of two ints can land exactly on a decimal
-    * half-point; floor of bit-identical doubles is engine-invariant).
-    */
-  private def editVerifySql(numPerm: Int, bands: Int, n: Int, threshold: Double): String = {
-    val rows = numPerm / bands
-    val bandJoins = (0 until bands).map { b =>
-      val eqs = (b * rows until (b + 1) * rows).map(i => s"a.mh$i = b.mh$i").mkString(" AND ")
-      s"SELECT a.doc AS d1, b.doc AS d2 FROM sig a JOIN sig b ON $eqs AND a.doc < b.doc"
-    }
-    val lev = "levenshtein(ta.text, tb.text)"
-    s"""WITH ${shingleCte(n)},
-       |h AS (SELECT doc, $shingleHashSql AS h FROM s),
-       |sig AS (SELECT doc, ${(0 until numPerm).map { i =>
-          val (a, bb) = Dedup.perm(i)
-          s"min((h * $a + $bb) % $MERSENNE) AS mh$i"
-        }.mkString(", ")} FROM h GROUP BY doc),
-       |cand AS (SELECT DISTINCT d1, d2 FROM (${bandJoins.mkString(" UNION ALL ")})),
-       |sz AS (SELECT doc, count(*) AS sz FROM s GROUP BY doc),
-       |inter AS (SELECT c.d1, c.d2, count(*) AS i
-       |          FROM cand c JOIN s x ON c.d1 = x.doc JOIN s y ON c.d2 = y.doc AND x.shingle = y.shingle
-       |          GROUP BY c.d1, c.d2),
-       |jp AS (SELECT d1, d2, round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) AS jaccard
-       |       FROM inter JOIN sz a ON d1 = a.doc JOIN sz b ON d2 = b.doc
-       |       WHERE round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) >= $threshold)
-       |SELECT d1, d2, jaccard, CAST($lev AS BIGINT) AS edit_dist,
-       |  floor((CAST(1 AS DOUBLE) - CAST($lev AS DOUBLE) / greatest(length(ta.text), length(tb.text))) * 1000000.0) / 1000000.0 AS edit_sim
-       |FROM jp JOIN documents ta ON jp.d1 = ta.doc_id JOIN documents tb ON jp.d2 = tb.doc_id
-       |ORDER BY d1, d2""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Dedup.incrementalMinhash]] over the odd/even doc_id
-    * split: both shards' signatures from the same seeded permutation family
-    * as [[minhashLshSql]], band-equality candidates, exact-Jaccard verify,
-    * survivors = odd ids (null-text included) minus verified dups.
-    */
-  private def minhashIncrementalSql(numPerm: Int, bands: Int, n: Int,
-      threshold: Double,
-      newPred: String = "doc_id % 2 = 1",
-      existingPred: String = "doc_id % 2 = 0"): String = {
-    val rows = numPerm / bands
-    def sigCtes(sfx: String, pred: String): String =
-      s"""t$sfx AS (SELECT doc_id AS doc, string_split(text, ' ') AS toks
-         |      FROM documents WHERE text IS NOT NULL AND ($pred)),
-         |s$sfx AS (SELECT doc, unnest(list_distinct(list_transform(
-         |        generate_series(0, greatest(len(toks) - $n, 0)),
-         |        i -> array_to_string(toks[i + 1 : i + $n], ' ')))) AS shingle FROM t$sfx),
-         |h$sfx AS (SELECT doc, $shingleHashSql AS h FROM s$sfx),
-         |sig$sfx AS (SELECT doc, ${(0 until numPerm).map { i =>
-            val (a, bb) = Dedup.perm(i)
-            s"min((h * $a + $bb) % $MERSENNE) AS mh$i"
-          }.mkString(", ")} FROM h$sfx GROUP BY doc)""".stripMargin
-    val bandJoins = (0 until bands).map { b =>
-      val eqs = (b * rows until (b + 1) * rows).map(i => s"a.mh$i = b.mh$i").mkString(" AND ")
-      s"SELECT a.doc AS dn, b.doc AS dx FROM sigN a JOIN sigX b ON $eqs"
-    }
-    s"""WITH ${sigCtes("N", newPred)},
-       |${sigCtes("X", existingPred)},
-       |cand AS (SELECT DISTINCT dn, dx FROM (${bandJoins.mkString(" UNION ALL ")})),
-       |inter AS (SELECT c.dn, c.dx, count(*) AS i
-       |          FROM cand c JOIN sN x ON c.dn = x.doc
-       |                      JOIN sX y ON c.dx = y.doc AND x.shingle = y.shingle
-       |          GROUP BY c.dn, c.dx),
-       |szN AS (SELECT doc, count(*) AS sz FROM sN GROUP BY doc),
-       |szX AS (SELECT doc, count(*) AS sz FROM sX GROUP BY doc),
-       |dups AS (SELECT DISTINCT dn FROM inter
-       |         JOIN szN a ON dn = a.doc JOIN szX b ON dx = b.doc
-       |         WHERE round(CAST(i AS DOUBLE) / (a.sz + b.sz - i), 6) >= $threshold)
-       |SELECT doc_id FROM documents
-       |WHERE text IS NOT NULL AND ($newPred) AND doc_id NOT IN (SELECT dn FROM dups)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** CTE chain ending in `sig(doc, simhash)` — shared by the signature and
-    * pair queries.
-    */
-  private def simhashSigCtes: String = {
-    val bits = 60
-    val votes = (0 until bits)
-      .map(k => s"sum(CASE WHEN (h >> $k) & 1 = 1 THEN 1 ELSE -1 END) AS v$k").mkString(", ")
-    val sig = (0 until bits)
-      .map(k => s"(CASE WHEN v$k > 0 THEN (1::BIGINT << $k) ELSE 0 END)").mkString(" | ")
-    s"""tok AS (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS t FROM documents),
-       |h AS (SELECT doc, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h FROM tok),
-       |v AS (SELECT doc, $votes FROM h GROUP BY doc),
-       |sig AS (SELECT doc, $sig AS simhash FROM v)""".stripMargin
-  }
-
-  private def simhashSql: String =
-    s"""WITH $simhashSigCtes
-       |SELECT doc, simhash FROM sig ORDER BY doc""".stripMargin
-
-  /** Mirrors [[Dedup.simhashDedup]]: same-16-bit-prefix bucket join, pairs
-    * kept at Hamming ≤ cap over the full 60-bit signature.
-    */
-  private def simhashPairsSql(prefixBits: Int, maxHamming: Int): String =
-    s"""WITH $simhashSigCtes,
-       |b AS (SELECT doc, simhash, simhash >> ${60 - prefixBits} AS bucket FROM sig)
-       |SELECT a.doc AS d1, b2.doc AS d2,
-       |       CAST(bit_count(xor(a.simhash, b2.simhash)) AS BIGINT) AS hamming
-       |FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.doc < b2.doc
-       |WHERE bit_count(xor(a.simhash, b2.simhash)) <= $maxHamming
-       |ORDER BY d1, d2""".stripMargin
-
-  /** Independent SQL restatement of each [[timeParseInputs]] row's expected
-    * resolution (strptime + epoch arithmetic — NOT generated from the Scala
-    * parser), joined back to the inputs. today/now = 1705276800
-    * (2024-01-15T00:00:00Z), matching the anchor q_time_parse passes.
-    */
-  private def timeParseSql: String = {
-    val inp = timeParseInputs.map { case (id, d1, d2) => s"($id, '$d1', '$d2')" }.mkString(", ")
-    s"""WITH inp(id, d1, d2) AS (VALUES $inp),
-       |exp(id, t1_sec, t2_sec) AS (VALUES
-       |  (1, 1705276800 - 3*86400, 1705276800),
-       |  (2, 1705276800 - 5400, 1705276800),
-       |  (3, 1705276800 - 604800, 1705276800),
-       |  (4, 1705276800 - 604800, 1705276800),
-       |  (5, epoch(strptime('2024-01-10', '%Y-%m-%d')), epoch(strptime('2024-01-15 12:00:00', '%Y-%m-%d %H:%M:%S'))),
-       |  (6, epoch(strptime('2024-01-10', '%Y-%m-%d')), epoch(strptime('2024-01-15 06:30:00', '%Y-%m-%d %H:%M:%S'))),
-       |  (7, epoch(strptime('2024-01-15 12:45:00', '%Y-%m-%d %H:%M:%S')), epoch(strptime('2024-01-12 23:59:59', '%Y-%m-%d %H:%M:%S'))),
-       |  (8, 1705276800 - 2*604800, 1705276800),
-       |  (9, 1705276800 - 604800, 1705276800),
-       |  (10, epoch(strptime('2024-01-10 06:00:00', '%Y-%m-%d %H:%M:%S')), epoch(strptime('2024-01-14 06:00:00', '%Y-%m-%d %H:%M:%S'))))
-       |SELECT CAST(i.id AS BIGINT) AS id, i.d1 AS d1, i.d2 AS d2,
-       |       CAST(e.t1_sec AS BIGINT) AS t1_sec, CAST(e.t2_sec AS BIGINT) AS t2_sec
-       |FROM inp i JOIN exp e USING (id) ORDER BY id""".stripMargin
-  }
-
-  /** Mirrors [[Instruments.snapshot]] over the q_instrument_snapshot
-    * derivation: membership VALUES from the same [[instrumentSets]], as-of
-    * row per (set, pv) via row_number with the (ts, event_id) tie-break.
-    */
-  private def instrumentSnapshotSql(tUs: Long): String = {
-    val values = instrumentSets.map { case (sn, pv) => s"('$sn', '$pv')" }.mkString(", ")
-    s"""WITH sets(set_name, pvname) AS (VALUES $values),
-       |e AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us, event_id, value
-       |      FROM events WHERE epoch_us(ts) <= $tUs),
-       |r AS (SELECT s.set_name AS set_name, e.pvname AS pvname, e.ts_us, e.event_id, e.value,
-       |        row_number() OVER (PARTITION BY s.set_name, e.pvname
-       |                           ORDER BY e.ts_us DESC, e.event_id DESC) AS rn
-       |      FROM e JOIN sets s USING (pvname))
-       |SELECT set_name, pvname, ts_us, event_id, value FROM r WHERE rn = 1
-       |ORDER BY set_name, pvname""".stripMargin
-  }
-
-  /** Self-trained add-k bigram LM cross-entropy — shared by q_lm_xent and
-    * (as a CTE) q_quality_buckets. The score reuses the EXACT expression
-    * tree of the Column plan: (c2 + k) / (c1 + k * v), log2, avg, negate,
-    * round — double arithmetic is order-sensitive.
-    */
-  private val lmXentSql: String =
-    """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks
-      |  FROM documents WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2),
-      |g AS (SELECT doc_id, unnest(list_transform(
-      |    generate_series(0, len(toks) - 2),
-      |    i -> array_to_string(toks[i + 1 : i + 2], ' '))) AS g FROM tk),
-      |c2 AS (SELECT g, count(*) AS c2 FROM g GROUP BY 1),
-      |c1 AS (SELECT string_split(g, ' ')[1] AS w1, count(*) AS c1 FROM g GROUP BY 1),
-      |v AS (SELECT CAST(count(DISTINCT t) AS DOUBLE) AS v
-      |      FROM (SELECT unnest(toks) AS t FROM tk))
-      |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-      |  round(-avg(log2((c2.c2 + 0.5) / (c1.c1 + 0.5 * v.v))), 6) AS xent
-      |FROM g JOIN c2 ON g.g = c2.g
-      |       JOIN c1 ON string_split(g.g, ' ')[1] = c1.w1, v
-      |GROUP BY g.doc_id ORDER BY doc_id""".stripMargin
-
-  /** Shared by q_distinct_users (built-in count_distinct) and
-    * q_distinct_users_salted ([[Skew.saltedDistinct]]): both plans must
-    * produce THIS result.
-    */
-  private val distinctUsersSql: String =
-    """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** DuckDB fragment mirroring [[Similarity.cosine]] (dot / (‖a‖·‖b‖)). */
-  private def cosineSql(a: String, b: String): String =
-    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
-
-  /** DuckDB mirror of [[operators.Graph.pageRank]] over the exact kNN edge
-    * list (the q_hubness ranking CTE): `iters` unrolled iterations, each one
-    * keyed join + keyed sum, with every update in BIGINT integer division —
-    * both engines produce the SAME longs by construction.
-    */
-  private def pageRankSql(iters: Int, k: Int, scale: Long): String = {
-    val tele15 = scale * 15L / 100L // teleport numerator, as the Scala loop
-    val steps = (1 to iters).map { i =>
-      s"""p$i AS (SELECT nd.node, CAST(($tele15 // nn.n) + coalesce(s.m, 0) AS BIGINT) AS pr
-         |  FROM nodes nd CROSS JOIN nn LEFT JOIN (
-         |    SELECT e.dst AS node, CAST(sum(((p.pr * 85) // 100) // e.outdeg) AS BIGINT) AS m
-         |    FROM p${i - 1} p JOIN ed e ON e.src = p.node GROUP BY 1) s ON nd.node = s.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings WHERE embedding IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM emb a JOIN emb b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |edges AS (SELECT qid AS src, nid AS dst FROM r WHERE rn <= $k),
-       |outd AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM edges GROUP BY 1),
-       |ed AS (SELECT e.src, e.dst, o.outdeg FROM edges e JOIN outd o USING (src)),
-       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |p0 AS (SELECT node, CAST($scale // nn.n AS BIGINT) AS pr FROM nodes CROSS JOIN nn),
-       |$steps
-       |SELECT node AS vec_id, pr AS pagerank FROM p$iters ORDER BY vec_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.Graph.hits]] over the exact kNN edge
-    * list: `iters` unrolled auth/hub half-steps, each a keyed sum plus the
-    * integer L1 normalization `x // greatest(sum // scale, 1)` — all
-    * BIGINT, so both engines produce the SAME longs by construction.
-    */
-  private def hitsSql(iters: Int, k: Int, scale: Long): String = {
-    // MATERIALIZED throughout: edges/nodes are referenced 2× per
-    // iteration and DuckDB inlines plain CTEs — the r8 first cut re-ran
-    // the all-pairs cosine ~20× and died on fd exhaustion before it got
-    // slow enough to notice
-    val steps = (1 to iters).map { i =>
-      s"""ar$i AS MATERIALIZED (SELECT e.dst AS node, CAST(sum(h.hub) AS BIGINT) AS raw
-         |  FROM h${i - 1} h JOIN edges e ON e.src = h.node GROUP BY 1),
-         |aq$i AS (SELECT greatest(CAST(sum(raw) AS BIGINT) // $scale, 1) AS q FROM ar$i),
-         |a$i AS MATERIALIZED (SELECT n.node, CAST(coalesce(r.raw, 0) // s.q AS BIGINT) AS auth
-         |  FROM nodes n LEFT JOIN ar$i r ON n.node = r.node CROSS JOIN aq$i s),
-         |hr$i AS MATERIALIZED (SELECT e.src AS node, CAST(sum(a.auth) AS BIGINT) AS raw
-         |  FROM a$i a JOIN edges e ON e.dst = a.node GROUP BY 1),
-         |hq$i AS (SELECT greatest(CAST(sum(raw) AS BIGINT) // $scale, 1) AS q FROM hr$i),
-         |h$i AS MATERIALIZED (SELECT n.node, CAST(coalesce(r.raw, 0) // s.q AS BIGINT) AS hub
-         |  FROM nodes n LEFT JOIN hr$i r ON n.node = r.node CROSS JOIN hq$i s)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings WHERE embedding IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM emb a JOIN emb b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |edges AS MATERIALIZED (SELECT qid AS src, nid AS dst FROM r WHERE rn <= $k),
-       |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |h0 AS (SELECT node, CAST($scale // nn.n AS BIGINT) AS hub FROM nodes CROSS JOIN nn),
-       |$steps
-       |SELECT a.node AS vec_id, a.auth, h.hub
-       |FROM a$iters a JOIN h$iters h ON a.node = h.node ORDER BY vec_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.Graph.harmonicCentrality]] over the
-    * symmetrized mutual-kNN backbone: `maxHops` unrolled BFS frontiers
-    * (per-seed visited sets via NOT EXISTS), each newly-reached `(s, v)`
-    * at hop `h` contributing the exact integer `scale // h`. MATERIALIZED
-    * like [[hitsSql]] — each frontier is referenced by the next hop AND
-    * the contribution sum.
-    */
-  private def harmonicSql(seedMod: Long, maxHops: Int, scale: Long, k: Int): String = {
-    val hops = (1 to maxHops).map { h =>
-      s"""f$h AS MATERIALIZED (SELECT DISTINCT f.s, e.b AS v
-         |  FROM f${h - 1} f JOIN e ON f.v = e.a
-         |  WHERE NOT EXISTS (SELECT 1 FROM vis${h - 1} x WHERE x.s = f.s AND x.v = e.b)),
-         |vis$h AS MATERIALIZED (SELECT s, v FROM vis${h - 1} UNION ALL SELECT s, v FROM f$h)""".stripMargin
-    }.mkString(",\n")
-    val contribs = (1 to maxHops).map(h =>
-      s"SELECT v, CAST(count(*) * ${scale / h} AS BIGINT) AS h FROM f$h GROUP BY v")
-      .mkString("\n  UNION ALL ")
-    s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings WHERE embedding IS NOT NULL),
-       |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, round(${cosineSql("a.ev", "b.ev")}, 6) AS sim
-       |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-       |g AS (SELECT qid, nid FROM r WHERE rn <= $k),
-       |m AS MATERIALIZED (SELECT g.qid AS d1, g.nid AS d2 FROM g
-       |     JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-       |e AS MATERIALIZED (SELECT d1 AS a, d2 AS b FROM m UNION ALL SELECT d2, d1 FROM m),
-       |nodes AS MATERIALIZED (SELECT DISTINCT a AS node FROM e),
-       |f0 AS MATERIALIZED (SELECT node AS s, node AS v FROM nodes WHERE node % $seedMod = 0),
-       |vis0 AS MATERIALIZED (SELECT s, v FROM f0),
-       |$hops,
-       |contrib AS ($contribs),
-       |hsum AS (SELECT v AS node, CAST(sum(h) AS BIGINT) AS harmonic FROM contrib GROUP BY 1)
-       |SELECT n.node AS vec_id, coalesce(hs.harmonic, CAST(0 AS BIGINT)) AS harmonic
-       |FROM nodes n LEFT JOIN hsum hs USING (node) ORDER BY vec_id""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.Similarity.kmeans]]: `iters` unrolled
-    * Lloyd rounds over the 1e-6-quantized integer coordinates — per round
-    * one k-way cross join scoring exact BIGINT squared distances (ties to
-    * the smaller centroid id) and one flooring `//` mean per (cid, dim) —
-    * plus the final assignment. Init is the `k` smallest-id vectors, so
-    * both engines start identically; empty clusters keep their previous
-    * centroid via the LEFT JOIN coalesce.
-    */
-  private def kmeansSql(k: Int, iters: Int): String = {
-    val rounds = (1 to iters + 1).map { i =>
-      val assign =
-        s"""s$i AS (SELECT q.vid, q.qv, c.cid,
-           |    CAST(list_sum(list_transform(generate_series(1, len(q.qv)),
-           |      j -> (q.qv[j] - c.cv[j]) * (q.qv[j] - c.cv[j]))) AS BIGINT) AS d
-           |  FROM q CROSS JOIN c${i - 1} c),
-           |a$i AS MATERIALIZED (SELECT vid, qv, cid, d FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d, cid) AS rn FROM s$i)
-           |  WHERE rn = 1)""".stripMargin
-      if (i <= iters)
-        assign + ",\n" +
-          s"""m$i AS (SELECT cid, j,
-             |    CAST(sum(x) AS BIGINT) // CAST(count(*) AS BIGINT) AS v
-             |  FROM (SELECT a.cid, generate_subscripts(a.qv, 1) AS j, unnest(a.qv) AS x
-             |        FROM a$i a) GROUP BY 1, 2),
-             |c$i AS MATERIALIZED (SELECT p.cid, coalesce(m.cv, p.cv) AS cv
-             |  FROM c${i - 1} p LEFT JOIN
-             |    (SELECT cid, list(v ORDER BY j) AS cv FROM m$i GROUP BY cid) m USING (cid))""".stripMargin
-      else assign
-    }.mkString(",\n")
-    s"""WITH q AS MATERIALIZED (SELECT vec_id AS vid,
-       |    list_transform(embedding::DOUBLE[], x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qv
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |c0 AS MATERIALIZED (SELECT CAST(row_number() OVER (ORDER BY vid) - 1 AS BIGINT) AS cid, qv AS cv
-       |  FROM (SELECT vid, qv FROM q ORDER BY vid LIMIT $k)),
-       |$rounds
-       |SELECT vid AS vec_id, cid AS cluster, d AS dist2
-       |FROM a${iters + 1} ORDER BY vec_id""".stripMargin
-  }
-
-
-  /** DuckDB mirror of [[operators.TimeSeries.changePoints]]: `depth`
-    * unrolled binary-segmentation levels over one (rank, prefix-sum)
-    * window frame — per level a segment-bound lookup, the integer CUSUM
-    * gain `|Sl·nr − Sr·nl|`, an argmax with (gain DESC, rn) ties, and the
-    * ≥ 2·minSeg halves carried to the next level. All BIGINT.
-    */
-  private def cpdSql(minSeg: Int, depth: Int, scale: Long): String = {
-    val levels = (0 until depth).map { l =>
-      val segDef =
-        if (l == 0)
-          s"""seg0 AS (SELECT k, CAST(1 AS BIGINT) AS a, CAST(count(*) AS BIGINT) AS b
-             |  FROM base GROUP BY 1)""".stripMargin
-        else
-          s"""seg$l AS (SELECT k, a, rn AS b FROM sp${l - 1} WHERE rn - a + 1 >= ${2 * minSeg}
-             |  UNION ALL SELECT k, rn + 1, b FROM sp${l - 1} WHERE b - rn >= ${2 * minSeg})""".stripMargin
-      segDef + ",\n" +
-        s"""w$l AS (SELECT s.k, s.a, s.b, coalesce(x.P, 0) AS Pa, y.P AS Pb
-           |  FROM seg$l s LEFT JOIN base x ON x.k = s.k AND x.rn = s.a - 1
-           |  JOIN base y ON y.k = s.k AND y.rn = s.b),
-           |c$l AS (SELECT w.k, w.a, w.b, b.rn, b.t,
-           |    abs((b.P - w.Pa) * (w.b - b.rn) - (w.Pb - b.P) * (b.rn - w.a + 1)) AS gain
-           |  FROM w$l w JOIN base b ON b.k = w.k
-           |    AND b.rn >= w.a + ${minSeg - 1} AND b.rn <= w.b - $minSeg),
-           |sp$l AS MATERIALIZED (SELECT k, a, b, rn, t, gain FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY k, a, b ORDER BY gain DESC, rn) AS r
-           |    FROM c$l) WHERE r = 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (0 until depth).map(l =>
-      s"SELECT k AS key, CAST($l AS BIGINT) AS level, rn AS split_rn, t AS split_ts, CAST(gain AS BIGINT) AS gain FROM sp$l")
-      .mkString("\n  UNION ALL ")
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT k, t, q,
-       |    CAST(row_number() OVER (PARTITION BY k ORDER BY t, q) AS BIGINT) AS rn,
-       |    CAST(sum(q) OVER (PARTITION BY k ORDER BY t, q ROWS UNBOUNDED PRECEDING) AS BIGINT) AS P
-       |  FROM (SELECT event_type AS k, epoch_us(ts) AS t,
-       |          CAST(round(CAST(value AS DOUBLE) * ${scale}.0) AS BIGINT) AS q
-       |        FROM events
-       |        WHERE event_type IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL)),
-       |$levels,
-       |u AS ($out)
-       |SELECT key, level, split_rn, split_ts, gain FROM u
-       |ORDER BY key, level, split_rn""".stripMargin
-  }
-
-
-  /** DuckDB mirror of [[operators.DataQuality.functionalDependencies]]
-    * over the customer⋈nation⋈region profile frame: one per-pair minimal-
-    * repair aggregate per ordered attribute pair, unioned. */
-  private def fdSql(cols: Seq[String]): String = {
-    val pairs = (for (a <- cols; b <- cols if a != b) yield
-      s"""SELECT '$a' AS determinant, '$b' AS dependent,
-         |  CAST(sum(nv) AS BIGINT) AS n_rows,
-         |  CAST(sum(nv) - sum(mx) AS BIGINT) AS violations,
-         |  (sum(nv) = sum(mx)) AS holds
-         |FROM (SELECT dv, sum(cnt) AS nv, max(cnt) AS mx FROM
-         |  (SELECT $a AS dv, $b AS bv, count(*) AS cnt FROM j
-         |   WHERE $a IS NOT NULL AND $b IS NOT NULL GROUP BY 1, 2)
-         |  GROUP BY 1)""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    s"""WITH j AS MATERIALIZED (SELECT
-       |    c.c_mktsegment::VARCHAR AS c_mktsegment,
-       |    c.c_nationkey::VARCHAR AS c_nationkey,
-       |    n.n_name::VARCHAR AS n_name,
-       |    n.n_regionkey::VARCHAR AS n_regionkey,
-       |    r.r_name::VARCHAR AS r_name
-       |  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-       |  JOIN region r ON n.n_regionkey = r.r_regionkey)
-       |SELECT * FROM ($pairs)
-       |ORDER BY determinant, dependent""".stripMargin
-  }
-
-
-  /** DuckDB mirror of [[operators.DataQuality.inclusionDependencies]]:
-    * one MATERIALIZED distinct-value set per labeled column, then a
-    * subset/overlap aggregate per ordered pair. */
-  private def indSql(cols: Seq[(String, String, String)]): String = {
-    val sets = cols.map { case (label, table, c) =>
-      s"""d_$label AS MATERIALIZED (SELECT DISTINCT $c::VARCHAR AS v
-         |  FROM $table WHERE $c IS NOT NULL)""".stripMargin
-    }.mkString(",\n")
-    val pairs = (for ((a, _, _) <- cols; (b, _, _) <- cols if a != b) yield
-      s"""SELECT '$a' AS from_col, '$b' AS to_col,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d_$a) AS n_distinct,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d_$a WHERE v IN (SELECT v FROM d_$b)) AS matched,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d_$a WHERE v NOT IN (SELECT v FROM d_$b)) AS violations,
-         |  (SELECT count(*) FROM d_$a WHERE v NOT IN (SELECT v FROM d_$b)) = 0 AS holds""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    s"""WITH $sets
-       |SELECT * FROM ($pairs)
-       |ORDER BY from_col, to_col""".stripMargin
-  }
-
-
-  /** DuckDB mirror of [[operators.TextAnalysis.textRank]]: the q_chunk_docs
-    * slice math builds distinct-token chunk sets, a doc-local inequality
-    * join weights edges by intersect size, and `iters` rounds of the
-    * weighted integer PageRank recurrence are UNROLLED (the pageRankSql
-    * convention) — all BIGINT, `//` truncation == Spark's DIV. */
-  private def textRankSql(chunkTokens: Int, overlap: Int, iters: Int,
-      topK: Int, scale: Long): String = {
-    val step = chunkTokens - overlap
-    val rounds = (1 to iters).map { i =>
-      val prev = if (i == 1) "p0" else s"p${i - 1}"
-      s"""c$i AS (SELECT e.doc_id, e.v AS cid,
-         |    CAST(sum(((a.pr * 85) // 100) * e.w // ow.W) AS BIGINT) AS m
-         |  FROM e JOIN $prev a ON e.doc_id = a.doc_id AND e.u = a.cid
-         |         JOIN ow ON ow.doc_id = e.doc_id AND ow.u = e.u
-         |  GROUP BY 1, 2),
-         |p$i AS (SELECT p.doc_id, p.cid, p.tp,
-         |    p.tp + coalesce(c$i.m, CAST(0 AS BIGINT)) AS pr
-         |  FROM $prev p LEFT JOIN c$i ON p.doc_id = c$i.doc_id AND p.cid = c$i.cid)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents WHERE text IS NOT NULL),
-       |c AS (SELECT doc_id, toks,
-       |    ((greatest(len(toks) - $chunkTokens, 0) + ${step - 1}) // $step) + 1 AS nc FROM t),
-       |ch AS (SELECT doc_id, toks, unnest(generate_series(0, nc - 1)) AS cid FROM c),
-       |cs AS (SELECT doc_id, CAST(cid AS BIGINT) AS cid,
-       |    list_distinct(toks[cid * $step + 1 : cid * $step + $chunkTokens]) AS ts FROM ch),
-       |e0 AS (SELECT a.doc_id, a.cid AS u, b.cid AS v,
-       |    CAST(len(list_intersect(a.ts, b.ts)) AS BIGINT) AS w
-       |  FROM cs a JOIN cs b ON a.doc_id = b.doc_id AND a.cid < b.cid
-       |  WHERE len(list_intersect(a.ts, b.ts)) > 0),
-       |e AS (SELECT doc_id, u, v, w FROM e0
-       |  UNION ALL SELECT doc_id, v, u, w FROM e0),
-       |ow AS (SELECT doc_id, u, CAST(sum(w) AS BIGINT) AS W FROM e GROUP BY 1, 2),
-       |nd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM cs GROUP BY 1),
-       |p0 AS (SELECT cs.doc_id, cs.cid,
-       |    CAST($scale AS BIGINT) // n AS pr,
-       |    (CAST($scale AS BIGINT) * 15 // 100) // n AS tp
-       |  FROM cs JOIN nd ON cs.doc_id = nd.doc_id),
-       |$rounds
-       |SELECT doc_id, cid AS chunk_id, CAST(rank AS BIGINT) AS rank,
-       |  CAST(pr AS BIGINT) AS score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-       |    ORDER BY pr DESC, cid) AS rank FROM p$iters)
-       |WHERE rank <= $topK ORDER BY doc_id, rank""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.DataQuality.orderDependencies]] over the
-    * events time-profile frame: the same melt → distinct-(pair, a, b)
-    * counts → running max over strictly smaller lhs (ROWS ... 1 PRECEDING
-    * over one row per distinct value) → row-weighted violation sum. */
-  private def odSql(cols: Seq[String]): String = {
-    val melt = (for (a <- cols; b <- cols if a != b) yield
-      s"""SELECT '$a' AS lhs, '$b' AS rhs, $a::DOUBLE AS a, $b::DOUBLE AS b
-         |  FROM t WHERE $a IS NOT NULL AND $b IS NOT NULL""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    s"""WITH t AS (SELECT epoch_us(ts) // 3600000000 AS hour_b,
-       |    epoch_us(ts) // 86400000000 AS day_b, value
-       |  FROM events),
-       |m AS ($melt),
-       |c AS (SELECT lhs, rhs, a, b, CAST(count(*) AS BIGINT) AS n
-       |  FROM m GROUP BY 1, 2, 3, 4),
-       |g AS (SELECT lhs, rhs, a, max(b) AS mxb FROM c GROUP BY 1, 2, 3),
-       |w AS (SELECT lhs, rhs, a, max(mxb) OVER (PARTITION BY lhs, rhs
-       |    ORDER BY a ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS M
-       |  FROM g)
-       |SELECT c.lhs, c.rhs, CAST(sum(n) AS BIGINT) AS n_rows,
-       |  CAST(sum(CASE WHEN w.M IS NOT NULL AND c.b < w.M THEN n ELSE 0 END) AS BIGINT) AS violations,
-       |  sum(CASE WHEN w.M IS NOT NULL AND c.b < w.M THEN n ELSE 0 END) = 0 AS holds
-       |FROM c JOIN w USING (lhs, rhs, a)
-       |GROUP BY 1, 2 ORDER BY lhs, rhs""".stripMargin
-  }
-
-  /** DuckDB mirror of [[operators.DataQuality.uniqueCombinations]] over
-    * the orders profile columns: per combination one pass counting rows
-    * (members non-null) and distinct member tuples. */
-  private def uccSql(table: String, cols: Seq[String]): String = {
-    val combos: Seq[Seq[String]] =
-      cols.map(Seq(_)) ++
-        (for (i <- cols.indices; j <- i + 1 until cols.size)
-          yield Seq(cols(i), cols(j)))
-    val parts = combos.map { m =>
-      val nn = m.map(c => s"$c IS NOT NULL").mkString(" AND ")
-      val tup = if (m.size == 1) m.head else s"(${m.mkString(", ")})"
-      s"""SELECT '${m.mkString("|")}' AS columns, CAST(${m.size} AS BIGINT) AS size,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT $tup) AS BIGINT) AS n_distinct,
-         |  CAST(count(*) - count(DISTINCT $tup) AS BIGINT) AS duplicates,
-         |  count(*) = count(DISTINCT $tup) AS is_key
-         |FROM $table WHERE $nn""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""SELECT * FROM ($parts)
-       |ORDER BY size, columns""".stripMargin
-  }
-
-  /** Shared CTE chain for the pattern-mining oracles, ending in
-    * `nb(n, m)` (basket count + ceil-ppm threshold), `l1(i, support)` and
-    * `l2(i1, i2, support)` — the level-wise Apriori pipeline of
-    * [[operators.Patterns.frequentItemsets]] over order×brand baskets. */
-  private def itemsetCtes(minSupPpm: Long): String =
-    s"""tx AS MATERIALIZED (SELECT DISTINCT l.l_orderkey AS b, p.p_brand AS i
-       |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-       |  WHERE l.l_orderkey IS NOT NULL AND p.p_brand IS NOT NULL),
-       |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n,
-       |  CAST(greatest((count(DISTINCT b) * $minSupPpm + 999999) // 1000000, 1) AS BIGINT) AS m
-       |  FROM tx),
-       |l1 AS MATERIALIZED (SELECT i, CAST(count(*) AS BIGINT) AS support
-       |  FROM tx GROUP BY 1 HAVING count(*) >= (SELECT m FROM nb)),
-       |tx1 AS MATERIALIZED (SELECT tx.b, tx.i FROM tx JOIN l1 USING (i)),
-       |l2 AS MATERIALIZED (SELECT a.i AS i1, c.i AS i2, CAST(count(*) AS BIGINT) AS support
-       |  FROM tx1 a JOIN tx1 c ON a.b = c.b AND a.i < c.i GROUP BY 1, 2
-       |  HAVING count(*) >= (SELECT m FROM nb))""".stripMargin
-
-  private def itemsetsSql(minSupPpm: Long): String =
-    s"""WITH ${itemsetCtes(minSupPpm)},
-       |p2 AS (SELECT a.b, a.i AS i1, c.i AS i2 FROM tx1 a
-       |  JOIN tx1 c ON a.b = c.b AND a.i < c.i
-       |  JOIN l2 ON l2.i1 = a.i AND l2.i2 = c.i),
-       |l3 AS (SELECT p2.i1, p2.i2, t.i AS i3, CAST(count(*) AS BIGINT) AS support
-       |  FROM p2 JOIN tx1 t ON t.b = p2.b AND t.i > p2.i2
-       |  JOIN l2 x ON x.i1 = p2.i2 AND x.i2 = t.i
-       |  JOIN l2 y ON y.i1 = p2.i1 AND y.i2 = t.i
-       |  GROUP BY 1, 2, 3 HAVING count(*) >= (SELECT m FROM nb)),
-       |u AS (SELECT '' AS items, CAST(0 AS BIGINT) AS size, (SELECT n FROM nb) AS support
-       |  UNION ALL SELECT i, CAST(1 AS BIGINT), support FROM l1
-       |  UNION ALL SELECT i1 || '|' || i2, CAST(2 AS BIGINT), support FROM l2
-       |  UNION ALL SELECT i1 || '|' || i2 || '|' || i3, CAST(3 AS BIGINT), support FROM l3)
-       |SELECT items, size, support,
-       |  CAST(support * 1000000 // (SELECT n FROM nb) AS BIGINT) AS support_ppm
-       |FROM u ORDER BY size, items""".stripMargin
-
-  private def assocRulesSql(minSupPpm: Long): String =
-    s"""WITH ${itemsetCtes(minSupPpm)},
-       |b2 AS (SELECT i1 AS a, i2 AS c, support FROM l2
-       |  UNION ALL SELECT i2, i1, support FROM l2)
-       |SELECT b2.a AS antecedent, b2.c AS consequent, b2.support AS support,
-       |  CAST(b2.support * 1000000 // la.support AS BIGINT) AS confidence_ppm,
-       |  CAST(b2.support * (SELECT n FROM nb) * 1000000 // (la.support * lc.support) AS BIGINT) AS lift_ppm
-       |FROM b2 JOIN l1 la ON la.i = b2.a JOIN l1 lc ON lc.i = b2.c
-       |ORDER BY antecedent, consequent""".stripMargin
-
-  /** T2 limbo downsampler as a pure DuckDB fold: per PV, `list_reduce` over
-    * the time-ordered events with the WHOLE state in one VARCHAR
-    * `lt|lv|bt|bv|em` (last-emit ts/value, limbo ts/value or 'N', ';'-joined
-    * emitted timestamps). A single string is used deliberately: DuckDB
-    * 1.0's list_reduce mis-threads multi-field struct accumulators across
-    * iterations (cross-field aliasing), while scalar accumulators fold
-    * correctly. Emitted samples are recovered by joining the emitted
-    * timestamps back to the events (ts is unique per PV in the testdata),
-    * and values compare as doubles — DuckDB's double↔varchar casts are
-    * shortest-round-trip, so state stays exact. Mirrors
-    * [[graft.streaming.Downsampler.onEvent]] (archiver.py:389-414 limbo
-    * semantics) branch for branch.
-    */
-  private def downsampleStatefulSql(deadtimeUs: Long, deadband: Double): String = {
-    val gap = 1000L // MinGapUs (archiver.py:398)
-    val A = "string_split(a,'|')"
-    val X = "string_split(x,'|')"
-    val lt0 = s"CAST($A[1] AS BIGINT)"
-    val xt = s"CAST($X[1] AS BIGINT)"
-    val xv = s"CAST($X[2] AS DOUBLE)"
-    val flush = s"($A[3] <> 'N' AND $xt > $lt0 + $deadtimeUs)"
-    val lt1 = s"(CASE WHEN $flush THEN TRY_CAST($A[3] AS BIGINT) ELSE $lt0 END)"
-    val lv1 = s"(CASE WHEN $flush THEN TRY_CAST($A[4] AS DOUBLE) ELSE CAST($A[2] AS DOUBLE) END)"
-    val emitE = s"($xt > $lt1 + $deadtimeUs AND abs($xv - $lv1) > $deadband)"
-    s"""WITH e AS (
-       |  SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname, epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v
-       |  FROM events),
-       |g AS (
-       |  SELECT pvname, list(CAST(ts_us AS VARCHAR) || '|' || CAST(v AS VARCHAR) || '|N|N|' || CAST(ts_us AS VARCHAR)
-       |                      ORDER BY ts_us) AS evs
-       |  FROM e GROUP BY pvname),
-       |r AS (
-       |  SELECT pvname, list_reduce(evs, (a, x) ->
-       |       (CASE WHEN $emitE THEN $X[1] WHEN $flush THEN $A[3] ELSE $A[1] END)
-       |    || '|' || (CASE WHEN $emitE THEN $X[2] WHEN $flush THEN $A[4] ELSE $A[2] END)
-       |    || '|' || (CASE WHEN $xt > $lt1 + $deadtimeUs THEN 'N'
-       |                    WHEN $xt > $lt1 + $gap THEN $X[1]
-       |                    ELSE (CASE WHEN $flush THEN 'N' ELSE $A[3] END) END)
-       |    || '|' || (CASE WHEN $xt > $lt1 + $deadtimeUs THEN 'N'
-       |                    WHEN $xt > $lt1 + $gap THEN $X[2]
-       |                    ELSE (CASE WHEN $flush THEN 'N' ELSE $A[4] END) END)
-       |    || '|' || ($A[5] || (CASE WHEN $flush THEN ';' || $A[3] ELSE '' END)
-       |                     || (CASE WHEN $emitE THEN ';' || $X[1] ELSE '' END))
-       |  ) AS st
-       |  FROM g),
-       |fin AS (
-       |  SELECT pvname,
-       |         string_split(st,'|')[5]
-       |         || (CASE WHEN string_split(st,'|')[3] <> 'N' THEN ';' || string_split(st,'|')[3] ELSE '' END) AS em
-       |  FROM r),
-       |u AS (SELECT pvname, CAST(unnest(string_split(em, ';')) AS BIGINT) AS ts_us FROM fin)
-       |SELECT u.pvname AS pvname, u.ts_us AS ts_us, e.v AS value
-       |FROM u JOIN e ON u.pvname = e.pvname AND u.ts_us = e.ts_us
-       |ORDER BY u.pvname, u.ts_us""".stripMargin
-  }
-
-  /** Zipfian fixture for the PPJoin plan (q_jaccard_ppjoin), derived from
-    * doc_id so both engines compute the identical corpus. The documents
-    * table's own text is PPJoin's documented ANTI-regime (dense small
-    * vocabulary — every shingle frequent, prefixes prune nothing, the
-    * blocked sweep is the oracled plan there); this fixture is the regime
-    * the operator exists for: docs 2k/2k+1 share five rare group bigrams
-    * (near-dup pairs, Jaccard 0.555556 or 0.6 by tail), each doc carries
-    * df=1 marker bigrams through its unique `z<id>` token (always inside
-    * the ascending-df prefix), and the `hot wall [big]` tail bigrams have
-    * df=n_docs/2 (the Zipf head — always OUTSIDE the prefix, so the hot
-    * join the naive oracle pays never happens in the engine plan).
-    * `div`/`str`: integer-division keyword and string type name ("DIV"/
-    * "STRING" on Spark, "//"/"VARCHAR" on DuckDB).
-    */
-  private[graft] def zipfFixtureSql(div: String, str: String): String =
-    s"'a' || CAST((doc_id $div 2) % 101 AS $str) || ' b' || CAST((doc_id $div 2) % 89 AS $str)" +
-      s" || ' c' || CAST((doc_id $div 2) % 97 AS $str) || ' d' || CAST((doc_id $div 2) % 83 AS $str)" +
-      s" || ' e' || CAST((doc_id $div 2) % 79 AS $str) || ' z' || CAST(doc_id AS $str)" +
-      s" || CASE WHEN (doc_id $div 2) % 2 = 0 THEN ' hot wall' ELSE ' hot wall big' END"
-
-  /** F6/F7 lenient-parse inputs for q_time_parse: relative forms (unit
-    * substring + leading-number scan), the unrecognized→1-week default,
-    * absolute lenient dates (right-filled partial dates, left-filled
-    * times, '_' separators, '/' dates, fractional seconds). "today"/"now"
-    * anchor is TMID (2024-01-15T00:00:00Z).
-    */
-  private[graft] val timeParseInputs: Seq[(Long, String, String)] = Seq(
-    (1L, "3 days", "now"),
-    (2L, "1.5 hours", "now"),
-    (3L, "1week", ""),
-    (4L, "sometime", "now"),
-    (5L, "2024-01-10", "2024-01-15 12:00:00"),
-    (6L, "1-10", "15 6:30"),
-    (7L, "12:45", "2024/01/12 23:59:59.5"),
-    (8L, "2 weeks ago", "now"),
-    (9L, "", "now"),
-    (10L, "2024-01-10_06:00:00", "2024-01-14_06:00:00"))
-
-  /** Named PV sets for q_instrument_snapshot (WebInstruments.py catalog):
-    * event_type plays the PV; "click" is a member of TWO sets to exercise
-    * the membership fan-out.
-    */
-  private[graft] val instrumentSets: Seq[(String, String)] = Seq(
-    ("webstats", "click"), ("webstats", "view"),
-    ("commerce", "purchase"), ("commerce", "signup"),
-    ("ops", "error"), ("ops", "click"))
-
-  /** T4 demo alert set over events users 0–7: every compare op, numeric and
-    * string trippoints (string compare on '2!' depends only on the value's
-    * first digit, so it is immune to float-formatting differences), a
-    * never-tripping alert, an inactive alert, and an unconfigured observer
-    * (user 7) — cache.py:601-630 semantics. Timeouts straddle the ~10 h
-    * median inter-observation gap so the debounce both fires and suppresses.
-    */
-  private final val HOUR_US = 3600000000L
-  private[graft] def alertConfigs: Seq[graft.streaming.Alerts.AlertConfig] = {
-    import graft.streaming.Alerts.AlertConfig
-    Seq(
-      AlertConfig(0, "u0", "hi", "gt", "150.0", 72 * HOUR_US, active = true),
-      AlertConfig(1, "u1", "lo", "le", "50.0", 48 * HOUR_US, active = true),
-      AlertConfig(2, "u2", "crit", "ge", "120.0", 0L, active = true),
-      AlertConfig(3, "u3", "rare", "lt", "10.0", 24 * HOUR_US, active = true),
-      AlertConfig(4, "u4", "strcmp", "lt", "2!", 2 * HOUR_US, active = true),
-      AlertConfig(5, "u5", "never", "eq", "nope", 3 * HOUR_US, active = true),
-      AlertConfig(6, "u6", "off", "gt", "100.0", HOUR_US, active = false))
-  }
-
-  /** T4 alert machine as a pure DuckDB fold (mirrors
-    * [[graft.streaming.Alerts.onObservation]], cache.py:601-630): per alert,
-    * `list_reduce` over the time-ordered observations with the whole
-    * (status, lastNotice, emits) state in ONE VARCHAR `status|ln|emits` —
-    * scalar accumulators fold correctly where DuckDB 1.0 mis-threads
-    * multi-field structs (see [[downsampleStatefulSql]]). The initial state
-    * is `list_prepend`ed so the fold needs no seed argument. The alarm bit
-    * depends only on (config, value), so it is computed as a plain column
-    * BEFORE the fold — generated per config from the same [[alertConfigs]]
-    * definition the Spark side uses (single source of truth), picking the
-    * numeric or string compare exactly like `Alerts.tripped`. Emitted
-    * events are recovered by splitting the `;`-joined `ts:status:notified`
-    * triples and joining ts back to the observations (ts is unique per
-    * user in the testdata).
-    */
-  private def alertsSql: String = {
-    val sqlOp = Map("eq" -> "=", "ne" -> "<>", "le" -> "<=", "lt" -> "<", "ge" -> ">=", "gt" -> ">")
-    val active = alertConfigs.filter(_.active)
-    val alarmWhens = active.map { c =>
-      val numeric = graft.streaming.Downsampler.parseDouble(c.trippoint).isDefined
-      val (lhs, rhs) =
-        if (numeric) ("v", c.trippoint) else ("CAST(v AS VARCHAR)", s"'${c.trippoint}'")
-      s"WHEN ${c.alertId} THEN ($lhs ${sqlOp(c.compare)} $rhs)"
-    }.mkString(" ")
-    val cfgValues = active.map(c => s"(${c.alertId}, '${c.pvname}', ${c.timeoutUs})").mkString(", ")
-    val A = "string_split(a,'|')"
-    val X = "string_split(x,'|')"
-    val xt = s"CAST($X[1] AS BIGINT)"
-    val al = s"($X[2] = '1')"
-    val to = s"CAST($X[3] AS BIGINT)"
-    val st0 = s"$A[1]"
-    val ln0 = s"CAST($A[2] AS BIGINT)"
-    val status = s"(CASE WHEN $al THEN 'alarm' ELSE 'ok' END)"
-    val notify = s"($st0 = 'ok' AND $al AND $xt > $ln0 + $to)"
-    val emit = s"($status <> $st0 OR $notify)"
-    val step =
-      s"$status || '|' || CAST(CASE WHEN $notify THEN $xt ELSE $ln0 END AS VARCHAR) || '|' || " +
-        s"($A[3] || CASE WHEN $emit THEN ';' || $X[1] || ':' || $status || ':' || " +
-        s"(CASE WHEN $notify THEN '1' ELSE '0' END) ELSE '' END)"
-    s"""WITH obs AS (
-       |  SELECT user_id AS alert_id, epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v
-       |  FROM events WHERE user_id < 8),
-       |cfg(alert_id, pvname, timeout_us) AS (VALUES $cfgValues),
-       |e AS (
-       |  SELECT o.alert_id AS alert_id, o.ts_us, o.v, cfg.pvname, cfg.timeout_us,
-       |         (CASE o.alert_id $alarmWhens END) AS alarm
-       |  FROM obs o JOIN cfg ON o.alert_id = cfg.alert_id),
-       |g AS (
-       |  SELECT alert_id, pvname,
-       |         list(CAST(ts_us AS VARCHAR) || '|' || (CASE WHEN alarm THEN '1' ELSE '0' END)
-       |              || '|' || CAST(timeout_us AS VARCHAR) ORDER BY ts_us) AS evs
-       |  FROM e GROUP BY alert_id, pvname),
-       |r AS (
-       |  SELECT alert_id, pvname,
-       |         list_reduce(list_prepend('ok|${Long.MinValue / 2}|', evs), (a, x) -> $step) AS st
-       |  FROM g),
-       |u AS (
-       |  SELECT alert_id, pvname, unnest(string_split(substr(string_split(st,'|')[3], 2), ';')) AS em
-       |  FROM r WHERE string_split(st,'|')[3] <> ''),
-       |f AS (
-       |  SELECT alert_id, pvname, CAST(string_split(em,':')[1] AS BIGINT) AS ts_us,
-       |         string_split(em,':')[2] AS status, string_split(em,':')[3] = '1' AS notified
-       |  FROM u)
-       |SELECT f.alert_id AS alert_id, f.pvname AS pvname, f.ts_us AS ts_us, o.v AS value,
-       |       f.status AS status, f.notified AS notified
-       |FROM f JOIN obs o ON f.alert_id = o.alert_id AND f.ts_us = o.ts_us
-       |ORDER BY alert_id, ts_us""".stripMargin
-  }
-
-  /** T3 heartbeat oracle: a heartbeat fires at `prev.ts + c_j` for every
-    * cumulative interval `c_j = Σ_{i≤j} forceIntervalUs(pv, i)` that lands
-    * before the next real sample (or the horizon after the last one) — the
-    * per-gap counter k resets on every real sample, so the gap fill is a
-    * plain join against the precomputed cumulative table (no recursion).
-    * The table is generated here with the SAME seeded PRNG the operator
-    * uses and embedded as VALUES.
-    */
-  private def heartbeatSql(horizonUs: Long, nPvs: Int, maxBeatsPerGap: Int): String = {
-    val values = (0 until nPvs).flatMap { u =>
-      val pv = s"u$u"
-      var acc = 0L
-      (0 until maxBeatsPerGap).map { k =>
-        acc += graft.streaming.Heartbeat.forceIntervalUs(pv, k)
-        s"('$pv', $acc)"
-      }
-    }.mkString(", ")
-    s"""WITH s AS (
-       |  SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname, epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v
-       |  FROM events WHERE user_id < $nPvs),
-       |g AS (
-       |  SELECT pvname, ts_us, v,
-       |         coalesce(lead(ts_us) OVER (PARTITION BY pvname ORDER BY ts_us), $horizonUs) AS until
-       |  FROM s),
-       |iv(pvname, c) AS (VALUES $values)
-       |SELECT g.pvname AS pvname, g.ts_us + iv.c AS ts_us, g.v AS value
-       |FROM g JOIN iv ON g.pvname = iv.pvname
-       |WHERE g.ts_us + iv.c < g.until
-       |ORDER BY g.pvname, ts_us""".stripMargin
-  }
-
-  /** Seeded random-hyperplane literals — the SAME PRNG stream as
-    * [[Similarity.randomHyperplaneBuckets]], rendered as DuckDB DOUBLE[]
-    * literals (shortest-repr doubles round-trip exactly through SQL
-    * parsing, so the planes are bit-identical on both engines).
-    */
-  private def hyperplaneLits(planes: Int, dim: Int, seed: Long = 7L): Seq[String] = {
-    val rng = new scala.util.Random(seed)
-    (0 until planes).map(_ => "[" + Array.fill(dim)(rng.nextGaussian()).mkString(", ") + "]")
-  }
-
-  /** LSH-bucketed KNN oracle: bucket = sign pattern against the literal
-    * hyperplanes, then same-bucket cosine top-k — mirrors
-    * [[Similarity.bucketedKnn]] exactly (the only cross-engine freedom is
-    * dot-product summation order, which can flip a bucket bit only when a
-    * dot lands within an ulp of zero — vanishing for gaussian planes).
-    */
-  /** The LSH bucket id of vector column `v` as a DuckDB expression (same
-    * seeded hyperplanes as [[Similarity.randomHyperplaneBuckets]]).
-    */
-  private def bucketExprSql(planes: Int, dim: Int): String = {
-    val lits = hyperplaneLits(planes, dim)
-    (0 until planes).map { p =>
-      s"(CASE WHEN list_dot_product(v, ${lits(p)}) >= 0 THEN ${1 << p} ELSE 0 END)"
-    }.mkString(" | ")
-  }
-
-  /** DuckDB mirror of [[Similarity.multiProbeKnn]]: the bucketed CTE with
-    * an OR-membership join over the query bucket and its single-bit flips.
-    */
-  private def knnMultiProbeSql(k: Int, planes: Int, dim: Int): String = {
-    val bucketExpr = bucketExprSql(planes, dim)
-    val membership = (s"c.bucket = q.bucket" +:
-      (0 until planes).map(p => s"c.bucket = xor(q.bucket, ${1 << p})")).mkString(" OR ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket FROM b),
-       |sc AS (SELECT query_id, neighbor_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-       |       FROM q JOIN c ON ($membership) AND query_id <> neighbor_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn FROM sc)
-       |SELECT query_id, neighbor_id, sim, rn AS rank FROM r WHERE rn <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  private def knnBucketedSql(k: Int, planes: Int, dim: Int): String = {
-    val bucketExpr = bucketExprSql(planes, dim)
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket FROM b),
-       |sc AS (SELECT query_id, neighbor_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-       |       FROM q JOIN c USING (bucket) WHERE query_id <> neighbor_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn FROM sc)
-       |SELECT query_id, neighbor_id, sim, rn AS rank FROM r WHERE rn <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Recall@k of the LSH-bucketed KNN against the exact brute-force
-    * ranking — both plans restated in full (same rounded-sim tie-break
-    * ranking as their standalone oracles) and joined per (query, neighbor).
-    */
-  private def knnRecallSql(k: Int, planes: Int, dim: Int): String = {
-    val bucketExpr = bucketExprSql(planes, dim)
-    val hit = "CASE WHEN ap.neighbor_id IS NOT NULL THEN 1 ELSE 0 END"
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |q0 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-       |sc AS (SELECT query_id, vec_id AS neighbor_id, round(${cosineSql("qv", "v")}, 6) AS sim
-       |       FROM q0, e WHERE query_id <> vec_id),
-       |ex AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-       |         FROM sc) WHERE rn <= $k),
-       |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e),
-       |qb AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 5),
-       |sb AS (SELECT query_id, b.vec_id AS neighbor_id, round(${cosineSql("qv", "b.v")}, 6) AS sim
-       |       FROM qb JOIN b USING (bucket) WHERE query_id <> b.vec_id),
-       |ap AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-       |         FROM sb) WHERE rn <= $k)
-       |SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(sum($hit) AS BIGINT) AS n_hit,
-       |  round(CAST(sum($hit) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS recall
-       |FROM ex LEFT JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id
-       |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin
-  }
-
-  /** DuckDB mirror of q_int8_recall: the int8 reconstruction CTE (same
-    * per-dim grid, clamped half-up codes, float-cast decode as
-    * [[Similarity.int8Reconstruct]]) feeding the same brute top-k shape as
-    * [[knnRecallSql]], recall of the compressed run against full float.
-    */
-  private def int8RecallSql(k: Int, dim: Int, nQueries: Int): String = {
-    val hit = "CASE WHEN ap.neighbor_id IS NOT NULL THEN 1 ELSE 0 END"
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |           WHERE embedding IS NOT NULL),
-       |x AS (SELECT vec_id, u.i AS pos, CAST(embedding[u.i] AS DOUBLE) AS v
-       |      FROM embeddings, unnest(generate_series(1, $dim)) AS u(i)
-       |      WHERE embedding IS NOT NULL),
-       |st AS (SELECT pos, min(v) AS mn, max(v) AS mx FROM x GROUP BY 1),
-       |rc AS (SELECT vec_id, pos,
-       |         CAST(CASE WHEN mx > mn
-       |           THEN mn + least(greatest(round((v - mn) / ((mx - mn) / 255.0), 0), 0.0), 255.0)
-       |                * ((mx - mn) / 255.0)
-       |           ELSE mn END AS REAL) AS r
-       |       FROM x JOIN st USING (pos)),
-       |rv AS (SELECT vec_id, CAST(list(r ORDER BY pos) AS DOUBLE[]) AS rvec
-       |       FROM rc GROUP BY 1),
-       |q0 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-       |sc AS (SELECT query_id, vec_id AS neighbor_id, round(${cosineSql("qv", "v")}, 6) AS sim
-       |       FROM q0, e WHERE query_id <> vec_id),
-       |ex AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-       |         FROM sc) WHERE rn <= $k),
-       |qr AS (SELECT vec_id AS query_id, rvec AS qv FROM rv WHERE vec_id < $nQueries),
-       |sr AS (SELECT query_id, rv.vec_id AS neighbor_id, round(${cosineSql("qv", "rvec")}, 6) AS sim
-       |       FROM qr, rv WHERE query_id <> rv.vec_id),
-       |ap AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-       |         FROM sr) WHERE rn <= $k)
-       |SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(sum($hit) AS BIGINT) AS n_hit,
-       |  round(CAST(sum($hit) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS recall
-       |FROM ex LEFT JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id
-       |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin
-  }
-
-  /** IVF KNN oracle around Verify-time centroids: the coarse quantizer is
-    * trained by the SAME seeded Scala k-means the operator uses
-    * ([[Similarity.trainIvfCentroids]]) and embedded as literals; the SQL
-    * then mirrors assignment (first-nearest cell), probing (nprobe nearest
-    * cells by (distance, cell)), and same-cell cosine top-k.
-    */
-  private def ivfSql(cents: Array[Array[Double]], k: Int, nprobe: Int): String = {
-    val lits = cents.map(c => "[" + c.mkString(", ") + "]")
-    val n = lits.length
-    val dists = (0 until n).map(i => s"list_distance(v, ${lits(i)}) AS d$i").mkString(", ")
-    val m = s"least(${(0 until n).map("d" + _).mkString(", ")})"
-    val cellCase = "CASE " + (0 until n).map(i => s"WHEN d$i = $m THEN $i").mkString(" ") + " END"
-    val probeStructs = (0 until n).map(i => s"{'cell': $i, 'd': d$i}").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |dd AS (SELECT vec_id, v, $dists FROM e),
-       |cb AS (SELECT vec_id AS neighbor_id, v AS cv, $cellCase AS cell FROM dd),
-       |qq AS (SELECT vec_id, v, unnest([$probeStructs]) AS u FROM dd WHERE vec_id < 5),
-       |qp AS (SELECT vec_id AS query_id, v AS qv, u.cell AS cell,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY u.d, u.cell) AS pr FROM qq),
-       |q AS (SELECT query_id, qv, cell FROM qp WHERE pr <= $nprobe),
-       |sc AS (SELECT query_id, neighbor_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-       |       FROM q JOIN cb USING (cell) WHERE query_id <> neighbor_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn FROM sc)
-       |SELECT query_id, neighbor_id, sim, rn AS rank FROM r WHERE rn <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Oracles whose SQL embeds values derived from the DATA (not just from
-    * seeds): generated by Verify at dump time with the engine's own
-    * deterministic training code, then checked by DuckDB like any other
-    * entry. Currently: the IVF coarse quantizer's centroids.
-    */
-  def dataDependentOracles(spark: SparkSession, dir: String): Map[String, String] = Map(
-    "q_bpe_encode" -> {
-      val merges = TextAnalysis.bpeLearn(Tables.documents(spark, dir), "text", nMerges = 20)
-      bpeEncodeSql(merges)
-    },
-
-    // q_run_import: DuckDB independently parses the synthesized run dump
-    // (path embeds the sfDir SHA, so the oracle is data-dependent). The
-    // micros quantization mirrors loadRunDump's math.round EXACTLY:
-    // floor(x * 1e6 + 0.5) over the identical IEEE double both engines
-    // parse from the identical decimal text.
-    "q_run_import" -> {
-      val root = runDumpRoot(spark, dir)
-      s"""WITH pv AS (
-         |  SELECT CAST(regexp_extract(line, 'VALUES \\((\\d+)', 1) AS BIGINT) AS pv_id,
-         |         regexp_extract(line, 'VALUES \\(\\d+,''([^'']*)''', 1) AS pvname
-         |  FROM read_csv('$root/pv/*', delim='\t', header=false, quote='',
-         |                columns={'line': 'VARCHAR'})),
-         |dat AS (
-         |  SELECT CAST(floor(CAST(regexp_extract(c0, 'VALUES \\((.*)', 1) AS DOUBLE)
-         |           * 1000000.0 + 0.5) AS BIGINT) AS ts_us,
-         |         CAST(c1 AS BIGINT) AS pv_id,
-         |         rtrim(c2, ');') AS value
-         |  FROM read_csv('$root/dat/part-*', delim=',', header=false, quote='',
-         |                columns={'c0': 'VARCHAR', 'c1': 'VARCHAR', 'c2': 'VARCHAR'}))
-         |SELECT pv.pvname, dat.ts_us AS "tsUs", dat.value
-         |FROM dat JOIN pv USING (pv_id)
-         |ORDER BY pvname, "tsUs", value""".stripMargin
-    },
-    "q_transition_latency" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_id AS tb,
-        |    event_type AS et
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT u, t, et,
-        |        lag(t) OVER (PARTITION BY u ORDER BY t, tb) AS pt,
-        |        lag(et) OVER (PARTITION BY u ORDER BY t, tb) AS pe
-        |      FROM e),
-        |g AS (SELECT pe AS from_type, et AS to_type,
-        |        CAST(t - pt AS DOUBLE) AS gap
-        |      FROM l WHERE pe IS NOT NULL)
-        |SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n,
-        |  round(quantile_cont(gap, CAST(0.5 AS DOUBLE)) / 1000000.0, 3) AS p50_s,
-        |  round(quantile_cont(gap, CAST(0.9 AS DOUBLE)) / 1000000.0, 3) AS p90_s,
-        |  CAST(max(gap) AS BIGINT) AS max_us
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_simpson" ->
-      """WITH b AS (SELECT event_type AS g,
-        |    CAST((epoch_us(ts) // 3600000000) % 24 AS DOUBLE) AS x,
-        |    CAST(value AS DOUBLE) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |    AND value IS NOT NULL),
-        |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n, sum(x) AS sx,
-        |          sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy
-        |        FROM b GROUP BY 1),
-        |pl AS (SELECT CAST(sum(n) AS BIGINT) AS pn, sum(sx) AS psx,
-        |         sum(sy) AS psy, sum(sxx) AS psxx, sum(sxy) AS psxy
-        |       FROM per),
-        |j AS (SELECT g, n,
-        |        CASE WHEN n * sxx - sx * sx > 0.0
-        |             THEN round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-        |        END AS slope,
-        |        CASE WHEN pn * psxx - psx * psx > 0.0
-        |             THEN round((pn * psxy - psx * psy) / (pn * psxx - psx * psx), 6)
-        |        END AS pooled_slope
-        |      FROM per, pl)
-        |SELECT g AS event_type, n, slope, pooled_slope,
-        |  CASE WHEN slope IS NOT NULL AND pooled_slope IS NOT NULL
-        |       THEN sign(slope) <> sign(pooled_slope)
-        |            AND slope <> 0.0 AND pooled_slope <> 0.0
-        |       ELSE false END AS sign_flip
-        |FROM j ORDER BY event_type""".stripMargin,
-
-    "q_churn_labels" ->
-      s"""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t FROM events
-         |           WHERE user_id IS NOT NULL AND ts IS NOT NULL
-         |             AND epoch_us(ts) < ${TMID + 7L * 86400000000L}),
-         |g AS (SELECT u AS user_id,
-         |        CAST(sum(CASE WHEN t >= ${TMID - 7L * 86400000000L} AND t < $TMID
-         |                      THEN 1 ELSE 0 END) AS BIGINT) AS n_7d,
-         |        CAST(sum(CASE WHEN t >= ${TMID - 86400000000L} AND t < $TMID
-         |                      THEN 1 ELSE 0 END) AS BIGINT) AS n_1d,
-         |        max(CASE WHEN t < $TMID THEN t END) AS last_t,
-         |        CAST(max(CASE WHEN t >= $TMID THEN 1 ELSE 0 END) AS BIGINT) AS label
-         |      FROM e GROUP BY 1)
-         |SELECT user_id, n_7d, n_1d, $TMID - last_t AS recency_us, label
-         |FROM g WHERE n_7d > 0 ORDER BY user_id""".stripMargin,
-
-    "q_ab_test" ->
-      """WITH b AS (SELECT user_id AS u,
-        |    CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS v,
-        |    CASE WHEN event_type = 'purchase' AND value >= 300.0
-        |         THEN 'bigbuy' ELSE event_type END AS e
-        |  FROM events WHERE user_id IS NOT NULL),
-        |us AS (SELECT DISTINCT u, v FROM b),
-        |cv AS (SELECT DISTINCT u, v FROM b WHERE e = 'bigbuy'),
-        |per AS (SELECT us.v, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(sum(CASE WHEN cv.u IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |        FROM us LEFT JOIN cv ON us.u = cv.u AND us.v = cv.v
-        |        GROUP BY 1),
-        |j AS (SELECT a.v AS variant_a, b2.v AS variant_b, a.n AS users_a,
-        |        a.k AS conv_a, b2.n AS users_b, b2.k AS conv_b,
-        |        ((a.k + b2.k) / (a.n + b2.n)) *
-        |          (1.0 - (a.k + b2.k) / (a.n + b2.n)) *
-        |          (1.0 / a.n + 1.0 / b2.n) AS vt,
-        |        a.k / a.n - b2.k / b2.n AS pd
-        |      FROM per a JOIN per b2 ON a.v < b2.v)
-        |SELECT variant_a, variant_b, users_a, conv_a, users_b, conv_b,
-        |  CASE WHEN vt > 0.0 THEN round(pd / sqrt(vt), 6) END AS z
-        |FROM j ORDER BY variant_a, variant_b""".stripMargin,
-
-    "q_purged_split" -> {
-      val lo = TMID - 86400000000L
-      s"""SELECT CASE WHEN epoch_us(ts) < $lo THEN 'train'
-         |            WHEN epoch_us(ts) >= $TMID THEN 'test'
-         |            ELSE 'embargo' END AS split,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  min(epoch_us(ts)) AS t_min_us, max(epoch_us(ts)) AS t_max_us
-         |FROM events WHERE ts IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_cluster_medoids" -> {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      val dim = cents.head.length
-      val cf = cents.flatten.map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
-      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings
-         |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-         |    AND len(embedding) = $dim),
-         |m AS (SELECT $cf AS cf),
-         |d AS (SELECT vec_id,
-         |        list_transform(generate_series(0, ${cents.length - 1}), j ->
-         |          sqrt(list_reduce(list_concat([0.0::DOUBLE],
-         |            list_transform(generate_series(1, $dim), i ->
-         |              (CAST(v[i] AS DOUBLE) - cf[j * $dim + i]) *
-         |              (CAST(v[i] AS DOUBLE) - cf[j * $dim + i]))),
-         |            (acc, x) -> acc + x))) AS ds
-         |      FROM e, m),
-         |ab AS (SELECT vec_id, ds, list_sort(ds)[1] AS a FROM d),
-         |sc AS (SELECT CAST(list_position(ds, a) - 1 AS BIGINT) AS cell,
-         |         round(a, 6) AS dd, vec_id
-         |       FROM ab),
-         |mn AS (SELECT cell, min(struct_pack(d := dd, i := vec_id)) AS m
-         |       FROM sc GROUP BY 1)
-         |SELECT cell, m.i AS vec_id, m.d AS dist
-         |FROM mn ORDER BY cell""".stripMargin
-    },
-    "q_silhouette" -> {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      val dim = cents.head.length
-      val cf = cents.flatten.map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
-      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings
-         |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-         |    AND len(embedding) = $dim),
-         |m AS (SELECT $cf AS cf),
-         |d AS (SELECT vec_id,
-         |        list_transform(generate_series(0, ${cents.length - 1}), j ->
-         |          sqrt(list_reduce(list_concat([0.0::DOUBLE],
-         |            list_transform(generate_series(1, $dim), i ->
-         |              (CAST(v[i] AS DOUBLE) - cf[j * $dim + i]) *
-         |              (CAST(v[i] AS DOUBLE) - cf[j * $dim + i]))),
-         |            (acc, x) -> acc + x))) AS ds
-         |      FROM e, m),
-         |ab AS (SELECT vec_id, ds, list_sort(ds)[1] AS a, list_sort(ds)[2] AS b
-         |       FROM d),
-         |sc AS (SELECT CAST(list_position(ds, a) - 1 AS BIGINT) AS cell,
-         |         CASE WHEN greatest(a, b) > 0.0
-         |              THEN (b - a) / greatest(a, b) ELSE 0.0 END AS s
-         |       FROM ab)
-         |SELECT cell, CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(sum(CAST(round(s * 1000000.0) AS BIGINT)) AS BIGINT)
-         |        / (count(CAST(round(s * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS mean_s
-         |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_linear_probe" -> {
-      // re-derive the identical coefficients (fixed-point moments make the
-      // distributed aggregation shuffle-order-independent, the solve is
-      // deterministic driver arithmetic) and embed them as literals
-      val cf = Similarity.trainRidge(Tables.embeddings(spark, dir),
-        "embedding", "label", dim = 64, lambda = 1.0)
-      val b0 = s"CAST(${cf(0)} AS DOUBLE)"
-      val cfList = cf.drop(1).map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
-      s"""WITH e AS (SELECT vec_id, embedding AS v, CAST(label AS BIGINT) AS label
-         |  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL
-         |    AND len(embedding) = 64),
-         |m AS (SELECT $cfList AS cf),
-         |p AS (SELECT vec_id, label,
-         |        list_reduce(list_concat([$b0],
-         |          list_transform(generate_series(1, 64), i ->
-         |            cf[i] * CAST(v[i] AS DOUBLE))),
-         |          (acc, x) -> acc + x) AS pr
-         |      FROM e, m)
-         |SELECT vec_id, label, round(pr, 6) AS pred,
-         |  round(label - pr, 6) AS residual
-         |FROM p ORDER BY abs(round(label - pr, 6)) DESC, vec_id LIMIT 20""".stripMargin
-    },
-    "q_iforest" -> {
-      // re-train the identical forest (deterministic sample + seeded PRNG)
-      // and emit it as a pure CASE-expression scorer — no libm anywhere
-      val forest = AnomalyForest.train(Tables.events(spark, dir), "event_id",
-        iforestFeatures, nTrees = 25, sampleSize = 256, maxDepth = 6)
-      val sqlFeats = Seq(
-        "CAST(value AS DOUBLE)",
-        "CAST((epoch_us(ts) // 3600000000) % 24 AS DOUBLE)",
-        "CAST((epoch_us(ts) // 86400000000) % 7 AS DOUBLE)")
-      s"""SELECT event_id, ${AnomalyForest.scoreSql(forest, sqlFeats)} AS score
-         |FROM events
-         |WHERE event_id IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL
-         |ORDER BY score, event_id LIMIT 50""".stripMargin
-    },
-    "q_knn_ivf" -> {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      ivfSql(cents, k = 5, nprobe = 3)
-    },
-    "q_diverse_sample" -> {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      diverseSampleSql(cents, cap = 20)
-    },
-    "q_knn_pq" -> {
-      val books = Similarity.trainPqCodebooks(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", m = 4, k = 16, seed = 42L)
-      pqSql(books, topK = 10)
-    },
-    "q_knn_rerank" -> {
-      val books = Similarity.trainPqCodebooks(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", m = 4, k = 16, seed = 42L)
-      pqRerankSql(books, shortlist = 30, topK = 10)
-    },
-    "q_semantic_outliers" -> {
-      val cents = Similarity.trainIvfCentroids(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", k = 8, seed = 42L)
-      semanticOutliersSql(cents, topN = 25)
-    },
-    "q_pca_project" -> {
-      val (means, comps, _) = Similarity.trainPca(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", nComponents = 2)
-      pcaSql(means, comps)
-    })
-
-  /** PCA-projection oracle around Verify-time components: each score is
-    * `list_dot_product(v, w_c) − (means·w_c)` — the dot in index order on
-    * both sides, the offset a driver-computed Scala-dot literal — so both
-    * engines evaluate identical float expressions, rounded to 6.
-    */
-  private def pcaSql(means: Array[Double], comps: Array[Array[Double]]): String = {
-    val cols = comps.zipWithIndex.map { case (w, c) =>
-      val off = Similarity.dotIdx(means, w)
-      s"round(list_dot_product(v, [${w.mkString(", ")}]) - ($off), 6) AS pc${c + 1}"
-    }
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL)
-       |SELECT vec_id,
-       |  ${cols.mkString(",\n  ")}
-       |FROM e ORDER BY vec_id""".stripMargin
-  }
-
-  /** Semantic-outlier oracle around Verify-time centroids: squared
-    * distances in the PQ family's engine-portable `v·v − 2 v·c + c·c`
-    * form (dots via `list_dot_product` = index order, `c·c` a Scala-dot
-    * literal), first-minimum cell, `round(sqrt(greatest(min,0)),6)`
-    * distance, top-N by (dist DESC, vec_id).
-    */
-  private def semanticOutliersSql(cents: Array[Array[Double]], topN: Int): String = {
-    val lits = cents.map(c => "[" + c.mkString(", ") + "]")
-    val n = lits.length
-    val ccs = cents.map(c => Similarity.dotIdx(c, c))
-    val vcs = (0 until n).map(i => s"list_dot_product(v, ${lits(i)}) AS vc$i").mkString(",\n  ")
-    val ds = (0 until n).map(i => s"vv - 2.0*vc$i + ${ccs(i)} AS d$i").mkString(",\n  ")
-    val m = s"least(${(0 until n).map("d" + _).mkString(", ")})"
-    val cellCase = "CASE " + (0 until n).map(i => s"WHEN d$i = $m THEN $i").mkString(" ") + " END"
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |p1 AS (SELECT vec_id, list_dot_product(v, v) AS vv,
-       |  $vcs FROM e),
-       |p2 AS (SELECT vec_id,
-       |  $ds FROM p1),
-       |p3 AS (SELECT vec_id, CAST($cellCase AS BIGINT) AS cell,
-       |  round(sqrt(greatest($m, 0.0)), 6) AS dist FROM p2)
-       |SELECT vec_id, cell, dist FROM p3
-       |ORDER BY dist DESC, vec_id LIMIT $topN""".stripMargin
-  }
-
-  /** PQ/ADC oracle around Verify-time codebooks. Every distance is the
-    * engine-portable `v·v − 2 v·c + c·c` (dot products via
-    * `list_dot_product` = the encoder's index-order loop; `c·c` a literal
-    * computed by the SAME Scala dot), code assignment is first-minimum,
-    * and ADC sums subspace lookups in subspace order — so both engines
-    * evaluate identical float expressions end to end.
-    */
-  private def pqSql(books: Array[Array[Array[Double]]], topK: Int): String =
-    s"""${pqCtes(books)}
-       |SELECT query_id, neighbor_id, adc, CAST(rn AS BIGINT) AS rank FROM r WHERE rn <= $topK
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Two-stage oracle: the [[pqCtes]] ADC chain cut at `shortlist`, then an
-    * exact-cosine re-rank of just those candidates (same round-6 cosine and
-    * tie-break as the brute-force oracles).
-    */
-  private def pqRerankSql(books: Array[Array[Array[Double]]], shortlist: Int, topK: Int): String =
-    s"""${pqCtes(books)},
-       |short AS (SELECT query_id, neighbor_id FROM r WHERE rn <= $shortlist),
-       |x AS (SELECT s.query_id, s.neighbor_id, round(${cosineSql("q.v", "n.v")}, 6) AS sim
-       |      FROM short s JOIN e q ON s.query_id = q.vec_id JOIN e n ON s.neighbor_id = n.vec_id),
-       |rr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn2
-       |       FROM x)
-       |SELECT query_id, neighbor_id, sim, CAST(rn2 AS BIGINT) AS rank FROM rr WHERE rn2 <= $topK
-       |ORDER BY query_id, rank""".stripMargin
-
-  private def pqCtes(books: Array[Array[Array[Double]]]): String = {
-    val m = books.length
-    val k = books(0).length
-    val sub = books(0)(0).length
-    val ccn = books.map(_.map(c => Similarity.dotIdx(c, c)))
-    def slice(s: Int) = s"v[${s * sub + 1}:${(s + 1) * sub}]"
-    val vvs = (0 until m).map(s =>
-      s"list_dot_product(${slice(s)}, ${slice(s)}) AS vv$s").mkString(",\n  ")
-    val vcs = (for (s <- 0 until m; j <- 0 until k) yield
-      s"list_dot_product(${slice(s)}, [${books(s)(j).mkString(", ")}]) AS vc${s}_$j")
-      .mkString(",\n  ")
-    val ds = (for (s <- 0 until m; j <- 0 until k) yield
-      s"vv$s - 2.0*vc${s}_$j + ${ccn(s)(j)} AS d${s}_$j").mkString(",\n  ")
-    val mins = (0 until m).map(s =>
-      s"least(${(0 until k).map(j => s"d${s}_$j").mkString(", ")}) AS m$s").mkString(",\n  ")
-    val codes = (0 until m).map(s =>
-      "CASE " + (0 until k).map(j => s"WHEN d${s}_$j = m$s THEN $j").mkString(" ") +
-        s" END AS c$s").mkString(",\n  ")
-    val qcols = (for (s <- 0 until m; j <- 0 until k) yield
-      s"d${s}_$j AS q${s}_$j").mkString(", ")
-    val adc = (0 until m).map(s =>
-      s"(CASE c$s " + (0 until k).map(j => s"WHEN $j THEN q${s}_$j").mkString(" ") + " END)")
-      .mkString("\n    + ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |p1 AS (SELECT vec_id,
-       |  $vvs,
-       |  $vcs FROM e),
-       |p2 AS (SELECT vec_id,
-       |  $ds FROM p1),
-       |p3 AS (SELECT *,
-       |  $mins FROM p2),
-       |cb AS (SELECT vec_id AS neighbor_id,
-       |  $codes FROM p3),
-       |qd AS (SELECT vec_id AS query_id, $qcols FROM p2 WHERE vec_id < 5),
-       |sc AS (SELECT query_id, neighbor_id,
-       |  round($adc, 6) AS adc
-       |  FROM qd, cb WHERE query_id <> neighbor_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rn FROM sc)""".stripMargin
-  }
-
-  /** Diversity-sampling oracle: IVF cell assignment (same centroid literals
-    * and first-nearest CASE as [[ivfSql]]) followed by the q_source_cap
-    * hash-order window cap, keyed on vec_id.
-    */
-  private def diverseSampleSql(cents: Array[Array[Double]], cap: Int): String = {
-    val lits = cents.map(c => "[" + c.mkString(", ") + "]")
-    val n = lits.length
-    val dists = (0 until n).map(i => s"list_distance(v, ${lits(i)}) AS d$i").mkString(", ")
-    val m = s"least(${(0 until n).map("d" + _).mkString(", ")})"
-    val cellCase = "CASE " + (0 until n).map(i => s"WHEN d$i = $m THEN $i").mkString(" ") + " END"
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |dd AS (SELECT vec_id, v, $dists FROM e),
-       |cb AS (SELECT vec_id, CAST($cellCase AS BIGINT) AS cell FROM dd),
-       |r AS (SELECT vec_id, cell, CAST(row_number() OVER (
-       |    PARTITION BY cell ORDER BY
-       |    CAST('0x' || substr(md5('graft' || CAST(vec_id AS VARCHAR)), 1, 8) AS BIGINT) % 1073741824,
-       |    vec_id) AS BIGINT) AS cap_rank FROM cb)
-       |SELECT vec_id, cell, cap_rank FROM r WHERE cap_rank <= $cap
-       |ORDER BY cell, cap_rank""".stripMargin
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  round(CAST(sum(CAST(round(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT) / 100.0, 2) AS sum_base_price,
-        |  round(CAST(sum(CAST(round(l_discount * 100.0) AS BIGINT)) AS BIGINT) / (count(CAST(round(l_discount * 100.0) AS BIGINT)) * 100.0), 6) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_range_scan" ->
-      s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-         |FROM events
-         |WHERE event_type = 'click' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $T1
-         |ORDER BY ts_us, event_id""".stripMargin,
-
-    // early point bounded to [T0 - 1 day, T0) like the reference's one-day
-    // slice (archiver.py:192-206) — mirrors getData's earlyLookbackUs default
-    "q_get_data" ->
-      s"""WITH e AS (
-         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-         |  FROM events WHERE event_type = 'purchase'),
-         |early AS (
-         |  SELECT event_id, user_id, ts_us, value
-         |  FROM (SELECT *, row_number() OVER (ORDER BY ts_us DESC, event_id DESC) AS rn
-         |        FROM e WHERE ts_us < $T0 AND ts_us >= ${T0 - 86400000000L})
-         |  WHERE rn = 1)
-         |SELECT event_id, user_id, ts_us, value FROM early
-         |UNION ALL
-         |SELECT event_id, user_id, ts_us, value FROM e WHERE ts_us >= $T0 AND ts_us < $T1
-         |ORDER BY ts_us, event_id""".stripMargin,
-
-    "q_value_at_time" ->
-      s"""SELECT user_id, ts_us, event_id, value
-         |FROM (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
-         |        row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-         |      FROM events WHERE epoch_us(ts) <= $TMID)
-         |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "q_latest_per_key" ->
-      """SELECT user_id, ts_us, event_id, event_type, value
-        |FROM (SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type, value,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        |      FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "q_minmax_per_type" ->
-      """SELECT event_type, min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS stop_us,
-        |  count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_count_since" ->
-      s"""SELECT event_type, count(*) AS n FROM events
-         |WHERE epoch_us(ts) > $T0 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_runs_overlap" ->
-      s"""SELECT epoch_us(ts) // $RUN_WEEK_US AS run_id,
-         |  min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS stop_us, count(*) AS n
-         |FROM events GROUP BY 1
-         |HAVING max(epoch_us(ts)) >= $T0 AND min(epoch_us(ts)) <= $T1
-         |ORDER BY run_id""".stripMargin,
-
-    "q_downsample" ->
-      s"""SELECT user_id, ts_us, event_id, value
-         |FROM (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
-         |        lag(epoch_us(ts)) OVER w AS pts,
-         |        lag(value) OVER w AS pv
-         |      FROM events
-         |      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-         |WHERE pts IS NULL OR ((ts_us - pts) > ${6L * 3600L * 1000000L} AND abs(value - pv) > 50.0)
-         |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS fp, min(doc_id) AS rep_id, count(*) AS n_dups
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // anti-join as NOT EXISTS on the fingerprint: null-md5 docs stay (a
-    // null key matches nothing), same as Spark's left_anti null semantics
-    "q_dedup_incremental" ->
-      """SELECT d.doc_id, md5(d.text) AS fp FROM documents d
-        |WHERE d.doc_id % 5 = 0 AND NOT EXISTS (
-        |  SELECT 1 FROM documents e
-        |  WHERE e.doc_id % 5 <> 0 AND md5(e.text) = md5(d.text))
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_vocab_topk" ->
-      s"""WITH ${gramCte(2)},
-         |pc AS (SELECT g, doc_id, count(*) AS c FROM g GROUP BY 1, 2)
-         |SELECT g AS gram, CAST(sum(c) AS BIGINT) AS n_occur, count(*) AS n_docs
-         |FROM pc GROUP BY 1 ORDER BY n_occur DESC, gram LIMIT 50""".stripMargin,
-
-    // latest row per key (value tie-break, like the engine's cacheView
-    // argmax), kept when newer than the poll horizon
-    "q_cache_delta" ->
-      s"""SELECT pvname, ts_us, value FROM (
-         |  SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-         |  FROM events)
-         |WHERE rn = 1 AND ts_us > $TMID ORDER BY pvname""".stripMargin,
-
-    "q_generic_select" ->
-      """SELECT p_partkey, p_name, p_brand, p_size FROM part
-        |WHERE p_size = 2
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_generic_lookup" ->
-      """SELECT id, p_name, p_brand FROM (
-        |  SELECT p_partkey AS id, p_name, p_brand FROM part WHERE p_partkey = 42
-        |  UNION ALL
-        |  (SELECT p_partkey AS id, p_name, p_brand FROM part
-        |   WHERE p_brand = 'Brand#2' ORDER BY p_partkey DESC LIMIT 1))
-        |ORDER BY id""".stripMargin,
-
-    // hashname restated independently: sha256 bytes -> base64 -> char-code
-    // sum mod 128 (archiver.py:25-32), per character via unicode()
-    "q_pv_pack" ->
-      """WITH p AS (SELECT p_partkey,
-        |  'P' || CAST(p_partkey AS VARCHAR) || ':' ||
-        |  CASE WHEN p_partkey % 3 = 0
-        |       THEN replace(substr(p_name, 1, 8), ' ', '_')
-        |       ELSE substr(p_name, 1, 8) END ||
-        |  CASE WHEN p_partkey % 7 = 0 THEN '#drop this tail'
-        |       WHEN p_partkey % 5 = 0 THEN '.RBV' ELSE '' END AS raw
-        |  FROM part),
-        |c AS (SELECT p_partkey, trim(regexp_replace(raw, '[;#].*', '', 's')) AS cln FROM p),
-        |n AS (SELECT p_partkey,
-        |  CASE WHEN contains(cln, '.') THEN cln ELSE cln || '.VAL' END AS pvname FROM c),
-        |b AS (SELECT p_partkey, pvname,
-        |  CAST(list_sum(list_transform(
-        |    string_split(to_base64(unhex(sha256(pvname))), ''),
-        |    ch -> unicode(ch))) % 128 AS BIGINT) AS bucket FROM n)
-        |SELECT p_partkey, pvname,
-        |  regexp_matches(pvname, '^[a-zA-Z0-9_:.\[\]();<>{}+=#-]+$') AS valid,
-        |  bucket,
-        |  printf('pvdat%03d', bucket + 1) AS data_table
-        |FROM b ORDER BY p_partkey""".stripMargin,
-
-    "q_containment" ->
-      s"""WITH ${shingleCte(2)},
-         |sz AS (SELECT doc, count(*) AS sz FROM s GROUP BY doc),
-         |inter AS (SELECT a.doc AS d1, b.doc AS d2, count(*) AS i
-         |          FROM s a JOIN s b ON a.shingle = b.shingle AND a.doc < b.doc
-         |          GROUP BY 1, 2),
-         |dir AS (SELECT d1 AS src, d2 AS dst, i FROM inter
-         |        UNION ALL SELECT d2 AS src, d1 AS dst, i FROM inter)
-         |SELECT src, dst, round(CAST(i AS DOUBLE) / sz.sz, 6) AS containment
-         |FROM dir JOIN sz ON src = sz.doc
-         |WHERE round(CAST(i AS DOUBLE) / sz.sz, 6) >= 0.8
-         |ORDER BY src, dst""".stripMargin,
-
-    // mutation appends a decomposed e+U+0301, a tab, and space runs; the
-    // normalizer must NFC-compose, scrub the control char, and collapse
-    "q_text_clean" ->
-      """SELECT doc_id, trim(regexp_replace(regexp_replace(
-        |  nfc_normalize(text || '  spark' || chr(9) || 'e' || chr(769) || ' '),
-        |  '[\p{Cc}\p{Cf}]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_bm25" -> bm25Sql(BM25_TERMS, k = 20),
-
-    "q_search_diverse" -> searchDiverseSql(BM25_TERMS, perGroup = 2, k = 20),
-
-    // Rocchio PRF: the BM25 run as a subquery picks the feedback set; the
-    // 6-dp per-dim centroid reassembles as an ordered list; cosine is the
-    // same sequential list fold as every other embedding oracle
-    "q_rocchio" ->
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |       WHERE embedding IS NOT NULL),
-         |fb AS (SELECT doc_id FROM (${bm25Sql(BM25_TERMS, k = 10)}) r0),
-         |rl AS (SELECT e0.v FROM fb JOIN e0 ON fb.doc_id = e0.vec_id),
-         |x AS (SELECT unnest(list_transform(generate_series(1, len(v)),
-         |    i -> {'dim': i - 1, 'x': v[i]})) AS u FROM rl),
-         |cd AS (SELECT u.dim AS dim, round(CAST(sum(CAST(round((u.x) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((u.x) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS c FROM x GROUP BY 1),
-         |cent AS (SELECT list(c ORDER BY dim) AS cv FROM cd)
-         |SELECT vec_id, round(${cosineSql("v", "cv")}, 6) AS sim
-         |FROM e0 CROSS JOIN cent
-         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // deterministic weighted Bernoulli draw: integer md5 bucket vs the
-    // bit-identical double threshold (round-6 quality / exact max)
-    "q_weighted_sample" ->
-      s"""WITH q AS (SELECT doc_id,
-         |    round(ln(1.0 + len(string_split(text, ' '))) *
-         |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-         |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-         |               / len(string_split(text, ' '))), 6) AS quality
-         |  FROM documents),
-         |m AS (SELECT max(quality) AS wmax FROM q WHERE quality > 0)
-         |SELECT doc_id, quality FROM q, m
-         |WHERE quality > 0 AND ${docBucketSql(1000000)} < quality / wmax * 1000000.0
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_corpus_cube" ->
-      """SELECT coalesce(lang, 'ALL') AS lang, coalesce(source, 'ALL') AS source,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |FROM documents GROUP BY CUBE(lang, source)
-        |ORDER BY lang, source""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(len(list_filter(string_split(text, ' '),
-        |       t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS BIGINT) AS n_stop,
-        |  round(CAST(len(list_filter(string_split(text, ' '),
-        |       t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |       / len(string_split(text, ' ')), 6) AS stop_ratio,
-        |  round(CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |       / len(string_split(text, ' ')), 6) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_locf_align" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_type, value FROM events
-         |  WHERE event_type IN ('click', 'purchase', 'view') AND epoch_us(ts) < $T1),
-         |g AS (SELECT ts_us,
-         |        max(CASE WHEN event_type = 'click' THEN value END) AS c0,
-         |        max(CASE WHEN event_type = 'purchase' THEN value END) AS c1,
-         |        max(CASE WHEN event_type = 'view' THEN value END) AS c2
-         |      FROM e GROUP BY ts_us),
-         |f AS (SELECT ts_us,
-         |        last_value(c0 IGNORE NULLS) OVER w AS click,
-         |        last_value(c1 IGNORE NULLS) OVER w AS purchase,
-         |        last_value(c2 IGNORE NULLS) OVER w AS "view"
-         |      FROM g WINDOW w AS (ORDER BY ts_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         |SELECT ts_us, click, purchase, "view" FROM f
-         |WHERE ts_us >= $T0 AND click IS NOT NULL AND purchase IS NOT NULL AND "view" IS NOT NULL
-         |ORDER BY ts_us""".stripMargin,
-
-    // F15 mail template: every alert body reassembled with concat + chr(10)
-    // newlines; the nested %PV(EV:click)% lookup is a scalar subquery over
-    // the same snapshot, the failed lookup the literal 'unknown'
-    "q_mail_template" ->
-      """WITH src AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value
-        |  FROM events WHERE value IS NOT NULL),
-        |latest AS (
-        |  SELECT 'EV:' || event_type AS pv,
-        |         CAST(CAST(floor(value * 1000) AS BIGINT) AS VARCHAR) AS v
-        |  FROM (SELECT event_type, value,
-        |          row_number() OVER (PARTITION BY event_type
-        |                             ORDER BY ts_us DESC, event_id DESC) AS rn
-        |        FROM src) WHERE rn = 1)
-        |SELECT pv,
-        |  'Alert for ' || pv || chr(10) ||
-        |  'value=' || v || ' label=lbl:' || pv || chr(10) ||
-        |  'condition: ge 100' || chr(10) ||
-        |  'click=' || coalesce((SELECT v FROM latest WHERE pv = 'EV:click'), 'unknown') ||
-        |  ' missing=' || coalesce((SELECT v FROM latest WHERE pv = 'EV:nope'), 'unknown') AS body
-        |FROM latest ORDER BY pv""".stripMargin,
-
-    // S12 save/restore: the latest-non-null-per-series snapshot rendered
-    // through the three flavor writers, every line mirrored verbatim —
-    // header blocks as literal rows, value lines assembled with the same
-    // quoting per flavor
-    "q_save_restore" ->
-      """WITH src AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value
-        |  FROM events WHERE value IS NOT NULL),
-        |latest AS (
-        |  SELECT 'EV:' || event_type AS pv,
-        |         CAST(CAST(floor(value * 1000) AS BIGINT) AS VARCHAR) AS v
-        |  FROM (SELECT event_type, value,
-        |          row_number() OVER (PARTITION BY event_type
-        |                             ORDER BY ts_us DESC, event_id DESC) AS rn
-        |        FROM src) WHERE rn = 1),
-        |ord AS (SELECT pv, v, row_number() OVER (ORDER BY pv) - 1 AS rn FROM latest),
-        |heads(flavor, line_no, line) AS (VALUES
-        |  ('plain', 0, '# Plain Save/Restore script'),
-        |  ('plain', 1, '# graft snapshot'),
-        |  ('idl', 0, '; IDL save restore script'),
-        |  ('idl', 1, '; graft snapshot'),
-        |  ('python', 0, '#!/usr/bin/env python'),
-        |  ('python', 1, '#  Python save restore script'),
-        |  ('python', 2, 'from epics import caput'),
-        |  ('python', 3, '# graft snapshot')),
-        |nhead(flavor, n) AS (VALUES ('plain', 2), ('idl', 2), ('python', 4)),
-        |vals AS (
-        |  SELECT nh.flavor, nh.n + o.rn AS line_no,
-        |         CASE nh.flavor
-        |           WHEN 'idl' THEN 's = caput(''' || o.pv || ''', ' || o.v || ')'
-        |           WHEN 'python' THEN 'caput(''' || o.pv || ''', ' || o.v || ')'
-        |           ELSE o.pv || '  ' || o.v END AS line
-        |  FROM ord o CROSS JOIN nhead nh)
-        |SELECT flavor, CAST(line_no AS BIGINT) AS line_no, line
-        |FROM (SELECT * FROM heads UNION ALL SELECT * FROM vals)
-        |ORDER BY flavor, line_no""".stripMargin,
-
-    // S11 aligned export: the q_locf_align CTE over the 6-digit integral
-    // value grid, then the line rendered byte-for-byte — two spaces
-    // between fields because each hformat field keeps its one leading
-    // space (the ' ' sign flag) after the trailing-000 trim
-    "q_export_multi" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_type,
-         |         100000 + ((CAST(floor(value * 100) AS BIGINT) % 10000) + 10000) % 10000 AS vi
-         |  FROM events
-         |  WHERE event_type IN ('click', 'purchase', 'view') AND epoch_us(ts) < $T1),
-         |g AS (SELECT ts_us,
-         |        max(CASE WHEN event_type = 'click' THEN vi END) AS c0,
-         |        max(CASE WHEN event_type = 'purchase' THEN vi END) AS c1,
-         |        max(CASE WHEN event_type = 'view' THEN vi END) AS c2
-         |      FROM e GROUP BY ts_us),
-         |f AS (SELECT ts_us,
-         |        last_value(c0 IGNORE NULLS) OVER w AS v0,
-         |        last_value(c1 IGNORE NULLS) OVER w AS v1,
-         |        last_value(c2 IGNORE NULLS) OVER w AS v2
-         |      FROM g WINDOW w AS (ORDER BY ts_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         |SELECT printf('%.6f', ts_us / 1000000.0)
-         |       || '  ' || CAST(v0 AS VARCHAR) || '.0'
-         |       || '  ' || CAST(v1 AS VARCHAR) || '.0'
-         |       || '  ' || CAST(v2 AS VARCHAR) || '.0' AS line
-         |FROM f
-         |WHERE ts_us >= $T0 AND v0 IS NOT NULL AND v1 IS NOT NULL AND v2 IS NOT NULL
-         |ORDER BY ts_us""".stripMargin,
-
-    "q_decimate" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_id, value FROM events
-         |  WHERE event_type = 'error' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $T1),
-         |b AS (SELECT quantile_cont(CAST(value AS DOUBLE), CAST(0.1 AS DOUBLE)) AS lo,
-         |             quantile_cont(CAST(value AS DOUBLE), CAST(0.9 AS DOUBLE)) AS hi FROM e),
-         |r AS (SELECT ts_us, event_id, value, row_number() OVER (ORDER BY ts_us, event_id) AS rn FROM e)
-         |SELECT ts_us, event_id, value FROM r, b
-         |WHERE (rn - 1) % 5 = 0 OR value < lo OR value > hi
-         |ORDER BY ts_us, event_id""".stripMargin,
-
-    "q_pairs_cooccur" ->
-      """SELECT a.l_partkey AS m1, b.l_partkey AS m2, count(*) AS score
-        |FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-        |JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-        |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // capped variant: each group contributes only its first 4 members in
-    // ascending order (mirrors sort_array(collect_set) + slice(.., 1, 4))
-    "q_pairs_cooccur_capped" ->
-      """WITH m AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |r AS (SELECT l_orderkey, l_partkey,
-        |        row_number() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS rn
-        |      FROM m),
-        |c AS (SELECT l_orderkey, l_partkey FROM r WHERE rn <= 4)
-        |SELECT a.l_partkey AS m1, b.l_partkey AS m2, count(*) AS score
-        |FROM c a JOIN c b
-        |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_pairs_related" -> relatedOracleSql,
-
-    // identical result, computed by the graph-free point-query plan
-    "q_related_direct" -> relatedOracleSql,
-
-    "q_pairs_merge" ->
-      """SELECT least(l_partkey, l_suppkey) AS m1, greatest(l_partkey, l_suppkey) AS m2,
-        |  max(l_quantity) AS score
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_dim_join" ->
-      """SELECT p_brand, count(*) AS n, sum(l_quantity) AS sum_qty,
-        |  round(CAST(sum(CAST(round(l_extendedprice * 100.0) AS BIGINT) *
-        |    (100 - CAST(round(l_discount * 100.0) AS BIGINT))) AS BIGINT) / 10000.0, 2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_join_chain" ->
-      """SELECT r_name, count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_lang_id" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to'))) AS BIGINT) AS h_en,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('der','die','das','und','ist'))) AS BIGINT) AS h_de,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('le','la','les','et','est'))) AS BIGINT) AS h_fr
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN greatest(h_en, h_de, h_fr) = 0 THEN 'und'
-        |       WHEN h_fr = greatest(h_en, h_de, h_fr) THEN 'fr'
-        |       WHEN h_en = greatest(h_en, h_de, h_fr) THEN 'en'
-        |       ELSE 'de' END AS lang_pred,
-        |  greatest(h_en, h_de, h_fr) AS marker_hits
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    // language confusion: the q_lang_id detector joined to the declared
-    // column — the mislabeled-language screen before per-language routing
-    "q_lang_confusion" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to'))) AS BIGINT) AS h_en,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('der','die','das','und','ist'))) AS BIGINT) AS h_de,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('le','la','les','et','est'))) AS BIGINT) AS h_fr
-        |  FROM documents),
-        |p AS (SELECT coalesce(lang, 'null') AS declared,
-        |        CASE WHEN greatest(h_en, h_de, h_fr) = 0 THEN 'und'
-        |             WHEN h_fr = greatest(h_en, h_de, h_fr) THEN 'fr'
-        |             WHEN h_en = greatest(h_en, h_de, h_fr) THEN 'en'
-        |             ELSE 'de' END AS detected
-        |      FROM h)
-        |SELECT declared, detected, CAST(count(*) AS BIGINT) AS n
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_quality" ->
-      """SELECT doc_id,
-        |  round(ln(1.0 + len(string_split(text, ' '))) *
-        |        (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |              t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |             / len(string_split(text, ' '))), 6) AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_jaccard" -> jaccardOracleSql,
-
-    // identical result set, produced by the block-partitioned sweep
-    "q_jaccard_dist" -> jaccardOracleSql,
-
-    "q_curation" ->
-      """WITH stats AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(ln(1.0 + len(string_split(text, ' '))) *
-        |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |               / len(string_split(text, ' '))), 6) AS quality
-        |  FROM documents),
-        |langs AS (
-        |  SELECT doc_id,
-        |    CASE WHEN greatest(h_en, h_de, h_fr) = 0 THEN 'und'
-        |         WHEN h_fr = greatest(h_en, h_de, h_fr) THEN 'fr'
-        |         WHEN h_en = greatest(h_en, h_de, h_fr) THEN 'en'
-        |         ELSE 'de' END AS lang_pred
-        |  FROM (SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to'))) AS BIGINT) AS h_en,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('der','die','das','und','ist'))) AS BIGINT) AS h_de,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('le','la','les','et','est'))) AS BIGINT) AS h_fr
-        |  FROM documents)),
-        |reps AS (SELECT min(doc_id) AS rep_id FROM documents GROUP BY md5(text))
-        |SELECT d.doc_id, s.quality, s.n_tokens, l.lang_pred, CAST(e.label AS BIGINT) AS label
-        |FROM documents d
-        |JOIN reps r ON d.doc_id = r.rep_id
-        |JOIN stats s ON d.doc_id = s.doc_id
-        |JOIN langs l ON d.doc_id = l.doc_id
-        |JOIN embeddings e ON d.doc_id = e.vec_id
-        |WHERE s.quality > 2.0 AND l.lang_pred <> 'und'
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_bpe,
-        |  CAST(len(list_distinct(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))) AS BIGINT) AS n_distinct
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_fingerprint" ->
-      """SELECT doc_id, md5(text) AS fp_md5,
-        |  CASE WHEN length(text) = 0 THEN NULL ELSE
-        |    list_reduce(list_transform(generate_series(1, length(text)),
-        |                i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)),
-        |                (a, b) -> (a * 31 + b) % 1000000007) END AS fp_roll
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_minhash_sig" -> minhashSigSql(NUM_PERM, 3),
-
-    "q_minhash_lsh" -> minhashLshSql(NUM_PERM, 4, 2, 0.5),
-
-    // chunk-level dedup: first occurrence elected per distinct chunk
-    // (window row_number here; the engine's map-side min(struct) election
-    // is the same rule), surviving chunks re-joined in index order
-    "q_chunk_dedup" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |              FROM documents WHERE text IS NOT NULL),
-        |ch AS (SELECT doc_id, u.i AS cidx,
-        |         array_to_string(ws[u.i * 25 + 1 : (u.i + 1) * 25], ' ') AS chunk
-        |       FROM toks, unnest(generate_series(0, (len(ws) - 1) // 25)) AS u(i)),
-        |r AS (SELECT doc_id, cidx, chunk,
-        |        row_number() OVER (PARTITION BY chunk ORDER BY doc_id, cidx) AS rn
-        |      FROM ch)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-        |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  coalesce(string_agg(chunk, ' ' ORDER BY cidx) FILTER (WHERE rn = 1), '') AS text_dedup
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_edit_verify" -> editVerifySql(NUM_PERM, 4, 2, 0.5),
-
-    "q_minhash_incremental" -> minhashIncrementalSql(NUM_PERM, 4, 2, 0.5),
-
-    // lag/cumsum sessionization restated over the same 30-min idle gap
-    "q_sessions" ->
-      s"""WITH e AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname, epoch_us(ts) AS ts_us
-         |  FROM events),
-         |f AS (SELECT pvname, ts_us,
-         |    CASE WHEN lag(ts_us) OVER (PARTITION BY pvname ORDER BY ts_us) IS NULL
-         |           OR ts_us - lag(ts_us) OVER (PARTITION BY pvname ORDER BY ts_us)
-         |              > ${30L * 60L * 1000000L} THEN 1 ELSE 0 END AS is_new
-         |  FROM e),
-         |sx AS (SELECT pvname, ts_us, CAST(sum(is_new) OVER (
-         |    PARTITION BY pvname ORDER BY ts_us
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-         |  FROM f)
-         |SELECT pvname, session_idx, min(ts_us) AS start_us, max(ts_us) AS end_us,
-         |  CAST(count(*) AS BIGINT) AS n_events
-         |FROM sx GROUP BY pvname, session_idx
-         |ORDER BY pvname, session_idx""".stripMargin,
-
-    // windowed first-touch funnel: per-step min-after-previous within the
-    // horizon; ratios of engine-exact longs, floor-quantized
-    "q_funnel" ->
-      s"""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_type AS et
-         |  FROM events WHERE user_id IS NOT NULL),
-         |s1 AS (SELECT u, min(t) AS t1 FROM e WHERE et = 'view' GROUP BY u),
-         |s2 AS (SELECT e.u, min(t) AS t2 FROM e JOIN s1 ON e.u = s1.u
-         |       WHERE et = 'click' AND t > t1 AND t <= t1 + $RUN_WEEK_US GROUP BY e.u),
-         |s3 AS (SELECT e.u, min(t) AS t3 FROM e JOIN s2 ON e.u = s2.u
-         |       WHERE et = 'purchase' AND t > t2 AND t <= t2 + $RUN_WEEK_US GROUP BY e.u),
-         |c AS (          SELECT 1 AS stage, 'view' AS step, (SELECT count(*) FROM s1) AS n
-         |      UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-         |      UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3))
-         |SELECT CAST(stage AS BIGINT) AS stage, step, CAST(n AS BIGINT) AS n_users,
-         |  CASE WHEN lag(n) OVER (ORDER BY stage) IS NULL THEN CAST(1 AS DOUBLE)
-         |       ELSE floor((CAST(n AS DOUBLE) / lag(n) OVER (ORDER BY stage)) * 1000000.0) / 1000000.0 END
-         |    AS conv_from_prev,
-         |  floor((CAST(n AS DOUBLE) / first_value(n) OVER (ORDER BY stage)) * 1000000.0) / 1000000.0
-         |    AS conv_overall
-         |FROM c ORDER BY stage""".stripMargin,
-
-    // day-cohort retention triangle: integer epoch-day buckets, distinct
-    // (user, day) activity, cells bounded by cohorts x maxDays
-    "q_retention" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) // 86400000000 AS d
-        |  FROM events WHERE user_id IS NOT NULL),
-        |coh AS (SELECT u, min(d) AS c FROM e GROUP BY u),
-        |sz AS (SELECT c, CAST(count(*) AS BIGINT) AS cohort_size FROM coh GROUP BY c),
-        |act AS (SELECT DISTINCT u, d FROM e),
-        |cell AS (SELECT c AS cohort_day, d - c AS k, CAST(count(*) AS BIGINT) AS n_active
-        |         FROM act JOIN coh USING (u) WHERE d - c <= 13 GROUP BY 1, 2)
-        |SELECT cohort_day, k, cohort_size, n_active,
-        |  floor((CAST(n_active AS DOUBLE) / cohort_size) * 1000000.0) / 1000000.0 AS retention
-        |FROM cell JOIN sz ON cohort_day = sz.c ORDER BY cohort_day, k""".stripMargin,
-
-    // data-quality expectations: NOT coalesce(pred, false) = the engine's
-    // three-valued violation rule; referential integrity via NOT EXISTS
-    "q_dq_checks" ->
-      """WITH ev AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN NOT coalesce(user_id IS NOT NULL, false) THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(sum(CASE WHEN NOT coalesce(value BETWEEN 0 AND 400, false) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |    CAST(sum(CASE WHEN NOT coalesce(value IS NOT NULL, false) THEN 1 ELSE 0 END) AS BIGINT) AS v3
-        |  FROM events),
-        |li AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN NOT coalesce(l_discount <= 0.08, false) THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(sum(CASE WHEN NOT coalesce(l_quantity BETWEEN 1 AND 50, false) THEN 1 ELSE 0 END) AS BIGINT) AS v2
-        |  FROM lineitem),
-        |dc AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN NOT coalesce(lang IN ('en','zh','fr','es','de'), false) THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(sum(CASE WHEN NOT coalesce(n_chars >= 100, false) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |    CAST(sum(CASE WHEN NOT coalesce(n_chars = length(text), false) THEN 1 ELSE 0 END) AS BIGINT) AS v3
-        |  FROM documents),
-        |u AS (          SELECT 'events.user_id_present' AS rule, n, v1 AS nv FROM ev
-        |      UNION ALL SELECT 'events.value_in_range', n, v2 FROM ev
-        |      UNION ALL SELECT 'events.value_present', n, v3 FROM ev
-        |      UNION ALL SELECT 'lineitem.discount_le_8pct', n, v1 FROM li
-        |      UNION ALL SELECT 'lineitem.quantity_1_50', n, v2 FROM li
-        |      UNION ALL SELECT 'documents.lang_allowed', n, v1 FROM dc
-        |      UNION ALL SELECT 'documents.min_chars_100', n, v2 FROM dc
-        |      UNION ALL SELECT 'documents.nchars_consistent', n, v3 FROM dc
-        |      UNION ALL SELECT 'orders.custkey_resolves',
-        |        (SELECT CAST(count(*) AS BIGINT) FROM orders),
-        |        (SELECT CAST(count(*) AS BIGINT) FROM orders o
-        |         WHERE o.o_custkey IS NULL OR NOT EXISTS
-        |           (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)))
-        |SELECT rule, n AS n_rows, nv AS n_violations,
-        |  CASE WHEN n = 0 THEN CAST(0 AS DOUBLE)
-        |       ELSE floor((CAST(nv AS DOUBLE) / n) * 1000000.0) / 1000000.0 END AS violation_rate
-        |FROM u ORDER BY rule""".stripMargin,
-
-    // per-source percent_rank calibration over the shared 6-dp quality
-    "q_quality_calibrated" ->
-      """WITH q AS (SELECT doc_id, source,
-        |    round(ln(1.0 + len(string_split(text, ' '))) *
-        |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |               / len(string_split(text, ' '))), 6) AS quality
-        |  FROM documents)
-        |SELECT doc_id, source, quality,
-        |  floor(percent_rank() OVER (PARTITION BY source ORDER BY quality) * 1000000.0) / 1000000.0 AS pct
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    // DuckDB's native ASOF LEFT JOIN is the independent restatement of the
-    // union+running-last plan — an implementation-divergent oracle
-    "q_asof_join" ->
-      """WITH l AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-        |    epoch_us(ts) AS ts_us, event_id FROM events WHERE event_type = 'view'),
-        |r AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-        |    epoch_us(ts) AS click_ts, max(value) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT l.pvname, l.ts_us, l.event_id,
-        |  coalesce(r.click_value, -1.0) AS click_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.pvname = r.pvname AND l.ts_us >= r.click_ts
-        |ORDER BY l.pvname, l.ts_us, l.event_id""".stripMargin,
-
-    // even vs odd snapshot drift; same smoothed-ratio expression tree as the
-    // Column plan, ranked on the ROUNDED shift
-    "q_vocab_shift" ->
-      """WITH ta AS (SELECT unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE text IS NOT NULL AND doc_id % 2 = 0),
-        |ca AS (SELECT token, count(*) AS n_a FROM ta GROUP BY 1),
-        |tb AS (SELECT unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE text IS NOT NULL AND doc_id % 2 = 1),
-        |cb AS (SELECT token, count(*) AS n_b FROM tb GROUP BY 1),
-        |j AS (SELECT coalesce(ca.token, cb.token) AS token,
-        |        coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        |      FROM ca FULL OUTER JOIN cb ON ca.token = cb.token),
-        |s AS (SELECT CAST(sum(n_a) AS DOUBLE) AS ta2, CAST(sum(n_b) AS DOUBLE) AS tb2,
-        |        CAST(count(*) AS DOUBLE) AS v FROM j)
-        |SELECT token, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  round(log2(((n_a + 0.5) / (ta2 + 0.5 * v)) / ((n_b + 0.5) / (tb2 + 0.5 * v))), 6) AS shift
-        |FROM j, s ORDER BY abs(shift) DESC, token LIMIT 50""".stripMargin,
-
-    "q_simhash" -> simhashSql,
-
-    // leave-one-out kNN label audit: ranking rule identical to q_knn_brute
-    // (round-6 sim DESC, id tiebreak), vote rule integer-only (count DESC,
-    // best rank, smaller label) — every output column is a BIGINT count
-    "q_knn_classify" ->
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label FROM embeddings
-         |           WHERE embedding IS NOT NULL AND label IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS q, b.vec_id AS nb, b.label AS nlab,
-         |         round(${cosineSql("a.e", "b.e")}, 6) AS sim
-         |       FROM v a, v b WHERE a.vec_id <> b.vec_id),
-         |r AS (SELECT q, nlab,
-         |        row_number() OVER (PARTITION BY q ORDER BY sim DESC, nb) AS rn
-         |      FROM sc),
-         |t AS (SELECT q, nlab, count(*) AS cnt, min(rn) AS mr
-         |      FROM r WHERE rn <= 10 GROUP BY q, nlab),
-         |p AS (SELECT q, nlab,
-         |        row_number() OVER (PARTITION BY q ORDER BY cnt DESC, mr, nlab) AS pr
-         |      FROM t)
-         |SELECT CAST(v.label AS BIGINT) AS label, CAST(p.nlab AS BIGINT) AS pred,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM p JOIN v ON p.q = v.vec_id WHERE p.pr = 1
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_knn_brute" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-         |sc AS (SELECT query_id, neighbor_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |       FROM q, c WHERE query_id <> neighbor_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn FROM sc)
-         |SELECT query_id, neighbor_id, sim, rn AS rank FROM r WHERE rn <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q_embed_dedup" -> embedDedupOracleSql,
-
-    // identical result set, produced by the block-partitioned sweep
-    "q_embed_dedup_dist" -> embedDedupOracleSql,
-
-    "q_norm_stats" ->
-      """SELECT label, count(*) AS n,
-        |  round(CAST(sum(CAST(round((sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS avg_norm
-        |FROM embeddings GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // int8 scalar quantization: per-dim min/max grid, affine codes in
-    // [-128, 127] (integer stats compare exactly), 6-dp reconstruction MSE
-    // (a vector's components aggregate in dimension order on both engines)
-    "q_embed_quantize" ->
-      """WITH x AS (SELECT vec_id,
-        |    CAST(unnest(embedding) AS DOUBLE) AS v,
-        |    generate_subscripts(embedding, 1) AS pos
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |st AS (SELECT pos, min(v) AS mn, max(v) AS mx FROM x GROUP BY pos),
-        |c AS (SELECT vec_id, v, mn, mx,
-        |    CAST(least(greatest(round((v - mn) / ((mx - mn) / 255.0)), 0), 255) AS BIGINT) - 128 AS code
-        |  FROM x JOIN st USING (pos) WHERE mx > mn)
-        |SELECT vec_id,
-        |  CAST(sum(code) AS BIGINT) AS code_sum,
-        |  min(code) AS code_min, max(code) AS code_max,
-        |  CAST(count(*) AS BIGINT) AS n_dims,
-        |  round(CAST(sum(CAST(round(pow(v - (mn + (code + 128) * ((mx - mn) / 255.0)), 2) * 1000000000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round(pow(v - (mn + (code + 128) * ((mx - mn) / 255.0)), 2) * 1000000000000.0) AS BIGINT)) * 1000000000000.0), 6) AS mse
-        |FROM c GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "q_downsample_stateful" -> downsampleStatefulSql(6L * 3600L * 1000000L, 50.0),
-
-    "q_alerts" -> alertsSql,
-
-    "q_simhash_pairs" -> simhashPairsSql(prefixBits = 16, maxHamming = 8),
-
-    // same jp CTE as q_jaccard/q_jaccard_dist, over the skewed derived text
-    "q_jaccard_ppjoin" ->
-      s"""WITH ${jaccardPairsCtes(zipfFixtureSql("//", "VARCHAR"))}
-         |SELECT d1, d2, jaccard FROM jp ORDER BY d1, d2""".stripMargin,
-
-    // F4 hformat: the oracle is the reference-generated fixture's expected
-    // column verbatim — a hash mismatch means the native expr diverged from
-    // the reference on a concrete case
-    "q_hformat" ->
-      // `value + 0.0`: the fixture contains literal -0.0 inputs, and the
-      // engine's emission contract canonicalizes signed zeros (the `got`
-      // STRING still carries the sign — ' -0e+00' — so nothing is lost)
-      s"""SELECT value + 0.0 AS value, fmt_len, expected AS got
-         |FROM read_csv('$hformatCasesPath', delim='\\t', header=false,
-         |  columns={'value':'DOUBLE','fmt_len':'INTEGER','expected':'VARCHAR'})
-         |ORDER BY value, fmt_len, got""".stripMargin,
-
-    "q_format_pack" ->
-      """SELECT event_id,
-        |  strftime(make_timestamp((epoch_us(ts) // 1000000) * 1000000), '%Y-%b-%d %H:%M:%S') AS t_fmt,
-        |  strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d %H:%M:%S.%g') AS iso,
-        |  substr(lower(hex((epoch_us(ts) // 1000000) * 10000)), 1,
-        |         length(lower(hex((epoch_us(ts) // 1000000) * 10000))) - 1) AS thash,
-        |  CASE event_id % 3 WHEN 0 THEN 'No' WHEN 1 THEN 'Yes' ELSE 'Unknown' END AS yn,
-        |  'Unknown' AS yn_raw,
-        |  coalesce(CASE event_type
-        |    WHEN 'click' THEN (['idle','busy','fault'])[CAST(event_id % 5 AS INT) + 1]
-        |    WHEN 'view' THEN (['off','on'])[CAST(event_id % 5 AS INT) + 1]
-        |    WHEN 'purchase' THEN (['zero','one','two','three'])[CAST(event_id % 5 AS INT) + 1]
-        |    END, '(none)') AS enum_label
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_time_parse" -> timeParseSql,
-
-    "q_instrument_snapshot" -> instrumentSnapshotSql(TMID),
-
-    "q_heartbeat" -> heartbeatSql(T1, nPvs = 5, maxBeatsPerGap = 80),
-
-    "q_knn_bucketed" -> knnBucketedSql(k = 5, planes = 4, dim = 64),
-
-    // multi-probe: the bucketed CTE with single-bit-flip probe membership
-    "q_knn_multiprobe" -> knnMultiProbeSql(k = 5, planes = 4, dim = 64),
-
-    // stub-codec byte histogram over ASCII payloads; FLOAT division
-    // mirrored so round(.., 6) agrees with the operator's Float math
-    "q_media_features" ->
-      """WITH b AS (
-        |  SELECT doc_id AS media_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |         WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-        |    list_transform(generate_series(1, length(text)),
-        |                   i -> unicode(substr(text, i, 1)) // 32) AS bins,
-        |    length(text) AS n
-        |  FROM documents)
-        |SELECT media_id, kind,
-        |  round(CAST(CAST(len(list_filter(bins, x -> x = 1)) AS FLOAT)
-        |             / CAST(n AS FLOAT) AS DOUBLE), 6) AS f1,
-        |  round(CAST(CAST(len(list_filter(bins, x -> x = 3)) AS FLOAT)
-        |             / CAST(n AS FLOAT) AS DOUBLE), 6) AS f3
-        |FROM b ORDER BY media_id""".stripMargin,
-
-    "q_run_registry" ->
-      s"""WITH r AS (
-         |  SELECT epoch_us(ts) // $RUN_WEEK_US AS run, min(epoch_us(ts)) AS start_us,
-         |    max(epoch_us(ts)) AS stop_us, count(*) AS n
-         |  FROM events GROUP BY 1)
-         |SELECT run, start_us, stop_us, n, run = (SELECT max(run) FROM r) AS current
-         |FROM r ORDER BY run""".stripMargin,
-
-    "q_distinct_users" -> distinctUsersSql,
-
-    // identical result, produced by the salted two-phase plan
-    "q_distinct_users_salted" -> distinctUsersSql,
-
-    // long-format class centroids: one row per (label, dim)
-    "q_label_centroids" ->
-      """WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |x AS (SELECT label, unnest(list_transform(generate_series(1, len(v)),
-        |    i -> {'dim': i - 1, 'x': v[i]})) AS u FROM e)
-        |SELECT label, CAST(u.dim AS BIGINT) AS dim, count(*) AS n,
-        |  round(CAST(sum(CAST(round((u.x) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((u.x) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS mean
-        |FROM x GROUP BY 1, 2 ORDER BY label, dim""".stripMargin,
-
-    "q_topk_users" ->
-      """SELECT user_id,
-        |  round(CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0, 3) AS total,
-        |  count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY total DESC, user_id LIMIT 10""".stripMargin,
-
-    "q_windowed_counts" ->
-      """SELECT epoch_us(date_trunc('day', ts)) AS day_us, event_type,
-        |  count(*) AS n,
-        |  round(CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0, 3) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_media_stats" ->
-      """SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |            WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  count(*) AS n,
-        |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-        |  round(avg(octet_length(encode(text))), 3) AS avg_bytes
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_props_json" ->
-      """SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // F9's NUL truncation makes the decoded waveform exactly event_type
-    "q_string_table" ->
-      s"""SELECT epoch_us(ts) AS ts_us,
-         |  strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d %H:%M:%S.%g') AS iso,
-         |  event_type AS value
-         |FROM events
-         |WHERE event_type = 'view' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $TMID
-         |ORDER BY ts_us""".stripMargin,
-
-    "q_plot_trace" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_id, value FROM events
-         |  WHERE event_type = 'error' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $T1),
-         |b AS (SELECT quantile_cont(CAST(value AS DOUBLE), CAST(0.1 AS DOUBLE)) AS lo,
-         |             quantile_cont(CAST(value AS DOUBLE), CAST(0.9 AS DOUBLE)) AS hi FROM e),
-         |r AS (SELECT ts_us, event_id, value, row_number() OVER (ORDER BY ts_us, event_id) AS rn FROM e)
-         |SELECT ts_us, event_id,
-         |  strftime(make_timestamp(ts_us), '%Y-%m-%d %H:%M:%S.%g') AS x,
-         |  CAST(value AS DOUBLE) AS y
-         |FROM r, b
-         |WHERE (rn - 1) % 5 = 0 OR value < lo OR value > hi
-         |ORDER BY ts_us, event_id""".stripMargin,
-
-    "q_export_rows" ->
-      s"""SELECT event_id, epoch_us(ts) AS ts_us,
-         |  strftime(make_timestamp(epoch_us(ts)), '%Y%m%d %H%M%S') AS datestr,
-         |  strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d %H:%M:%S.%g') AS iso,
-         |  value
-         |FROM events
-         |WHERE event_type = 'signup' AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $T1
-         |ORDER BY ts_us, event_id""".stripMargin,
-
-    "q_template_parse" ->
-      s"""WITH raw AS (
-         |  SELECT row_number() OVER () AS rid, trim(line) AS body
-         |  FROM read_csv('${referenceInputs("q_template_parse")}', delim='\t',
-         |                header=false, quote='', parallel=false,
-         |                columns={'line': 'VARCHAR'})),
-         |l AS (
-         |  SELECT rid, body FROM raw
-         |  WHERE length(body) >= 2 AND body NOT LIKE '#%'),
-         |p AS (
-         |  SELECT rid, body,
-         |         CASE WHEN body LIKE '[%' THEN 'section'
-         |              WHEN body LIKE '--%' THEN 'hr'
-         |              WHEN body LIKE '<>%' THEN 'space'
-         |              ELSE 'row' END AS kind,
-         |         CASE WHEN body LIKE '[%'
-         |              THEN regexp_extract(body, '^\\[([^\\]]*)', 1) END AS section,
-         |         string_split(body, '|') AS parts
-         |  FROM l),
-         |f AS (
-         |  SELECT rid, kind, parts,
-         |         last_value(section IGNORE NULLS) OVER (
-         |           ORDER BY rid
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sectionf
-         |  FROM p),
-         |n AS (
-         |  SELECT rid, kind, sectionf,
-         |         CASE WHEN kind = 'row' THEN list_transform(
-         |           regexp_split_to_array(trim(parts[1]), '[,\\s]+'),
-         |           x -> CASE WHEN contains(trim(regexp_replace(x, '[;#].*', '', 's')), '.')
-         |                THEN trim(regexp_replace(x, '[;#].*', '', 's'))
-         |                ELSE trim(regexp_replace(x, '[;#].*', '', 's')) || '.VAL' END) END AS names,
-         |         CASE WHEN kind = 'row' THEN coalesce(trim(parts[2]), '') END AS rawdesc,
-         |         CASE WHEN trim(coalesce(parts[3], '')) = 'yes/no' THEN 1 ELSE 0 END AS yn
-         |  FROM f)
-         |SELECT kind, coalesce(sectionf, '') AS section,
-         |  coalesce(CASE WHEN kind = 'row' THEN array_to_string(
-         |    list_transform(names, x -> x || '=' || yn), ',') END, '') AS pvs,
-         |  coalesce(CASE WHEN kind = 'row' THEN
-         |    CASE WHEN length(rawdesc) > 0 THEN rawdesc
-         |         ELSE array_to_string(names, ', ') END END, '') AS description
-         |FROM n
-         |ORDER BY kind, section, pvs, description""".stripMargin,
-
-    "q_clean_value" ->
-      s"""WITH r AS (
-         |  SELECT event_id,
-         |         coalesce(CASE WHEN event_id % 3 = 0
-         |                THEN 'b''' || CAST(CAST(floor(value * 100) AS BIGINT) AS VARCHAR) || ''''
-         |              WHEN event_id % 3 = 1
-         |                THEN CAST(CAST(floor(value * 100) AS BIGINT) AS VARCHAR)
-         |              ELSE 'x' || event_type END, '') AS stored
-         |  FROM events)
-         |SELECT event_id, stored,
-         |  TRY_CAST(regexp_replace(stored, '^b''(.*)''$$', '\\1') AS DOUBLE) AS parsed
-         |FROM r ORDER BY event_id, stored""".stripMargin,
-
-    "q_pvlist_source" ->
-      s"""WITH l AS (
-         |  SELECT trim(regexp_replace(line, '#.*$$', '')) AS body
-         |  FROM read_csv('${referenceInputs("q_pvlist_source")}', delim='\t',
-         |                header=false, quote='', columns={'line': 'VARCHAR'})),
-         |x AS (
-         |  SELECT unnest(regexp_split_to_array(body, '[,\\s]+')) AS pvname
-         |  FROM l WHERE body <> '')
-         |SELECT pvname FROM x WHERE pvname <> '' ORDER BY pvname""".stripMargin,
-
-    "q_clean_string" ->
-      s"""SELECT doc_id, trim(regexp_replace(text, '[;#].*', '', 's')) AS clean
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // cache-dump import: DuckDB parses the reference's production dump
-    // INDEPENDENTLY (read_csv with quote=''' escape=\ handles the
-    // embedded newlines and \' escapes; '(' and ');' shells stripped in
-    // SQL) — a hash match means both parsers recover identical fields
-    "q_cache_import" ->
-      s"""SELECT CAST(replace(column0, '(', '') AS BIGINT) AS id,
-         |       column1 AS pvname, column2 AS type, column3 AS value,
-         |       column4 AS cvalue,
-         |       CAST(rtrim(column5, ');') AS BIGINT) AS ts
-         |FROM read_csv('${referenceInputs("q_cache_import")}', delim=',',
-         |              quote='''', escape='\\', header=false,
-         |              allow_quoted_nulls=false,
-         |              columns={'column0': 'VARCHAR', 'column1': 'VARCHAR',
-         |                       'column2': 'VARCHAR', 'column3': 'VARCHAR',
-         |                       'column4': 'VARCHAR', 'column5': 'VARCHAR'})
-         |ORDER BY id""".stripMargin,
-
-    // zarr export→re-read round trip: the oracle applies the SAME
-    // selection directly to the parquet — a hash match proves the zarr v2
-    // store preserved (pvname, ts, value) bit-exactly AND the windowing
-    // reproduces the reference's slice quirks (archiver.py:152-175):
-    // i0 steps one EXTRA row back when a pre-tmin row exists at a positive
-    // index; when nothing precedes tmin, the `except: i0 = 1` fallback is
-    // itself decremented by the `if i0 > 0: i0 -= 1` that runs AFTER the
-    // except, so the reference ends at i0 = 0 and KEEPS row 0 (r10 ADVICE
-    // fix — both sides previously pinned 1); i1 falls back to n when
-    // nothing precedes tmax
-    "q_zarr_scan" ->
-      s"""WITH e AS (
-         |  SELECT 'EV:' || event_type AS pvname, epoch_us(ts) AS tus,
-         |         max(value) AS dvalue
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-         |s AS (
-         |  SELECT pvname, tus / 1000000.0 AS ts, dvalue,
-         |         row_number() OVER (PARTITION BY pvname ORDER BY tus) - 1 AS idx
-         |  FROM e),
-         |b AS (
-         |  SELECT pvname,
-         |         max(CASE WHEN ts < 1705017600.0 THEN idx END) AS lt0,
-         |         max(CASE WHEN ts < 1705449600.0 THEN idx END) AS lt1,
-         |         count(*) AS n
-         |  FROM s GROUP BY pvname),
-         |r AS (
-         |  SELECT pvname,
-         |         CASE WHEN lt0 IS NULL THEN 0
-         |              WHEN lt0 > 0 THEN lt0 - 1
-         |              ELSE lt0 END AS i0,
-         |         coalesce(lt1, n) AS i1
-         |  FROM b)
-         |SELECT s.pvname, s.ts, s.dvalue
-         |FROM s JOIN r USING (pvname)
-         |WHERE s.idx BETWEEN r.i0 AND r.i1
-         |ORDER BY pvname, ts""".stripMargin,
-
-    "q_split_assign" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN ${docBucketSql(100)} < 80 THEN 'train'
-         |       WHEN ${docBucketSql(100)} < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_sample_stratified" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE ${docBucketSql(1000000)} <
-         |  CASE WHEN lang = 'fr' THEN 250000
-         |       WHEN lang = 'en' THEN 500000
-         |       ELSE 100000 END
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_source_cap" ->
-      s"""SELECT doc_id, source, cap_rank FROM (
-         |  SELECT doc_id, source, CAST(row_number() OVER (
-         |    PARTITION BY source
-         |    ORDER BY ${docBucketSql(1073741824)}, doc_id) AS BIGINT) AS cap_rank
-         |  FROM documents)
-         |WHERE cap_rank <= 20 ORDER BY source, cap_rank""".stripMargin,
-
-    "q_token_budget" ->
-      s"""SELECT doc_id, source, cum_chars FROM (
-         |  SELECT doc_id, source, n_chars, CAST(sum(n_chars) OVER (
-         |    PARTITION BY source ORDER BY ${docBucketSql(1073741824)}, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_chars
-         |  FROM documents)
-         |WHERE cum_chars - n_chars < 3000 ORDER BY source, cum_chars""".stripMargin,
-
-    "q_contamination" ->
-      s"""WITH ${shingleCte(4)},
-         |ev AS (SELECT DISTINCT shingle FROM s WHERE doc < 10)
-         |SELECT c.doc AS doc_id, CAST(count(*) AS BIGINT) AS n_shared
-         |FROM s c JOIN ev USING (shingle)
-         |WHERE c.doc >= 10
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "q_repetition" ->
-      s"""WITH ${gramCte(2)},
-         |c AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-         |        count(*) AS n_distinct, max(c) AS top FROM c GROUP BY 1)
-         |SELECT doc_id, n_grams, n_distinct,
-         |  round(1.0 - CAST(n_distinct AS DOUBLE) / n_grams, 6) AS dup_frac,
-         |  round(CAST(top AS DOUBLE) / n_grams, 6) AS top_frac
-         |FROM a ORDER BY doc_id""".stripMargin,
-
-    // transitive closure over the symmetric pair edges; component = the
-    // smallest id reachable (DuckDB recursive CTE mirrors the engine's
-    // hash-min label-propagation fixpoint)
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE ${jaccardPairsCtes()},
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a)
-         |SELECT doc, component FROM comp ORDER BY doc""".stripMargin,
-
-    // identical CC oracle over the q_embed_dedup cosine-pair CTE
-    "q_semantic_clusters" ->
-      s"""WITH RECURSIVE e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
-         |        round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |      FROM e0 a, e0 b WHERE a.vec_id < b.vec_id),
-         |jp AS (SELECT d1, d2 FROM p WHERE sim >= 0.45),
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a)
-         |SELECT doc, component FROM comp ORDER BY doc""".stripMargin,
-
-    // the per-stage oracles composed: recursive-CTE clusters -> drop list,
-    // repetition + contamination filters, hash cap, hash split
-    "q_corpus_manifest" ->
-      s"""WITH RECURSIVE ${jaccardPairsCtes()},
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         |dropdup AS (SELECT a AS doc FROM reach GROUP BY a HAVING least(a, min(b)) <> a),
-         |${gramCte(2)},
-         |gc AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-         |lowrep AS (SELECT doc_id FROM gc GROUP BY doc_id
-         |           HAVING round(1.0 - CAST(count(*) AS DOUBLE) / CAST(sum(c) AS BIGINT), 6) <= 0.05),
-         |${shingleCte(4, "4")},
-         |contam AS (SELECT DISTINCT c.doc FROM s4 c
-         |           JOIN (SELECT DISTINCT shingle FROM s4 WHERE doc < 10) ev USING (shingle)
-         |           WHERE c.doc >= 10),
-         |kept AS (SELECT d.doc_id, d.source FROM documents d
-         |         JOIN lowrep USING (doc_id)
-         |         WHERE d.doc_id >= 10
-         |           AND d.doc_id NOT IN (SELECT doc FROM dropdup)
-         |           AND d.doc_id NOT IN (SELECT doc FROM contam)),
-         |capped AS (SELECT doc_id, source FROM (
-         |    SELECT doc_id, source, row_number() OVER (
-         |      PARTITION BY source ORDER BY ${docBucketSql(1073741824)}, doc_id) AS rn
-         |    FROM kept) WHERE rn <= 40)
-         |SELECT doc_id, source,
-         |  CASE WHEN ${docBucketSql(100)} < 80 THEN 'train'
-         |       WHEN ${docBucketSql(100)} < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM capped ORDER BY doc_id""".stripMargin,
-
-    "q_pack_sequences" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    ${docBucketSql(8)} AS shard,
-         |    CAST('0x' || substr(md5('graft' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-         |      % 1073741824 AS ord,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (SELECT doc_id, shard, n_tokens,
-         |    COALESCE(CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY ord, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS cum
-         |  FROM d)
-         |SELECT doc_id, shard, n_tokens,
-         |  CAST(floor(cum / 512.0) AS BIGINT) AS bin,
-         |  cum % 512 AS tok_offset
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_pii_redact" ->
-      s"""WITH laced AS (SELECT doc_id,
-         |  text || ' contact user' || doc_id || '@mail.example.com or +1 (555) 000-'
-         |       || doc_id || ' ip 10.0.' || (doc_id % 256) || '.7' AS text
-         |  FROM documents),
-         |r1 AS (SELECT doc_id, text,
-         |    regexp_replace(text, '$PII_EMAIL', '<EMAIL>', 'g') AS t1 FROM laced),
-         |r2 AS (SELECT doc_id, text, t1,
-         |    regexp_replace(t1, '$PII_IPV4', '<IP>', 'g') AS t2 FROM r1)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '$PII_EMAIL')) AS BIGINT) AS n_email,
-         |  CAST(len(regexp_extract_all(t1, '$PII_IPV4')) AS BIGINT) AS n_ip,
-         |  CAST(len(regexp_extract_all(t2, '$PII_PHONE')) AS BIGINT) AS n_phone,
-         |  regexp_replace(t2, '$PII_PHONE', '<PHONE>', 'g') AS redacted
-         |FROM r2 ORDER BY doc_id""".stripMargin,
-
-    // T6 request-queue merge: arg_max = Spark max_by (ts = o_orderkey is
-    // unique, so neither engine hits tie semantics)
-    "q_requests" ->
-      """WITH dim AS (SELECT 's' || s_suppkey AS pvname,
-        |    CASE WHEN s_suppkey % 3 = 0 THEN 'no' ELSE 'yes' END AS active,
-        |    CAST(s_nationkey AS BIGINT) AS nation FROM supplier),
-        |req AS (SELECT 's' || (o_custkey % 150) AS pvname,
-        |    (['add','suspend','drop'])[CAST(o_orderkey % 3 AS INT) + 1] AS action,
-        |    o_orderkey AS ts FROM orders),
-        |latest AS (SELECT pvname, arg_max(action, ts) AS action FROM req GROUP BY 1)
-        |SELECT coalesce(d.pvname, l.pvname) AS pvname,
-        |  CASE WHEN l.action = 'suspend' THEN 'no'
-        |       WHEN l.action = 'add' THEN 'yes'
-        |       ELSE coalesce(d.active, 'yes') END AS active,
-        |  coalesce(d.nation, -1) AS nation
-        |FROM dim d FULL OUTER JOIN latest l ON d.pvname = l.pvname
-        |WHERE (d.pvname IS NOT NULL OR l.action = 'add')
-        |  AND (l.action IS NULL OR l.action <> 'drop')
-        |ORDER BY pvname""".stripMargin,
-
-    // fixed 64-token windows, 16-token overlap -> step 48; DuckDB list
-    // slices are 1-based inclusive and clamp at the end like Spark's slice
-    "q_chunk_docs" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT doc_id, toks, len(toks) AS n,
-        |    ((greatest(len(toks) - 64, 0) + 47) // 48) + 1 AS nc FROM t),
-        |e AS (SELECT doc_id, toks, n,
-        |    unnest(generate_series(0, nc - 1)) AS chunk_id FROM c)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(toks[chunk_id * 48 + 1 : chunk_id * 48 + 64], ' ') AS chunk,
-        |  CAST(least(64, n - chunk_id * 48) AS BIGINT) AS n_tokens
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // self-trained add-k bigram LM; the score reuses the EXACT expression
-    // tree of the Column plan: (c2 + k) / (c1 + k * v), log2, avg, negate,
-    // round — double arithmetic is order-sensitive
-    "q_lm_xent" -> lmXentSql,
-
-    // grid rows interleave AFTER their same-timestamp sample (is_grid
-    // orders last), so "prev" is at-or-before and "next" strictly after;
-    // head-of-series grid points have no value -> NaN (driver hygiene)
-    "q_interpolate" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(value) AS v
-         |  FROM events WHERE event_type = 'click'
-         |    AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $TMID AND user_id < 40
-         |  GROUP BY 1, 2),
-         |grid AS (SELECT pvname, unnest(generate_series($T0, $TMID,
-         |    ${6L * 3600L * 1000000L})) AS ts_us
-         |  FROM (SELECT DISTINCT pvname FROM s)),
-         |u AS (SELECT pvname, ts_us, v, 0 AS is_grid FROM s
-         |  UNION ALL SELECT pvname, ts_us, NULL, 1 FROM grid),
-         |f AS (SELECT pvname, ts_us, is_grid,
-         |    last_value(CASE WHEN is_grid = 0 AND v IS NOT NULL THEN v END
-         |      IGNORE NULLS) OVER wp AS pv,
-         |    last_value(CASE WHEN is_grid = 0 AND v IS NOT NULL THEN ts_us END
-         |      IGNORE NULLS) OVER wp AS pt,
-         |    first_value(CASE WHEN is_grid = 0 AND v IS NOT NULL THEN v END
-         |      IGNORE NULLS) OVER wn AS nv,
-         |    first_value(CASE WHEN is_grid = 0 AND v IS NOT NULL THEN ts_us END
-         |      IGNORE NULLS) OVER wn AS nt
-         |  FROM u
-         |  WINDOW wp AS (PARTITION BY pvname ORDER BY ts_us, is_grid
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |    wn AS (PARTITION BY pvname ORDER BY ts_us, is_grid
-         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-         |SELECT pvname, ts_us,
-         |  coalesce(round(CASE
-         |    WHEN pt IS NOT NULL AND nt IS NOT NULL
-         |      THEN pv + (nv - pv) * ((ts_us - pt) / (nt - pt))
-         |    WHEN pt IS NOT NULL THEN pv END, 6), 'NaN'::DOUBLE) AS value
-         |FROM f WHERE is_grid = 1 ORDER BY pvname, ts_us""".stripMargin,
-
-    // daily OHLC rollup: dedupe per (key, ts) first so arg_min/arg_max are
-    // tie-free; open/high/low/close are exact data values (no rounding)
-    "q_ohlc" ->
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    max(CAST(value AS DOUBLE)) AS v
-         |  FROM events GROUP BY 1, 2)
-         |SELECT pvname, ts_us // 86400000000 AS bucket,
-         |  arg_min(v, ts_us) AS open, max(v) AS high, min(v) AS low,
-         |  arg_max(v, ts_us) AS close, CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(sum(CAST(round((v) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((v) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS mean
-         |FROM s GROUP BY 1, 2 ORDER BY pvname, bucket""".stripMargin,
-
-    // fixed-range histogram: identical clamp expression on both engines
-    // ((500-0)/20 = 25.0 exact, so the bin arithmetic is exact-double)
-    "q_histogram" ->
-      s"""WITH s AS (SELECT event_type AS pvname, CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL)
-         |SELECT pvname,
-         |  CAST(least(greatest(floor((v - 0.0) / 25.0), 0), 19) AS BIGINT) AS bin,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(0.0 AS DOUBLE) + CAST(least(greatest(floor((v - 0.0) / 25.0), 0), 19) AS BIGINT) * CAST(25.0 AS DOUBLE), 6) AS bin_lo
-         |FROM s GROUP BY 1, 2 ORDER BY pvname, bin""".stripMargin,
-
-    // per-key delta / rate of change: lag over the deduped series; rows
-    // without a predecessor are dropped on both sides
-    "q_delta_rate" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(CAST(value AS DOUBLE)) AS v
-         |  FROM events WHERE event_type = 'click'
-         |    AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $TMID
-         |  GROUP BY 1, 2),
-         |d AS (SELECT pvname, ts_us, v,
-         |    v - lag(v) OVER w AS dd, ts_us - lag(ts_us) OVER w AS dt_us
-         |  FROM s WINDOW w AS (PARTITION BY pvname ORDER BY ts_us))
-         |SELECT pvname, ts_us, v AS value, round(dd, 6) + 0.0 AS delta, dt_us,
-         |  coalesce(CASE WHEN dt_us > 0
-         |      THEN round(dd / (dt_us / 1000000.0), 6) + 0.0 END,
-         |    'NaN'::DOUBLE) AS rate_per_sec
-         |FROM d WHERE dd IS NOT NULL ORDER BY pvname, ts_us""".stripMargin,
-
-    // EWMA: the sequential fold re-expressed as a per-prefix list_reduce
-    // (same technique as q_downsample_stateful/q_alerts). 0.75*a + 0.25*x
-    // mirrors the Scala fold's (1-alpha)*s + alpha*v literally — both
-    // constants are exact doubles, so pre-round values are bit-identical.
-    "q_ewma" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(CAST(value AS DOUBLE)) AS v
-         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         |g AS (SELECT pvname, list(ts_us ORDER BY ts_us) AS tss,
-         |    list(v ORDER BY ts_us) AS vs
-         |  FROM s GROUP BY pvname),
-         |u AS (SELECT pvname,
-         |    unnest(tss) AS ts_us,
-         |    unnest(vs) AS value,
-         |    unnest([floor(list_reduce(vs[1:i], (a, x) -> 0.75 * a + 0.25 * x) * 1000000.0) / 1000000.0
-         |            FOR i IN generate_series(1, len(vs))]) AS ewma
-         |  FROM g)
-         |SELECT pvname, ts_us, value, ewma FROM u
-         |ORDER BY pvname, ts_us""".stripMargin,
-
-    // Holt level+trend: the two-scalar fold state rides in ONE VARCHAR
-    // 'l|b' (DuckDB 1.0 list_reduce mis-threads struct accumulators — the
-    // q_downsample_stateful workaround; double<->varchar casts are
-    // shortest-round-trip so state stays bit-exact). The level expression
-    // is inlined twice in the trend update — recomputing an identical
-    // double expression yields identical bits. 0.5/0.25/0.75 are exact
-    // dyadic doubles; op order mirrors TimeSeries.holt literally.
-    "q_holt" -> {
-      val A = "string_split(a,'|')"
-      val l = s"CAST($A[1] AS DOUBLE)"
-      val b = s"CAST($A[2] AS DOUBLE)"
-      val xv = "CAST(x AS DOUBLE)"
-      val lNew = s"(0.5 * $xv + 0.5 * ($l + $b))"
-      val bNew = s"(0.25 * ($lNew - $l) + 0.75 * $b)"
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(CAST(value AS DOUBLE)) AS v
-         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         |g AS (SELECT pvname, list(ts_us ORDER BY ts_us) AS tss,
-         |    list(v ORDER BY ts_us) AS vs
-         |  FROM s GROUP BY pvname),
-         |u AS (SELECT pvname,
-         |    unnest(tss) AS ts_us,
-         |    unnest(vs) AS value,
-         |    unnest([list_reduce(
-         |        list_prepend(CAST(vs[1] AS VARCHAR) || '|' || CAST(CAST(0 AS DOUBLE) AS VARCHAR),
-         |                     [CAST(x AS VARCHAR) FOR x IN vs[2:i]]),
-         |        (a, x) -> CAST($lNew AS VARCHAR) || '|' || CAST($bNew AS VARCHAR))
-         |      FOR i IN generate_series(1, len(vs))]) AS st
-         |  FROM g)
-         |SELECT pvname, ts_us, value,
-         |  floor(CAST(string_split(st,'|')[1] AS DOUBLE) * 1000000.0) / 1000000.0 AS level,
-         |  floor(CAST(string_split(st,'|')[2] AS DOUBLE) * 1000000.0) / 1000000.0 AS trend
-         |FROM u ORDER BY pvname, ts_us""".stripMargin
-    },
-
-    // winsorized robust stats: quantile_cont == Spark's exact percentile
-    // (the q_bands parity); the moment pass mirrors the engine's
-    // clamp+avg expressions, greatest(_, 0) guards the sqrt cancellation
-    "q_winsorize" ->
-      """WITH b AS (SELECT event_type, CAST(value AS DOUBLE) AS v
-        |           FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |f AS (SELECT event_type,
-        |        quantile_cont(v, CAST(0.05 AS DOUBLE)) AS lo,
-        |        quantile_cont(v, CAST(0.95 AS DOUBLE)) AS hi
-        |      FROM b GROUP BY 1),
-        |c AS (SELECT b.event_type, v, lo, hi, least(greatest(v, lo), hi) AS w
-        |      FROM b JOIN f USING (event_type))
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN v < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_lo,
-        |  CAST(sum(CASE WHEN v > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_hi,
-        |  round(min(lo), 6) AS p_lo, round(min(hi), 6) AS p_hi,
-        |  round(CAST(sum(CAST(round(w * 1000.0) AS BIGINT)) AS BIGINT)::DOUBLE / 1000.0 / count(*), 6) AS win_mean,
-        |  round(sqrt(greatest(
-        |    CAST(sum(CAST(round(w * 1000.0) AS BIGINT) * CAST(round(w * 1000.0) AS BIGINT)) AS BIGINT)::DOUBLE / 1000000.0 / count(*) -
-        |    (CAST(sum(CAST(round(w * 1000.0) AS BIGINT)) AS BIGINT)::DOUBLE / 1000.0 / count(*)) *
-        |    (CAST(sum(CAST(round(w * 1000.0) AS BIGINT)) AS BIGINT)::DOUBLE / 1000.0 / count(*)), CAST(0 AS DOUBLE))), 6) AS win_std
-        |FROM c GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // correlation matrix over the q_locf_align grid: explicit-sum Pearson
-    // (identical formula both engines — not each engine's corr() internals);
-    // values quantized to 1e-3-grid BIGINTs before summation so the moment
-    // sums are exact integers (Pearson is scale-invariant, so no de-scaling)
-    "q_pv_corr" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_type, value FROM events
-         |  WHERE event_type IN ('click', 'purchase', 'view') AND epoch_us(ts) < $T1),
-         |g AS (SELECT ts_us,
-         |        max(CASE WHEN event_type = 'click' THEN value END) AS c0,
-         |        max(CASE WHEN event_type = 'purchase' THEN value END) AS c1,
-         |        max(CASE WHEN event_type = 'view' THEN value END) AS c2
-         |      FROM e GROUP BY ts_us),
-         |f AS (SELECT ts_us,
-         |        last_value(c0 IGNORE NULLS) OVER w AS a0,
-         |        last_value(c1 IGNORE NULLS) OVER w AS b0,
-         |        last_value(c2 IGNORE NULLS) OVER w AS c0
-         |      FROM g WINDOW w AS (ORDER BY ts_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |al0 AS (SELECT a0, b0, c0 FROM f
-         |       WHERE ts_us >= $T0 AND a0 IS NOT NULL AND b0 IS NOT NULL AND c0 IS NOT NULL),
-         |al AS (SELECT CAST(round(CAST(a0 AS DOUBLE) * 1000.0) AS BIGINT) AS a,
-         |              CAST(round(CAST(b0 AS DOUBLE) * 1000.0) AS BIGINT) AS b,
-         |              CAST(round(CAST(c0 AS DOUBLE) * 1000.0) AS BIGINT) AS c
-         |       FROM al0),
-         |sums AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(a) AS BIGINT) AS sxa, CAST(sum(a*a) AS BIGINT) AS sxxa,
-         |    CAST(sum(b) AS BIGINT) AS sxb, CAST(sum(b*b) AS BIGINT) AS sxxb,
-         |    CAST(sum(c) AS BIGINT) AS sxc, CAST(sum(c*c) AS BIGINT) AS sxxc,
-         |    CAST(sum(a*b) AS BIGINT) AS sab, CAST(sum(a*c) AS BIGINT) AS sac,
-         |    CAST(sum(b*c) AS BIGINT) AS sbc
-         |  FROM al),
-         |p AS (
-         |  SELECT 'click' AS k1, 'purchase' AS k2, n, sab AS sxy,
-         |         sxa AS sx1, sxxa AS sxx1, sxb AS sx2, sxxb AS sxx2 FROM sums
-         |  UNION ALL
-         |  SELECT 'click', 'view', n, sac, sxa, sxxa, sxc, sxxc FROM sums
-         |  UNION ALL
-         |  SELECT 'purchase', 'view', n, sbc, sxb, sxxb, sxc, sxxc FROM sums)
-         |SELECT k1, k2, CAST(n AS BIGINT) AS n,
-         |  coalesce(CASE WHEN sqrt(n::DOUBLE * sxx1::DOUBLE - sx1::DOUBLE * sx1::DOUBLE) *
-         |                sqrt(n::DOUBLE * sxx2::DOUBLE - sx2::DOUBLE * sx2::DOUBLE) > 0
-         |      THEN round((n::DOUBLE * sxy::DOUBLE - sx1::DOUBLE * sx2::DOUBLE) /
-         |        (sqrt(n::DOUBLE * sxx1::DOUBLE - sx1::DOUBLE * sx1::DOUBLE) *
-         |         sqrt(n::DOUBLE * sxx2::DOUBLE - sx2::DOUBLE * sx2::DOUBLE)), 6) END,
-         |    'NaN'::DOUBLE) AS corr
-         |FROM p ORDER BY k1, k2""".stripMargin,
-
-    // downtime gaps: lag over the deduped series, keep intervals > 5 days
-    "q_gaps" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us
-         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         |d AS (SELECT pvname, lag(ts_us) OVER w AS gap_start, ts_us AS gap_end
-         |  FROM s WINDOW w AS (PARTITION BY pvname ORDER BY ts_us))
-         |SELECT pvname, gap_start, gap_end, gap_end - gap_start AS gap_us
-         |FROM d WHERE gap_start IS NOT NULL
-         |  AND gap_end - gap_start > ${5L * 86400000000L}
-         |ORDER BY pvname, gap_start""".stripMargin,
-
-    // percentile bands: exact interpolated quantiles per (series, day)
-    "q_bands" ->
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL)
-         |SELECT pvname, ts_us // 86400000000 AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  round(quantile_cont(v, CAST(0.1 AS DOUBLE)), 6) AS p10,
-         |  round(quantile_cont(v, CAST(0.5 AS DOUBLE)), 6) AS p50,
-         |  round(quantile_cont(v, CAST(0.9 AS DOUBLE)), 6) AS p90
-         |FROM s GROUP BY 1, 2 ORDER BY pvname, bucket""".stripMargin,
-
-    // autocorrelation: one lag window, per-lag conditional sums (rows where
-    // the lag exists), the shared explicit-sum Pearson formula
-    "q_acf" ->
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    max(CAST(value AS DOUBLE)) AS v
-         |  FROM events GROUP BY 1, 2),
-         |lg AS (SELECT pvname, v,
-         |    lag(v, 1) OVER w AS l1, lag(v, 2) OVER w AS l2, lag(v, 3) OVER w AS l3
-         |  FROM s WINDOW w AS (PARTITION BY pvname ORDER BY ts_us)),
-         |a AS (
-         |  SELECT pvname, 1 AS lag_i, CAST(count(*) AS DOUBLE) AS n,
-         |      sum(v) AS sx, sum(v*v) AS sxx, sum(l1) AS sy, sum(l1*l1) AS syy,
-         |      sum(v*l1) AS sxy
-         |    FROM lg WHERE l1 IS NOT NULL GROUP BY pvname
-         |  UNION ALL
-         |  SELECT pvname, 2, CAST(count(*) AS DOUBLE),
-         |      sum(v), sum(v*v), sum(l2), sum(l2*l2), sum(v*l2)
-         |    FROM lg WHERE l2 IS NOT NULL GROUP BY pvname
-         |  UNION ALL
-         |  SELECT pvname, 3, CAST(count(*) AS DOUBLE),
-         |      sum(v), sum(v*v), sum(l3), sum(l3*l3), sum(v*l3)
-         |    FROM lg WHERE l3 IS NOT NULL GROUP BY pvname)
-         |SELECT pvname, CAST(lag_i AS BIGINT) AS "lag", CAST(n AS BIGINT) AS n,
-         |  coalesce(CASE WHEN n >= 2 AND sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy) > 0
-         |      THEN round((n * sxy - sx * sy) /
-         |        (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6) END,
-         |    'NaN'::DOUBLE) AS acf
-         |FROM a ORDER BY pvname, "lag"""".stripMargin,
-
-    // per-day throttle: same row_number survivor rule
-    "q_throttle" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, event_id, value
-         |  FROM events WHERE event_type = 'click'),
-         |r AS (SELECT pvname, ts_us, event_id, value,
-         |    row_number() OVER (PARTITION BY pvname, ts_us // 86400000000
-         |      ORDER BY ts_us, event_id) AS rn
-         |  FROM s)
-         |SELECT pvname, ts_us, event_id, value FROM r WHERE rn <= 2
-         |ORDER BY pvname, ts_us, event_id""".stripMargin,
-
-    // flatline: change-flag running sum -> runs -> longest (ties earliest)
-    // via a deterministic row_number; staleness = last sample - last change
-    "q_flatline" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us,
-         |    max(floor(CAST(value AS DOUBLE) / 50.0)) AS v
-         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         |c AS (SELECT pvname, ts_us, v,
-         |    CASE WHEN lag(v) OVER w IS NULL OR v <> lag(v) OVER w THEN 1 ELSE 0 END AS chg
-         |  FROM s WINDOW w AS (PARTITION BY pvname ORDER BY ts_us)),
-         |r AS (SELECT pvname, ts_us, v,
-         |    sum(chg) OVER (PARTITION BY pvname ORDER BY ts_us
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-         |  FROM c),
-         |runs AS (SELECT pvname, run, count(*) AS len, min(ts_us) AS start_us,
-         |    max(ts_us) AS end_us, max(v) AS rv
-         |  FROM r GROUP BY 1, 2),
-         |rk AS (SELECT pvname, len, rv,
-         |    row_number() OVER (PARTITION BY pvname ORDER BY len DESC, start_us ASC) AS rn
-         |  FROM runs),
-         |top AS (SELECT pvname, CAST(len AS BIGINT) AS longest_flat, rv AS flat_value
-         |  FROM rk WHERE rn = 1),
-         |agg AS (SELECT pvname, CAST(sum(len) AS BIGINT) AS n_samples,
-         |    CAST(arg_max(len, run) AS BIGINT) AS tail_run,
-         |    CAST(max(end_us) - max(start_us) AS BIGINT) AS stale_us
-         |  FROM runs GROUP BY pvname)
-         |SELECT a.pvname AS pvname, n_samples, longest_flat, flat_value,
-         |  tail_run, stale_us
-         |FROM agg a JOIN top USING (pvname) ORDER BY pvname""".stripMargin,
-
-    // two-sided CUSUM: per-prefix folds (list_prepend injects the zero
-    // initial state); (x - 50.0 - 5.0) mirrors the Scala op order exactly,
-    // so accumulators are bit-identical; alarm tests the RAW folds, the
-    // emitted accumulators floor-quantize like q_ewma
-    "q_cusum" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(CAST(value AS DOUBLE)) AS v
-         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         |g AS (SELECT pvname, list(ts_us ORDER BY ts_us) AS tss,
-         |    list(v ORDER BY ts_us) AS vs
-         |  FROM s GROUP BY pvname),
-         |u AS (SELECT pvname,
-         |    unnest(tss) AS ts_us,
-         |    unnest(vs) AS value,
-         |    unnest([list_reduce(list_prepend(CAST(0 AS DOUBLE), vs[1:i]),
-         |        (a, x) -> greatest(CAST(0 AS DOUBLE), a + (x - 50.0 - 5.0)))
-         |      FOR i IN generate_series(1, len(vs))]) AS sp_raw,
-         |    unnest([list_reduce(list_prepend(CAST(0 AS DOUBLE), vs[1:i]),
-         |        (a, x) -> least(CAST(0 AS DOUBLE), a + (x - 50.0 + 5.0)))
-         |      FOR i IN generate_series(1, len(vs))]) AS sn_raw
-         |  FROM g)
-         |SELECT pvname, ts_us, value,
-         |  floor(sp_raw * 1000000.0) / 1000000.0 AS s_pos,
-         |  floor(sn_raw * 1000000.0) / 1000000.0 AS s_neg,
-         |  (sp_raw > 200.0 OR sn_raw < -200.0) AS alarm
-         |FROM u ORDER BY pvname, ts_us""".stripMargin,
-
-    // Spearman: integer-exact average ranks (min-rank + (ties-1)/2), then
-    // the same explicit-sum Pearson as q_pv_corr over the rank columns
-    "q_spearman" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(ts) AS ts_us, event_type, value FROM events
-         |  WHERE event_type IN ('click', 'purchase', 'view') AND epoch_us(ts) < $T1),
-         |g AS (SELECT ts_us,
-         |        max(CASE WHEN event_type = 'click' THEN value END) AS c0,
-         |        max(CASE WHEN event_type = 'purchase' THEN value END) AS c1,
-         |        max(CASE WHEN event_type = 'view' THEN value END) AS c2
-         |      FROM e GROUP BY ts_us),
-         |f AS (SELECT ts_us,
-         |        last_value(c0 IGNORE NULLS) OVER w AS a0,
-         |        last_value(c1 IGNORE NULLS) OVER w AS b0,
-         |        last_value(c2 IGNORE NULLS) OVER w AS c0
-         |      FROM g WINDOW w AS (ORDER BY ts_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |al AS (SELECT a0, b0, c0 FROM f
-         |       WHERE ts_us >= $T0 AND a0 IS NOT NULL AND b0 IS NOT NULL AND c0 IS NOT NULL),
-         |r0 AS (SELECT
-         |    CAST(rank() OVER (ORDER BY a0) AS DOUBLE) + (count(*) OVER (PARTITION BY a0) - 1) / CAST(2.0 AS DOUBLE) AS a,
-         |    CAST(rank() OVER (ORDER BY b0) AS DOUBLE) + (count(*) OVER (PARTITION BY b0) - 1) / CAST(2.0 AS DOUBLE) AS b,
-         |    CAST(rank() OVER (ORDER BY c0) AS DOUBLE) + (count(*) OVER (PARTITION BY c0) - 1) / CAST(2.0 AS DOUBLE) AS c
-         |  FROM al),
-         |r AS (SELECT CAST(round(CAST(a AS DOUBLE) * 2.0) AS BIGINT) AS a,
-         |             CAST(round(CAST(b AS DOUBLE) * 2.0) AS BIGINT) AS b,
-         |             CAST(round(CAST(c AS DOUBLE) * 2.0) AS BIGINT) AS c
-         |      FROM r0),
-         |sums AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(a) AS BIGINT) AS sxa, CAST(sum(a*a) AS BIGINT) AS sxxa,
-         |    CAST(sum(b) AS BIGINT) AS sxb, CAST(sum(b*b) AS BIGINT) AS sxxb,
-         |    CAST(sum(c) AS BIGINT) AS sxc, CAST(sum(c*c) AS BIGINT) AS sxxc,
-         |    CAST(sum(a*b) AS BIGINT) AS sab, CAST(sum(a*c) AS BIGINT) AS sac,
-         |    CAST(sum(b*c) AS BIGINT) AS sbc
-         |  FROM r),
-         |p AS (
-         |  SELECT 'click' AS k1, 'purchase' AS k2, n, sab AS sxy,
-         |         sxa AS sx1, sxxa AS sxx1, sxb AS sx2, sxxb AS sxx2 FROM sums
-         |  UNION ALL
-         |  SELECT 'click', 'view', n, sac, sxa, sxxa, sxc, sxxc FROM sums
-         |  UNION ALL
-         |  SELECT 'purchase', 'view', n, sbc, sxb, sxxb, sxc, sxxc FROM sums)
-         |SELECT k1, k2, CAST(n AS BIGINT) AS n,
-         |  coalesce(CASE WHEN sqrt(n::DOUBLE * sxx1::DOUBLE - sx1::DOUBLE * sx1::DOUBLE) *
-         |                sqrt(n::DOUBLE * sxx2::DOUBLE - sx2::DOUBLE * sx2::DOUBLE) > 0
-         |      THEN round((n::DOUBLE * sxy::DOUBLE - sx1::DOUBLE * sx2::DOUBLE) /
-         |        (sqrt(n::DOUBLE * sxx1::DOUBLE - sx1::DOUBLE * sx1::DOUBLE) *
-         |         sqrt(n::DOUBLE * sxx2::DOUBLE - sx2::DOUBLE * sx2::DOUBLE)), 6) END,
-         |    'NaN'::DOUBLE) AS corr
-         |FROM p ORDER BY k1, k2""".stripMargin,
-
-    // seasonal profile: integer hour/dow derivation (epoch is a Thursday)
-    "q_seasonal" ->
-      s"""SELECT event_type AS pvname,
-         |  (epoch_us(ts) // 3600000000) % 24 AS hour,
-         |  ((epoch_us(ts) // 86400000000) + 4) % 7 AS dow,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(sum(CAST(round((value) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((value) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS mean
-         |FROM events GROUP BY 1, 2, 3
-         |ORDER BY pvname, hour, dow""".stripMargin,
-
-    // PSI drift: one FILTERed count agg (same bin set as the engine's
-    // two-agg full-outer join), half-count Laplace smoothing, natural log
-    "q_psi" -> psiOracleSql,
-
-    // rolling-median despike: exact interpolated median over a centered
-    // ROWS frame (both engines: lower + (upper-lower)*frac on identical
-    // sorted doubles); the spike test compares against the 6-dp median
-    "q_despike" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, max(CAST(value AS DOUBLE)) AS v
-         |  FROM events WHERE event_type = 'click'
-         |    AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $TMID
-         |  GROUP BY 1, 2),
-         |m AS (SELECT pvname, ts_us, v,
-         |    round(quantile_cont(v, CAST(0.5 AS DOUBLE)) OVER (
-         |      PARTITION BY pvname ORDER BY ts_us
-         |      ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING), 6) AS med
-         |  FROM s)
-         |SELECT pvname, ts_us, v AS value, med AS median,
-         |  (abs(v - med) > 50.0) AS is_spike
-         |FROM m ORDER BY pvname, ts_us""".stripMargin,
-
-    // heatmap: day buckets x clamped value bins, one combinable agg
-    "q_heatmap" ->
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL)
-         |SELECT pvname, ts_us // 86400000000 AS bucket,
-         |  CAST(least(greatest(floor((v - 0.0) / 50.0), 0), 9) AS BIGINT) AS bin,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(0.0 AS DOUBLE) + CAST(least(greatest(floor((v - 0.0) / 50.0), 0), 9) AS BIGINT) * CAST(50.0 AS DOUBLE), 6) AS bin_lo
-         |FROM s GROUP BY 1, 2, 3 ORDER BY pvname, bucket, bin""".stripMargin,
-
-    // time-weighted average: LOCF segment weighting, pre-window arg_max
-    // seed carried to t0 (a real sample AT t0 wins via the flag argmax),
-    // covered-time normalization for keys with no seed
-    "q_twa" ->
-      s"""WITH e AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE event_type = 'click'),
-         |seed AS (SELECT pvname, $T0 AS ts_us, arg_max(v, ts_us) AS v, 0 AS fl
-         |  FROM e WHERE ts_us < $T0 GROUP BY pvname),
-         |iw AS (SELECT pvname, ts_us, max(v) AS v, 1 AS fl
-         |  FROM e WHERE ts_us >= $T0 AND ts_us < $TMID GROUP BY 1, 2),
-         |pts AS (SELECT pvname, ts_us, arg_max(v, fl) AS v
-         |  FROM (SELECT * FROM iw UNION ALL SELECT * FROM seed) GROUP BY 1, 2),
-         |seg AS (SELECT pvname, v,
-         |    coalesce(lead(ts_us) OVER (PARTITION BY pvname ORDER BY ts_us), $TMID) - ts_us AS w
-         |  FROM pts)
-         |SELECT pvname, round(CAST(sum(CAST(round(v * 1000.0) AS BIGINT) * w) AS BIGINT)::DOUBLE / 1000.0 / CAST(sum(w) AS BIGINT)::DOUBLE, 6) AS twa,
-         |  CAST(sum(w) AS BIGINT) AS covered_us, CAST(count(*) AS BIGINT) AS n
-         |FROM seg GROUP BY pvname ORDER BY pvname""".stripMargin,
-
-    // parallel fixed-anchor LTTB: time normalized to bucket units before
-    // averaging (areas O(bucket x value), so the shared 6-dp rounding is
-    // meaningful); area DESC, ts ASC argmax == Spark's max(struct) pick
-    "q_lttb" ->
-      s"""WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-         |    max(CAST(value AS DOUBLE)) AS v
-         |  FROM events GROUP BY 1, 2),
-         |ext AS (SELECT pvname, min(ts_us) AS t0, max(ts_us) AS t1,
-         |    arg_min(v, ts_us) AS vfirst, arg_max(v, ts_us) AS vlast,
-         |    count(*) AS cnt
-         |  FROM s GROUP BY pvname),
-         |j AS (SELECT s.pvname, s.ts_us, s.v, ext.t0, ext.t1,
-         |    ext.vfirst, ext.vlast, ext.cnt
-         |  FROM s JOIN ext USING (pvname)),
-         |pass AS (SELECT pvname, ts_us, v FROM j
-         |  WHERE NOT (cnt > 50 AND t1 > t0)),
-         |interior AS (SELECT pvname, ts_us, v, vfirst, vlast,
-         |    (ts_us - t0) / (CAST(t1 - t0 AS DOUBLE) / 48) AS x,
-         |    least(CAST(floor((ts_us - t0) / (CAST(t1 - t0 AS DOUBLE) / 48)) AS BIGINT), 47) AS b
-         |  FROM j WHERE (cnt > 50 AND t1 > t0) AND ts_us > t0 AND ts_us < t1),
-         |avgs AS (SELECT pvname, b, avg(x) AS at, avg(v) AS av
-         |  FROM interior GROUP BY 1, 2),
-         |anch AS (SELECT pvname, b,
-         |    lag(at) OVER w AS pat, lag(av) OVER w AS pav,
-         |    lead(at) OVER w AS nat, lead(av) OVER w AS nav
-         |  FROM avgs WINDOW w AS (PARTITION BY pvname ORDER BY b)),
-         |scored AS (SELECT i.pvname, i.b, i.ts_us, i.v,
-         |    round(abs(
-         |      (coalesce(a.pat, CAST(0.0 AS DOUBLE)) - coalesce(a.nat, CAST(48.0 AS DOUBLE)))
-         |        * (i.v - coalesce(a.pav, i.vfirst))
-         |      - (coalesce(a.pat, CAST(0.0 AS DOUBLE)) - i.x)
-         |        * (coalesce(a.nav, i.vlast) - coalesce(a.pav, i.vfirst))), 6) AS area
-         |  FROM interior i JOIN anch a USING (pvname, b)),
-         |win AS (SELECT pvname, b, ts_us, v,
-         |    row_number() OVER (PARTITION BY pvname, b ORDER BY area DESC, ts_us ASC) AS rn
-         |  FROM scored),
-         |sel AS (SELECT pvname, ts_us, v FROM win WHERE rn = 1),
-         |firsts AS (SELECT pvname, t0 AS ts_us, vfirst AS v FROM ext
-         |  WHERE cnt > 50 AND t1 > t0),
-         |lasts AS (SELECT pvname, t1 AS ts_us, vlast AS v FROM ext
-         |  WHERE cnt > 50 AND t1 > t0),
-         |u AS (SELECT * FROM pass UNION ALL SELECT * FROM firsts
-         |  UNION ALL SELECT * FROM lasts UNION ALL SELECT * FROM sel)
-         |SELECT pvname, ts_us, v AS value FROM u
-         |ORDER BY pvname, ts_us""".stripMargin,
-
-    // strictly-preceding 6 h range frame per key; stddev/z gated on a
-    // >= 2-point baseline, z additionally on a non-constant one
-    "q_trailing_stats" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname,
-         |    epoch_us(ts) AS ts_us, value
-         |  FROM events WHERE event_type = 'click'
-         |    AND epoch_us(ts) >= $T0 AND epoch_us(ts) < $TMID),
-         |w AS (SELECT pvname, ts_us, value,
-         |    count(value) OVER win AS n_prev,
-         |    avg(value) OVER win AS mean_raw,
-         |    stddev_samp(value) OVER win AS std_raw
-         |  FROM s
-         |  WINDOW win AS (PARTITION BY pvname ORDER BY ts_us
-         |    RANGE BETWEEN ${6L * 3600L * 1000000L} PRECEDING AND 1 PRECEDING))
-         |SELECT pvname, ts_us, value,
-         |  CAST(n_prev AS BIGINT) AS n_prev,
-         |  coalesce(CASE WHEN n_prev >= 1 THEN round(mean_raw, 6) END,
-         |    'NaN'::DOUBLE) AS mean_prev,
-         |  coalesce(CASE WHEN n_prev >= 2 THEN round(std_raw, 6) END,
-         |    'NaN'::DOUBLE) AS std_prev,
-         |  coalesce(CASE WHEN n_prev >= 2 AND std_raw > 0
-         |       THEN round((value - mean_raw) / std_raw, 6) END,
-         |    'NaN'::DOUBLE) AS z
-         |FROM w ORDER BY pvname, ts_us, value""".stripMargin,
-
-    // perplexity-proxy quartile profile over the lm_xent result: thresholds
-    // from exact interpolated quantiles over the (identically rounded)
-    // xent column, buckets compared on identical doubles in both engines
-    "q_quality_buckets" ->
-      s"""WITH lx AS ($lmXentSql),
-         |qs AS (SELECT quantile_cont(xent, CAST(0.25 AS DOUBLE)) AS q1,
-         |       quantile_cont(xent, CAST(0.5 AS DOUBLE)) AS q2,
-         |       quantile_cont(xent, CAST(0.75 AS DOUBLE)) AS q3 FROM lx),
-         |b AS (SELECT doc_id, xent,
-         |    CASE WHEN xent <= q1 THEN 0 WHEN xent <= q2 THEN 1
-         |         WHEN xent <= q3 THEN 2 ELSE 3 END AS bucket FROM lx, qs)
-         |SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n_docs,
-         |  round(CAST(sum(CAST(round((xent) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((xent) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS avg_xent, round(min(xent), 6) AS min_xent,
-         |  round(max(xent), 6) AS max_xent
-         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // per-source exact heavy hitters; rank ties break on the term
-    "q_source_top_terms" ->
-      """WITH u AS (SELECT source, unnest(string_split(text, ' ')) AS term
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT source, term, count(*) AS n FROM u GROUP BY 1, 2),
-        |r AS (SELECT source, term, CAST(n AS BIGINT) AS n,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY n DESC, term) AS BIGINT) AS rank
-        |  FROM c)
-        |SELECT source, term, n, rank
-        |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
-
-    // inverted-index self-join on the term: pairwise structure is
-    // vocab-bounded, never group x group x vocab
-    "q_source_similarity" ->
-      """WITH u AS (SELECT source, unnest(string_split(text, ' ')) AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT source, t, CAST(count(*) AS DOUBLE) AS c FROM u GROUP BY 1, 2),
-        |n AS (SELECT source, sqrt(sum(c * c)) AS nrm FROM c GROUP BY 1),
-        |d AS (SELECT a.source AS g1, b.source AS g2, sum(a.c * b.c) AS dot
-        |  FROM c a JOIN c b ON a.t = b.t AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT g1, g2, round(dot / (n1.nrm * n2.nrm), 6) AS cosine
-        |FROM d JOIN n n1 ON d.g1 = n1.source JOIN n n2 ON d.g2 = n2.source
-        |ORDER BY g1, g2""".stripMargin,
-
-    // one-row corpus summary; entropy written ln(p)/ln(2) on both sides
-    "q_dataset_card" ->
-      """WITH card AS (SELECT count(*) AS n_docs,
-        |    CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_text,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |    round(avg(CAST(len(string_split(text, ' ')) AS DOUBLE)), 6) AS avg_tokens,
-        |    count(DISTINCT lang) AS n_langs,
-        |    count(DISTINCT source) AS n_sources,
-        |    count(DISTINCT md5(text)) AS uniq
-        |  FROM documents),
-        |lc AS (SELECT lang, count(*) AS c FROM documents GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS tot FROM lc),
-        |ent AS (SELECT round(-sum((c / tot) * (ln(c / tot) / ln(2.0))), 6)
-        |        AS lang_entropy FROM lc, tot)
-        |SELECT n_docs, n_null_text, n_tokens, avg_tokens, n_langs, n_sources,
-        |  round(1.0 - (uniq / (n_docs - n_null_text)), 6) AS dup_frac,
-        |  lang_entropy
-        |FROM card, ent""".stripMargin,
-
-    "q_knn_recall" -> knnRecallSql(k = 5, planes = 4, dim = 64),
-
-    "q_int8_recall" -> int8RecallSql(k = 5, dim = 64, nQueries = 50),
-
-    // trailing-window activity counts; silent dimension PVs surface as 0
-    "q_activity" ->
-      s"""WITH s AS (SELECT 'u' || CAST(user_id AS VARCHAR) AS pvname, epoch_us(ts) AS ts_us
-         |  FROM events WHERE event_type = 'click'),
-         |dim AS (SELECT DISTINCT 'u' || CAST(user_id AS VARCHAR) AS pvname FROM events),
-         |r AS (SELECT pvname, CAST(count(*) AS BIGINT) AS n_recent FROM s
-         |      WHERE ts_us > $TMID - ${6L * 3600L * 1000000L} AND ts_us <= $TMID
-         |      GROUP BY 1)
-         |SELECT dim.pvname, coalesce(r.n_recent, 0) AS n_recent,
-         |  coalesce(r.n_recent, 0) >= 2 AS alive
-         |FROM dim LEFT JOIN r ON dim.pvname = r.pvname
-         |ORDER BY dim.pvname""".stripMargin,
-
-    // OOV coverage vs the corpus's own top-100 unigram head (the q_vocab_topk
-    // ranking at n = 1, same deterministic tie-break)
-    "q_oov" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-        |pc AS (SELECT tok, doc_id, count(*) AS c FROM u GROUP BY 1, 2),
-        |vocab AS (SELECT tok FROM (
-        |  SELECT tok, sum(c) AS n_occur FROM pc GROUP BY 1
-        |  ORDER BY n_occur DESC, tok LIMIT 100)),
-        |j AS (SELECT u.doc_id, CASE WHEN v.tok IS NOT NULL THEN 1 ELSE 0 END AS hit
-        |      FROM u LEFT JOIN vocab v ON u.tok = v.tok)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) - sum(hit) AS BIGINT) AS n_oov,
-        |  round(CAST(count(*) - sum(hit) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS oov_frac
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // repeated 8-token spans seen in >= 2 distinct docs; coverage is the
-    // UNION of overlapping span positions (count DISTINCT token index)
-    "q_span_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |b AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-        |sp AS (SELECT doc_id, unnest(generate_series(0, n - 8)) AS pos, toks
-        |  FROM b WHERE n >= 8),
-        |h AS (SELECT doc_id, pos,
-        |  md5(array_to_string(toks[pos + 1 : pos + 8], ' ')) AS h FROM sp),
-        |dup AS (SELECT h FROM h GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        |cov AS (SELECT doc_id, count(DISTINCT pos) AS n_dup_spans,
-        |    count(DISTINCT ti) AS dup_tokens
-        |  FROM (SELECT s.doc_id, s.pos,
-        |          unnest(generate_series(s.pos, s.pos + 7)) AS ti
-        |        FROM h s JOIN dup USING (h))
-        |  GROUP BY 1)
-        |SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-        |  CAST(greatest(b.n - 7, 0) AS BIGINT) AS n_spans,
-        |  CAST(coalesce(cov.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(coalesce(cov.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-        |  round(CAST(coalesce(cov.dup_tokens, 0) AS DOUBLE) / CAST(b.n AS DOUBLE), 6)
-        |    AS dup_frac
-        |FROM b LEFT JOIN cov USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // alpha-sampling mixture: weight = n_tokens^0.5 / sum over sources;
-    // target spends the 1M-token budget by weight (same expression order)
-    "q_mixture_weights" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT sum(pow(n_tokens, 0.5)) AS z FROM per)
-        |SELECT source, n_docs, n_tokens,
-        |  round(pow(n_tokens, 0.5) / z, 6) AS weight,
-        |  round(pow(n_tokens, 0.5) / z * 1000000, 3) AS target_tokens
-        |FROM per, tot ORDER BY source""".stripMargin,
-
-    // adjacent char pairs weighted by word frequency; pair expansion runs
-    // over the distinct-word table, mirroring the vocab-sized Spark plan
-    "q_bpe_merges" ->
-      """WITH w AS (SELECT unnest(string_split(text, ' ')) AS w
-        |  FROM documents WHERE text IS NOT NULL),
-        |wc AS (SELECT w, count(*) AS c FROM w GROUP BY 1),
-        |p AS (SELECT c, unnest(list_transform(generate_series(1, length(w) - 1),
-        |        i -> substr(w, i, 2))) AS pair
-        |  FROM wc WHERE length(w) >= 2)
-        |SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p GROUP BY 1
-        |ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-
-    "q_source_profile" ->
-      """SELECT source, count(*) AS n_docs,
-        |  round(avg(CAST(n_chars AS DOUBLE)), 6) AS avg_chars,
-        |  round(quantile_cont(CAST(n_chars AS DOUBLE), CAST(0.5 AS DOUBLE)), 6) AS p50_chars,
-        |  round(quantile_cont(CAST(n_chars AS DOUBLE), CAST(0.9 AS DOUBLE)), 6) AS p90_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // RRF fusion of the bm25 oracle (as a subquery) and a cosine-KNN run
-    // for query vector 0; 1.0/(60+rank) sums are 2-term (commutative)
-    "q_hybrid_rrf" ->
-      s"""WITH lex AS (SELECT doc_id,
-         |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-         |  FROM (${bm25Sql(BM25_TERMS, 20)})),
-         |eq AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-         |ec AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id <> 0),
-         |ss AS (SELECT vec_id AS doc_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM ec, eq),
-         |sem AS (SELECT doc_id, row_number() OVER (ORDER BY sim DESC, doc_id) AS rank
-         |  FROM ss ORDER BY sim DESC, doc_id LIMIT 20),
-         |runs AS (
-         |  SELECT doc_id, 1.0 / (60 + rank) AS s FROM lex
-         |  UNION ALL
-         |  SELECT doc_id, 1.0 / (60 + rank) AS s FROM sem)
-         |SELECT doc_id, round(sum(s), 6) AS rrf, CAST(count(*) AS BIGINT) AS n_runs
-         |FROM runs GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 15""".stripMargin,
-
-    // hard negatives: the knn_brute CTE with a label-mismatch join guard
-    "q_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv, CAST(label AS BIGINT) AS qlab
-         |  FROM embeddings WHERE vec_id < 8 AND embedding IS NOT NULL AND label IS NOT NULL),
-         |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv, CAST(label AS BIGINT) AS nlab
-         |  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL),
-         |sc AS (SELECT query_id, qlab, neighbor_id, nlab, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |       FROM q, c WHERE query_id <> neighbor_id AND qlab <> nlab),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn FROM sc)
-         |SELECT query_id, qlab AS query_label, neighbor_id, nlab AS neighbor_label, sim, CAST(rn AS BIGINT) AS rank
-         |FROM r WHERE rn <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // truncation recall: exact top-5 on prefix-d slices vs the full width;
-    // micro recall over integer hit counts (order-insensitive)
-    "q_trunc_recall" -> {
-      def knnCte(name: String, qvExpr: String, cvExpr: String) =
-        s"""$name AS (SELECT qid, nid FROM (
-           |  SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY
-           |    round(${cosineSql(qvExpr, cvExpr)}, 6) DESC, nid) AS rn
-           |  FROM q, c WHERE qid <> nid) WHERE rn <= 5)""".stripMargin
-      def recSel(d: Int) =
-        s"""SELECT CAST($d AS BIGINT) AS dims,
-           |  CAST(count(DISTINCT e.qid) AS BIGINT) AS n_queries,
-           |  CAST(count(*) AS BIGINT) AS n_exact,
-           |  CAST(sum(CASE WHEN a.nid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-           |  round(sum(CASE WHEN a.nid IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS recall
-           |FROM ex e LEFT JOIN ax$d a ON e.qid = a.qid AND e.nid = a.nid""".stripMargin
-      s"""WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS nid, embedding::DOUBLE[] AS cv FROM embeddings),
-         |${knnCte("ex", "qv", "cv")},
-         |${Seq(8, 16, 32).map(d => knnCte(s"ax$d", s"qv[1:$d]", s"cv[1:$d]")).mkString(",\n")}
-         |${Seq(8, 16, 32).map(recSel).mkString("\nUNION ALL\n")}
-         |ORDER BY dims""".stripMargin
-    },
-
-    // filter funnel: the same first-failing-stage CASE chain, stage rows by
-    // conditional sums (3VL: NOT coalesce(pred, FALSE) = failure)
-    "q_filter_funnel" -> {
-      val preds = Seq(
-        "nonempty" -> "len(text) > 0",
-        "lang_en" -> "lang = 'en'",
-        "min_tokens" -> "len(list_filter(string_split(text, ' '), t -> t <> '')) >= 30",
-        "max_chars" -> "len(text) <= 400",
-        "no_dup_marker" -> "NOT contains(text, 'dup')")
-      val chain = preds.zipWithIndex
-        .map { case ((_, p), i) => s"WHEN NOT coalesce($p, FALSE) THEN $i" }
-        .mkString(" ")
-      val stages = preds.zipWithIndex.map { case ((name, _), i) =>
-        s"""SELECT CAST(${i + 1} AS BIGINT) AS stage_idx, '$name' AS stage,
-           |  CAST(sum(CASE WHEN fail >= $i THEN 1 ELSE 0 END) AS BIGINT) AS docs_in,
-           |  CAST(sum(CASE WHEN fail > $i THEN 1 ELSE 0 END) AS BIGINT) AS docs_out,
-           |  CAST(sum(CASE WHEN fail >= $i THEN 1 ELSE 0 END) - sum(CASE WHEN fail > $i THEN 1 ELSE 0 END) AS BIGINT) AS docs_dropped,
-           |  CAST(sum(CASE WHEN fail > $i THEN l ELSE 0 END) AS BIGINT) AS chars_out
-           |FROM f""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH f AS (SELECT CASE $chain ELSE ${preds.size} END AS fail,
-         |  coalesce(len(text), 0) AS l FROM documents)
-         |$stages
-         |ORDER BY stage_idx""".stripMargin
-    },
-
-    // tf-idf pairs: integer-quantized idf (w = tf * ((N*100) // df), terms
-    // with df > 78% of docs dropped) makes dots and norms exact BIGINT sums.
-    // The _inv twin is the identical computation over the doc_id%10 subset
-    // (N and df re-derived WITHIN the subset, exactly like the operator
-    // sees them).
-
-    // RAKE keyphrases: islands between stopwords (df-gate at 90% finds
-    // none in this corpus; the closed-class list does the splitting),
-    // integer degree/freq word scores summed per distinct phrase
-    "q_keyphrases" ->
-      """WITH tok AS (SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
-        |        unnest(string_split(text, ' ')) AS term
-        |      FROM documents WHERE text IS NOT NULL),
-        |t AS (SELECT * FROM tok WHERE term <> ''),
-        |d AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df FROM t GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents WHERE text IS NOT NULL),
-        |stop AS (SELECT term FROM d CROSS JOIN n WHERE df * 100 > n * 90
-        |         UNION SELECT unnest(['the','a','an','and','or','of','to','in','is','it'])),
-        |nt AS (SELECT doc_id, pos, term,
-        |         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |       FROM t WHERE term NOT IN (SELECT term FROM stop)),
-        |p AS (SELECT doc_id, grp, string_agg(term, ' ' ORDER BY pos) AS phrase,
-        |        CAST(count(*) AS BIGINT) AS n_words
-        |      FROM nt GROUP BY 1, 2),
-        |pf AS (SELECT * FROM p WHERE n_words <= 4),
-        |w AS (SELECT unnest(string_split(phrase, ' ')) AS term, n_words FROM pf),
-        |ws AS (SELECT term, CAST(sum(n_words) * 1000000 // count(*) AS BIGINT) AS wscore
-        |       FROM w GROUP BY 1),
-        |ph AS (SELECT phrase, CAST(min(n_words) AS BIGINT) AS n_words,
-        |         CAST(count(*) AS BIGINT) AS occurrences
-        |       FROM pf GROUP BY 1),
-        |sc AS (SELECT u.phrase, CAST(sum(ws.wscore) AS BIGINT) AS score_ppm
-        |       FROM (SELECT phrase, unnest(string_split(phrase, ' ')) AS term FROM ph) u
-        |       JOIN ws USING (term) GROUP BY 1)
-        |SELECT ph.phrase, ph.n_words, ph.occurrences, sc.score_ppm
-        |FROM ph JOIN sc USING (phrase)
-        |ORDER BY score_ppm DESC, occurrences DESC, phrase
-        |LIMIT 20""".stripMargin,
-
-    // per-doc TF-IDF top-k keywords: the tfidf_pairs integer weighting
-    // (w = tf * ((N*100) // df), df-gated) ranked per doc, ties to the term
-    "q_keywords" ->
-      """WITH t AS (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS term
-        |  FROM documents WHERE text IS NOT NULL),
-        |tf AS (SELECT doc, term, CAST(count(*) AS BIGINT) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents WHERE text IS NOT NULL),
-        |w AS (SELECT doc, term, tf, tf * ((n.n * 100) // df.df) AS weight
-        |      FROM tf JOIN df USING (term) CROSS JOIN n WHERE df.df * 100 <= n.n * 60),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY doc ORDER BY weight DESC, term) AS rank FROM w)
-        |SELECT doc, term, tf, weight, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 5 ORDER BY doc, rank""".stripMargin,
-
-    "q_tfidf_pairs_inv" -> tfidfPairsInvOracleSql,
-
-    // the routed entry answers the SAME oracle as the pinned index twin —
-    // routing is a physical choice only (r13 ask #1 hash-equality proof)
-    "q_tfidf_auto" -> tfidfPairsInvOracleSql,
-
-    "q_jaccard_auto" -> jaccardOracleSql,
-
-    "q_tfidf_pairs" ->
-      """WITH t AS (SELECT doc_id AS d, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents WHERE text IS NOT NULL),
-        |tf AS (SELECT d, tok, CAST(count(*) AS BIGINT) AS c FROM t WHERE tok <> '' GROUP BY 1, 2),
-        |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents WHERE text IS NOT NULL),
-        |w AS (SELECT d, tok, c * ((n.n * 100) // df.df) AS w
-        |      FROM tf JOIN df USING (tok) CROSS JOIN n WHERE df.df * 100 <= n.n * 78),
-        |nm AS (SELECT d, sum(w * w) AS n2 FROM w GROUP BY 1),
-        |p AS (SELECT a.d AS d1, b.d AS d2, sum(a.w * b.w) AS dot
-        |      FROM w a JOIN w b ON a.tok = b.tok AND a.d < b.d GROUP BY 1, 2)
-        |SELECT d1, d2, sim FROM (
-        |  SELECT d1, d2, round(dot::DOUBLE / (sqrt(na.n2::DOUBLE) * sqrt(nb.n2::DOUBLE)), 6) AS sim
-        |  FROM p JOIN nm na ON p.d1 = na.d JOIN nm nb ON p.d2 = nb.d)
-        |WHERE sim >= 0.9 ORDER BY d1, d2""".stripMargin,
-
-    // boilerplate coverage: doc-distinct grams -> df blocklist; the per-doc
-    // occurrence stream left-joins it; integer counts, one final ratio
-    "q_boilerplate" ->
-      """WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |g AS (SELECT doc_id,
-        |    unnest([array_to_string(toks[i:i+2], ' ') FOR i IN generate_series(1, len(toks) - 2)]) AS gm
-        |  FROM d WHERE len(toks) >= 3),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents WHERE text IS NOT NULL),
-        |bl AS (SELECT gm FROM (SELECT gm, count(DISTINCT doc_id) AS df FROM g GROUP BY 1)
-        |       CROSS JOIN n WHERE df * 100 > n.n * 60)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(sum(CASE WHEN bl.gm IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-        |  round(sum(CASE WHEN bl.gm IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS boiler_frac
-        |FROM g LEFT JOIN bl ON g.gm = bl.gm
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // source centroids: per-(source, dim) means from aligned unnests, then
-    // a dim-keyed pair join — the semantic face of q_source_similarity
-    "q_source_centroids" ->
-      s"""WITH j AS (SELECT d.source, e.embedding::DOUBLE[] AS v
-         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-         |  WHERE e.embedding IS NOT NULL),
-         |l AS (SELECT source, unnest(generate_series(1, len(v))) AS i, unnest(v) AS x FROM j),
-         |c AS (SELECT source, i, avg(x) AS c FROM l GROUP BY 1, 2),
-         |nm AS (SELECT source, sqrt(sum(c * c)) AS n FROM c GROUP BY 1),
-         |p AS (SELECT a.source AS g1, b.source AS g2, sum(a.c * b.c) AS dot
-         |      FROM c a JOIN c b ON a.i = b.i AND a.source < b.source GROUP BY 1, 2)
-         |SELECT g1, g2, round(dot / (na.n * nb.n), 6) AS cosine
-         |FROM p JOIN nm na ON p.g1 = na.source JOIN nm nb ON p.g2 = nb.source
-         |ORDER BY g1, g2""".stripMargin,
-
-    // rank metrics: DCG discounts injected as driver-computed literals on
-    // BOTH sides (libm log2 may differ in the last ulp; a literal cannot)
-    "q_rank_metrics" -> {
-      val k = 5
-      val disc = graft.operators.Retrieval.dcgDiscounts(k)
-      val discArr = "[" + disc.mkString(", ") + "]"
-      val cumArr = "[" + disc.scanLeft(0.0)(_ + _).tail.mkString(", ") + "]"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q0 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
-         |sc AS (SELECT query_id, vec_id AS neighbor_id, round(${cosineSql("qv", "v")}, 6) AS sim
-         |       FROM q0, e WHERE query_id <> vec_id),
-         |r AS (SELECT query_id, neighbor_id, rn AS rank FROM (
-         |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-         |        FROM sc) WHERE rn <= $k),
-         |lab AS (SELECT vec_id AS id, CAST(label AS BIGINT) AS lab FROM embeddings WHERE label IS NOT NULL),
-         |cnt AS (SELECT lab, CAST(count(*) AS BIGINT) AS cnt FROM lab GROUP BY 1),
-         |j AS (SELECT r.query_id, r.rank, ql.lab AS qlab,
-         |        CASE WHEN nl.lab = ql.lab THEN 1 ELSE 0 END AS rel
-         |      FROM r JOIN lab ql ON r.query_id = ql.id JOIN lab nl ON r.neighbor_id = nl.id),
-         |g AS (SELECT query_id, qlab,
-         |        CAST(sum(rel) AS BIGINT) AS n_rel_at_k,
-         |        min(CASE WHEN rel = 1 THEN rank END) AS fr,
-         |        sum(CASE WHEN rel = 1 THEN ($discArr)[rank] ELSE 0.0 END) AS dcg
-         |      FROM j GROUP BY 1, 2),
-         |f AS (SELECT g.*, greatest(cnt - 1, 0) AS nrel FROM g JOIN cnt ON g.qlab = cnt.lab)
-         |SELECT query_id,
-         |  CAST(coalesce(fr, 0) AS BIGINT) AS first_rel_rank,
-         |  n_rel_at_k,
-         |  CAST(round(CASE WHEN fr IS NOT NULL THEN CAST(1.0 AS DOUBLE) / fr ELSE 0.0 END, 6) AS DOUBLE) AS mrr,
-         |  CAST(round(dcg, 6) AS DOUBLE) AS dcg,
-         |  CAST(round(CASE WHEN nrel >= 1 THEN ($cumArr)[least(nrel, $k)] ELSE 0.0 END, 6) AS DOUBLE) AS idcg,
-         |  CAST(round(CASE WHEN nrel >= 1 AND ($cumArr)[least(nrel, $k)] > 0
-         |        THEN dcg / ($cumArr)[least(nrel, $k)] ELSE 0.0 END, 6) AS DOUBLE) AS ndcg
-         |FROM f ORDER BY query_id""".stripMargin
-    },
-
-    // rank agreement: integer concordant/discordant counts over the items
-    // shared by the exact and bucketed top-5 lists
-    "q_rank_agreement" -> {
-      val k = 5
-      val bucketExpr = bucketExprSql(4, 64)
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q0 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
-         |sc AS (SELECT query_id, vec_id AS neighbor_id, round(${cosineSql("qv", "v")}, 6) AS sim
-         |       FROM q0, e WHERE query_id <> vec_id),
-         |ra AS (SELECT query_id, neighbor_id, rn AS rka FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-         |         FROM sc) WHERE rn <= $k),
-         |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e),
-         |qb AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 8),
-         |sb AS (SELECT query_id, b.vec_id AS neighbor_id, round(${cosineSql("qv", "b.v")}, 6) AS sim
-         |       FROM qb JOIN b USING (bucket) WHERE query_id <> b.vec_id),
-         |rb AS (SELECT query_id, neighbor_id, rn AS rkb FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-         |         FROM sb) WHERE rn <= $k),
-         |sh AS (SELECT ra.query_id, ra.neighbor_id, rka, rkb
-         |       FROM ra JOIN rb ON ra.query_id = rb.query_id AND ra.neighbor_id = rb.neighbor_id),
-         |ns AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_shared FROM sh GROUP BY 1),
-         |pr AS (SELECT a.query_id,
-         |         CASE WHEN (a.rka < b.rka AND a.rkb < b.rkb) OR (a.rka > b.rka AND a.rkb > b.rkb)
-         |              THEN 1 ELSE 0 END AS conc
-         |       FROM sh a JOIN sh b ON a.query_id = b.query_id AND a.neighbor_id < b.neighbor_id),
-         |pc AS (SELECT query_id, CAST(sum(conc) AS BIGINT) AS concordant,
-         |         CAST(sum(1 - conc) AS BIGINT) AS discordant
-         |       FROM pr GROUP BY 1)
-         |SELECT ns.query_id, ns.n_shared,
-         |  coalesce(pc.concordant, 0) AS concordant,
-         |  coalesce(pc.discordant, 0) AS discordant,
-         |  round(CASE WHEN ns.n_shared >= 2
-         |    THEN CAST(coalesce(pc.concordant, 0) - coalesce(pc.discordant, 0) AS DOUBLE)
-         |         / (ns.n_shared * (ns.n_shared - 1) / 2)
-         |    ELSE 0.0 END, 6) AS tau
-         |FROM ns LEFT JOIN pc ON ns.query_id = pc.query_id ORDER BY ns.query_id""".stripMargin
-    },
-
-    // quality-aware representative: the q_dedup_clusters closure joined to
-    // the q_quality score, argmax per component via a deterministic window
-    "q_cluster_best" ->
-      s"""WITH RECURSIVE ${jaccardPairsCtes()},
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a),
-         |q AS (SELECT doc_id,
-         |  round(ln(1.0 + len(string_split(text, ' '))) *
-         |        (1.0 - CAST(len(list_filter(string_split(text, ' '),
-         |              t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-         |             / len(string_split(text, ' '))), 6) AS quality
-         |  FROM documents),
-         |sel AS (SELECT component, doc, quality,
-         |          row_number() OVER (PARTITION BY component ORDER BY quality DESC, doc) AS rn,
-         |          count(*) OVER (PARTITION BY component) AS nm
-         |        FROM comp JOIN q ON comp.doc = q.doc_id)
-         |SELECT component, doc AS rep_id, quality AS best_score, CAST(nm AS BIGINT) AS n_members
-         |FROM sel WHERE rn = 1 ORDER BY component""".stripMargin,
-
-    // decontaminated eval split: the incremental-minhash oracle over the
-    // split-bucket predicates instead of the parity shards
-    "q_clean_eval_split" -> minhashIncrementalSql(NUM_PERM, 4, 2, 0.5,
-      newPred = s"${docBucketSql(100)} >= 80 AND ${docBucketSql(100)} < 90",
-      existingPred = s"${docBucketSql(100)} < 80"),
-
-    // snapshot diff: md5 fingerprints compare as hex strings in both engines
-    "q_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 10 < 8),
-        |nw AS (SELECT doc_id, md5(CASE WHEN doc_id % 10 = 5 THEN text || ' v2' ELSE text END) AS fp
-        |       FROM documents WHERE doc_id % 10 >= 2)
-        |SELECT doc_id, status FROM (
-        |  SELECT coalesce(o.doc_id, nw.doc_id) AS doc_id,
-        |    CASE WHEN o.doc_id IS NULL THEN 'added'
-        |         WHEN nw.doc_id IS NULL THEN 'removed'
-        |         WHEN o.fp <> nw.fp THEN 'changed'
-        |         ELSE 'unchanged' END AS status
-        |  FROM o FULL OUTER JOIN nw ON o.doc_id = nw.doc_id)
-        |WHERE status <> 'unchanged' ORDER BY doc_id""".stripMargin,
-
-    // source leakage: the q_jaccard pair CTEs rolled up to source level
-    "q_source_leakage" ->
-      s"""WITH ${jaccardPairsCtes()}
-         |SELECT least(sa.source, sb.source) AS g1, greatest(sa.source, sb.source) AS g2,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM jp JOIN documents sa ON jp.d1 = sa.doc_id JOIN documents sb ON jp.d2 = sb.doc_id
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // bigram diversity: distinct/total n-gram counts are exact integers
-    "q_ngram_diversity" ->
-      """WITH d AS (SELECT source, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |g AS (SELECT source,
-        |    unnest([array_to_string(toks[i:i+1], ' ') FOR i IN generate_series(1, len(toks) - 1)]) AS gm
-        |  FROM d WHERE len(toks) >= 2),
-        |c AS (SELECT source, gm, count(*) AS c FROM g GROUP BY 1, 2)
-        |SELECT source, CAST(sum(c) AS BIGINT) AS n_grams, CAST(count(*) AS BIGINT) AS n_distinct,
-        |  round(count(*)::DOUBLE / CAST(sum(c) AS DOUBLE), 6) AS ttr
-        |FROM c GROUP BY source ORDER BY source""".stripMargin,
-
-    // embedding covariance: aligned unnests zip (x, dim) into long format;
-    // components quantized to 1e-6-grid BIGINTs BEFORE summation (the
-    // engine's order-independent fixed-point moments — sum(double) flips
-    // 6-dp roundings with summation order), population moments as exact
-    // integers, then ONE double expression mirrored from the engine;
-    // diagonal joined back for the corr normalization
-    "q_embed_cov" ->
-      """WITH v AS (SELECT vec_id, (embedding::DOUBLE[])[1:16] AS e FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |l0 AS (SELECT vec_id, unnest(generate_series(1, len(e))) AS ix, unnest(e) AS x FROM v),
-        |l AS (SELECT vec_id, ix, CAST(round(x * 1000000.0) AS BIGINT) AS q FROM l0),
-        |p AS (SELECT a.ix - 1 AS i, b.ix - 1 AS j, count(*) AS n,
-        |        CAST(sum(a.q * b.q) AS BIGINT) AS sp,
-        |        CAST(sum(a.q) AS BIGINT) AS si, CAST(sum(b.q) AS BIGINT) AS sj
-        |      FROM l a JOIN l b ON a.vec_id = b.vec_id AND a.ix <= b.ix GROUP BY 1, 2),
-        |m AS (SELECT i, j, n,
-        |        sp::DOUBLE / 1000000000000.0 / n -
-        |          (si::DOUBLE / 1000000.0 / n) * (sj::DOUBLE / 1000000.0 / n) AS cov
-        |      FROM p),
-        |d AS (SELECT i, cov AS var FROM m WHERE i = j)
-        |SELECT m.i, m.j, CAST(m.n AS BIGINT) AS n, round(m.cov, 6) + 0.0 AS cov,
-        |  round(m.cov / sqrt(di.var * dj.var), 6) + 0.0 AS corr
-        |FROM m JOIN d di ON m.i = di.i JOIN d dj ON m.j = dj.i
-        |ORDER BY m.i, m.j""".stripMargin,
-
-    // hubness: in-degree over the exact kNN graph (same ranking contract as
-    // q_knn_brute); zero-degree vectors kept by the left join
-    "q_hubness" -> hubnessSql,
-
-    // identical oracle — the engine side runs the distributed block sweep,
-    // so a divergence between the two physical paths is a red row here
-    "q_hubness_blocked" -> hubnessSql,
-
-    // co-occurrence lift: document-presence counts are exact integers; lift
-    // is one double division of exact integer products (no logs - libm ulps
-    // differ between engines, so exp-PMI is emitted instead of PMI)
-    "q_cooccur_lift" ->
-      """WITH d AS (SELECT doc_id, list_distinct(list_filter(string_split(text, ' '), t -> t <> '')) AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-        |t AS (SELECT doc_id, unnest(toks) AS tok FROM d),
-        |ct AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-        |p AS (SELECT a.tok AS t1, b.tok AS t2, CAST(count(*) AS BIGINT) AS n_both
-        |      FROM t a JOIN t b ON a.doc_id = b.doc_id AND a.tok < b.tok GROUP BY 1, 2)
-        |SELECT p.t1, p.t2, p.n_both,
-        |  round((p.n_both * n.n)::DOUBLE / (ca.c * cb.c)::DOUBLE, 6) AS lift
-        |FROM p JOIN ct ca ON p.t1 = ca.tok JOIN ct cb ON p.t2 = cb.tok CROSS JOIN n
-        |WHERE p.n_both >= 5 ORDER BY t1, t2""".stripMargin,
-
-    // user sequences: (ts_us, event_id) is unique per user, so the ordered
-    // list render is total-order deterministic in both engines
-    "q_user_sequences" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
-        |  FROM events WHERE user_id < 40 AND user_id IS NOT NULL
-        |    AND ts IS NOT NULL AND event_type IS NOT NULL)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  array_to_string(list(event_type ORDER BY ts_us, event_id)[1:50], ' ') AS seq
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // MMR re-rank: the greedy selection as a list_reduce fold with the
-    // whole state in one VARCHAR of 'idx@score' picks (the q_holt /
-    // q_downsample_stateful technique — scalar accumulators fold reliably
-    // where struct ones mis-thread). Candidate lists are doc-id-ordered on
-    // both sides, so argmax-by-first-position == smallest-id tie-break.
-    "q_mmr_rerank" -> {
-      val selIdx = "[CAST(string_split(e,'@')[1] AS INT) FOR e IN list_filter(string_split(acc,','), e -> e <> '')]"
-      // raw-double step score: both engines derive it from identical bits;
-      // only the EMITTED score is floor-quantized (see Retrieval.mmr docs)
-      val scoreI = s"CASE WHEN list_contains($selIdx, i) THEN -1e18 " +
-        s"ELSE 0.7*rels[i] - 0.3*coalesce(list_max([simm[i][j] FOR j IN $selIdx]), 0.0) END"
-      val scores = s"[$scoreI FOR i IN generate_series(1, len(ids))]"
-      val best = s"list_position($scores, list_max($scores))"
-      val step = s"acc || ',' || CAST($best AS VARCHAR) || '@' || CAST(list_max($scores) AS VARCHAR)"
-      s"""WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 3),
-         |c AS (SELECT vec_id AS nid, embedding::DOUBLE[] AS cv FROM embeddings),
-         |sc AS (SELECT qid, nid, round(${cosineSql("qv", "cv")}, 6) AS sim,
-         |              ${cosineSql("qv", "cv")} AS rsim FROM q, c WHERE qid <> nid),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |cand AS (SELECT r.qid, r.nid, r.rsim, c2.cv FROM r JOIN c c2 ON r.nid = c2.nid WHERE r.rn <= 20),
-         |g AS (SELECT qid, list(nid ORDER BY nid) AS ids, list(rsim ORDER BY nid) AS rels,
-         |             list(cv ORDER BY nid) AS vecs FROM cand GROUP BY qid),
-         |m AS (SELECT qid, ids, rels,
-         |        [[${cosineSql("vecs[i]", "vecs[j]")} FOR j IN generate_series(1, len(ids))]
-         |         FOR i IN generate_series(1, len(ids))] AS simm FROM g),
-         |sel AS (SELECT qid, ids,
-         |  list_filter(string_split(list_reduce(['' FOR x IN generate_series(0, 8)], (acc, x) -> $step), ','), e -> e <> '') AS picks
-         |  FROM m)
-         |SELECT qid AS query_id,
-         |  unnest(generate_series(1, len(picks))) AS rank,
-         |  unnest([ids[CAST(string_split(p,'@')[1] AS INT)] FOR p IN picks]) AS doc_id,
-         |  unnest([floor(CAST(string_split(p,'@')[2] AS DOUBLE) * 1000000.0) / 1000000.0 FOR p IN picks]) AS score
-         |FROM sel ORDER BY query_id, rank""".stripMargin
-    },
-
-    // Markov transitions: (ts_us, event_id) is unique per user so the lag
-    // pairing is total-order deterministic; prob is a double division of
-    // two exact longs in both engines, floor-quantized
-    "q_event_transitions" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts_us, event_id, event_type
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |p AS (SELECT lag(event_type) OVER (PARTITION BY u ORDER BY ts_us, event_id) AS prev_type,
-        |             event_type AS next_type FROM e),
-        |c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n FROM p
-        |      WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev_type, next_type, n,
-        |  floor((CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY prev_type)) * 1000000.0) / 1000000.0 AS prob
-        |FROM c ORDER BY prev_type, next_type""".stripMargin,
-
-    // DAU/WAU: the rolling 7-day distinct is re-expressed as a ×7 coverage
-    // fan-out of the deduped (user, day) activity set — identical row sets
-    // in both engines, stickiness a floor-quantized exact-long ratio
-    "q_active_users" ->
-      """WITH ud AS (SELECT DISTINCT user_id AS u, epoch_us(ts) // 86400000000 AS d
-        |  FROM events WHERE user_id IS NOT NULL),
-        |dau AS (SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d),
-        |cov AS (SELECT DISTINCT u, cd FROM
-        |        (SELECT u, unnest(generate_series(d, d + 6)) AS cd FROM ud)),
-        |wau AS (SELECT cd, CAST(count(*) AS BIGINT) AS wau FROM cov GROUP BY cd)
-        |SELECT d AS day, dau, wau,
-        |  floor((CAST(dau AS DOUBLE) / wau) * 1000000.0) / 1000000.0 AS stickiness
-        |FROM dau JOIN wau ON d = cd ORDER BY day""".stripMargin,
-
-    // MAD outliers: quantile_cont == Spark percentile (the q_winsorize
-    // parity); the modified-z cut compares the 6-dp-rounded score on both
-    // sides so the boundary can't flap on ulps
-    "q_mad_outliers" ->
-      """WITH b AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |m AS (SELECT pvname, quantile_cont(v, CAST(0.5 AS DOUBLE)) AS med FROM b GROUP BY 1),
-        |d AS (SELECT b.pvname, ts_us, v, med FROM b JOIN m USING (pvname)),
-        |md AS (SELECT pvname, quantile_cont(abs(v - med), CAST(0.5 AS DOUBLE)) AS mad
-        |       FROM d GROUP BY 1),
-        |z AS (SELECT d.pvname, ts_us, v, med, mad,
-        |        round(0.6745 * (v - med) / mad, 6) AS robust_z
-        |      FROM d JOIN md USING (pvname) WHERE mad > 0)
-        |SELECT pvname, ts_us, v AS value, round(med, 6) AS med, round(mad, 6) AS mad, robust_z
-        |FROM z WHERE abs(robust_z) > 3.5 ORDER BY pvname, ts_us""".stripMargin,
-
-    // seasonal residuals: integer calendar cells, 6-dp cell means (the
-    // q_seasonal parity), residual quantized against the quantized mean;
-    // the top-N sort is a total order (|residual|, key, ts, value)
-    "q_seasonal_residual" ->
-      """WITH b AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-        |    (epoch_us(ts) // 3600000000) % 24 AS hour,
-        |    ((epoch_us(ts) // 86400000000) + 4) % 7 AS dow,
-        |    CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |c AS (SELECT pvname, hour, dow, CAST(count(*) AS BIGINT) AS cell_n,
-        |             round(CAST(sum(CAST(round((v) * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round((v) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS cell_mean
-        |      FROM b GROUP BY 1, 2, 3 HAVING count(*) >= 2),
-        |r AS (SELECT b.pvname, ts_us, v AS value, b.hour, b.dow, cell_n, cell_mean,
-        |             round(v - cell_mean, 6) AS residual
-        |      FROM b JOIN c USING (pvname, hour, dow))
-        |SELECT * FROM r ORDER BY abs(residual) DESC, pvname, ts_us, value LIMIT 50""".stripMargin,
-
-    // UniMax: the constrained-prefix predicate over the capacity-ascending
-    // window is exact long arithmetic; only the final share is a double
-    // division of two exact longs (identical in both engines)
-    "q_unimax_budget" ->
-      """WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS n_tokens,
-        |    CAST(sum(n_chars) * 2 AS BIGINT) AS cap
-        |  FROM documents GROUP BY source),
-        |r AS (SELECT *,
-        |    row_number() OVER (ORDER BY cap, source) AS i,
-        |    CAST(sum(cap) OVER (ORDER BY cap, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |    CAST(count(*) OVER () AS BIGINT) AS m
-        |  FROM per),
-        |c AS (SELECT *, cap * (m - i + 1) <= 280000 - (cum - cap) AS con FROM r),
-        |t AS (SELECT CAST(sum(CASE WHEN con THEN cap ELSE 0 END) AS BIGINT) AS ccap,
-        |             CAST(sum(CASE WHEN con THEN 0 ELSE 1 END) AS BIGINT) AS nu FROM c),
-        |a AS (SELECT c.*, CASE WHEN con THEN CAST(cap AS DOUBLE)
-        |        ELSE CAST(280000 - ccap AS DOUBLE) / nu END AS alloc FROM c, t)
-        |SELECT source, n_docs, n_tokens, cap,
-        |  round(alloc, 3) AS alloc_tokens, round(alloc / n_tokens, 6) AS epochs
-        |FROM a ORDER BY source""".stripMargin,
-
-    // readability: both counts are single character-class regexes (Java
-    // regex == RE2 semantics); the formulas are double arithmetic over
-    // exact longs with identically-parsed literal constants
-    "q_readability" ->
-      """WITH b AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |    CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS n_sents,
-        |    CAST(len(regexp_extract_all(text, '[aeiouyAEIOUY]+')) AS BIGINT) AS n_syll
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sents, n_syll,
-        |  round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sents)
-        |        - 84.6 * (CAST(n_syll AS DOUBLE) / n_words), 6) AS flesch,
-        |  round(0.39 * (CAST(n_words AS DOUBLE) / n_sents)
-        |        + 11.8 * (CAST(n_syll AS DOUBLE) / n_words) - 15.59, 6) AS fk_grade
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // mutual-kNN communities: the kNN ranking CTE is the q_hubness oracle,
-    // the mutuality join keeps only reciprocal pairs, and the closure is
-    // the same recursive CTE as q_semantic_clusters
-    "q_knn_communities" ->
-      s"""WITH RECURSIVE e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |m AS (SELECT g.qid AS d1, g.nid AS d2 FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |e AS (SELECT d1 AS a, d2 AS b FROM m UNION SELECT d2, d1 FROM m),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r2.a, e.b FROM reach r2 JOIN e ON r2.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a)
-         |SELECT doc, component FROM comp ORDER BY doc""".stripMargin,
-
-    // link prediction: same mutual-kNN m CTE; degree-annotated adjacency,
-    // wedge self-join with the hub cap, integer floor fixed-point RA sum,
-    // anti-join of existing edges, top-100 by (ra DESC, d1, d2)
-    "q_link_predict" ->
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |m AS (SELECT g.qid AS d1, g.nid AS d2 FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |adj AS (SELECT d1 AS z, d2 AS nb FROM m UNION ALL SELECT d2, d1 FROM m),
-         |deg AS (SELECT z, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY z),
-         |aj AS (SELECT adj.z, adj.nb, deg.d FROM adj JOIN deg USING (z) WHERE d <= 64),
-         |cand AS (SELECT l.nb AS d1, r2.nb AS d2, 1000000000000 // l.d AS c
-         |         FROM aj l JOIN aj r2 ON l.z = r2.z AND l.nb < r2.nb),
-         |scored AS (SELECT d1, d2, CAST(count(*) AS BIGINT) AS cn,
-         |             CAST(sum(c) AS BIGINT) AS ra
-         |           FROM cand GROUP BY 1, 2)
-         |SELECT s2.d1, s2.d2, s2.cn, s2.ra FROM scored s2
-         |LEFT JOIN m ON s2.d1 = m.d1 AND s2.d2 = m.d2
-         |WHERE m.d1 IS NULL
-         |ORDER BY s2.ra DESC, s2.d1, s2.d2 LIMIT 100""".stripMargin,
-
-    // Pareto front: dense_rank on quality desc (ties share a rank), then
-    // the max token count over STRICTLY-higher-quality rows via a
-    // RANGE 1 PRECEDING frame on the rank — dominated iff that max is
-    // strictly greater. quality is the 6-dp q_quality number on both sides
-    "q_pareto_front" ->
-      """WITH q AS (SELECT doc_id, source,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(ln(1.0 + len(string_split(text, ' '))) *
-        |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |               / len(string_split(text, ' '))), 6) AS quality
-        |  FROM documents),
-        |r AS (SELECT *, dense_rank() OVER (PARTITION BY source ORDER BY quality DESC) AS yr FROM q),
-        |m AS (SELECT *, max(n_tokens) OVER (PARTITION BY source ORDER BY yr
-        |        RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx FROM r)
-        |SELECT doc_id, n_tokens, quality, source FROM m
-        |WHERE mx IS NULL OR mx <= n_tokens ORDER BY doc_id""".stripMargin,
-
-    // bursts: counts are exact longs, so the trailing window's moments are
-    // exact integers and the z is a single double expression — identical
-    // in both engines; baseline frame is strictly preceding
-    "q_bursts" ->
-      """WITH c AS (SELECT event_type AS pvname, epoch_us(ts) // 21600000000 AS bucket,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT pvname, bucket, n,
-        |    CAST(count(n) OVER pw AS BIGINT) AS np,
-        |    CAST(sum(n) OVER pw AS BIGINT) AS s,
-        |    CAST(sum(n * n) OVER pw AS BIGINT) AS ss
-        |  FROM c WINDOW pw AS (PARTITION BY pvname ORDER BY bucket
-        |    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING)),
-        |v AS (SELECT *, CAST(s AS DOUBLE) / np AS bm,
-        |    CAST(ss AS DOUBLE) / np - (CAST(s AS DOUBLE) / np) * (CAST(s AS DOUBLE) / np) AS var
-        |  FROM w WHERE np >= 3),
-        |z AS (SELECT pvname, bucket, n, bm, var,
-        |    round((n - bm) / sqrt(var), 6) AS z FROM v WHERE var > 0)
-        |SELECT pvname, bucket, n, round(bm, 6) AS base_mean, round(sqrt(var), 6) AS base_std, z
-        |FROM z WHERE z > 2.0 ORDER BY pvname, bucket""".stripMargin,
-
-    // standardization: the q_embed_cov aligned-unnest long format; z is one
-    // double expression over the per-dim moments, mirrored term for term
-    "q_embed_standardize" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |l AS (SELECT vec_id, unnest(generate_series(1, len(e))) - 1 AS dim, unnest(e) AS x FROM v),
-        |s AS (SELECT dim, count(*) AS n, sum(x) AS sx, sum(x * x) AS sxx FROM l GROUP BY 1),
-        |m AS (SELECT dim, sx / n AS mean, sxx / n - (sx / n) * (sx / n) AS var FROM s
-        |      WHERE sxx / n - (sx / n) * (sx / n) > 0)
-        |SELECT vec_id, CAST(l.dim AS BIGINT) AS dim, round((x - mean) / sqrt(var), 6) AS z
-        |FROM l JOIN m ON l.dim = m.dim ORDER BY vec_id, dim""".stripMargin,
-
-    // Simpson diversity: every emitted number is a ratio of exact integer
-    // sums — no logs, no float accumulation order anywhere
-    "q_token_diversity" ->
-      """WITH t AS (SELECT source, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1, 2),
-        |a AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |        CAST(count(*) AS BIGINT) AS n_types,
-        |        CAST(sum(c * (c - 1)) AS BIGINT) AS d FROM c GROUP BY 1)
-        |SELECT source, n_tokens, n_types,
-        |  round(1.0 - CAST(d AS DOUBLE) / (n_tokens * (n_tokens - 1)), 6) AS simpson,
-        |  round(CAST(n_tokens * n_tokens AS DOUBLE) / (d + n_tokens), 6) AS eff_types
-        |FROM a ORDER BY source""".stripMargin,
-
-    // event paths: the transition-matrix lag window extended one more lag;
-    // (ts_us, event_id) unique per user makes the pairing deterministic
-    "q_event_paths" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts_us, event_id, event_type
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT event_type AS t0,
-        |        lag(event_type, 1) OVER w AS t1,
-        |        lag(event_type, 2) OVER w AS t2
-        |      FROM e WINDOW w AS (PARTITION BY u ORDER BY ts_us, event_id)),
-        |p AS (SELECT t2 || '->' || t1 || '->' || t0 AS path, CAST(count(*) AS BIGINT) AS n
-        |      FROM l WHERE t2 IS NOT NULL GROUP BY 1)
-        |SELECT path, n FROM p ORDER BY n DESC, path LIMIT 20""".stripMargin,
-
-    // Theil-Sen: two stacked exact medians (quantile_cont == percentile,
-    // the q_winsorize parity); slopes are one double expression each
-    "q_theil_sen" ->
-      """WITH m AS (SELECT event_type AS pvname, epoch_us(ts) // 86400000000 AS b,
-        |    quantile_cont(CAST(value AS DOUBLE), CAST(0.5 AS DOUBLE)) AS med
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
-        |p AS (SELECT a.pvname, (b2.med - a.med) / CAST(b2.b - a.b AS DOUBLE) AS slope
-        |      FROM m a JOIN m b2 ON a.pvname = b2.pvname AND a.b < b2.b),
-        |s AS (SELECT pvname, CAST(count(*) AS BIGINT) AS n_pairs,
-        |        quantile_cont(slope, CAST(0.5 AS DOUBLE)) AS sl FROM p GROUP BY 1),
-        |nb AS (SELECT pvname, CAST(count(*) AS BIGINT) AS n_buckets FROM m GROUP BY 1)
-        |SELECT s.pvname, n_buckets, n_pairs, round(sl, 6) AS slope
-        |FROM s JOIN nb USING (pvname) ORDER BY pvname""".stripMargin,
-
-    // PageRank: the q_hubness kNN-edge CTE + an unrolled chain of 10
-    // integer-exact iterations — every update is BIGINT `div`, so both
-    // engines produce the SAME longs (no float accumulation order to
-    // diverge); teleport and init use the identical integer divisions the
-    // Scala loop computes on the driver
-    "q_pagerank" -> pageRankSql(iters = 10, k = 5, scale = 1000000000000L),
-
-    "q_hits" -> hitsSql(iters = 5, k = 5, scale = 1000000000L),
-
-    // landmark harmonic centrality: 4 unrolled BFS frontiers over the
-    // mutual-kNN backbone, integer scale//hop contributions
-    "q_harmonic" -> harmonicSql(seedMod = 5L, maxHops = 4,
-      scale = 720720L, k = 5),
-
-    "q_kmeans" -> kmeansSql(k = 8, iters = 5),
-
-    // change-point detection: the cpdSql unrolled binary segmentation
-    "q_cpd" -> cpdSql(minSeg = 100, depth = 2, scale = 1000L),
-
-    "q_fd_audit" -> fdSql(
-      Seq("c_mktsegment", "c_nationkey", "n_name", "n_regionkey", "r_name")),
-
-    "q_ucc_audit" -> uccSql("orders",
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")),
-
-    // order dependencies over the events time profile (the OD melt)
-    "q_od_audit" -> odSql(Seq("hour_b", "day_b", "value")),
-
-    // TextRank over chunks: unrolled weighted integer PageRank per doc
-    "q_textrank" -> textRankSql(chunkTokens = 64, overlap = 16, iters = 5,
-      topK = 3, scale = 1000000000L),
-
-    "q_ind_audit" -> indSql(Seq(
-      ("o_custkey", "orders", "o_custkey"),
-      ("c_custkey", "customer", "c_custkey"),
-      ("c_nationkey", "customer", "c_nationkey"),
-      ("n_nationkey", "nation", "n_nationkey"),
-      ("n_regionkey", "nation", "n_regionkey"),
-      ("r_regionkey", "region", "r_regionkey"))),
-
-    // DBSCAN: round6-cosine eps-pairs, degree+1 core test, recursive-CTE
-    // components over core-core edges (min reachable id), min-label border
-    "q_dbscan" ->
-      s"""WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings WHERE embedding IS NOT NULL),
-         |p AS MATERIALIZED (SELECT a.vec_id AS d1, b.vec_id AS d2
-         |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |  WHERE round(${cosineSql("a.ev", "b.ev")}, 6) >= 0.35),
-         |deg AS (SELECT n AS vid, CAST(count(*) AS BIGINT) AS dg
-         |        FROM (SELECT d1 AS n FROM p UNION ALL SELECT d2 FROM p) GROUP BY 1),
-         |core AS MATERIALIZED (SELECT e.vec_id AS vid FROM e
-         |  LEFT JOIN deg ON e.vec_id = deg.vid WHERE coalesce(dg, 0) + 1 >= 4),
-         |ce AS MATERIALIZED (SELECT p.d1, p.d2 FROM p
-         |  JOIN core c1 ON p.d1 = c1.vid JOIN core c2 ON p.d2 = c2.vid),
-         |eu AS (SELECT d1 AS a, d2 AS b FROM ce UNION SELECT d2, d1 FROM ce),
-         |reach(a, b) AS (SELECT a, b FROM eu
-         |  UNION SELECT r.a, e2.b FROM reach r JOIN eu e2 ON r.b = e2.a),
-         |comp AS (SELECT a AS vid, least(a, min(b)) AS component FROM reach GROUP BY a),
-         |cl AS MATERIALIZED (SELECT c.vid, coalesce(comp.component, c.vid) AS cluster
-         |      FROM core c LEFT JOIN comp ON c.vid = comp.vid),
-         |adj AS (SELECT d1 AS vid, d2 AS nb FROM p UNION ALL SELECT d2, d1 FROM p),
-         |bord AS (SELECT adj.vid, CAST(min(cl.cluster) AS BIGINT) AS cluster
-         |         FROM adj JOIN cl ON adj.nb = cl.vid
-         |         WHERE adj.vid NOT IN (SELECT vid FROM cl)
-         |         GROUP BY 1)
-         |SELECT e.vec_id,
-         |  CASE WHEN cl.vid IS NOT NULL THEN 'core'
-         |       WHEN bord.vid IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
-         |  CAST(coalesce(cl.cluster, bord.cluster, -1) AS BIGINT) AS cluster
-         |FROM e LEFT JOIN cl ON e.vec_id = cl.vid LEFT JOIN bord ON e.vec_id = bord.vid
-         |ORDER BY vec_id""".stripMargin,
-
-
-
-    // level-wise Apriori over order×brand baskets (0.4% relative support):
-    // trimmed transactions, frequent-pair-pruned triples, ppm integers
-    "q_itemsets" -> itemsetsSql(minSupPpm = 4000L),
-
-    "q_assoc_rules" -> assocRulesSql(minSupPpm = 4000L),
-
-    // funnel latency: the q_funnel step CTEs, then one latency frame per
-    // transition; exact integer micros min/max, quantile_cont == percentile
-    // (the q_bands parity) rounded to 6 places
-    "q_funnel_latency" ->
-      s"""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_type AS et
-         |  FROM events WHERE user_id IS NOT NULL),
-         |s1 AS (SELECT u, min(t) AS t1 FROM e WHERE et = 'view' GROUP BY u),
-         |s2 AS (SELECT e.u, min(t) AS t2 FROM e JOIN s1 ON e.u = s1.u
-         |       WHERE et = 'click' AND t > t1 AND t <= t1 + $RUN_WEEK_US GROUP BY e.u),
-         |s3 AS (SELECT e.u, min(t) AS t3 FROM e JOIN s2 ON e.u = s2.u
-         |       WHERE et = 'purchase' AND t > t2 AND t <= t2 + $RUN_WEEK_US GROUP BY e.u),
-         |l2 AS (SELECT t2 - t1 AS lat FROM s2 JOIN s1 USING (u)),
-         |l3 AS (SELECT t3 - t2 AS lat FROM s3 JOIN s2 USING (u)),
-         |c AS (SELECT 2 AS stage, 'click' AS step, CAST(count(*) AS BIGINT) AS n_conv,
-         |        min(lat) AS min_us,
-         |        round(quantile_cont(CAST(lat AS DOUBLE), CAST(0.5 AS DOUBLE)), 6) AS p50_us,
-         |        round(quantile_cont(CAST(lat AS DOUBLE), CAST(0.9 AS DOUBLE)), 6) AS p90_us,
-         |        max(lat) AS max_us FROM l2
-         |      UNION ALL
-         |      SELECT 3, 'purchase', CAST(count(*) AS BIGINT),
-         |        min(lat),
-         |        round(quantile_cont(CAST(lat AS DOUBLE), CAST(0.5 AS DOUBLE)), 6),
-         |        round(quantile_cont(CAST(lat AS DOUBLE), CAST(0.9 AS DOUBLE)), 6),
-         |        max(lat) FROM l3)
-         |SELECT CAST(stage AS BIGINT) AS stage, step, n_conv, min_us, p50_us,
-         |  p90_us, max_us
-         |FROM c ORDER BY stage""".stripMargin,
-
-    // MinHash calibration: estimate vs exact Jaccard over the band-colliding
-    // candidates (no threshold — the audit wants the misses too)
-    "q_minhash_error" -> minhashErrorSql(NUM_PERM, 4, 2),
-
-    // lexical vs semantic near-dup agreement: the two oracles composed as
-    // subqueries and full-outer joined on the pair key
-    "q_dedup_agreement" ->
-      s"""WITH lex AS (SELECT * FROM (${minhashLshSql(NUM_PERM, 4, 2, 0.5)}) tl),
-         |sem AS (SELECT * FROM ($embedDedupOracleSql) ts)
-         |SELECT coalesce(lex.d1, sem.d1) AS d1, coalesce(lex.d2, sem.d2) AS d2,
-         |  lex.jaccard, sem.sim,
-         |  CASE WHEN lex.jaccard IS NOT NULL AND sem.sim IS NOT NULL THEN 'both'
-         |       WHEN lex.jaccard IS NOT NULL THEN 'lexical_only'
-         |       ELSE 'semantic_only' END AS verdict
-         |FROM lex FULL OUTER JOIN sem ON lex.d1 = sem.d1 AND lex.d2 = sem.d2
-         |ORDER BY d1, d2""".stripMargin,
-
-    // margin mining: cross-group top-k CTE (the q_hubness ranking shape
-    // with a group-inequality join), INTEGER neighborhood sums of
-    // round(sim*1e6) — no float accumulation order — and one mirrored
-    // double division for the margin
-    "q_margin_mining" -> marginMiningSql(k = 3, threshold = 1.0),
-
-    // Z-order: identical integer bucketization (width = range div 2^bits
-    // + 1) and the unrolled Morton bit interleave; pure BIGINT ops
-    "q_zorder" -> zorderSql(bits = 16),
-
-    // label propagation: unrolled integer-vote iterations over the
-    // symmetrized kNN edge CTE; argmax = (count DESC, label) row_number
-    "q_label_prop" -> labelPropSql(iters = 5, k = 5),
-
-    // CDC dedup: cut positions from the same 8-hex-char md5 hash, per-doc
-    // cumulative-sum chunk ids, q_chunk_dedup's election + reassembly
-    "q_cdc_dedup" -> cdcDedupSql(window = 4, divisor = 8),
-
-    // cluster purity: the q_semantic_clusters closure joined to labels,
-    // one grouped rollup, (count DESC, label) dominant pick
-    "q_cluster_purity" ->
-      s"""WITH RECURSIVE e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
-         |        round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |      FROM e0 a, e0 b WHERE a.vec_id < b.vec_id),
-         |jp AS (SELECT d1, d2 FROM p WHERE sim >= 0.45),
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r2.a, e.b FROM reach r2 JOIN e ON r2.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a),
-         |cl AS (SELECT comp.component, CAST(e2.label AS BIGINT) AS lab
-         |       FROM comp JOIN embeddings e2 ON comp.doc = e2.vec_id
-         |       WHERE e2.label IS NOT NULL),
-         |g AS (SELECT component, lab, CAST(count(*) AS BIGINT) AS c FROM cl GROUP BY 1, 2),
-         |o AS (SELECT *, row_number() OVER (PARTITION BY component ORDER BY c DESC, lab) AS rn FROM g)
-         |SELECT component, CAST(sum(c) AS BIGINT) AS n_members,
-         |  CAST(count(*) AS BIGINT) AS n_labels,
-         |  max(CASE WHEN rn = 1 THEN lab END) AS top_label,
-         |  CAST(max(c) AS BIGINT) AS top_count,
-         |  round(CAST(max(c) AS DOUBLE) / sum(c), 6) AS purity,
-         |  round(CAST(sum(c) * sum(c) AS DOUBLE) / sum(c * c), 6) AS eff_labels
-         |FROM o GROUP BY component ORDER BY component""".stripMargin,
-
-    // RFM: per-user conversion aggregate, integer-rank quintiles (no
-    // percentile interpolation), monetary rounded BEFORE ranking
-    "q_rfm" ->
-      s"""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, value FROM events
-         |  WHERE user_id IS NOT NULL AND event_type = 'purchase'),
-         |per AS (SELECT u AS user_id, ($T1 - max(t)) // 86400000000 AS recency_days,
-         |          CAST(count(*) AS BIGINT) AS frequency,
-         |          round(CAST(sum(CAST(round(coalesce(value, 0.0) * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0, 6) AS monetary
-         |        FROM e GROUP BY 1),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM per),
-         |r AS (SELECT *, row_number() OVER (ORDER BY recency_days, user_id) AS rr,
-         |        row_number() OVER (ORDER BY frequency DESC, user_id) AS rf,
-         |        row_number() OVER (ORDER BY monetary DESC, user_id) AS rm
-         |      FROM per)
-         |SELECT user_id, recency_days, frequency, monetary,
-         |  CAST(5 - ((rr - 1) * 5) // n AS BIGINT) AS r_score,
-         |  CAST(5 - ((rf - 1) * 5) // n AS BIGINT) AS f_score,
-         |  CAST(5 - ((rm - 1) * 5) // n AS BIGINT) AS m_score,
-         |  CAST((5 - ((rr - 1) * 5) // n) * 100 + (5 - ((rf - 1) * 5) // n) * 10
-         |    + (5 - ((rm - 1) * 5) // n) AS BIGINT) AS rfm
-         |FROM r CROSS JOIN nn ORDER BY user_id""".stripMargin,
-
-    // SCD2: full-outer current-vs-snapshot with null-safe attribute
-    // comparison (IS DISTINCT FROM == Spark's <=> negation)
-    "q_scd2" ->
-      s"""WITH hist AS (SELECT c_custkey, c_mktsegment, CAST(0 AS BIGINT) AS valid_from,
-         |              CAST(NULL AS BIGINT) AS valid_to FROM customer),
-         |snap AS (SELECT c_custkey,
-         |           CASE WHEN c_custkey % 10 = 0 THEN 'NEW-' || c_mktsegment
-         |                ELSE c_mktsegment END AS na
-         |         FROM customer WHERE c_custkey % 7 <> 0),
-         |j AS (SELECT coalesce(h.c_custkey, s.c_custkey) AS k, h.c_mktsegment AS a,
-         |        s.na AS na, h.valid_from AS vf,
-         |        CASE WHEN h.c_custkey IS NOT NULL THEN 1 END AS ic,
-         |        CASE WHEN s.c_custkey IS NOT NULL THEN 1 END AS isn
-         |      FROM hist h FULL OUTER JOIN snap s ON h.c_custkey = s.c_custkey)
-         |SELECT k AS c_custkey, a AS c_mktsegment, vf AS valid_from,
-         |  CAST(NULL AS BIGINT) AS valid_to
-         |FROM j WHERE ic = 1 AND isn = 1 AND a IS NOT DISTINCT FROM na
-         |UNION ALL
-         |SELECT k, a, vf, CAST($T0 AS BIGINT)
-         |FROM j WHERE ic = 1 AND (isn IS NULL OR a IS DISTINCT FROM na)
-         |UNION ALL
-         |SELECT k, na, CAST($T0 AS BIGINT), CAST(NULL AS BIGINT)
-         |FROM j WHERE isn = 1 AND (ic IS NULL OR a IS DISTINCT FROM na)
-         |ORDER BY c_custkey, valid_from""".stripMargin,
-
-    // attribution: per-conversion touch windows, the same positional CASE
-    // weights, one channel aggregate (sum rounded)
-    "q_attribution" ->
-      s"""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_id AS tb, event_type AS et
-         |  FROM events WHERE user_id IS NOT NULL),
-         |c AS (SELECT u, t AS cts, tb AS cid FROM e WHERE et = 'purchase'),
-         |p AS (SELECT e.et, e.u, e.t, e.tb, c.cts, c.cid FROM e JOIN c ON e.u = c.u
-         |      WHERE e.et IN ('view', 'click') AND e.t < c.cts AND e.t >= c.cts - $RUN_WEEK_US),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY u, cts, cid ORDER BY t, tb) AS rn,
-         |        count(*) OVER (PARTITION BY u, cts, cid) AS n FROM p)
-         |SELECT et AS channel, CAST(count(*) AS BIGINT) AS n_touches,
-         |  round(CAST(sum(CAST(round((CASE WHEN n = 1 THEN 1.0
-         |                 WHEN rn = 1 OR rn = n THEN (CASE WHEN n = 2 THEN 0.5 ELSE 0.4 END)
-         |                 ELSE 0.2 / (n - 2) END) * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0, 6) AS credit
-         |FROM r GROUP BY 1 ORDER BY channel""".stripMargin,
-
-    // k-anonymity: QI-tuple count + rollup
-    // backfill: distinct present windows anti-joined against the fixed grid
-    "q_backfill_plan" ->
-      s"""WITH e AS (SELECT user_id % 2000 AS pv, epoch_us(ts) AS t FROM events
-         |           WHERE user_id IS NOT NULL
-         |             AND epoch_us(ts) >= $T0
-         |             AND epoch_us(ts) < ${T0 + 14L * 86400000000L}),
-         |p AS (SELECT DISTINCT pv, (t - $T0) // 86400000000 AS w FROM e),
-         |k AS (SELECT DISTINCT pv FROM p),
-         |g AS (SELECT pv, u.w AS w FROM k, unnest(generate_series(0, 13)) AS u(w)),
-         |m AS (SELECT g.pv, g.w FROM g ANTI JOIN p USING (pv, w))
-         |SELECT pv, $T0 + w * 86400000000 AS window_start_us,
-         |  least(${T0 + 14L * 86400000000L}, $T0 + (w + 1) * 86400000000) AS window_end_us
-         |FROM m ORDER BY pv, window_start_us""".stripMargin,
-
-    // clustering depth: metadata-frame pairwise overlap, averaged per key
-    "q_cluster_depth" ->
-      """WITH f AS (SELECT event_type AS k, epoch_us(ts) // 86400000000 AS fl,
-        |             min(value) AS lo, max(value) AS hi
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |d AS (SELECT a.k, a.fl, CAST(count(*) AS BIGINT) AS depth
-        |      FROM f a JOIN f b ON a.k = b.k AND a.lo <= b.hi AND b.lo <= a.hi
-        |      GROUP BY 1, 2)
-        |SELECT k AS event_type, CAST(count(*) AS BIGINT) AS n_files,
-        |  round(avg(depth), 6) AS avg_depth, CAST(max(depth) AS BIGINT) AS max_depth
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // DP release: identical md5-uniform + inverse-CDF Laplace arithmetic
-    "q_dp_release" ->
-      """WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact
-        |           FROM events WHERE event_type IS NOT NULL GROUP BY 1),
-        |u AS (SELECT event_type, n_exact,
-        |        (CAST('0x' || substr(md5(event_type || ':42'), 1, 8) AS BIGINT) + 0.5)
-        |          / 4294967296.0 AS uu
-        |      FROM g),
-        |z AS (SELECT event_type, n_exact,
-        |        (-1.0 / 0.5) * sign(uu - 0.5) * ln(1.0 - 2.0 * abs(uu - 0.5)) AS noise
-        |      FROM u)
-        |SELECT event_type, n_exact, round(n_exact + noise, 4) AS n_noised,
-        |  round(abs(noise), 4) AS abs_noise
-        |FROM z ORDER BY event_type""".stripMargin,
-
-    "q_k_anonymity" ->
-      """WITH g AS (SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS c
-        |           FROM customer GROUP BY 1, 2)
-        |SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(CASE WHEN c < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-        |  CAST(sum(CASE WHEN c < 5 THEN c ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-        |  CAST(min(c) AS BIGINT) AS min_group_size
-        |FROM g""".stripMargin,
-
-    // l-diversity: distinct sensitive (length-bucket) count per QI cell;
-    // the bucket is the truncated-toward-zero double division the engine
-    // computes (positive values: identical to floor division)
-    "q_l_diversity" ->
-      """WITH g AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c,
-        |    CAST(count(DISTINCT CAST(floor(CAST(n_chars AS DOUBLE) / 200.0) AS BIGINT)) AS BIGINT) AS d
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(CASE WHEN d < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-        |  CAST(sum(CASE WHEN d < 3 THEN c ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-        |  CAST(min(d) AS BIGINT) AS min_diversity
-        |FROM g""".stripMargin,
-
-    // Benford audit: literal-interpolated expected shares, string-head
-    // digit extraction (exact integer-to-string in both engines)
-    "q_benford" -> benfordSql,
-
-    // compaction planner: per-partition running row count, first-fit
-    // integer group assignment, per-group rollup windows — BIGINT end to end
-    "q_compaction_plan" ->
-      """WITH f AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS r
-        |  FROM events GROUP BY 1, 2),
-        |ff AS (SELECT event_type,
-        |    event_type || '/' || lpad(CAST(day AS VARCHAR), 6, '0') AS file, r
-        |  FROM f),
-        |a AS (SELECT event_type, file, r,
-        |        sum(r) OVER (PARTITION BY event_type ORDER BY file) AS cum FROM ff),
-        |g AS (SELECT event_type, file, r, CAST((cum - r) // 2000 AS BIGINT) AS grp FROM a)
-        |SELECT event_type, file, r AS rows, grp,
-        |  CAST(sum(r) OVER (PARTITION BY event_type, grp) AS BIGINT) AS grp_rows,
-        |  CAST(count(*) OVER (PARTITION BY event_type, grp) AS BIGINT) AS grp_files
-        |FROM g ORDER BY event_type, file""".stripMargin,
-
-    // Count-Min audit: seeded (a,b) rows interpolated as literals; the
-    // md5-prefix key hash, counter build, and min-of-depth estimate are
-    // BIGINT end to end
-    "q_cm_sketch" -> cmSketchSql,
-
-    "q_bloom_join" -> bloomJoinSql,
-
-    // URL canonicalization: identical regex pipeline, list_filter/list_sort
-    // for the query-param normalization
-    "q_url_canon" ->
-      """WITH u AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |           'https://www.g' || (doc_id // 3) % 4 || '.example.com/docs/' ||
-        |           (doc_id // 3) || '?id=' || (doc_id // 3) || '&a=1'
-        |         WHEN doc_id % 3 = 1 THEN
-        |           'HTTPS://WWW.g' || (doc_id // 3) % 4 || '.EXAMPLE.COM:443/docs/' ||
-        |           (doc_id // 3) || '/?a=1&utm_source=feed&id=' || (doc_id // 3)
-        |         ELSE
-        |           'https://www.g' || (doc_id // 3) % 4 || '.example.com/docs/' ||
-        |           (doc_id // 3) || '?utm_campaign=x&id=' || (doc_id // 3) || '&a=1#frag'
-        |    END AS url
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(url, '#.*$', '') AS nf FROM u),
-        |s2 AS (SELECT doc_id, nf,
-        |         lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |         lower(regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-        |         regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-        |         regexp_extract(nf, '\?([^#]*)', 1) AS q0
-        |       FROM s1),
-        |s3 AS (SELECT doc_id, scheme,
-        |         CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-        |              WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-        |              ELSE hostport END AS host,
-        |         CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'
-        |              ELSE regexp_replace(path0, '/+$', '') END AS pth,
-        |         list_sort(list_filter(string_split(q0, '&'), p ->
-        |           NOT regexp_matches(lower(p), '^(utm_|ref=|fbclid=|gclid=)')
-        |           AND p <> '')) AS kept
-        |       FROM s2),
-        |c AS (SELECT doc_id,
-        |        scheme || '://' || host || pth ||
-        |        CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&')
-        |             ELSE '' END AS cu
-        |      FROM s3)
-        |SELECT cu AS canonical_url, CAST(count(*) AS BIGINT) AS n_variants,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, min(doc_id) AS min_doc
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // salted join: the oracle is the PLAIN join — salting must be invisible
-    // in the result
-    "q_salted_join" ->
-      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-        |  round(CAST(sum(CAST(round(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT) / 100.0, 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_jl_audit" -> jlAuditSql,
-
-    // phrase search: position votes to anchors, all distinct offsets present
-    "q_phrase_search" ->
-      """WITH toks AS (SELECT doc_id, u.p - 1 AS p, string_split(text, ' ')[u.p] AS tok
-        |              FROM documents,
-        |                unnest(generate_series(1, len(string_split(text, ' ')))) AS u(p)
-        |              WHERE text IS NOT NULL),
-        |terms AS (SELECT * FROM (VALUES (0::BIGINT, 'table'), (1::BIGINT, 'table')) t(i, term)),
-        |v AS (SELECT doc_id, p - i AS anchor, i FROM toks JOIN terms ON tok = term),
-        |a AS (SELECT doc_id, anchor, count(DISTINCT i) AS nv FROM v GROUP BY 1, 2),
-        |h AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-        |      FROM a WHERE nv = 2 GROUP BY 1)
-        |SELECT doc_id, n_hits FROM h ORDER BY doc_id""".stripMargin,
-
-    "q_hll" -> hllSql,
-
-    // sliding HLL: daily registers, 7-way coverage explode, max-merge,
-    // then the identical estimate expression as q_hll
-    "q_hll_sliding" ->
-      """WITH b AS (SELECT user_id AS k, epoch_us(ts) // 86400000000 AS day,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS x
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |r AS (SELECT day, x // 16777216 AS bk,
-        |        CASE WHEN x % 16777216 = 0 THEN 25
-        |             ELSE 25 - length(bin(x % 16777216)) END AS rk
-        |      FROM b),
-        |daily AS (SELECT day, bk, max(rk) AS m FROM r GROUP BY 1, 2),
-        |cov AS (SELECT u.w AS w, bk, m
-        |        FROM daily, unnest(generate_series(day, day + 6)) AS u(w)),
-        |merged AS (SELECT w, bk, max(m) AS m FROM cov GROUP BY 1, 2),
-        |pg AS (SELECT w, CAST(sum(1::BIGINT << CAST(25 - m AS INTEGER)) AS BIGINT) AS s,
-        |         CAST(count(*) AS BIGINT) AS nb
-        |       FROM merged GROUP BY 1),
-        |exd AS (SELECT DISTINCT k, day FROM b),
-        |exc AS (SELECT u.w AS w, CAST(count(DISTINCT k) AS BIGINT) AS n_exact
-        |        FROM exd, unnest(generate_series(day, day + 6)) AS u(w) GROUP BY 1),
-        |est AS (SELECT w,
-        |    0.7213 / (1.0 + 1.079 / 256) * 256.0 * 256.0 * 33554432.0 /
-        |      CAST(s + (256 - nb) * 33554432 AS DOUBLE) AS raw,
-        |    256 - nb AS zeros
-        |  FROM pg),
-        |e2 AS (SELECT w, CASE WHEN raw <= 640.0 AND zeros > 0
-        |                      THEN 256.0 * ln(256.0 / CAST(zeros AS DOUBLE))
-        |                      ELSE raw END AS est
-        |       FROM est)
-        |SELECT w AS day, n_exact, round(est, 4) AS n_est,
-        |  round(abs(est - n_exact) / n_exact, 4) AS rel_err
-        |FROM e2 JOIN exc USING (w) ORDER BY day""".stripMargin,
-
-    "q_hdr_quantiles" -> hdrQuantilesSql,
-
-    "q_hll_overlap" -> hllOverlapSql,
-
-    // DTW: same 6-dp bucket means; the DP fold re-expressed as DuckDB's
-    // nested list_reduce with a VARCHAR DP row (1.0 list_reduce has no init
-    // arg — prepend it — and mis-threads struct accumulators; doubles
-    // round-trip VARCHAR exactly). Identical IEEE add/min order → identical
-    // cells.
-    "q_dtw" ->
-      """WITH s AS (SELECT event_type AS k, epoch_us(ts) // 21600000000 AS b,
-        |    round(CAST(sum(CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT)) AS BIGINT)
-        |          / (count(CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS v
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |g AS (SELECT k, list(v ORDER BY b) AS arr FROM s GROUP BY 1),
-        |rf AS (SELECT arr AS ref FROM g WHERE k = 'click'),
-        |d AS (SELECT k, arr, ref,
-        |        list_reduce(
-        |          list_concat(['0.0' || repeat(';1e18', len(ref))],
-        |                      [CAST(x AS VARCHAR) FOR x IN arr]),
-        |          (rw, x) -> list_reduce(
-        |            list_concat(['1e18'],
-        |                        [CAST(i AS VARCHAR) FOR i IN generate_series(1, len(ref))]),
-        |            (acc, i) -> acc || ';' || CAST(
-        |              abs(ref[CAST(i AS BIGINT)] - CAST(x AS DOUBLE)) +
-        |              least(CAST(string_split(acc, ';')[len(string_split(acc, ';'))] AS DOUBLE),
-        |                    CAST(string_split(rw, ';')[CAST(i AS BIGINT) + 1] AS DOUBLE),
-        |                    CAST(string_split(rw, ';')[CAST(i AS BIGINT)] AS DOUBLE)) AS VARCHAR)))
-        |        AS st
-        |      FROM g, rf)
-        |SELECT k AS event_type, CAST(len(arr) AS BIGINT) AS n,
-        |  CAST(len(ref) AS BIGINT) AS m,
-        |  round(CAST(string_split(st, ';')[len(ref) + 1] AS DOUBLE), 6) AS dtw,
-        |  round(round(CAST(string_split(st, ';')[len(ref) + 1] AS DOUBLE), 6)
-        |        / (len(arr) + len(ref)), 6) AS dtw_norm
-        |FROM d ORDER BY event_type""".stripMargin,
-
-    // decayed trending: same integer half-life buckets, exact BIGINT
-    // 2^(40-d) terms, one scale-back division per output row
-    "q_trending" ->
-      """WITH b AS (SELECT user_id AS k, epoch_us(ts) AS t FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |m AS (SELECT max(t) AS tmax FROM b),
-        |d AS (SELECT k, CAST(least(floor((tmax - t) / 172800000000.0), 40.0) AS INTEGER) AS d
-        |      FROM b, m),
-        |g AS (SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(1::BIGINT << (40 - d)) AS BIGINT) AS s
-        |      FROM d GROUP BY 1)
-        |SELECT user_id, n, round(s / 1099511627776.0, 6) AS score
-        |FROM g ORDER BY score DESC, user_id LIMIT 20""".stripMargin,
-
-    // lead-lag: hour-bucket 6-dp means, the (2L+1)-way lag explode of the
-    // AGGREGATED series, explicit-sum Pearson per lag
-    "q_lead_lag" ->
-      """WITH s AS (SELECT event_type, epoch_us(ts) AS ts_us,
-        |    CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL),
-        |a AS (SELECT ts_us // 3600000000 AS bucket, round(CAST(sum(CAST(round(v * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round(v * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS v
-        |      FROM s WHERE event_type = 'click' GROUP BY 1),
-        |b AS (SELECT ts_us // 3600000000 AS bucket, round(CAST(sum(CAST(round(v * 1000000.0) AS BIGINT)) AS BIGINT) / (count(CAST(round(v * 1000000.0) AS BIGINT)) * 1000000.0), 6) AS w
-        |      FROM s WHERE event_type = 'purchase' GROUP BY 1),
-        |bx AS (SELECT bucket - u.l AS bucket, u.l AS lag, w
-        |       FROM b, unnest(generate_series(-6, 6)) AS u(l)),
-        |j AS (SELECT lag, a.v, bx.w FROM a JOIN bx USING (bucket)),
-        |g AS (SELECT CAST(lag AS BIGINT) AS lag, CAST(count(*) AS BIGINT) AS n,
-        |        sum(v) AS sx, sum(w) AS sy, sum(v * v) AS sxx,
-        |        sum(w * w) AS syy, sum(v * w) AS sxy
-        |      FROM j GROUP BY 1)
-        |SELECT lag, n,
-        |  CASE WHEN n >= 2 AND (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-        |       THEN round((n * sxy - sx * sy) /
-        |              sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) END AS corr
-        |FROM g ORDER BY lag""".stripMargin,
-
-    // binned two-sample KS: same 20-bin grid as q_psi, cumulative ECDFs
-    // via windows over at most 20 cells per key, max absolute gap
-    "q_ks_drift" -> ksDriftOracleSql,
-
-    // rolling PSI: same clamp-bin grid and smoothing as q_psi, paired on
-    // consecutive day indices where both sides have data
-    "q_psi_rolling" ->
-      """WITH s AS (SELECT event_type AS pvname, epoch_us(ts) AS ts_us,
-        |    CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-        |c AS (SELECT pvname, ts_us // 86400000000 AS p,
-        |        CAST(least(greatest(floor((v - 0.0) / 25.0), 0.0), 19.0) AS BIGINT) AS b,
-        |        CAST(count(*) AS BIGINT) AS n
-        |      FROM s GROUP BY 1, 2, 3),
-        |pd AS (SELECT DISTINCT pvname, p FROM c),
-        |pairs AS (SELECT a.pvname, a.p + 1 AS pair FROM pd a
-        |          JOIN pd b2 ON a.pvname = b2.pvname AND b2.p = a.p + 1),
-        |pv AS (SELECT pvname, p + 1 AS pair, b, n AS n1 FROM c),
-        |cu AS (SELECT pvname, p AS pair, b, n AS n2 FROM c),
-        |j0 AS (SELECT coalesce(pv.pvname, cu.pvname) AS pvname,
-        |         coalesce(pv.pair, cu.pair) AS pair,
-        |         coalesce(pv.b, cu.b) AS b,
-        |         coalesce(n1, 0) AS n1, coalesce(n2, 0) AS n2
-        |       FROM pv FULL OUTER JOIN cu
-        |         ON pv.pvname = cu.pvname AND pv.pair = cu.pair AND pv.b = cu.b),
-        |j AS (SELECT j0.* FROM j0 JOIN pairs USING (pvname, pair)),
-        |t AS (SELECT pvname, pair, CAST(sum(n1) AS BIGINT) AS t1,
-        |        CAST(sum(n2) AS BIGINT) AS t2, CAST(count(*) AS BIGINT) AS cells
-        |      FROM j GROUP BY 1, 2),
-        |pp AS (SELECT j.pvname, j.pair,
-        |         (n1 + 0.5) / (t1 + 0.5 * cells) AS p1,
-        |         (n2 + 0.5) / (t2 + 0.5 * cells) AS p2
-        |       FROM j JOIN t USING (pvname, pair))
-        |SELECT pvname, pair AS period,
-        |  round(sum((p1 - p2) * ln(p1 / p2)), 6) AS psi
-        |FROM pp GROUP BY 1, 2 ORDER BY pvname, period""".stripMargin,
-
-    // drift panel: the two drift oracles composed as subqueries, joined on
-    // the key — same statistics side by side, no restatement
-    "q_drift_panel" ->
-      s"""SELECT p.*, k.ks
-         |FROM ($psiOracleSql) p JOIN ($ksDriftOracleSql) k USING (pvname)
-         |ORDER BY pvname""".stripMargin,
-
-    // Cohen's kappa per LF pair: same vote CTE as the labeling matrix,
-    // chance correction from the co-fired marginals
-    "q_lf_kappa" -> lfKappaSql,
-
-    // CV folds: the docBucketSql hash over vec_id, per-fold label shares
-    "q_cv_folds" ->
-      """WITH a AS (SELECT CAST('0x' || substr(md5('graft' || CAST(vec_id AS VARCHAR)), 1, 8) AS BIGINT) % 5 AS fold,
-        |    CAST(label AS BIGINT) AS label
-        |  FROM embeddings WHERE label IS NOT NULL),
-        |c AS (SELECT fold, label, CAST(count(*) AS BIGINT) AS n FROM a GROUP BY 1, 2),
-        |t AS (SELECT fold, CAST(sum(n) AS BIGINT) AS tot FROM c GROUP BY 1)
-        |SELECT c.fold, c.label, c.n, round(CAST(c.n AS DOUBLE) / t.tot, 6) AS share
-        |FROM c JOIN t ON c.fold = t.fold ORDER BY c.fold, c.label""".stripMargin,
-
-    // triangles: the q_knn_communities mutual-edge CTE, two ordered-edge
-    // equi-joins (each a<b<c triple once), integer wedge sum
-    "q_triangles" ->
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |m AS (SELECT g.qid AS d1, g.nid AS d2 FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |tri AS (SELECT CAST(count(*) AS BIGINT) AS n_triangles
-         |        FROM m e1 JOIN m e2 ON e1.d2 = e2.d1
-         |        JOIN m e3 ON e3.d1 = e1.d1 AND e3.d2 = e2.d2),
-         |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS d
-         |        FROM (SELECT d1 AS n FROM m UNION ALL SELECT d2 FROM m) GROUP BY n),
-         |ds AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-         |         CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges FROM deg),
-         |ec AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM m)
-         |SELECT n_nodes, n_edges, n_triangles, n_wedges,
-         |  CASE WHEN n_wedges = 0 THEN NULL
-         |       ELSE round(CAST(3 * n_triangles AS DOUBLE) / n_wedges, 6) END AS clustering
-         |FROM ds CROSS JOIN ec CROSS JOIN tri""".stripMargin,
-
-    // assortativity: same edge CTE, integer-exact Pearson over both edge
-    // orientations
-    "q_assortativity" ->
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |m AS (SELECT g.qid AS a, g.nid AS b FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-         |          SELECT a AS n FROM m UNION ALL SELECT b FROM m) GROUP BY 1),
-         |pairs AS (SELECT da.d AS x, db.d AS y FROM m
-         |          JOIN deg da ON m.a = da.n JOIN deg db ON m.b = db.n),
-         |sym AS (SELECT x, y FROM pairs UNION ALL SELECT y, x FROM pairs),
-         |t AS (SELECT CAST(count(*) AS BIGINT) AS m2, CAST(sum(x) AS BIGINT) AS sx,
-         |        CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * x) AS BIGINT) AS sxx,
-         |        CAST(sum(y * y) AS BIGINT) AS syy, CAST(sum(x * y) AS BIGINT) AS sxy
-         |      FROM sym)
-         |SELECT m2 // 2 AS n_edges,
-         |  CASE WHEN (m2 * sxx - sx * sx) > 0 AND (m2 * syy - sy * sy) > 0
-         |       THEN round((m2 * sxy - sx * sy) /
-         |              sqrt(CAST((m2 * sxx - sx * sx) * (m2 * syy - sy * sy) AS DOUBLE)), 6)
-         |  END AS r
-         |FROM t""".stripMargin,
-
-    // k-core: the q_triangles edge CTE + 30 unrolled degree-peel rounds
-    // (idempotent past the fixpoint the engine converges to and asserts)
-    "q_kcore" -> {
-      // MATERIALIZED: each round references its predecessor three times —
-      // inlined CTEs would expand 3^rounds embedding scans ("too many open
-      // files" long before any result). 30 rounds covers the sf0.1 graph's
-      // 13-round fixpoint with margin; later rounds are idempotent no-ops
-      val rounds = (0 until 30).map { i =>
-        s"""d$i AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) AS c FROM (
-           |  SELECT a AS n FROM e$i UNION ALL SELECT b FROM e$i) GROUP BY 1),
-           |k$i AS MATERIALIZED (SELECT n FROM d$i WHERE c >= 3),
-           |e${i + 1} AS MATERIALIZED (SELECT e$i.a, e$i.b FROM e$i
-           |  SEMI JOIN k$i ka ON e$i.a = ka.n
-           |  SEMI JOIN k$i kb ON e$i.b = kb.n)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0x AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0x a JOIN e0x b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |e0 AS MATERIALIZED (SELECT g.qid AS a, g.nid AS b FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |$rounds
-         |SELECT n AS node, CAST(count(*) AS BIGINT) AS degree FROM (
-         |  SELECT a AS n FROM e30 UNION ALL SELECT b FROM e30)
-         |GROUP BY 1 HAVING count(*) >= 3 ORDER BY node""".stripMargin
-    },
-
-    // negative sampling: same mutual-kNN edge CTE as q_triangles, ranked
-    // node table, identical seeded hash index arithmetic, canonical
-    // anti-join
-    "q_neg_sample" -> {
-      val (a1, a2) = Graph.negSampleConsts(42L)
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-         |       FROM embeddings WHERE embedding IS NOT NULL),
-         |sc AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-         |         round(${cosineSql("a.v", "b.v")}, 6) AS sim
-         |       FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM sc),
-         |g AS (SELECT qid, nid FROM r WHERE rn <= 5),
-         |m AS (SELECT g.qid AS d1, g.nid AS d2 FROM g
-         |      JOIN g g2 ON g.qid = g2.nid AND g.nid = g2.qid WHERE g.qid < g.nid),
-         |nd AS (SELECT DISTINCT n FROM (SELECT d1 AS n FROM m UNION ALL SELECT d2 FROM m)),
-         |rk AS (SELECT n, CAST(row_number() OVER (ORDER BY n) AS BIGINT) AS r FROM nd),
-         |cn AS (SELECT CAST(max(r) AS BIGINT) AS cnt FROM rk),
-         |cand AS (SELECT n, u.slot AS slot,
-         |           (($a1 * CAST('0x' || substr(md5(CAST(n AS VARCHAR)), 1, 8) AS BIGINT)
-         |             + $a2 * (u.slot + 1)) % 2147483647) % cnt + 1 AS idx
-         |         FROM rk, cn, unnest(generate_series(0, 2)) AS u(slot)),
-         |pt AS (SELECT cand.n, cand.slot, rk.n AS p
-         |       FROM cand JOIN rk ON cand.idx = rk.r
-         |       WHERE rk.n <> cand.n),
-         |neg AS (SELECT pt.n, pt.slot, pt.p FROM pt
-         |        ANTI JOIN m ON least(pt.n, pt.p) = m.d1 AND greatest(pt.n, pt.p) = m.d2)
-         |SELECT n AS node, CAST(slot AS BIGINT) AS slot, p AS neg
-         |FROM neg ORDER BY node, slot""".stripMargin
-    },
-
-    // gini: keyed count, rank window over the KEYS-sized frame, exact
-    // integer sums, one mirrored double expression
-    "q_skew_gini" ->
-      """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c FROM events
-        |           WHERE user_id IS NOT NULL GROUP BY 1),
-        |r AS (SELECT c, row_number() OVER (ORDER BY c, CAST(user_id AS VARCHAR)) AS rk FROM c),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS nk, CAST(sum(c) AS BIGINT) AS nr,
-        |        CAST(max(c) AS BIGINT) AS mx, CAST(sum(rk * c) AS BIGINT) AS rc FROM r)
-        |SELECT nk AS n_keys, nr AS n_rows, mx AS max_count,
-        |  round(CAST(mx AS DOUBLE) / nr, 6) AS top_share,
-        |  CASE WHEN nk <= 1 THEN 0.0 ELSE
-        |    round(CAST(2 * rc AS DOUBLE) / CAST(nk * nr AS DOUBLE)
-        |      - CAST(nk + 1 AS DOUBLE) / CAST(nk AS DOUBLE), 6) END AS gini
-        |FROM a""".stripMargin,
-
-    // uncertainty sampling: kNN rank CTE -> integer vote table -> ordered
-    // label window -> margin; every quantity an exact BIGINT
-    "q_uncertainty" -> uncertaintySql(k = 5, topN = 50),
-
-    // shard rebalance: the same "md5 || '|' || shard" greatest-string
-    // argmax on both sides (hash first, shard-name tie-break)
-    "q_shard_rebalance" -> shardRebalanceSql,
-
-    // range bounds: one quantile_cont branch per split (percentile parity)
-    "q_range_bounds" -> rangeBoundsSql(parts = 8),
-
-    // page stitch: head/tail seam strings, degree caps, one equi-join
-    "q_page_stitch" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |  FROM documents WHERE text IS NOT NULL),
-        |b AS (SELECT doc_id, ws, len(ws) AS n FROM t WHERE len(ws) >= 8),
-        |h AS (SELECT doc_id AS next_id, array_to_string(ws[1 : 8], ' ') AS seam FROM b),
-        |tl AS (SELECT doc_id AS prev_id, array_to_string(ws[n - 7 : n], ' ') AS seam FROM b),
-        |hd AS (SELECT seam FROM h GROUP BY seam HAVING count(*) <= 10),
-        |td AS (SELECT seam FROM tl GROUP BY seam HAVING count(*) <= 10)
-        |SELECT tl.prev_id, h.next_id, tl.seam
-        |FROM tl JOIN td ON tl.seam = td.seam
-        |  JOIN h ON tl.seam = h.seam
-        |  JOIN hd ON h.seam = hd.seam
-        |WHERE tl.prev_id <> h.next_id
-        |ORDER BY prev_id, next_id""".stripMargin,
-
-    // LSH recall: the exact jp pair CTE left-joined to the banded result
-    "q_lsh_recall" ->
-      s"""WITH ${jaccardPairsCtes()},
-         |lsh AS (SELECT d1, d2 FROM (${minhashLshSql(NUM_PERM, 4, 2, 0.5)}) tq),
-         |a AS (SELECT CAST(count(*) AS BIGINT) AS n_exact,
-         |        CAST(sum(CASE WHEN l.d1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_lsh
-         |      FROM jp LEFT JOIN lsh l ON jp.d1 = l.d1 AND jp.d2 = l.d2)
-         |SELECT n_exact, n_lsh, n_exact - n_lsh AS n_missed,
-         |  CASE WHEN n_exact = 0 THEN NULL
-         |       ELSE round(CAST(n_lsh AS DOUBLE) / n_exact, 6) END AS recall
-         |FROM a""".stripMargin,
-
-    // rollup merge: the oracle recomputes the FULL rollup from scratch —
-    // the engine's prior+delta merge must land on the same table
-    "q_rollup_merge" ->
-      """SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(CAST(sum(CAST(coalesce(value, 0.0) AS DECIMAL(28,6))) AS DOUBLE), 6) AS sum_value
-        |FROM events WHERE event_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-
-    // column profile: per-column value-counts rollup; top value via a
-    // scalar (count DESC, value) subquery — the engine's min_by tie-break
-    "q_column_profile" -> columnProfileSql("orders",
-      Seq("o_orderstatus", "o_orderpriority", "o_custkey")),
-
-    // join stats: two keyed aggregates + a 1-row stitch
-    "q_join_stats" ->
-      """WITH ck AS (SELECT o_custkey AS k FROM orders),
-        |pk AS (SELECT DISTINCT c_custkey AS k FROM customer),
-        |pp AS (SELECT coalesce(cc.c, 0) AS c FROM pk
-        |       LEFT JOIN (SELECT k, count(*) AS c FROM ck WHERE k IS NOT NULL GROUP BY 1) cc
-        |       USING (k)),
-        |cs AS (SELECT CAST(count(*) AS BIGINT) AS n_children,
-        |         CAST(sum(CASE WHEN p.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_matched
-        |       FROM ck LEFT JOIN pk p ON ck.k = p.k),
-        |ps AS (SELECT CAST(count(*) AS BIGINT) AS n_parents,
-        |         CAST(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_childless,
-        |         CAST(min(c) AS BIGINT) AS min_fanout, CAST(max(c) AS BIGINT) AS max_fanout,
-        |         CAST(sum(c) AS BIGINT) AS tot FROM pp)
-        |SELECT n_children, n_matched, n_children - n_matched AS n_orphans,
-        |  floor((CAST(n_matched AS DOUBLE) / n_children) * 1000000.0) / 1000000.0 AS match_rate,
-        |  n_parents, n_childless, min_fanout, max_fanout,
-        |  round(CAST(tot AS DOUBLE) / n_parents, 6) AS avg_fanout
-        |FROM cs CROSS JOIN ps""".stripMargin,
-
-    // labeling matrix: the three LF CASE votes restated, one aggregate of
-    // conditional sums, pair rows as UNION ALL branches
-    "q_labeling_matrix" -> labelingMatrixSql,
-
-    // cluster provenance: the recursive-CTE clusters joined to metadata,
-    // one grouped rollup; sources as a sorted-distinct comma join
-    "q_cluster_provenance" ->
-      s"""WITH RECURSIVE ${jaccardPairsCtes()},
-         |e AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         |comp AS (SELECT a AS doc, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a)
-         |SELECT comp.component, CAST(count(*) AS BIGINT) AS n_members,
-         |  min(comp.doc) AS rep_id,
-         |  CAST(count(DISTINCT d.source) AS BIGINT) AS n_sources,
-         |  string_agg(DISTINCT d.source, ',' ORDER BY d.source) AS sources,
-         |  CAST(sum(d.n_chars) AS BIGINT) AS total_chars
-         |FROM comp JOIN documents d ON comp.doc = d.doc_id
-         |GROUP BY comp.component ORDER BY component""".stripMargin,
-
-    // sorted-neighborhood: DuckDB keeps the plain global row_number (the
-    // engine's chunked ranking produces the same total order); window
-    // membership as a rank-difference join, exact distinct-token Jaccard
-    "q_snm_dedup" ->
-      """WITH b AS (SELECT doc_id AS doc,
-        |    list_distinct(list_filter(string_split(text, ' '), t -> t <> '')) AS toks,
-        |    substr(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'), 1, 20) AS k
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (SELECT doc, toks, row_number() OVER (ORDER BY k, doc) AS rank FROM b),
-        |c AS (SELECT a.doc AS da, a.toks AS ta, b2.doc AS db, b2.toks AS tb
-        |      FROM r a JOIN r b2 ON b2.rank - a.rank BETWEEN 1 AND 5),
-        |j AS (SELECT least(da, db) AS d1, greatest(da, db) AS d2,
-        |        len(list_intersect(ta, tb)) AS i, len(ta) + len(tb) - len(list_intersect(ta, tb)) AS u
-        |      FROM c WHERE len(ta) + len(tb) - len(list_intersect(ta, tb)) > 0)
-        |SELECT d1, d2, round(CAST(i AS DOUBLE) / u, 6) AS jaccard
-        |FROM j WHERE round(CAST(i AS DOUBLE) / u, 6) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
-
-    // dHash: the stub decode's byte-cycled luma plane re-derived as a code
-    // point list; 64 strict integer comparisons at driver-precomputed
-    // sample indices (identical nearest-neighbor geometry)
-    "q_media_dhash" -> mediaDhashSql(hashW = 8, hashH = 8, w = 8, h = 4),
-
-    "q_dhash_pairs" -> dhashPairsSql(prefixBits = 8, maxHamming = 10),
-
-    // fertility: one agg of exact BIGINT sums per language; the same
-    // split/regex tokenizers as q_text_stats / q_token_count
-    "q_fertility" ->
-      """WITH d AS (SELECT lang,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS w,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS b,
-        |    CAST(length(text) AS BIGINT) AS c
-        |  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(w) AS BIGINT) AS n_words, CAST(sum(b) AS BIGINT) AS n_tokens,
-        |  CAST(sum(c) AS BIGINT) AS n_chars,
-        |  CASE WHEN sum(w) = 0 THEN NULL
-        |       ELSE round(CAST(sum(b) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 6) END AS fertility,
-        |  CASE WHEN sum(b) = 0 THEN NULL
-        |       ELSE round(CAST(sum(c) AS DOUBLE) / CAST(sum(b) AS DOUBLE), 6) END AS chars_per_token
-        |FROM d GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // packing efficiency: integer ceilings per candidate length from one
-    // aggregate; fills are single divisions of exact longs
-    "q_pack_efficiency" -> packEfficiencySql(Seq(128, 256, 512, 1024)),
-
-    // span pairs: the q_span_dedup hashing chain, boilerplate degree cap,
-    // bounded pair self-join; containment denominator uses UNCAPPED sizes
-    "q_span_pairs" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |b AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-        |sp AS (SELECT DISTINCT doc_id,
-        |    md5(array_to_string(toks[u.pos + 1 : u.pos + 8], ' ')) AS h
-        |  FROM b, unnest(generate_series(0, n - 8)) AS u(pos)),
-        |keep AS (SELECT h FROM sp GROUP BY h HAVING count(*) BETWEEN 2 AND 10),
-        |ds AS (SELECT sp.doc_id, sp.h FROM sp JOIN keep USING (h)),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM sp GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b2.doc_id AS d2, CAST(count(*) AS BIGINT) AS n_shared
-        |      FROM ds a JOIN ds b2 ON a.h = b2.h AND a.doc_id < b2.doc_id
-        |      GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT d1, d2, n_shared,
-        |  round(CAST(n_shared AS DOUBLE) / least(s1.sz, s2.sz), 6) AS overlap
-        |FROM p JOIN sz s1 ON p.d1 = s1.doc_id JOIN sz s2 ON p.d2 = s2.doc_id
-        |ORDER BY d1, d2""".stripMargin,
-
-    // three blocking-by-omission passes (UNION dedupes candidate pairs),
-    // normalized-Levenshtein field sims, best match per left record
-    "q_entity_resolution" ->
-      """WITH l AS (
-        |  SELECT c_custkey AS left_id, c_name AS lname, c_mktsegment AS lseg,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(c_name, 13, 6) AS bk_a,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(c_name, 10, 3) || substr(c_name, 16, 3) AS bk_b,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(c_name, 10, 6) AS bk_c
-        |  FROM customer),
-        |r0 AS (
-        |  SELECT c_custkey AS right_id, c_nationkey,
-        |    substr(c_name, 1, c_custkey % length(c_name)) || 'x' ||
-        |      substr(c_name, c_custkey % length(c_name) + 2, length(c_name)) AS rname,
-        |    CASE WHEN c_custkey % 2 = 1 THEN c_mktsegment || 'x'
-        |         ELSE c_mktsegment END AS rseg
-        |  FROM customer),
-        |r AS (
-        |  SELECT right_id, rname, rseg,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(rname, 13, 6) AS bk_a,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(rname, 10, 3) || substr(rname, 16, 3) AS bk_b,
-        |    CAST(c_nationkey AS VARCHAR) || ':' || substr(rname, 10, 6) AS bk_c
-        |  FROM r0),
-        |cand AS (
-        |  SELECT l.left_id, r.right_id, l.lname, l.lseg, r.rname, r.rseg
-        |  FROM l JOIN r ON l.bk_a = r.bk_a
-        |  UNION
-        |  SELECT l.left_id, r.right_id, l.lname, l.lseg, r.rname, r.rseg
-        |  FROM l JOIN r ON l.bk_b = r.bk_b
-        |  UNION
-        |  SELECT l.left_id, r.right_id, l.lname, l.lseg, r.rname, r.rseg
-        |  FROM l JOIN r ON l.bk_c = r.bk_c),
-        |scored AS (
-        |  SELECT left_id, right_id,
-        |    round(1.0 - CAST(levenshtein(lname, rname) AS DOUBLE) /
-        |      greatest(length(lname), length(rname), 1), 6) AS sim_name,
-        |    round(1.0 - CAST(levenshtein(lseg, rseg) AS DOUBLE) /
-        |      greatest(length(lseg), length(rseg), 1), 6) AS sim_segment
-        |  FROM cand),
-        |s2 AS (SELECT left_id, right_id, sim_name, sim_segment,
-        |    round((sim_name + sim_segment) / 2, 6) AS score FROM scored),
-        |best AS (SELECT *, row_number() OVER (
-        |    PARTITION BY left_id ORDER BY score DESC, right_id) AS rn
-        |  FROM s2 WHERE score >= 0.9)
-        |SELECT left_id, right_id, sim_name, sim_segment, score
-        |FROM best WHERE rn = 1 ORDER BY left_id""".stripMargin,
-
-    // stage thresholds are the interpolated quartiles (quantile_cont ==
-    // Spark's exact percentile, the L35 interop contract); ord is the same
-    // salted md5 as the engine's within-stage shuffle key
-    "q_curriculum" ->
-      """WITH q AS (SELECT doc_id,
-        |    round(ln(1.0 + len(string_split(text, ' '))) *
-        |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |               / len(string_split(text, ' '))), 6) AS difficulty
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (SELECT quantile_cont(difficulty, 0.25) AS t1,
-        |    quantile_cont(difficulty, 0.5) AS t2,
-        |    quantile_cont(difficulty, 0.75) AS t3 FROM q)
-        |SELECT doc_id, difficulty,
-        |  CAST(1 + (CASE WHEN difficulty > t1 THEN 1 ELSE 0 END)
-        |         + (CASE WHEN difficulty > t2 THEN 1 ELSE 0 END)
-        |         + (CASE WHEN difficulty > t3 THEN 1 ELSE 0 END) AS INTEGER) AS stage,
-        |  md5('graft' || CAST(doc_id AS VARCHAR)) AS ord
-        |FROM q CROSS JOIN th
-        |ORDER BY stage, ord, doc_id""".stripMargin,
-
-    // tau at the 0.1-quantile of the 20% hash-bucket calibration slice,
-    // rounded to the 6-dp grid before the cut; per-source eval coverage
-    "q_conformal" ->
-      """WITH q AS (SELECT doc_id, source,
-        |    round(ln(1.0 + len(string_split(text, ' '))) *
-        |          (1.0 - CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |               / len(string_split(text, ' '))), 6) AS s,
-        |    CAST('0x' || substr(md5('conformal' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 20 AS is_cal
-        |  FROM documents WHERE text IS NOT NULL),
-        |t AS (SELECT round(quantile_cont(s, 0.1), 6) AS tau,
-        |    CAST(count(*) AS BIGINT) AS n_cal FROM q WHERE is_cal),
-        |t2 AS (SELECT tau, n_cal,
-        |    round(ceil(0.1 * (n_cal + 1)) / n_cal, 6) AS corrected_level FROM t)
-        |SELECT source, n_cal, CAST(count(*) AS BIGINT) AS n_eval,
-        |  CAST(sum(CASE WHEN s >= tau THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  round(CAST(sum(CASE WHEN s >= tau THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS coverage,
-        |  tau, corrected_level
-        |FROM q CROSS JOIN t2 WHERE NOT is_cal
-        |GROUP BY source, n_cal, tau, corrected_level
-        |ORDER BY source""".stripMargin
-  )
-
-  /** DuckDB fragment mirroring [[Sampling.hashBucket]] over `doc_id` with the
-    * default "graft" salt.
-    */
-  private def docBucketSql(buckets: Long): String =
-    s"CAST('0x' || substr(md5('graft' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % $buckets"
-
-  // the PII patterns, shared verbatim with [[TextAnalysis]] (lookaround-free:
-  // legal in both Java regex and RE2)
-  private val PII_EMAIL = TextAnalysis.piiEmailRe
-  private val PII_IPV4 = TextAnalysis.piiIpv4Re
-  private val PII_PHONE = TextAnalysis.piiPhoneRe
 }

@@ -32,17 +32,9 @@ object Verify {
       } finally
         // the dump is this frame's only evaluation — release the query's
         // call-scoped operator persists so a 259-query pass doesn't pin
-        // one users-sized frame per rank call (r10 verdict #4)
+        // one users-sized frame per rank call
         operators.TimeSeries.releaseCallScopedPersists()
     }
-    // loud summary: a query that stops resolving must not vanish silently
-    // from the round's correctness surface (round 5 lost 53 queries to a
-    // testdata schema change with only per-query stderr lines as evidence)
-    if (failed.nonEmpty)
-      System.err.println(
-        s"[verify] SUMMARY: ${failed.size}/${selected.size} queries FAILED to dump: ${failed.mkString(", ")}")
-    else
-      System.err.println(s"[verify] SUMMARY: all ${selected.size} queries dumped")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -55,17 +47,29 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // static oracles + the data-dependent ones (IVF centroids trained here
-    // with the engine's own seeded code, embedded as SQL literals). A
-    // failure generating the dynamic entries must not sink the whole dump —
-    // the affected queries just degrade to rows-only for the round.
-    val dynamic =
-      try SparkEntry.dataDependentOracles(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] data-dependent oracles failed: ${e.getMessage}")
-        Map.empty[String, String]
+    // each query's oracle SQL, static or generated here from the data
+    // (IVF centroids, PQ codebooks, BPE merges trained with the engine's own
+    // seeded code, embedded as SQL literals). An oracle that throws costs
+    // only its own query, which degrades to rows-only for the round.
+    val (oracles, oracleFailed) = SparkEntry.registry.sortBy(_.name)
+      .partitionMap { r =>
+        try Left(r.name -> r.oracle(spark, sfDir))
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] ${r.name} oracle failed: ${e.getMessage}")
+          Right(r.name)
+        }
       }
-    val oracles = SparkEntry.oracleSql ++ dynamic
+    // loud summary: a query that stops resolving must not vanish silently
+    // from the correctness surface (53 queries were once lost to a testdata
+    // schema change with only per-query stderr lines as evidence)
+    val dumped =
+      if (failed.nonEmpty)
+        s"${failed.size}/${selected.size} queries FAILED to dump: ${failed.mkString(", ")}"
+      else s"all ${selected.size} queries dumped"
+    val oracleNote =
+      if (oracleFailed.isEmpty) ""
+      else s"; ${oracleFailed.size} oracles FAILED: ${oracleFailed.mkString(", ")}"
+    System.err.println(s"[verify] SUMMARY: $dumped$oracleNote")
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

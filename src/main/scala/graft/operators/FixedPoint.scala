@@ -77,7 +77,7 @@ object FixedPoint {
   // q_embed_cov r7 incident: ONE covariance cell rounding to zero from
   // below). The contract: every float the engine EMITS is canonicalized
   // with `+ 0.0`, and every oracle expression that can produce a negative
-  // zero mirrors `+ 0.0` in SQL. NegZeroSpec enforces the engine side
+  // zero mirrors `+ 0.0` in SQL. QuerySurfaceSpec's sweep enforces the engine side
   // across the whole query surface.
   // --------------------------------------------------------------------
 

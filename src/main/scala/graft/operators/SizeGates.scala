@@ -122,15 +122,18 @@ object SizeGates {
     val plan = df.queryExecution.optimizedPlan
     // a frame whose plan already contains a shuffle-introducing operator
     // (its width is the configured shuffle parallelism, not a narrow scan)
-    // gains nothing from another exchange — skip it (r14 ADVICE: a frame
-    // just under the bytes bound on a 1000-core cluster paid a full
-    // round-robin that bought no parallelism). A cached frame is a LEAF
-    // here, deliberately: its stored width may have been AQE-coalesced to
-    // ~1, exactly the case the spread exists for.
+    // gains nothing from another exchange — skip it: a frame just under the
+    // bytes bound on a 1000-core cluster would pay a full round-robin that
+    // buys no parallelism. A width-reducing `coalesce()` (a Repartition
+    // without shuffle) is not such an operator: a frame narrowed to one
+    // partition is exactly the case the spread exists for. A cached frame
+    // is a LEAF here, deliberately: its stored width may have been
+    // AQE-coalesced to ~1, the same case.
     val shuffled = plan.exists {
       case _: org.apache.spark.sql.catalyst.plans.logical.Join => true
       case _: org.apache.spark.sql.catalyst.plans.logical.Aggregate => true
       case _: org.apache.spark.sql.catalyst.plans.logical.Window => true
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.shuffle
       case _: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => true
       case _ => false
     }

@@ -701,4 +701,19 @@ class PlanAuditSpec extends SparkSpec {
       s"getData ran ${getJobs.size} jobs, the plot ${plotJobs.size}:\n" +
         culled.queryExecution.executedPlan.treeString)
   }
+
+  test("spreadSmall spreads a small scan and a coalesced one; a shuffled frame passes through") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val cores = spark.sparkContext.defaultParallelism
+    def spreadTo(df: org.apache.spark.sql.DataFrame): Option[Int] =
+      operators.SizeGates.spreadSmall(df).queryExecution.optimizedPlan.collectFirst {
+        case r: Repartition if r.shuffle => r.numPartitions
+      }
+    val small = sources.Tables.part(spark, "/root/testdata/sf0.001")
+    assert(spreadTo(small) == Some(cores))
+    // a width-reducing coalesce is no shuffle: the narrowed frame is spread
+    assert(spreadTo(small.coalesce(1)) == Some(cores))
+    val agg = small.groupBy("p_brand").count()
+    assert(operators.SizeGates.spreadSmall(agg) eq agg)
+  }
 }

@@ -367,7 +367,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("distributed loops are bit-stable under shuffle.partitions 1 vs 32") {
-    // JitterSpec jitters the QUERY surface, which routes these operators
+    // the QuerySurfaceSpec sweep jitters the QUERY surface, which routes these operators
     // through their driver gates at sf0.001 — the DISTRIBUTED loops (the
     // plans that actually run at 100×) need their own partitioning jitter
     // now that the r11 restructures lean on lazy checkpoints, literal
