@@ -421,8 +421,9 @@ object Bench {
   }
 
   /** T2 streaming ingest throughput with the REAL sink: MemoryStream →
-    * stateful downsampler (flatMapGroupsWithState) → partitioned-store
-    * append with checkpoint + per-batch idempotence markers — the full
+    * stateful downsampler (flatMapGroupsWithState) → sample-store append
+    * with checkpoint, one sorted delta per run per batch published by a
+    * commit-log rename (compacted into the run's buckets at rotation) — the full
     * [[graft.streaming.Ingest.archiveTo]] topology, not a noop sink. The
     * input is pre-queued so the number measures processing, not feed
     * cadence; a smaller untimed run warms the streaming codepaths first.

@@ -12,11 +12,13 @@ import graft.functions.PvFunctions
   * `WHERE pvname = '<literal>'` into
   * `WHERE pvname = '<literal>' AND bucket = hashname(<literal>)` on any
   * relation that carries both a string `pvname` and an int `bucket` column
-  * (the [[graft.store.SampleStore]] layout). The added predicate is a
-  * partition filter, so a plain per-PV query prunes to 1 of 128 bucket
-  * directories automatically — the reference stores the bucket in its `pv`
-  * dimension and consults it by hand (archiver.py:185-186,
-  * doc/setup.rst:233-240); here the optimizer does it.
+  * (the [[graft.store.SampleStore]] layout). On the store's tree the added
+  * predicate is a partition filter, so a plain per-PV query prunes to 1 of
+  * 128 bucket directories automatically; on its committed deltas, where
+  * `bucket` is a sorted data column, it is pushed to the parquet reader.
+  * The reference stores the bucket in its `pv` dimension and consults it
+  * by hand (archiver.py:185-186, doc/setup.rst:233-240); here the
+  * optimizer does it, on each side of the store's union.
   *
   * Safety: only fires on top-level conjuncts (an OR-ed pvname predicate is
   * left alone), skips plans that already constrain `bucket`, and requires

@@ -1,9 +1,10 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.PvFunctions
 
@@ -12,28 +13,41 @@ import graft.functions.PvFunctions
   * 128 hash-bucketed MySQL tables per run DB (schema.py:21-23,132-133) and
   * its zarr read-optimized copies (archiver.py:542-608).
   *
-  * Layout: `partitionBy(run, bucket)`, rows sorted by (pvname, time) within
-  * each file. What prunes what:
+  * Layout: two parts under one root.
+  *  - The tree, `run=R/bucket=B/`: rows sorted by (pvname, time) within
+  *    each file. [[write]] appends to it directly; compaction adds one
+  *    `compacted-<id>` file per bucket when it folds a run's deltas.
+  *  - The ingest sink's committed deltas, `_delta/<batchId>/`: one file
+  *    per batch and run, sorted by (bucket, pvname, time), with `run` and
+  *    `bucket` as data columns, published by the commit log `_log/`. See
+  *    [[CommitLog]].
+  *
+  * What prunes what:
   *  - run (time) pruning — the `dbs_for_time` elimination
   *    (archiver.py:104-110) — happens only where a query states a run
   *    predicate, as [[scanPv]] does; a `tsUs` range alone keeps every run;
   *  - bucket pruning for single-PV lookups: [[scanPv]] computes
   *    `bucket = hashname(pv)` driver-side, and `BucketPruneRule` adds the
   *    same conjunct to any `pvname = '<literal>'` filter (so `Archive`
-  *    gets it), and the scan touches 1/128 of each run, the reference's
-  *    ">99% of data eliminated" property (doc/setup.rst:236);
+  *    gets it). On the tree it is a partition filter, and the scan touches
+  *    1/128 of each run, the reference's ">99% of data eliminated"
+  *    property (doc/setup.rst:236); on the deltas it is a pushed-down
+  *    parquet filter on their sorted `bucket` column;
   *  - parquet min/max row-group stats on `tsUs` within a file (rows
   *    sorted), so even intra-partition scans skip row groups.
   *
-  * [[read]] lists through a [[StoreFileIndex]]: the root (the run
-  * directories) and one file's footer when it is called, then at planning
-  * time only the kept runs' bucket directories and the kept buckets'
-  * files, all on the driver with no Spark job. Each listing is kept for
-  * the life of the returned frame: re-executing it sees the same snapshot
-  * per directory until `refresh()`, and a new `read` sees new appends.
-  * Measured on the `query` benchmark (4 cores, traced): `read` took
-  * 1.5–1.6 s of a 1.8 s `get_data` as `spark.read.parquet`, in listing
-  * and schema-inference jobs, and takes 6–7 ms now.
+  * [[read]] takes one snapshot of the commit log, then lists through a
+  * [[StoreFileIndex]]: the root (the run directories) and one file's
+  * footer when it is called, then at planning time only the kept runs'
+  * bucket directories and the kept buckets' files, all on the driver with
+  * no Spark job. The snapshot's live deltas are a second relation of the
+  * same columns, unioned after the tree; a store without a log reads as
+  * the tree alone. Each listing is kept for the life of the returned
+  * frame: re-executing it sees the same files until `refresh()`, and a new
+  * `read` sees new commits. Measured on the `query` benchmark (4 cores,
+  * traced): `read` took 1.5–1.6 s of a 1.8 s `get_data` as
+  * `spark.read.parquet`, in listing and schema-inference jobs, and takes
+  * 6–7 ms now.
   */
 object SampleStore {
 
@@ -82,9 +96,26 @@ object SampleStore {
       .parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame = {
-    val (index, dataSchema) = StoreFileIndex(spark, path)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
-      bucketSpec = None, new ParquetFileFormat(), options = Map.empty)(spark))
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val (fs, root) = CommitLog.resolve(path, hadoopConf)
+    if (!fs.exists(root)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> root.toString))
+    val snapshot = CommitLog.readerSnapshot(fs, root)
+    val tree = StoreFileIndex(spark, root, fs, hadoopConf, snapshot)
+    val deltas = snapshot.liveDeltas
+    if (tree.isEmpty && deltas.isEmpty)
+      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
+    val dataSchema = tree.fold(
+      StructType(CommitLog.DeltaSchema.filterNot(f => f.name == "run" || f.name == "bucket")))(_._2)
+    val treeFrame = tree.map { case (index, _) =>
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
+        bucketSpec = None, new ParquetFileFormat(), options = Map.empty)(spark))
+    }
+    val runType = tree.fold(StoreFileIndex.runType(deltas.map(_.run)))(_._1.partitionSchema("run").dataType)
+    val deltaFrame = Option.when(deltas.nonEmpty) {
+      CommitLog.deltaFrame(spark, root, snapshot, deltas, dataSchema.add(CommitLog.DeltaSchema("bucket")), runType)
+        .select((dataSchema.fieldNames :+ "run" :+ "bucket").map(col).toSeq: _*)
+    }
+    (treeFrame ++ deltaFrame).reduce(_ union _)
   }
 
   /** S3's CO-LOCATED flavor: persist as a `bucketBy(pvname)` TABLE so every

@@ -4,12 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
@@ -30,28 +30,37 @@ import org.apache.spark.GraftSparkHooks
   * one `BucketPruneRule` adds) pick the bucket directories, and only those
   * are listed for files.
   *
-  * Snapshot rule: every directory listing is memoized for the life of the
-  * index (one `SampleStore.read`), so a held frame that is re-executed sees
-  * one snapshot per directory; [[refresh]] drops the memo, and a new `read`
-  * sees new appends. [[sizeInBytes]] and [[inputFiles]] walk the whole
-  * store through the same memo, so the statistics the planner asks for
-  * equal the ones `spark.read.parquet` gives.
+  * Snapshot rule: one `SampleStore.read` takes one snapshot of the store's
+  * commit log ([[CommitLog]]) and shares it between this index and the
+  * [[DeltaFileIndex]] of the committed deltas. A compaction's output file
+  * (`compacted-<id>`) is listed only if the snapshot holds its record, and
+  * the deltas it superseded are served only if the snapshot does not, so
+  * a read sees each committed batch whole, once, however long after the
+  * snapshot a directory is listed. Every directory listing is memoized for
+  * the life of the index, so a held frame that is re-executed sees the
+  * same files; [[refresh]] drops the memo but keeps the snapshot, and a new
+  * `read` takes a new one. [[sizeInBytes]] and [[inputFiles]] walk the
+  * whole tree through the same memo, so for a store without deltas the
+  * statistics the planner asks for equal the ones `spark.read.parquet`
+  * gives.
   *
   * Partition types follow Spark's inference for these names: `bucket` is
-  * int, `run` is int when every run id fits in an int and long otherwise,
-  * and `__HIVE_DEFAULT_PARTITION__` reads as null.
+  * int, `run` is int when every run id of the tree and of the live deltas
+  * fits in an int and long otherwise, and `__HIVE_DEFAULT_PARTITION__`
+  * reads as null.
   */
-final class StoreFileIndex private (root: Path, hadoopConf: Configuration) extends FileIndex {
+final class StoreFileIndex private (root: Path, fs: FileSystem, snapshot: CommitLog.Snapshot)
+    extends FileIndex {
   import StoreFileIndex._
 
-  private val fs = root.getFileSystem(hadoopConf)
   private val memo = new ConcurrentHashMap[Path, Array[FileStatus]]()
 
-  override val partitionSchema: StructType = {
-    val runs = partitionDirs(ls(root), "run").flatMap(_._2)
-    val runType = if (runs.forall(_.isValidInt)) IntegerType else LongType
-    StructType(Seq(StructField("run", runType), StructField("bucket", IntegerType)))
-  }
+  /** The run ids of the tree's run directories. */
+  private def treeRuns: Seq[Long] = partitionDirs(ls(root), "run").flatMap(_._2)
+
+  override val partitionSchema: StructType = StructType(Seq(
+    StructField("run", runType(treeRuns ++ snapshot.liveDeltas.map(_.run))),
+    StructField("bucket", IntegerType)))
 
   override def rootPaths: Seq[Path] = Seq(root)
 
@@ -96,34 +105,67 @@ final class StoreFileIndex private (root: Path, hadoopConf: Configuration) exten
   private def ls(dir: Path): Array[FileStatus] =
     memo.computeIfAbsent(dir, d =>
       fs.listStatus(d)
-        .filterNot(s => GraftSparkHooks.shouldFilterOutPathName(s.getPath.getName))
+        .filter { s =>
+          val name = s.getPath.getName
+          !GraftSparkHooks.shouldFilterOutPathName(name) && snapshot.visibleInTree(name)
+        }
         .sortBy(_.getPath.getName))
+}
+
+/** A [[FileIndex]] over committed delta files: `run` is their partition
+  * column, from the commit record, and `bucket` a data column, so a
+  * `bucket = b` conjunct reaches the parquet reader as a pushed-down filter
+  * and skips the row groups of other buckets (a delta is sorted by
+  * bucket). File sizes come from the records: no listing, no Spark job.
+  * The index holds the `snapshot` the deltas come from, and with it a
+  * reader's pin, for as long as a plan holds the index.
+  */
+final class DeltaFileIndex private[store] (root: Path, val snapshot: CommitLog.Snapshot,
+    deltas: Seq[CommitLog.Delta], runType: DataType) extends FileIndex {
+
+  override val partitionSchema: StructType = StructType(Seq(StructField("run", runType)))
+
+  override def rootPaths: Seq[Path] = Seq(new Path(root, CommitLog.DeltaDir))
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = StoreFileIndex.predicate(partitionFilters, partitionSchema)
+    deltas.groupBy(_.run).toSeq.sortBy(_._1).collect {
+      case (run, ds) if keep.eval(InternalRow(StoreFileIndex.partitionValue(Some(run), runType))) =>
+        PartitionDirectory(InternalRow(StoreFileIndex.partitionValue(Some(run), runType)),
+          ds.map(_.status).toArray)
+    }
+  }
+
+  override def inputFiles: Array[String] = deltas.map(_.path.toUri.toString).toArray
+
+  override def sizeInBytes: Long = deltas.map(_.length).sum
+
+  override def refresh(): Unit = ()
 }
 
 object StoreFileIndex {
 
   private val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
-  /** The index and the store's data schema, read from one file's footer;
-    * no Spark job runs. Fails the way `spark.read.parquet` does when the
-    * path is missing or holds no data file.
-    */
-  def apply(spark: SparkSession, path: String): (StoreFileIndex, StructType) = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(hadoopConf)
-    val root = fs.makeQualified(p)
-    if (!fs.exists(root)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> root.toString))
-    val index = new StoreFileIndex(root, hadoopConf)
-    val first = index.firstDataFile.getOrElse(
-      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
-    val footer = new Footer(first.getPath, ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(first, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
-    val fileSchema = ParquetFileFormat.readSchemaFromFooter(
-      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    val partCols = index.partitionSchema.fieldNames.toSet
-    (index, StructType(fileSchema.filterNot(f => partCols(f.name)).map(asNullable)))
+  /** The tree's index, when the tree holds a file `snapshot` sees, and the
+    * data schema, read from one such file's footer; no Spark job runs. */
+  private[store] def apply(spark: SparkSession, root: Path, fs: FileSystem, hadoopConf: Configuration,
+      snapshot: CommitLog.Snapshot): Option[(StoreFileIndex, StructType)] = {
+    val index = new StoreFileIndex(root, fs, snapshot)
+    index.firstDataFile.map { first =>
+      val footer = new Footer(first.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(first, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+        footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      val partCols = index.partitionSchema.fieldNames.toSet
+      (index, StructType(fileSchema.filterNot(f => partCols(f.name)).map(asNullable)))
+    }
   }
+
+  /** Spark's inferred type for partition values `runs`. */
+  private[store] def runType(runs: Seq[Long]): DataType =
+    if (runs.forall(_.isValidInt)) IntegerType else LongType
 
   /** `name=value` sub-directories, with the value parsed (None for null). */
   private def partitionDirs(entries: Array[FileStatus], name: String): Seq[(Path, Option[Long])] =
@@ -133,14 +175,14 @@ object StoreFileIndex {
         s.getPath -> (if (v == NullPartition) None else Some(v.toLong))
     }
 
-  private def partitionValue(v: Option[Long], t: DataType): Any = (v, t) match {
+  private[store] def partitionValue(v: Option[Long], t: DataType): Any = (v, t) match {
     case (Some(x), IntegerType) => Math.toIntExact(x)
     case (Some(x), LongType) => x
     case _ => null
   }
 
   /** The conjunction of `filters`, bound to the partition row `fields`. */
-  private def predicate(filters: Seq[Expression], fields: Seq[StructField]): BasePredicate = {
+  private[store] def predicate(filters: Seq[Expression], fields: Seq[StructField]): BasePredicate = {
     val bound = filters.reduceOption[Expression](And).getOrElse(Literal(true)).transform {
       case a: AttributeReference =>
         val i = fields.indexWhere(_.name == a.name)

@@ -166,8 +166,9 @@ object Alerts {
     *  - delivery order inside a batch is deterministic (tsUs, alertId);
     *  - delivery is AT-LEAST-ONCE: a batch that fails after `send` may
     *    re-run on restart (checkpoint recommended), the same contract as
-    *    any SMTP alerting path; exactly-once would need a delivered-
-    *    marker table (the [[Ingest]] per-batch idempotence technique).
+    *    any SMTP alerting path; exactly-once would need a per-batch
+    *    delivered record (the technique of the store sink's commit log,
+    *    [[graft.store.CommitLog]]).
     */
   def deliverStream(
       obs: Dataset[Observation],

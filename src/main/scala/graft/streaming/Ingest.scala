@@ -4,14 +4,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.store.SampleStore
+import graft.store.{CommitLog, SampleStore}
 import Downsampler.{PvConfig, RawSample, Sample}
 
 /** SURVEY §3.2 — the whole ingest lifecycle as ONE Structured Streaming
   * topology (replacing the reference's two daemons + MySQL-as-IPC):
   *
   *   source (CA events as RawSample rows)
-  *     ├─ T2 downsampler (flatMapGroupsWithState) ─ foreachBatch → partitioned store
+  *     ├─ T2 downsampler (flatMapGroupsWithState) ─ foreachBatch → sample store
   *     └─ A1 latest-value view (update-mode agg)  ─ any update-mode sink
   *
   * Late/out-of-order data (T7): each micro-batch is sorted per key before
@@ -20,20 +20,18 @@ import Downsampler.{PvConfig, RawSample, Sample}
   */
 object Ingest {
 
-  /** The archive branch: downsample and append to the partitioned store.
+  /** The archive branch: downsample and append to the sample store.
     *
-    * Delivery: with `checkpoint`, no data is lost across restarts and
-    * replayed micro-batches are skipped via per-batch marker files
-    * (`<path>/_batches/<id>`) — idempotent in the common crash windows. A
-    * crash BETWEEN the parquet append and the marker write can still
-    * duplicate one batch; a transactional sink (Delta/JDBC upsert keyed on
-    * (pvname, tsUs)) is the fully-exactly-once deployment path.
+    * Delivery: each micro-batch goes through [[writeBatchIdempotent]], which
+    * publishes it with one rename in the store's commit log
+    * ([[graft.store.CommitLog]]). With `checkpoint`, no data is lost across
+    * restarts, and a replayed micro-batch is stored exactly once, whether
+    * the crash came before, during or after its write. Readers
+    * (`SampleStore.read`) see each batch whole or not at all.
     *
-    * Markers go through the Hadoop `FileSystem` API resolved from `path`, so
-    * idempotence holds on HDFS/S3A/any object store the deployment actually
-    * archives to — `java.io.File` would silently report "no marker" off the
-    * local disk and double-write every replayed batch after a restart.
-    * `create(.., overwrite=false)` is the atomic claim on real filesystems.
+    * The log goes through the Hadoop `FileSystem` API resolved from `path`,
+    * so the same code runs against HDFS or any filesystem whose rename of a
+    * file is atomic.
     */
   def archiveTo(
       source: Dataset[RawSample],
@@ -58,9 +56,15 @@ object Ingest {
 
   /** One micro-batch append, exactly as replayed after a restart: Structured
     * Streaming re-invokes foreachBatch with the SAME `batchId` for any batch
-    * whose sink commit is not recorded, so a marker claimed per batch id
-    * makes the append idempotent. Public so the restart path is directly
-    * testable without forcing a checkpoint replay.
+    * whose sink commit is not recorded. The batch is normalized and written
+    * as one file per run it touches, sorted by `(bucket, pvname, tsUs)`,
+    * into a directory private to the batch id; renaming its commit record
+    * into place is the last step. A `batchId` that already has a record
+    * writes nothing; one that has none first deletes what an earlier
+    * attempt left. A write that first reaches a later run, or that brings a
+    * run to `SampleStore.NumBuckets` live deltas, then compacts the run into
+    * its bucket directories (see [[graft.store.CommitLog]]). Public so the
+    * restart path is directly testable without forcing a checkpoint replay.
     */
   def writeBatchIdempotent(
       batch: Dataset[Sample],
@@ -68,15 +72,8 @@ object Ingest {
       runWidthUs: Long,
       batchId: Long,
       hadoopConf: org.apache.hadoop.conf.Configuration): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_batches/$batchId")
-    val fs = marker.getFileSystem(hadoopConf)
-    if (!fs.exists(marker)) {
-      val df = batch.toDF()
-        .select(col("pvname"), col("tsUs"), col("value"), col("cvalue"))
-      SampleStore.write(SampleStore.normalize(df, runWidthUs), path)
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, false).close()
-    }
+    val df = batch.toDF().select(col("pvname"), col("tsUs"), col("value"), col("cvalue"))
+    CommitLog.append(SampleStore.normalize(df, runWidthUs), path, batchId, hadoopConf)
   }
 
   /** The archive branch against a TRANSACTIONAL store: Structured Streaming

@@ -702,6 +702,32 @@ class PlanAuditSpec extends SparkSpec {
         culled.queryExecution.executedPlan.treeString)
   }
 
+  test("a one-PV getData prunes both sides of a store with deltas: bucket partition filter and pushed bucket filter") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val sp = spark
+    import sp.implicits._
+    val S = 1000000L
+    val dir = java.nio.file.Files.createTempDirectory("graft_delta_prune").toString
+    val raw = (0 until 600).map(i => (s"Q:pv${i % 60}.VAL", i * S, s"$i", s"$i"))
+      .toDF("pvname", "tsUs", "value", "cvalue")
+    store.SampleStore.write(store.SampleStore.normalize(raw, 400 * S), dir)
+    val more = (0 until 60).map(i => streaming.Downsampler.Sample(s"Q:pv$i.VAL", 700 * S + i, "1", "1")).toDS()
+    streaming.Ingest.writeBatchIdempotent(more, dir, 400 * S, 0L, sp.sparkContext.hadoopConfiguration)
+    val q = new Archive(store.SampleStore.read(sp, dir)).getData("Q:pv3.VAL", 0L, 800 * S)
+    val b = functions.PvFunctions.hashname("Q:pv3.VAL")
+    val scans = q.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    val (deltas, tree) = scans.partition(_.relation.location.isInstanceOf[store.DeltaFileIndex])
+    assert(tree.nonEmpty && deltas.nonEmpty, q.queryExecution.sparkPlan.treeString)
+    def bucketEq(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) = es.exists(e =>
+      e.references.exists(_.name == "bucket") && e.toString.contains(s"= $b)"))
+    tree.foreach(s => assert(bucketEq(s.partitionFilters), s.toString))
+    deltas.foreach { s =>
+      assert(bucketEq(s.dataFilters), s.toString)
+      assert(s.metadata("PushedFilters").contains(s"EqualTo(bucket,$b)"), s.metadata("PushedFilters"))
+    }
+    assert(q.collect().map(_.getAs[Long]("tsUs")).toSeq == (3 until 600 by 60).map(_ * S) :+ (700 * S + 3))
+  }
+
   test("spreadSmall spreads a small scan and a coalesced one; a shuffled frame passes through") {
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
     val cores = spark.sparkContext.defaultParallelism

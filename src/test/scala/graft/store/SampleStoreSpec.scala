@@ -181,26 +181,102 @@ class SampleStoreSpec extends SparkSpec {
       assert(ours.queryExecution.optimizedPlan.stats.sizeInBytes ==
         theirs.queryExecution.optimizedPlan.stats.sizeInBytes)
     }
-    // ingest's per-batch marker files (`_batches/<id>`) beside the runs
-    def markers(dir: String): Unit = {
-      new java.io.File(dir, "_batches").mkdirs()
-      Seq("0", "1").foreach(id => new java.io.File(dir, s"_batches/$id").createNewFile())
-    }
+    // the commit records of empty ingest batches, beside the runs
+    def emptyBatches(dir: String): Unit = Seq(0L, 1L).foreach(id =>
+      graft.streaming.Ingest.writeBatchIdempotent(sp.emptyDataset[graft.streaming.Downsampler.Sample],
+        dir, runWidth, id, sp.sparkContext.hadoopConfiguration))
     val dir = Files.createTempDirectory("graft_store_parity").toString
     SampleStore.write(SampleStore.normalize(raw((0 until 300).map(_ * 3 * S)), runWidth), dir)
-    markers(dir)
+    emptyBatches(dir)
+    assert(new java.io.File(dir, s"${CommitLog.LogDir}/batch-1").isFile)
     same(dir, org.apache.spark.sql.types.IntegerType)
     // runWidthUs = 1: run ids are the timestamps, past Int.MaxValue
     val wide = Files.createTempDirectory("graft_store_parity_long").toString
     SampleStore.write(SampleStore.normalize(
       raw(Seq(5L, 1000L, Int.MaxValue.toLong + 1, 3L * Int.MaxValue)), runWidthUs = 1L), wide)
     same(wide, org.apache.spark.sql.types.LongType)
-    // a store holding only markers fails the same way
+    // a store holding only the records of empty batches fails the same way
     val empty = Files.createTempDirectory("graft_store_parity_empty").toString
-    markers(empty)
+    emptyBatches(empty)
     val ours = intercept[org.apache.spark.sql.AnalysisException](SampleStore.read(sp, empty))
     val theirs = intercept[org.apache.spark.sql.AnalysisException](sp.read.parquet(empty))
     assert(ours.getCondition == theirs.getCondition, ours.getMessage)
+  }
+
+  test("a store of deltas only reads run and bucket back with the tree's types, and read runs no job") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft_store_deltas").toString
+    val conf = sp.sparkContext.hadoopConfiguration
+    def batch(k: Int) = (0 until 40).map(i =>
+      graft.streaming.Downsampler.Sample(s"D:pv$i.VAL", (k * 40 + i) * S / 2, s"$k.5", s"$k.5")).toDS()
+    (0 until 3).foreach(k => graft.streaming.Ingest.writeBatchIdempotent(batch(k), dir, runWidth, k, conf))
+    assert(!new java.io.File(dir).list().exists(_.startsWith("run=")), "a delta-only store has no tree")
+
+    val (read, readJobs) = jobsOf(SampleStore.read(sp, dir))
+    assert(readJobs.isEmpty, readJobs.mkString("\n"))
+    // the tree's layout: data columns, then run (int, as Spark infers it
+    // for these ids) and bucket (int)
+    assert(read.columns.toSeq == Seq("pvname", "tsUs", "value", "cvalue", "dvalue", "run", "bucket"))
+    assert(read.schema("run").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(read.schema("bucket").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(read.count() == 120)
+    // the store signature still matches, so a pvname filter gains its
+    // bucket, pushed to the delta scan
+    val one = read.where(col("pvname") === "D:pv7.VAL")
+    val b = PvFunctions.hashname("D:pv7.VAL")
+    val scans = one.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters")
+    }
+    assert(scans.nonEmpty && scans.forall(_.contains(s"EqualTo(bucket,$b)")), scans)
+    assert(one.select("tsUs").as[Long].collect().sorted.toSeq == Seq(7L, 47L, 87L).map(_ * S / 2))
+  }
+
+  test("a store that holds the tree and committed deltas reads each row once") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft_store_mixed").toString
+    val raw = (0 until 300).map(i => (s"M:pv${i % 30}.VAL", i * S, s"$i", s"$i"))
+      .toDF("pvname", "tsUs", "value", "cvalue")
+    SampleStore.write(SampleStore.normalize(raw, runWidth), dir)
+    val more = (300 until 360).map(i =>
+      graft.streaming.Downsampler.Sample(s"M:pv${i % 30}.VAL", i * S, s"$i", s"$i")).toDS()
+    graft.streaming.Ingest.writeBatchIdempotent(more, dir, runWidth, 0L, sp.sparkContext.hadoopConfiguration)
+    val got = SampleStore.read(sp, dir)
+    val want = SampleStore.normalize(raw.unionByName(more.toDF()), runWidth)
+      .select(got.columns.map(col).toSeq: _*)
+    assert(got.schema.map(_.dataType) == want.schema.map(f =>
+      if (f.name == "run") org.apache.spark.sql.types.IntegerType else f.dataType))
+    val cast = got.withColumn("run", col("run").cast("long"))
+    assert(cast.exceptAll(want).isEmpty && want.exceptAll(cast).isEmpty)
+  }
+
+  test("a one-PV getData over tree and deltas lists one bucket directory per tree run and infers nothing") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft_store_mixed_prune").toString
+    val raw = (0 until 1600).map(i => (s"G:pv${i % 400}.VAL", i.toLong * 125000L, s"$i", s"$i"))
+      .toDF("pvname", "tsUs", "value", "cvalue")
+    SampleStore.write(SampleStore.normalize(raw, runWidth), dir)
+    val more = (0 until 400).map(i =>
+      graft.streaming.Downsampler.Sample(s"G:pv$i.VAL", 150 * S + i, "9", "9")).toDS()
+    graft.streaming.Ingest.writeBatchIdempotent(more, dir, runWidth, 0L, sp.sparkContext.hadoopConfiguration)
+
+    val (read, readJobs) = jobsOf(SampleStore.read(sp, dir))
+    assert(readJobs.isEmpty, readJobs.mkString("\n"))
+    val probe = storeIndex(read).listedDirs
+    val got = new graft.Archive(read).getData("G:pv7.VAL", 0L, 200 * S)
+    val (rows, queryJobs) = jobsOf(got.collect())
+    assert(rows.map(_.getAs[Long]("tsUs")).toSeq == ((7 until 1600 by 400).map(_ * 125000L) :+ (150 * S + 7)).sorted)
+    val listingOrInference = queryJobs.filter(j =>
+      j.startsWith("Listing leaf files") || j.contains("DataFrameReader"))
+    assert(listingOrInference.isEmpty, queryJobs.mkString("\n"))
+    // the tree side: past the schema probe, only the pv's bucket directory
+    // in each of the two tree runs
+    val b = PvFunctions.hashname("G:pv7.VAL")
+    val listed = storeIndex(got).listedDirs -- probe
+    assert(listed.filter(_.getName.startsWith("bucket=")).map(d => (d.getParent.getName, d.getName)) ==
+      Set(("run=0", s"bucket=$b"), ("run=1", s"bucket=$b")), listed)
   }
 
   test("writeBucketed: joins between same-bucketed tables run shuffle-free") {

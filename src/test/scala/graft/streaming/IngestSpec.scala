@@ -66,7 +66,7 @@ class IngestSpec extends SparkSpec {
     assert(latestRows("ING:b.VAL") == 9 * 30 * S)
   }
 
-  test("batch replay after restart is idempotent (marker claims via Hadoop FS)") {
+  test("batch replay after restart is idempotent (commit records via Hadoop FS)") {
     val sp = spark
     import sp.implicits._
     graft.Engine.tune(sp)
@@ -79,7 +79,7 @@ class IngestSpec extends SparkSpec {
     val conf = sp.sparkContext.hadoopConfiguration
 
     // first delivery of batch 7 writes; a crash-and-restart redelivers the
-    // SAME batch id — the marker must swallow the duplicate append
+    // SAME batch id — its commit record must swallow the duplicate append
     Ingest.writeBatchIdempotent(batch, dir, runWidthUs = 60 * S, batchId = 7L, conf)
     val afterFirst = SampleStore.read(sp, dir).count()
     Ingest.writeBatchIdempotent(batch, dir, runWidthUs = 60 * S, batchId = 7L, conf)
