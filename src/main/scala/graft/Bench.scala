@@ -121,29 +121,21 @@ object Bench {
     // ---- per-query executor CPU seconds (r13 verdict ask #2): three
     // rounds of keyphrases/itemsets bench arguments came down to "wall
     // says X, the box was busy, trust the probe" — so the artifact now
-    // carries CPU next to wall. One listener sums executorCpuTime over
-    // completed stages; each timed window drains the async listener bus
-    // on both edges (GraftSparkHooks — the Scale-drill lesson) so the
-    // delta is exact. cpu_sec = executor CPU per timed run (the window
-    // spans all `runs` runs, ÷ runs), so a CPU-saturating query is judged
-    // on work, with wall kept for the gate.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-        ()
-      }
-    })
-    def cpuWindow[T](body: => T): (T, Double) = {
-      org.apache.spark.GraftSparkHooks.waitListenerBus(spark.sparkContext)
-      val c0 = cpuNs.get()
-      val r = body
-      org.apache.spark.GraftSparkHooks.waitListenerBus(spark.sparkContext)
-      (r, (cpuNs.get() - c0) / 1e9)
+    // carries CPU next to wall. Each timed window is one Telemetry scope,
+    // which sums executorCpuTime over the entry's own completed stages
+    // (listener bus drained before it returns, so the sum is exact).
+    // cpu_sec = executor CPU per timed run (the scope spans all `runs`
+    // runs, ÷ runs), so a CPU-saturating query is judged on work, with
+    // wall kept for the gate. The scope also carries the operators' notes,
+    // so each entry's probe_trace comes from its own run.
+    val records = scala.collection.mutable.Map[String, Telemetry.Record]()
+    val cpuSec = scala.collection.mutable.Map[String, Double]()
+    def scoped[T](name: String, runs: Int = 1)(body: => T): T = {
+      val (r, rec) = Telemetry.scoped(spark)(body)
+      records(name) = rec
+      cpuSec(name) = rec.cpuSec / runs
+      r
     }
-    val cpuSec = scala.collection.mutable.LinkedHashMap[String, Double]()
-
     // cache THROUGH Tables so the cached plan carries the same scan
     // widening the queries build (a raw read.parquet cache would no longer
     // match and every query would silently re-scan parquet)
@@ -206,24 +198,17 @@ object Bench {
       if (only.isEmpty)
         SparkEntry.sharedFrameBuilders.toSeq.sortBy(_._1).map { case (name, fn) =>
           System.gc()
-          val (t, cpu) = cpuWindow(time(name, fn))
-          cpuSec(name) = cpu
-          name -> t
+          name -> scoped(name)(time(name, fn))
         }
       else Seq.empty
-    // snapshot the TIMED mine's per-level trace now: the dist-twin phase
-    // re-runs the traced builder untimed (the memo is dropped after
-    // q_itemsets) and would overwrite it, leaving the artifact decomposing
-    // a DIFFERENT build than the one whose timing it rides next to
-    val mineTrace = graft.operators.Patterns.lastMineTrace
     val queryTimed = sharedTimed ++ ordered.map { case (name, fn) =>
       // untimed: start each query's runs from a settled heap — in a full
       // 76-query pass the accumulated shuffle/broadcast debris of earlier
       // heavy queries otherwise shows up as multi-second spikes in later
       // light ones (BENCH_r04 q_join_chain read 5.3 s vs its real ~0.9 s)
       System.gc()
-      val (ts, cpu) = cpuWindow((0 until math.max(runs, 1)).map(_ => time(name, fn)).sorted)
-      cpuSec(name) = cpu / math.max(runs, 1)
+      val n = math.max(runs, 1)
+      val ts = scoped(name, n)((0 until n).map(_ => time(name, fn)).sorted)
       // a persisted shared frame is dead weight once its last alphabetical
       // consumer has run — release it before the ~100 queries that follow
       // (r7: q_jaccard paid 4.5 s of GC/eviction for frames it never read)
@@ -260,8 +245,7 @@ object Bench {
         }
         SparkEntry.distTwinQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
           System.gc()
-          val (t, cpu) = cpuWindow(time(name, fn))
-          cpuSec(name) = cpu
+          val t = scoped(name)(time(name, fn))
           graft.operators.TimeSeries.releaseCallScopedPersists()
           name -> t
         }
@@ -329,24 +313,28 @@ object Bench {
     val ingestScaleJson = ingestScale.mkString("[", ",", "]")
     val sentinelsJson = sentinels.map { case (k, v) => "\"" + k + "\":" + s3(v) }
       .mkString("{", ",", "}")
-    // per-round decomposition of the two iterative probes (r10 verdict ask
-    // #1): rounds × per-round wall × surviving rows, captured by the loops
-    // themselves — a probe regression in a future round reads as "more
-    // rounds", "fatter rounds", or "neither → environment" directly from
-    // the artifact (full artifact only; compact line budget)
-    def traceJson(t: Seq[graft.operators.Graph.RoundTrace]): String =
-      t.map(r => s"""{"round":${r.round},"wall_ms":${r.wallMs},"rows":${r.rows}}""")
+    // per-round decomposition of the iterative probes (r10 verdict ask
+    // #1): rounds × per-round wall × surviving rows, noted by the loops
+    // themselves inside each entry's own scope — a probe regression in a
+    // future round reads as "more rounds", "fatter rounds", or "neither →
+    // environment" directly from the artifact (full artifact only; compact
+    // line budget)
+    def traceJson(entry: String, key: String): String =
+      records.get(entry).flatMap(_.noted[Seq[graft.operators.Graph.RoundTrace]](key).lastOption)
+        .getOrElse(Nil)
+        .map(r => s"""{"round":${r.round},"wall_ms":${r.wallMs},"rows":${r.rows}}""")
         .mkString("[", ",", "]")
-    val probeTraceJson =
-      s"""{"_dist_kcore":${traceJson(graft.operators.Graph.lastKCoreTrace)},""" +
-        s""""_dist_hits":${traceJson(graft.operators.Graph.lastHitsTrace)},""" +
-        // pageRank rows are -1 by design: its rounds run zero driver
-        // actions, so the trace is wall-only (see Graph.lastPageRankTrace)
-        s""""_dist_pagerank":${traceJson(graft.operators.Graph.lastPageRankTrace)},""" +
-        // Apriori per-level decomposition from the TIMED shared build
-        // (level 0 = basket arrays, 1..3 = mine levels; at the registered
-        // maxSize=3 the final union/checkpoint rides inside level 3)
-        s""""_shared_itemsets":${traceJson(mineTrace)}}"""
+    val probeTraceJson = {
+      import graft.operators.{Graph, Patterns}
+      // pageRank rows are -1 by design: its rounds run zero driver actions,
+      // so the trace is wall-only (see Graph.RoundTrace); the itemsets
+      // trace is the timed shared build's (level 0 = basket arrays, 1..3 =
+      // mine levels; at the registered maxSize=3 the final
+      // union/checkpoint rides inside level 3)
+      Seq("_dist_kcore" -> Graph.KCoreRounds, "_dist_hits" -> Graph.HitsRounds,
+        "_dist_pagerank" -> Graph.PageRankRounds, "_shared_itemsets" -> Patterns.MineLevels)
+        .map { case (e, k) => "\"" + e + "\":" + traceJson(e, k) }.mkString("{", ",", "}")
+    }
     // sentinel-normalized view (r11 verdict ask #5): each entry ÷ its
     // phase's sentinel seconds expresses every timing in box-load-free
     // "sentinel units" — two artifacts of the same code compare normalized

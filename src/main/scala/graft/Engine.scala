@@ -28,10 +28,8 @@ object Engine {
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // AQE on unless explicitly disabled (benchmark experiments)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // NOTE (r14, measured and REJECTED): flipping
     // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true (AQE
     // coalescing for cached plans) was probed as the engine-wide cure for
@@ -72,11 +70,9 @@ object Engine {
     * 2.82→2.29 s, knn_graph 0.93→0.63 s) with no loss on the heavy
     * shuffles probed. 0 forces the sort-based writer (a single spill file
     * per map task) — which is also the only path that exists above 200
-    * reduce partitions, i.e. the at-scale default; env-overridable for
-    * deployments whose disks prefer the bypass writer.
+    * reduce partitions, i.e. the at-scale default.
     */
-  private[graft] val bypassMergeThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "0")
+  private[graft] val bypassMergeThreshold: String = "0"
 
   def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
     val s = SparkSession

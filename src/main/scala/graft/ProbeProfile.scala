@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main for per-query profiling (r10 verdict ask #1, widened in
   * r12): rebuilds the same memoized inputs Bench uses, runs the selected
   * probes (any `_dist_*` twin OR any registered query) once each, and
   * prints wall, SPARK JOB COUNT, the slowest STAGES (name, wall, tasks),
-  * and any per-round trace ([[graft.operators.Graph.RoundTrace]]) — the
-  * decomposition that tells a plan defect (few rounds/stages, fat each)
-  * apart from irreducible work (many cheap ones at the job floor).
+  * and what the operators noted — per-round traces
+  * ([[graft.operators.Graph.RoundTrace]]) and routes — all read from one
+  * [[Telemetry.scoped]] record per run: the decomposition that tells a
+  * plan defect (few rounds/stages, fat each) apart from irreducible work
+  * (many cheap ones at the job floor).
   *
   * Not part of the bench contract; run via
   * `sbt "runMain graft.ProbeProfile _dist_kcore q_embed_dedup_dist"` with
@@ -29,29 +30,10 @@ object ProbeProfile {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_BYPASS", Engine.bypassMergeThreshold))
+      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.bypassMergeThreshold)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Engine.tune(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val ms = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(-1L)
-        val m = i.taskMetrics
-        // run/gc/spill decompose a slow stage into plan work vs memory
-        // pressure — a wall≫run stage is scheduler/GC-starved, run≈wall
-        // with fat gc is heap churn, spill>0 is execution-memory pressure
-        stages.add((f"${i.name.linesIterator.next()}%s [run=${m.executorRunTime}ms " +
-          f"gc=${m.jvmGCTime}ms spill=${m.memoryBytesSpilled / 1024}kB " +
-          f"in=${(m.inputMetrics.bytesRead + m.shuffleReadMetrics.totalBytesRead) / 1024}kB]",
-          ms, i.numTasks))
-      }
-    })
     // bench position also means CACHED BASE TABLES: Bench caches every
     // parquet table up front, so in-suite plans read InMemoryRelations
     // (whose partition count is frozen at cache-build time) instead of
@@ -86,37 +68,33 @@ object ProbeProfile {
       for (run <- 1 to nRuns) {
         if (name.startsWith("_shared_")) SparkEntry.dropSharedFrame(name)
         System.gc()
-        stages.clear()
-        val j0 = jobs.get()
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val ((n, wall), rec) = Telemetry.scoped(spark) {
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          (n, (System.nanoTime() - t0) / 1e9)
+        }
         operators.TimeSeries.releaseCallScopedPersists()
-        // listener dispatch is async — give the bus a moment to drain so the
-        // job count isn't read short (diagnostic-grade, not exact)
-        Thread.sleep(500)
-        val nj = jobs.get() - j0
         if (run < nRuns) ()
         else {
-          println(f"PROBE $name wall=$wall%.2fs jobs=$nj rows=$n")
+          println(f"PROBE $name wall=$wall%.2fs jobs=${rec.jobs.size} rows=$n")
           // the physical plan AS EXECUTED in this context (cache state and
           // AQE included) — the standalone/in-suite divergences this tool
           // exists for are usually plan-shape divergences
           if (sys.env.get("SPARK_GRAFT_PROBE_EXPLAIN").exists(_ == "1"))
             println(fn(spark, sfDir).queryExecution.executedPlan.toString)
-          import scala.jdk.CollectionConverters._
-          val byStage = stages.asScala.toSeq.sortBy(-_._2).take(12)
-          byStage.foreach { case (nm, ms, tasks) =>
-            println(f"  stage ${ms}%6d ms tasks=$tasks%-4d $nm")
+          // run/gc/spill decompose a slow stage into plan work vs memory
+          // pressure — a wall≫run stage is scheduler/GC-starved, run≈wall
+          // with fat gc is heap churn, spill>0 is execution-memory pressure
+          rec.stages.sortBy(-_.wallMs).take(12).foreach { st =>
+            println(f"  stage ${st.wallMs}%6d ms tasks=${st.tasks}%-4d " +
+              s"${st.name.linesIterator.next()} [run=${st.runMs}ms gc=${st.gcMs}ms " +
+              s"spill=${st.spillBytes / 1024}kB " +
+              s"in=${(st.inputBytes + st.shuffleReadBytes) / 1024}kB]")
           }
-          val trace = name match {
-            case "_dist_kcore" => operators.Graph.lastKCoreTrace
-            case "_dist_hits" => operators.Graph.lastHitsTrace
-            case "_dist_pagerank" => operators.Graph.lastPageRankTrace
-            case "_shared_itemsets" => operators.Patterns.lastMineTrace
-            case _ => Nil
+          rec.notes.foreach {
+            case (key, rounds: Seq[_]) => rounds.foreach(r => println(s"  $key $r"))
+            case (key, v) => println(s"  $key $v")
           }
-          trace.foreach(r => println(s"  round=${r.round} wallMs=${r.wallMs} rows=${r.rows}"))
         }
       }
     }

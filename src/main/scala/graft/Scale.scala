@@ -60,24 +60,6 @@ object Scale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Engine.tune(spark)
-    // slowest-stage tracker for the all-pairs tier: the sweep stage's task
-    // count is the serialization guard (1 task = the r11 AQE-coalesce bug).
-    // Log entries are (executorCpuMs, wallMs, numTasks): the SWEEP stage is
-    // identified by max executor CPU, not max wall — at a small scale point
-    // a parquet scan or agg stage can legitimately be the wall-slowest, and
-    // a wall pick would then compute tasks_pass from the wrong stage
-    // (r13 ADVICE); the pair sweep dominates CPU at every scale point by
-    // construction (it IS the combinatorial work the drill exists to time).
-    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Int)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val ms = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(-1L)
-        stageLog.add((i.taskMetrics.executorCpuTime / 1000000L, ms, i.numTasks))
-      }
-    })
-
     val work = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_scale_${factor}x").getAbsolutePath
     inflate(spark, base, work, factor)
@@ -283,24 +265,27 @@ object Scale {
     val sweepBlocks = 16
     val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val sweepTasks = scala.collection.mutable.LinkedHashMap[(String, String), (Long, Int)]()
+    // The sweep stage's task count is the serialization guard (1 task =
+    // the r11 AQE-coalesce bug). The SWEEP stage is identified by max
+    // executor CPU, not max wall — at a small scale point a parquet scan
+    // or agg stage can legitimately be the wall-slowest, and a wall pick
+    // would then compute tasks_pass from the wrong stage (r13 ADVICE); the
+    // pair sweep dominates CPU at every scale point by construction (it IS
+    // the combinatorial work the drill exists to time). The Telemetry
+    // scope drains the listener bus before it returns, so the sweep stage
+    // (the longest, last to complete) is never still in flight when read.
     def timedSweep(tag: String, name: String, rows: Long)(body: => Unit): Unit =
       guarded(tag, name) {
         System.gc()
-        stageLog.clear()
-        val t0 = System.nanoTime()
-        body
-        val t = (System.nanoTime() - t0) / 1e9
-        // the listener bus is async: without the drain the sweep stage —
-        // the longest, last to complete — can still be in flight when the
-        // log is read, and tasks_pass would be computed from whatever
-        // stage happened to land first (a false PASS of the very AQE
-        // re-serialization guard this exists to catch; r13 ADVICE)
-        org.apache.spark.GraftSparkHooks.waitListenerBus(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        // sweep stage = max executor CPU (see stageLog note); record its
-        // WALL ms alongside so the artifact keeps the old column meaning
-        val sweep = stageLog.asScala.toSeq.sortBy(-_._1).headOption
-          .map { case (_, ms, tasks) => (ms, tasks) }.getOrElse((-1L, -1))
+        val (t, rec) = Telemetry.scoped(spark) {
+          val t0 = System.nanoTime()
+          body
+          (System.nanoTime() - t0) / 1e9
+        }
+        // record the sweep stage's WALL ms so the artifact keeps the old
+        // column meaning
+        val sweep = rec.stages.sortBy(-_.cpuNs).headOption
+          .map(st => (st.wallMs, st.tasks)).getOrElse((-1L, -1))
         sweepTasks((name, tag)) = sweep
         record(results, name, tag, rows, t)
         System.err.println(f"[scale] $tag $name ${t}%.2fs sweep_stage=${sweep._1}ms tasks=${sweep._2}")
@@ -338,13 +323,15 @@ object Scale {
           val zipf = doc.where(col("text").isNotNull)
             .select(col("doc_id"),
               expr(queries.DedupQueries.zipfFixtureSql("DIV", "STRING")).as("text"))
-          val t0 = System.nanoTime()
-          operators.Dedup.ngramJaccardAuto(zipf, "doc_id", "text",
-            n = 2, threshold = 0.5, blocks = sweepBlocks).count()
-          val t = (System.nanoTime() - t0) / 1e9
+          val (t, rec) = Telemetry.scoped(spark) {
+            val t0 = System.nanoTime()
+            operators.Dedup.ngramJaccardAuto(zipf, "doc_id", "text",
+              n = 2, threshold = 0.5, blocks = sweepBlocks).count()
+            (System.nanoTime() - t0) / 1e9
+          }
           record(results, "_pairs_ngram_routed", tag, rows, t)
           System.err.println(f"[scale] $tag _pairs_ngram_routed ${t}%.2fs " +
-            s"route=${operators.Dedup.lastJaccardRoute}")
+            s"route=${rec.noted[String](operators.Dedup.JaccardRoute).mkString(",")}")
         }
       }
     }

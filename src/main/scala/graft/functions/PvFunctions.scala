@@ -336,8 +336,5 @@ object GraftUdfs {
     spark.udf.register("hashname", (s: String) => PvFunctions.hashname(s))
   }
 
-  def hformatCol(v: Column, length: Int): Column =
-    udf((x: Double, l: Int) => PvFunctions.hformat(x, l)).apply(v, lit(length))
-
   def hashnameCol(c: Column): Column = udf((s: String) => PvFunctions.hashname(s)).apply(c)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Telemetry
+
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash.
   *
@@ -516,10 +518,10 @@ object Dedup {
       .toDF("d1", "d2", "jaccard")
   }
 
-  /** The physical plan the last [[ngramJaccardAuto]] call took ("ppjoin" |
-    * "blocked") — routing evidence for specs and the scale drill, the
-    * `lastMineTrace` convention. Diagnostic only. */
-  @volatile var lastJaccardRoute: String = ""
+  /** [[graft.Telemetry.note]] key of the plan each [[ngramJaccardAuto]]
+    * call took ("ppjoin" | "blocked") — routing evidence for specs and the
+    * scale drill. Diagnostic only. */
+  final val JaccardRoute = "dedup.jaccard.route"
 
   /** Corpus-shape-routed exact n-gram Jaccard: ONE
     * entry point that picks between the two identical-output plans —
@@ -545,7 +547,7 @@ object Dedup {
     * guaranteed envelope). Admission cost: one map-side-combinable
     * shingle pass for the stats (two small jobs), the
     * [[Similarity.knnGraph]] count-for-admission convention. The taken
-    * route lands in [[lastJaccardRoute]]; both plans are spec-pinned to
+    * route is noted under [[JaccardRoute]]; both plans are spec-pinned to
     * identical output, so the gate changes the physical plan only.
     */
   def ngramJaccardAuto(df: DataFrame, id: String, text: String, n: Int,
@@ -581,7 +583,7 @@ object Dedup {
         }
         if (vPrefix * 8 < vPairs) "ppjoin" else "blocked"
       }
-    lastJaccardRoute = route
+    Telemetry.note(df.sparkSession, JaccardRoute, route)
     if (route == "ppjoin")
       ngramJaccard(df, id, text, n, threshold)
         .select(col("d1").cast("long"), col("d2").cast("long"), col("jaccard"))

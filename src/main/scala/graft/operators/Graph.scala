@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Telemetry
+
 /** Iterative graph analytics over plain edge-list DataFrames.
   *
   * Companion to [[Dedup.connectedComponents]] (hash-min label propagation):
@@ -16,21 +18,21 @@ object Graph {
     * driver: `wallMs` is the wall-clock the round spent (plan compile +
     * every Spark job it launched), `rows` a per-round mass figure —
     * surviving edges for the k-core peel, the hub-side raw L1 total for
-    * HITS. Bench embeds the last probe's trace in BENCH_FULL next to the
-    * timing (r10 verdict ask #1) so a probe regression decomposes into
-    * rounds × per-round cost instead of being re-argued from plan shape. */
+    * HITS. The distributed k-core, HITS and pageRank loops note their
+    * rounds through [[graft.Telemetry.note]] under [[KCoreRounds]],
+    * [[HitsRounds]] and [[PageRankRounds]], once at the end of each call;
+    * Bench embeds each `_dist_*` entry's own trace in BENCH_FULL next to
+    * its timing (r10 verdict ask #1) so a probe regression decomposes into
+    * rounds × per-round cost instead of being re-argued from plan shape.
+    * pageRank's rows column is -1: its rounds deliberately run ZERO driver
+    * actions (the lazy cut executes the round's stages without a separate
+    * count job — r11 job-floor lesson), and adding a count to feed the
+    * trace would change the very plan being measured. */
   final case class RoundTrace(round: Int, wallMs: Long, rows: Long)
 
-  /** Per-round traces of the most recent distributed k-core / HITS /
-    * pageRank call on this JVM. Diagnostics only — written once at the end
-    * of each call (volatile publication; Bench is single-threaded by
-    * contract). pageRank's rows column is -1: its rounds deliberately run
-    * ZERO driver actions (the lazy cut executes the round's stages without
-    * a separate count job — r11 job-floor lesson), and adding a count to
-    * feed the trace would change the very plan being measured. */
-  @volatile var lastKCoreTrace: Seq[RoundTrace] = Nil
-  @volatile var lastHitsTrace: Seq[RoundTrace] = Nil
-  @volatile var lastPageRankTrace: Seq[RoundTrace] = Nil
+  final val KCoreRounds = "graph.kcore.rounds"
+  final val HitsRounds = "graph.hits.rounds"
+  final val PageRankRounds = "graph.pagerank.rounds"
 
   /** Integer-exact PageRank with damping 0.85 and a FIXED iteration count.
     *
@@ -62,9 +64,6 @@ object Graph {
       scale: Long = 1000000000000L, maxDriverEdges: Long = 2000000L): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(scale > 0, s"scale must be positive, got $scale")
-    // reset BEFORE the driver/distributed branch: a driver-path call after
-    // a distributed one must not leave the previous run's trace published
-    lastPageRankTrace = Nil
     // persist the RAW edge frame first: outdeg, the annotated edge frame
     // and the node list all derive from it, and without the cache the edge
     // producer (e.g. a 25M-cosine kNN sweep) would re-run once per branch
@@ -137,7 +136,6 @@ object Graph {
       // lazy cut recompiled a 3-round-deep plan per cut). Integer
       // arithmetic identical to pageRankDriver — bit-equality pinned by
       // GraphSpec, values by the unrolled q_pagerank oracle.
-      lastPageRankTrace = Nil // a throwing run must not leave a stale trace
       val trace = Seq.newBuilder[RoundTrace]
       var t0 = System.nanoTime()
       var sums: DataFrame = ed
@@ -157,7 +155,7 @@ object Graph {
           .localCheckpoint(false)
         trace += RoundTrace(it, (System.nanoTime() - t0) / 1000000L, -1L)
       }
-      lastPageRankTrace = trace.result()
+      Telemetry.note(ed.sparkSession, PageRankRounds, trace.result())
       nodes.join(sums, Seq("node"), "left_outer")
         .select(col("node"),
           (lit(teleport) + coalesce(col("m"), lit(0L))).as("pagerank"))
@@ -325,7 +323,6 @@ object Graph {
       def rawTotal(raw: DataFrame): Long = raw.agg(sum(col("raw"))).first().getLong(0)
       var aRaw: DataFrame = null; var aQ = 1L
       var hRaw: DataFrame = null; var hQ = 1L
-      lastHitsTrace = Nil // a throwing run must not leave a stale trace
       val trace = Seq.newBuilder[RoundTrace]
       for (it <- 1 to iters) {
         val t0 = System.nanoTime()
@@ -353,7 +350,7 @@ object Graph {
         hRaw = hNew
         trace += RoundTrace(it, (System.nanoTime() - t0) / 1000000L, hTot)
       }
-      lastHitsTrace = trace.result()
+      Telemetry.note(eByDst.sparkSession, HitsRounds, trace.result())
       nodes
         .join(aRaw.select(col("node"), col("raw").as("__ar")), Seq("node"), "left_outer")
         .join(hRaw.select(col("node"), col("raw").as("__hr")), Seq("node"), "left_outer")
@@ -1080,7 +1077,6 @@ object Graph {
     * the aggregate (broadcast at toy scale, AQE's call).
     */
   private def kCoreDistributed(canon: DataFrame, k: Int, maxPeels: Int): DataFrame = {
-    lastKCoreTrace = Nil // a throwing run must not leave a stale trace
     val trace = Seq.newBuilder[RoundTrace]
     var e = canon.localCheckpoint()
     // carry the edge count forward — the previous round's `after` IS this
@@ -1105,7 +1101,7 @@ object Graph {
       round += 1
       trace += RoundTrace(round, (System.nanoTime() - t0) / 1000000L, after)
     }
-    lastKCoreTrace = trace.result()
+    Telemetry.note(canon.sparkSession, KCoreRounds, trace.result())
     require(converged, s"k-core peel did not converge within $maxPeels rounds")
     e.select(explode(array(col("__a"), col("__b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))

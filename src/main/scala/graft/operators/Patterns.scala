@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Telemetry
+
 /** Frequent-pattern mining over basket-shaped data.
   *
   * The archiver never needed market-basket analysis, but a training-data
@@ -16,16 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object Patterns {
 
-  /** Per-level trace of the most recent TRACED [[frequentItemsets]] mine on
-    * this JVM (the graph-loop RoundTrace convention, r11 verdict ask #4):
+  /** [[graft.Telemetry.note]] key of each TRACED [[frequentItemsets]]
+    * mine's per-level trace ([[Graph.RoundTrace]]s, r11 verdict ask #4):
     * level 0 = the basket-array build, 1..3 = each Apriori level, `rows` =
     * the level's surviving row count. The level counts are paid by the
     * mine itself now (they size the kernel/checkpoint widths); tracing
     * only records them, plus one extra cached count of the final
     * checkpoint (level 100 + maxSize). Opt-in (`traced = true`); Bench
     * opts in so the trace rides BENCH_FULL's `probe_trace`. Diagnostics
-    * only; single-threaded harness contract as with Graph's traces. */
-  @volatile var lastMineTrace: Seq[Graph.RoundTrace] = Nil
+    * only. */
+  final val MineLevels = "patterns.mine.levels"
 
   /** Code width for packed itemset keys: frequent items are coded by their
     * 1-based position in the sorted frequent vocabulary, and a pair/triple
@@ -155,7 +157,6 @@ object Patterns {
     require(minSupportPpm >= 1 && minSupportPpm <= 1000000L,
       s"minSupportPpm in [1, 1e6], got $minSupportPpm")
     require(maxSize >= 1 && maxSize <= 3, s"maxSize in [1,3], got $maxSize")
-    if (traced) lastMineTrace = Nil // a throwing run must not leave a stale trace
     val trace = Seq.newBuilder[Graph.RoundTrace]
     // every persist registers here; a throw anywhere after the first
     // persist unpersists the lot (r13 ADVICE — a leaked mine cache
@@ -238,7 +239,7 @@ object Patterns {
     if (maxSize == 1) {
       val r = out1.coalesce(outW(nL1)).localCheckpoint()
       if (traced) mark(1 + 100, r.count()) // final assembly, level tag 101
-      if (traced) lastMineTrace = trace.result()
+      if (traced) Telemetry.note(df.sparkSession, MineLevels, trace.result())
       releaseAll()
       return r
     }
@@ -323,7 +324,7 @@ object Patterns {
     if (maxSize == 2) {
       val r = out12.coalesce(outW(nL1 + nL2)).localCheckpoint()
       if (traced) mark(2 + 100, r.count()) // final assembly, level tag 102
-      if (traced) lastMineTrace = trace.result()
+      if (traced) Telemetry.note(df.sparkSession, MineLevels, trace.result())
       releaseAll()
       return r
     }
@@ -409,7 +410,7 @@ object Patterns {
     // does not serialize into one task
     val r = out12.unionByName(out3).coalesce(outW(nL1 + nL2 + nL3)).localCheckpoint()
     if (traced) mark(3 + 100, r.count()) // final assembly, level tag 103
-    if (traced) lastMineTrace = trace.result()
+    if (traced) Telemetry.note(df.sparkSession, MineLevels, trace.result())
     releaseAll()
     r
     } catch { case t: Throwable => releaseAll(); throw t }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Telemetry
+
 /** Text-analysis operators for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, fingerprinting. All pure
   * `functions._` compositions — codegen'd, no UDFs, embarrassingly parallel
@@ -10,10 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** The physical plan the last [[tfidfSimilar]] call took ("index" |
-    * "dense") — routing evidence for specs and the scale drill, the
-    * [[Patterns.lastMineTrace]] convention. Diagnostic only. */
-  @volatile var lastTfidfRoute: String = ""
+  /** [[graft.Telemetry.note]] key of the plan each [[tfidfSimilar]] call
+    * took ("index" | "dense") — routing evidence for specs and the scale
+    * drill. Diagnostic only. */
+  final val TfidfRoute = "text.tfidf.route"
 
   /** Whitespace tokens of a single-spaced document. */
   def tokens(text: Column): Column = split(text, " ")
@@ -1132,8 +1134,8 @@ object TextAnalysis {
     * honest one for corpora too large to broadcast. `route = "index"` /
     * `"dense"` force a plan (the registered `q_tfidf_pairs_inv` /
     * `q_tfidf_pairs` queries pin one each so both physical strategies stay
-    * oracle-checked); the taken route is recorded in [[lastTfidfRoute]]
-    * (the `lastMineTrace` evidence convention). Both plans share the
+    * oracle-checked); the taken route is noted under [[TfidfRoute]]
+    * through [[graft.Telemetry.note]]. Both plans share the
     * integer-quantized weighting, so routing changes the physical plan
     * only, never the result (RoutingSpec pins hash equality).
     */
@@ -1145,7 +1147,7 @@ object TextAnalysis {
     require(Set("auto", "index", "dense")(route),
       s"route must be auto|index|dense, got $route")
     if (route == "dense") {
-      lastTfidfRoute = "dense"
+      Telemetry.note(df.sparkSession, TfidfRoute, "dense")
       return tfidfSimilarDense(df, id, text, threshold, maxDfPct, maxVocab)
     }
     val tf = df.where(col(text).isNotNull)
@@ -1173,11 +1175,11 @@ object TextAnalysis {
       val n = if (row.isNullAt(2)) 0L else row.getLong(2)
       val vPairs = n.toDouble * (n - 1) / 2
       if (vIdx > vPairs && vocabN <= maxVocab && n <= maxBroadcastDocs) {
-        lastTfidfRoute = "dense"
+        Telemetry.note(df.sparkSession, TfidfRoute, "dense")
         return tfidfSimilarDense(df, id, text, threshold, maxDfPct, maxVocab)
       }
     }
-    lastTfidfRoute = "index"
+    Telemetry.note(df.sparkSession, TfidfRoute, "index")
     val weighted = tf
       .join(dfreq, Seq("__t"))
       .join(broadcast(nDocs))

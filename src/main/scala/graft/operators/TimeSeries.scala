@@ -177,20 +177,6 @@ object TimeSeries {
         max(col(ts)).as("end_us"),
         count(lit(1)).as("n_events"))
 
-  /** Generic keyed AS-OF JOIN — the vectorized form of Q2 `get_value_at_time`
-    * (archiver.py:112-129): every left row picks up the latest right row
-    * with `rightTs <= leftTs` on the same key (null value columns when no
-    * right row precedes it). Spark has no native as-of join; rather than an
-    * O(n·m) inequality join, both sides union into one frame and the right
-    * values carry forward with a per-key running `last(ignoreNulls)` — ONE
-    * shuffle by key, sort within partitions, linear scan. A right row tied
-    * with a left row's timestamp IS visible to it (`>=` semantics, matching
-    * DuckDB's ASOF JOIN, which the oracle uses).
-    *
-    * `right` must be unique per (key, rightTs) — pre-aggregate duplicates
-    * (e.g. `max_by`) or the carried value among ties is order-dependent.
-    * Left column names and `rightVals` must not collide.
-    */
   /** Trailing-window moving statistics + z-score anomaly flag: for every
     * sample, count/mean/stddev over the STRICTLY-PRECEDING `windowUs` of
     * the same key (`[ts - windowUs, ts - 1]` — excluding the row itself
@@ -266,6 +252,20 @@ object TimeSeries {
       .select(col(key), col(ts), round(col("__iv"), 6).as("value"))
   }
 
+  /** Generic keyed AS-OF JOIN — the vectorized form of Q2 `get_value_at_time`
+    * (archiver.py:112-129): every left row picks up the latest right row
+    * with `rightTs <= leftTs` on the same key (null value columns when no
+    * right row precedes it). Spark has no native as-of join; rather than an
+    * O(n·m) inequality join, both sides union into one frame and the right
+    * values carry forward with a per-key running `last(ignoreNulls)` — ONE
+    * shuffle by key, sort within partitions, linear scan. A right row tied
+    * with a left row's timestamp IS visible to it (`>=` semantics, matching
+    * DuckDB's ASOF JOIN, which the oracle uses).
+    *
+    * `right` must be unique per (key, rightTs) — pre-aggregate duplicates
+    * (e.g. `max_by`) or the carried value among ties is order-dependent.
+    * Left column names and `rightVals` must not collide.
+    */
   def asofJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, rightVals: Seq[String]): DataFrame = {
     val lCols = left.columns.toSeq

@@ -29,9 +29,7 @@ import graft.functions.PvFunctions
   */
 object BucketPruneRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("graft.bucketPrune.enabled", "true").toBoolean) return plan
-    plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, child) =>
       // the pvname/bucket attributes must come from the SAME leaf relation
       // unchanged (same exprId): a projection that REDEFINES pvname (e.g.
@@ -59,7 +57,6 @@ object BucketPruneRule extends Rule[LogicalPlan] with PredicateHelper {
           }
         case _ => f
       }
-    }
   }
 
   private def sameLeaf(plan: LogicalPlan, a: Attribute, b: Attribute): Boolean =

@@ -221,12 +221,21 @@ object PvFunctionsQueries {
   /** The reference-generated hformat fixture (value, length, expected) —
     * q_hformat reads it through the native expr and its oracle re-emits the
     * expected column verbatim, so the 500-case parity becomes a hard
-    * CORRECTNESS row. Resolved relative to the repo root whatever the cwd.
+    * CORRECTNESS row. Read from the classpath (a jar entry has no file
+    * path) and copied once to a file named by its content hash under
+    * `java.io.tmpdir`, so the path (and the oracle SQL that names it)
+    * depends neither on the cwd nor on the checkout.
     */
   private lazy val hformatCasesPath: String = {
-    val rel = java.nio.file.Paths.get("src/test/resources/hformat_cases.tsv")
-    if (java.nio.file.Files.exists(rel)) rel.toAbsolutePath.toString
-    else "/root/repo/src/test/resources/hformat_cases.tsv"
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val bytes = getClass.getResourceAsStream("/hformat_cases.tsv").readAllBytes()
+    val sha = java.security.MessageDigest.getInstance("SHA-1").digest(bytes).map("%02x".format(_)).mkString
+    val path = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_hformat_cases_$sha.tsv")
+    if (!Files.exists(path)) {
+      val part = Files.write(Files.createTempFile(path.getParent, "graft_hformat_cases", ".part"), bytes)
+      Files.move(part, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+    path.toString
   }
 
   /** Independent SQL restatement of each [[timeParseInputs]] row's expected

@@ -74,7 +74,7 @@ object StreamingQueries {
     * timestamps back to the events (ts is unique per PV in the testdata),
     * and values compare as doubles — DuckDB's double↔varchar casts are
     * shortest-round-trip, so state stays exact. Mirrors
-    * [[graft.streaming.Downsampler.onEvent]] (archiver.py:389-414 limbo
+    * the T2 fold `graft.streaming.Downsampler.Fold` (archiver.py:389-414 limbo
     * semantics) branch for branch.
     */
   private def downsampleStatefulSql(deadtimeUs: Long, deadband: Double): String = {
@@ -142,7 +142,7 @@ object StreamingQueries {
   }
 
   /** T4 alert machine as a pure DuckDB fold (mirrors
-    * [[graft.streaming.Alerts.onObservation]], cache.py:601-630): per alert,
+    * the alert fold `graft.streaming.Alerts.Fold`, cache.py:601-630): per alert,
     * `list_reduce` over the time-ordered observations with the whole
     * (status, lastNotice, emits) state in ONE VARCHAR `status|ln|emits` —
     * scalar accumulators fold correctly where DuckDB 1.0 mis-threads

@@ -60,16 +60,10 @@ object Alerts {
     }
   }
 
-  /** Evaluate one observation. Returns the (optional) transition event and
-    * the updated state. Status updates on EVERY evaluation; `notified` only
-    * on a debounced ok→alarm edge.
+  /** Evaluate one observation: returns the updated state and emits the
+    * transition event, if any. Status updates on EVERY evaluation;
+    * `notified` only on a debounced ok→alarm edge.
     */
-  def onObservation(st: State, cfg: AlertConfig, o: Observation): (Option[AlertEvent], State) = {
-    var ev: Option[AlertEvent] = None
-    val s = evaluate(st, cfg, o, e => ev = Some(e))
-    (ev, s)
-  }
-
   private def evaluate(st: State, cfg: AlertConfig, o: Observation,
       emit: AlertEvent => Unit): State =
     if (!cfg.active) st

@@ -84,20 +84,6 @@ object Downsampler {
     catch { case _: NumberFormatException => None }
   }
 
-  /** Process one event against the state; returns (emits, new state). */
-  def onEvent(st: Option[State], e: RawSample, cfg: PvConfig): (Vector[Sample], State) = {
-    val out = Vector.newBuilder[Sample]
-    val s = advance(st.orNull, e, cfg, out += _)
-    (out.result(), s)
-  }
-
-  /** Flush the limbo if the clock has passed the deadtime. */
-  def onClock(st: State, nowUs: Long, cfg: PvConfig): (Vector[Sample], State) = {
-    val out = Vector.newBuilder[Sample]
-    val s = clock(st, nowUs, cfg, out += _)
-    (out.result(), s)
-  }
-
   private def sample(e: RawSample): Sample = Sample(e.pvname, e.tsUs, e.value, e.cvalue)
 
   /** The T2 step; `st == null` is a PV's first event. */

@@ -5,6 +5,9 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
+  /** Each job of `rec` as its stages' names joined by `/`. */
+  private def stageNames(rec: Telemetry.Record): Seq[String] = rec.jobs.map(_.stageNames.mkString("/"))
+
   private def formatted(q: String): String = {
     val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
     org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
@@ -53,13 +56,7 @@ class PlanAuditSpec extends SparkSpec {
     // The 100 TB paths must be pure lazy plans: a collect() at DataFrame-
     // construction time (the round-2 anti-pattern) would show up here as a
     // Spark job. Building the executedPlan forces full analysis/planning.
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(js.stageInfos.map(_.name).mkString("/"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, rec) = Telemetry.scoped(spark) {
       val dir = "/root/testdata/sf0.001"
       Seq("q_jaccard_dist", "q_embed_dedup_dist", "q_pairs_cooccur_capped",
         "q_locf_align", "q_decimate", "q_get_data", "q_plot_trace",
@@ -82,14 +79,12 @@ class PlanAuditSpec extends SparkSpec {
         "q_ngram_diversity").foreach { q =>
         SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
       }
-      org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
-      // spark.read.parquet runs one footer/schema-inference job per table —
-      // scan setup, unavoidable without a user-supplied schema. Anything
-      // else (a collect()/count() in an operator) fails the audit.
-      val offenders = java.util.List.copyOf(jobs).toArray.map(_.toString)
-        .filterNot(_.startsWith("parquet at "))
-      assert(offenders.isEmpty, s"operator ran driver jobs at construction: ${offenders.mkString("; ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // spark.read.parquet runs one footer/schema-inference job per table —
+    // scan setup, unavoidable without a user-supplied schema. Anything
+    // else (a collect()/count() in an operator) fails the audit.
+    val offenders = stageNames(rec).filterNot(_.startsWith("parquet at "))
+    assert(offenders.isEmpty, s"operator ran driver jobs at construction: ${offenders.mkString("; ")}")
   }
 
   test("stats-first size gates: no count job when statistics prove the frame huge") {
@@ -98,13 +93,7 @@ class PlanAuditSpec extends SparkSpec {
     // size estimates) but which is never executed here — the SizeGates
     // convention (r12 verdict #3): statistics may route DISTRIBUTED early
     // with zero driver jobs; only driver-path admission pays a count
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(js.stageInfos.map(_.name).mkString("/"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, rec) = Telemetry.scoped(spark) {
       val hugeVecs = spark.range(1000000000L)
         .select(col("id").as("vec_id"),
           array(lit(1.0f), lit(2.0f), lit(3.0f), lit(4.0f)).as("embedding"))
@@ -113,11 +102,10 @@ class PlanAuditSpec extends SparkSpec {
       // blocked plan (previously this path ran an unconditional count)
       operators.Similarity.knnGraph(hugeVecs, "vec_id", "embedding", k = 5)
         .queryExecution.executedPlan
-      org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
-      val offenders = java.util.List.copyOf(jobs).toArray.map(_.toString)
-      assert(offenders.isEmpty,
-        s"stats-gated knnGraph ran driver jobs at construction: ${offenders.mkString("; ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val offenders = stageNames(rec)
+    assert(offenders.isEmpty,
+      s"stats-gated knnGraph ran driver jobs at construction: ${offenders.mkString("; ")}")
     // absent/implausible statistics (localCheckpoint → LogicalRDD reports
     // defaultSizeInBytes ≈ 2⁶³) must fall back to the exact count, never
     // fire the stats route
@@ -353,59 +341,51 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("new stateful/sequential ops build lazily too (ewma, twa, lttb, delta, quantize)") {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(js.stageInfos.map(_.name).mkString("/"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val dir = "/root/testdata/sf0.001"
-      // the keyed folds' batch twins, with the key each one shuffles on
-      val folds = Seq("q_downsample_stateful" -> "pvname", "q_alerts" -> "alertId",
-        "q_heartbeat" -> "pvname", "q_ewma" -> "pvname", "q_cusum" -> "pvname",
-        "q_holt" -> "pvname")
-      val plans = (Seq("q_ohlc", "q_histogram", "q_delta_rate", "q_pv_corr",
-        "q_lttb", "q_twa", "q_embed_quantize") ++ folds.map(_._1)).map { q =>
+    val dir = "/root/testdata/sf0.001"
+    // the keyed folds' batch twins, with the key each one shuffles on
+    val folds = Seq("q_downsample_stateful" -> "pvname", "q_alerts" -> "alertId",
+      "q_heartbeat" -> "pvname", "q_ewma" -> "pvname", "q_cusum" -> "pvname",
+      "q_holt" -> "pvname")
+    val (plans, rec) = Telemetry.scoped(spark) {
+      (Seq("q_ohlc", "q_histogram", "q_delta_rate", "q_pv_corr",
+          "q_lttb", "q_twa", "q_embed_quantize") ++ folds.map(_._1)).map { q =>
         q -> SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
       }.toMap
-      org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
-      val offenders = java.util.List.copyOf(jobs).toArray.map(_.toString)
-        .filterNot(_.startsWith("parquet at "))
-      assert(offenders.isEmpty, s"operator ran driver jobs at construction: ${offenders.mkString("; ")}")
-      // each batch fold plans exactly one hash shuffle on its key alone, and
-      // its MapPartitions reads one within-partition Sort straight off it
-      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-      import org.apache.spark.sql.execution._
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      def onKey(p: SparkPlan, key: String): Boolean = p match {
-        case e: ShuffleExchangeExec => e.outputPartitioning match {
-          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq(key)
-          case _ => false
-        }
+    }
+    val offenders = stageNames(rec).filterNot(_.startsWith("parquet at "))
+    assert(offenders.isEmpty, s"operator ran driver jobs at construction: ${offenders.mkString("; ")}")
+    // each batch fold plans exactly one hash shuffle on its key alone, and
+    // its MapPartitions reads one within-partition Sort straight off it
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def onKey(p: SparkPlan, key: String): Boolean = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq(key)
         case _ => false
       }
-      def below(p: SparkPlan): SparkPlan = p match {
-        case _: WholeStageCodegenExec | _: InputAdapter | _: DeserializeToObjectExec |
-            _: ProjectExec => below(p.children.head)
-        case other => other
+      case _ => false
+    }
+    def below(p: SparkPlan): SparkPlan = p match {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: DeserializeToObjectExec |
+          _: ProjectExec => below(p.children.head)
+      case other => other
+    }
+    folds.foreach { case (q, key) =>
+      val plan = plans(q) match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
       }
-      folds.foreach { case (q, key) =>
-        val plan = plans(q) match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        assert(plan.collect { case e if onKey(e, key) => e }.size == 1,
-          s"$q: want exactly one hash Exchange on $key\n$plan")
-        val folded = plan.collect { case m: MapPartitionsExec => below(m.child) }
-        assert(folded.size == 1, s"$q: want one MapPartitions\n$plan")
-        folded.head match {
-          case s: SortExec if !s.global && onKey(below(s.child), key) => ()
-          case other => fail(s"$q: MapPartitions must read a Sort over the $key Exchange, got\n$other")
-        }
+      assert(plan.collect { case e if onKey(e, key) => e }.size == 1,
+        s"$q: want exactly one hash Exchange on $key\n$plan")
+      val folded = plan.collect { case m: MapPartitionsExec => below(m.child) }
+      assert(folded.size == 1, s"$q: want one MapPartitions\n$plan")
+      folded.head match {
+        case s: SortExec if !s.global && onKey(below(s.child), key) => ()
+        case other => fail(s"$q: MapPartitions must read a Sort over the $key Exchange, got\n$other")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("transition matrix: ONE user-keyed window; the normalizer runs over the types² pair table") {
@@ -741,5 +721,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(spreadTo(small.coalesce(1)) == Some(cores))
     val agg = small.groupBy("p_brand").count()
     assert(operators.SizeGates.spreadSmall(agg) eq agg)
+  }
+
+  test("one listener: addSparkListener only in Telemetry, no @volatile var in operators") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala") // the forked test JVM runs in the repo root
+    val sources = java.nio.file.Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => main.relativize(f).toString -> java.nio.file.Files.readString(f)).toSeq
+    assert(sources.collect { case (f, t) if t.contains("addSparkListener") => f } == Seq("graft/Telemetry.scala"))
+    assert(sources.collect { case (f, t) if f.startsWith("graft/operators/") && t.contains("@volatile var") => f }
+      .isEmpty)
   }
 }

@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,31 +39,9 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Runs `body` and returns the jobs it launched, each as its description
-    * plus its stages' call-site details. The listener bus is drained
-    * by waiting for a marker job, which runs after `body`. */
+    * plus its stages' call-site details (one [[Telemetry.scoped]] scope). */
   def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val group = s"graft-jobs-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(js.properties.getProperty("spark.job.description")).getOrElse("") +
-            " " + js.stageInfos.map(_.details).mkString(" "))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "")
-    try {
-      val r = body
-      sc.setJobDescription("graft-marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_.startsWith("graft-marker")) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      (r, seen.asScala.toSeq.filterNot(_.startsWith("graft-marker")))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (r, rec) = Telemetry.scoped(spark)(body)
+    (r, rec.jobs.map(j => j.description + " " + j.stageDetails.mkString(" ")))
   }
 }

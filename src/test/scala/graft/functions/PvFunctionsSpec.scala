@@ -34,7 +34,7 @@ class PvFunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("hformat matches 500 fuzzed reference outputs (src/test/resources fixtures)") {
+  test("hformat matches 500 fuzzed reference outputs (hformat_cases.tsv)") {
     val src = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/hformat_cases.tsv"))
     try {

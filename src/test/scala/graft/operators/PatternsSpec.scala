@@ -96,11 +96,10 @@ class PatternsSpec extends SparkSpec {
           e: Exception): Unit = ()
     }
     sp.listenerManager.register(listener)
-    val sets = try {
-      val r = Patterns.frequentItemsets(dense, "b", "i", minSupportPpm = 1000000L, maxSize = 3)
-      org.apache.spark.GraftSparkTestHooks.waitListenerBus(sp.sparkContext)
-      r
-    } finally sp.listenerManager.unregister(listener)
+    // the scope drains the listener bus, so the checkpoint has been seen
+    val (sets, _) = try graft.Telemetry.scoped(sp)(
+      Patterns.frequentItemsets(dense, "b", "i", minSupportPpm = 1000000L, maxSize = 3))
+    finally sp.listenerManager.unregister(listener)
     val bySize = sets.groupBy("size").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (l1, l2, l3) = (n.toLong, n.toLong * (n - 1) / 2, n.toLong * (n - 1) * (n - 2) / 6)
     assert(bySize == Map(0L -> 1L, 1L -> l1, 2L -> l2, 3L -> l3))

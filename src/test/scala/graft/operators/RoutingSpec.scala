@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, Telemetry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-shape routing gates (r13 verdict asks #1 and #4): the density
@@ -30,29 +31,32 @@ class RoutingSpec extends SparkSpec {
     (i, s"rare${p}a rare${p}b rare${p}c rare${p}d rare${p}e rare${p}f rare${p}g rare${p}h")
   }.toDF("doc_id", "text")
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+  /** The routes `key` noted while `df` was built and counted. */
+  private def routes(key: String)(df: => DataFrame): Seq[String] =
+    Telemetry.scoped(spark)(df.count())._2.noted[String](key)
+
+  private def rows(df: DataFrame): Set[(Long, Long, Double)] =
     df.select(col("d1").cast("long"), col("d2").cast("long"),
       col(df.columns.last).cast("double"))
       .as[(Long, Long, Double)].collect().toSet
 
   test("tfidfSimilar auto routes dense corpora to the dense sweep") {
-    TextAnalysis.tfidfSimilar(denseDocs, "doc_id", "text", threshold = 0.5).count()
-    assert(TextAnalysis.lastTfidfRoute == "dense",
+    assert(routes(TextAnalysis.TfidfRoute)(
+      TextAnalysis.tfidfSimilar(denseDocs, "doc_id", "text", threshold = 0.5)) == Seq("dense"),
       "dense small-vocab corpus: Σ C(df,2) > C(n,2) must flip to the dense sweep")
   }
 
   test("tfidfSimilar auto keeps Zipfian corpora on the inverted index") {
-    TextAnalysis.tfidfSimilar(zipfDocs, "doc_id", "text", threshold = 0.5).count()
-    assert(TextAnalysis.lastTfidfRoute == "index",
+    assert(routes(TextAnalysis.TfidfRoute)(
+      TextAnalysis.tfidfSimilar(zipfDocs, "doc_id", "text", threshold = 0.5)) == Seq("index"),
       "Zipfian corpus: short posting lists must stay on the salted index")
   }
 
   test("tfidfSimilar auto stays on the index when dense admission fails") {
     // density says dense, but the driver-admission bound (docs cap) fails →
     // the gate must fall back to the only fully-distributed plan
-    TextAnalysis.tfidfSimilar(denseDocs, "doc_id", "text", threshold = 0.5,
-      maxBroadcastDocs = 10L).count()
-    assert(TextAnalysis.lastTfidfRoute == "index")
+    assert(routes(TextAnalysis.TfidfRoute)(TextAnalysis.tfidfSimilar(denseDocs, "doc_id", "text",
+      threshold = 0.5, maxBroadcastDocs = 10L)) == Seq("index"))
   }
 
   test("tfidf routes are hash-equal on both corpus shapes") {
@@ -67,15 +71,27 @@ class RoutingSpec extends SparkSpec {
   }
 
   test("ngramJaccardAuto routes the dense corpus to the block sweep") {
-    Dedup.ngramJaccardAuto(denseDocs, "doc_id", "text", n = 2, threshold = 0.5).count()
-    assert(Dedup.lastJaccardRoute == "blocked",
+    assert(routes(Dedup.JaccardRoute)(
+      Dedup.ngramJaccardAuto(denseDocs, "doc_id", "text", n = 2, threshold = 0.5)) == Seq("blocked"),
       "dense corpus: prefixes prune nothing — the O(n²/b) sweep must win")
   }
 
   test("ngramJaccardAuto routes the Zipfian corpus to PPJoin") {
-    Dedup.ngramJaccardAuto(zipfDocs, "doc_id", "text", n = 2, threshold = 0.5).count()
-    assert(Dedup.lastJaccardRoute == "ppjoin",
+    assert(routes(Dedup.JaccardRoute)(
+      Dedup.ngramJaccardAuto(zipfDocs, "doc_id", "text", n = 2, threshold = 0.5)) == Seq("ppjoin"),
       "Zipfian corpus: rare-shingle prefixes prune — PPJoin must win")
+  }
+
+  test("concurrent ngramJaccardAuto calls each see their own route") {
+    // both threads route at once; each scope holds only its own thread's route
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    def route(docs: DataFrame) = new java.util.concurrent.FutureTask(() => {
+      start.await()
+      routes(Dedup.JaccardRoute)(Dedup.ngramJaccardAuto(docs, "doc_id", "text", n = 2, threshold = 0.5))
+    })
+    val tasks = Seq(route(denseDocs), route(zipfDocs))
+    tasks.foreach(new Thread(_).start())
+    assert(tasks.map(_.get(2, java.util.concurrent.TimeUnit.MINUTES)) == Seq(Seq("blocked"), Seq("ppjoin")))
   }
 
   test("jaccard routed output equals both pinned variants on both shapes") {

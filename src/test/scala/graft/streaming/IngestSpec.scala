@@ -66,6 +66,21 @@ class IngestSpec extends SparkSpec {
     assert(latestRows("ING:b.VAL") == 9 * 30 * S)
   }
 
+  test("withEventTime keeps the RawSample fields and declares an event_time watermark (T7)") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    val input = MemoryStream[RawSample]
+    val ds = Ingest.withEventTime(input.toDS(), "10 seconds")
+    assert(ds.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w.eventTime.name
+    } == Seq("event_time"))
+    val events = Seq(RawSample("WM:a.VAL", 5 * S, "1.5", "1.5"), RawSample("WM:b.VAL", 7 * S, "on", "on"))
+    val q = ds.writeStream.format("memory").queryName("ingest_event_time").start()
+    try { input.addData(events); q.processAllAvailable() } finally q.stop()
+    assert(sp.table("ingest_event_time").as[RawSample].collect().toSet == events.toSet)
+  }
+
   test("batch replay after restart is idempotent (commit records via Hadoop FS)") {
     val sp = spark
     import sp.implicits._
