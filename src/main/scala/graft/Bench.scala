@@ -67,31 +67,7 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // sort-based shuffle writer (see Engine.bypassMergeThreshold)
-        .config("spark.shuffle.sort.bypassMergeThreshold", Engine.bypassMergeThreshold)
-        // the AppStatusListener tracks jobs/stages/tasks even with the UI
-        // off, retaining 1000 jobs / 1000 stages by default: a full bench
-        // launches thousands of jobs, so the status store fills to its
-        // caps and every further job pays listener-side eviction churn —
-        // a monotone drag that matches the late-run gc_ms creep in
-        // ingest_diag and is a candidate for the r9 driver-environment
-        // slowdown of everything after the ingest phase. Tight caps keep
-        // the listener O(recent), changing nothing about execution.
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "100")
-        .config("spark.ui.retainedTasks", "5000")
-        .config("spark.sql.ui.retainedExecutions", "50")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Engine.tune(s)
-      s
-    }
+    def newSession(): SparkSession = Engine.harness(cpus.toInt)
 
     // ---- ingest phase FIRST, on a THROWAWAY context: no cached tables,
     // no query debris in the measurement — and stopping the context takes
@@ -185,7 +161,10 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
-      catch { case _: Throwable => failed += name }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failed += name
+      }
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -74,12 +74,27 @@ object Engine {
     */
   private[graft] val bypassMergeThreshold: String = "0"
 
-  def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
+  def session(master: String = "local[32]", appName: String = "graft"): SparkSession =
+    build(SparkSession.builder().master(master).appName(appName)
+      .config("spark.sql.shuffle.partitions", "32"))
+
+  /** The session the harness mains (Bench, Scale, ProbeProfile, Verify) run
+    * on: `local[cpus]` with one shuffle partition per core. The
+    * AppStatusListener tracks jobs, stages and tasks even with the UI off,
+    * and keeps 1000 jobs and 1000 stages by default: a full bench launches
+    * thousands of jobs, so with the defaults every further job pays
+    * listener-side eviction churn. Tight caps keep the listener
+    * O(recent) and change nothing about execution. */
+  def harness(cpus: Int): SparkSession =
+    build(SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "5000")
+      .config("spark.sql.ui.retainedExecutions", "50"))
+
+  private def build(b: SparkSession.Builder): SparkSession = {
+    val s = b
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.shuffle.sort.bypassMergeThreshold", bypassMergeThreshold)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main for per-query profiling (r10 verdict ask #1, widened in
   * r12): rebuilds the same memoized inputs Bench uses, runs the selected
   * probes (any `_dist_*` twin OR any registered query) once each, and
@@ -24,16 +22,7 @@ object ProbeProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("_dist_kcore", "_dist_hits")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "1").toInt
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.harness(Runtime.getRuntime.availableProcessors())
     // bench position also means CACHED BASE TABLES: Bench caches every
     // parquet table up front, so in-suite plans read InMemoryRelations
     // (whose partition count is frozen at cache-build time) instead of

@@ -46,20 +46,7 @@ object Scale {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_r13.json")
     require(factor >= 2, s"factor must be >= 2, got $factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sort-based shuffle writer (see Engine.bypassMergeThreshold)
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.bypassMergeThreshold)
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.harness(cpus.toInt)
     val work = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_scale_${factor}x").getAbsolutePath
     inflate(spark, base, work, factor)

@@ -23,9 +23,9 @@ import graft.functions.PvFunctions
   * Safety: only fires on top-level conjuncts (an OR-ed pvname predicate is
   * left alone), skips plans that already constrain `bucket`, and requires
   * the relation to carry the full store signature — `pvname` (string),
-  * `bucket` (int), `run` (long) AND `tsUs` (long) — so an unrelated frame
-  * that merely happens to have a pvname and a bucket column is never
-  * rewritten.
+  * `bucket` (int), `run` (long, or int when every run id fits in an int)
+  * AND `tsUs` (long) — so an unrelated frame that merely happens to have
+  * a pvname and a bucket column is never rewritten.
   */
 object BucketPruneRule extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -1,12 +1,8 @@
 package graft.store
 
 import java.io.FileNotFoundException
-import java.lang.ref.WeakReference
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -25,7 +21,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   *   _log/batch-<batchId>                         the batch's record: its delta files
   *   _compact/<id>/run=<R>/bucket=<B>/<part>      a compaction's staging area
   *   run=<R>/bucket=<B>/compacted-<id>.0.parquet  its output, one file per bucket
-  *   _log/compact-<id>                            its record: the deltas it supersedes
+  *   _log/compact-<id>                            its record: the batch id it committed
+  *                                                after, then the deltas it supersedes
   * }}}
   *
   * A delta holds every stored column, `run` and `bucket` included, sorted
@@ -35,11 +32,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   *
   * Commit: a record is written under a hidden name and renamed into place
   * as the last step, so it appears whole or not at all, and only named
-  * files are ever read. A batch id that has a record is never written
-  * again; a crashed attempt's files are named by no record, so no reader
-  * sees them, and [[vacuum]] deletes them. This is the epoch-id argument of
-  * the Structured Streaming paper (SIGMOD 2018): the engine replays only
-  * an uncommitted batch id, and the sink publishes each id once.
+  * files are ever read. A batch id at or below the newest committed one is
+  * never written again (`FileStreamSink.addBatch`'s rule); a crashed
+  * attempt's files are named by no record, so no reader sees them, and
+  * [[vacuum]] deletes them. This is the epoch-id argument of the Structured
+  * Streaming paper (SIGMOD 2018): the engine replays only an uncommitted
+  * batch id, and the sink publishes each id once.
   *
   * Compaction folds one run's live deltas into its bucket directories. Its
   * files are renamed into the tree before its record appears, and a tree
@@ -50,9 +48,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   * database there, cache.py:82-144) and when a run holds
   * [[SampleStore.NumBuckets]] live deltas.
   *
+  * Retention: a compaction's record names the batch id it committed
+  * after. The deltas it superseded are deleted once [[RetainCommits]]
+  * batches have committed after it, and a batch record goes with its
+  * deltas once none of them is live. Compaction records stay. So a
+  * snapshot opens at most about 2 × [[RetainCommits]] batch records plus
+  * one record per compaction, and the newest batch record, which replay
+  * detection needs, is never deleted. The contract for readers, in any
+  * process: a frame built on a snapshot stays readable while fewer than
+  * [[RetainCommits]] batches commit after it; after that, take a new
+  * snapshot (call `SampleStore.read` again).
+  *
   * One writer per store: the stream that owns the store's checkpoint.
-  * Records are small and are never deleted, so a replayed batch id stays
-  * recognised for the life of the store; a snapshot opens every record.
   */
 object CommitLog {
 
@@ -62,6 +69,9 @@ object CommitLog {
   final val CompactedPrefix = "compacted-"
   private final val BatchPrefix = "batch-"
   private final val CompactPrefix = "compact-"
+  /** How many batches commit after a compaction before the deltas it
+    * superseded are deleted: one compaction cycle. */
+  final val RetainCommits = 128
   /** The delta writer's partition column: a copy of `run`, so that `run`
     * stays a data column of the file. */
   private final val RunDirCol = "runDir"
@@ -78,20 +88,26 @@ object CommitLog {
     def status: FileStatus = new FileStatus(length, false, 0, 0L, 0L, path)
   }
 
+  /** One committed compaction: the batch id it committed after, and the
+    * deltas it folded. */
+  final case class Compaction(after: Long, folded: Set[Path])
+
   /** What one listing of the log says: the committed batches' deltas and the
-    * committed compactions. `pin` is set for a reader's snapshot. */
+    * committed compactions. */
   final class Snapshot private[CommitLog] (
       val batches: Map[Long, Seq[Delta]],
-      val compactions: Map[String, Set[Path]],
-      private val pin: Pin) {
+      val compactions: Map[String, Compaction]) {
 
-    private lazy val superseded: Set[Path] = compactions.values.flatten.toSet
+    /** The newest committed batch id; -1 when none is. */
+    val newest: Long = batches.keys.maxOption.getOrElse(-1L)
+
+    private lazy val superseded: Set[Path] = compactions.values.flatMap(_.folded).toSet
 
     /** The deltas no committed compaction has folded, in batch order. */
     lazy val liveDeltas: Seq[Delta] =
       batches.toSeq.sortBy(_._1).flatMap(_._2).filterNot(d => superseded(d.path))
 
-    def committed(batchId: Long): Boolean = batches.contains(batchId)
+    def committed(batchId: Long): Boolean = batchId <= newest
 
     /** Whether a tree file belongs to the tree this snapshot sees: every
       * file but a compaction's output that this snapshot holds no record of. */
@@ -100,57 +116,42 @@ object CommitLog {
         compactions.contains(name.stripPrefix(CompactedPrefix).takeWhile(_ != '.'))
 
     private[CommitLog] def withBatch(id: Long, ds: Seq[Delta]): Snapshot =
-      new Snapshot(batches + (id -> ds), compactions, pin)
+      new Snapshot(batches + (id -> ds), compactions)
 
     private[CommitLog] def withCompaction(id: String, folded: Seq[Delta]): Snapshot =
-      new Snapshot(batches, compactions + (id -> folded.map(_.path).toSet), pin)
+      new Snapshot(batches, compactions + (id -> Compaction(newest, folded.map(_.path).toSet)))
   }
 
-  /** A reader's claim on the deltas its snapshot names; `live` is null while
-    * the log is being listed. Held strongly by the reader's snapshot only,
-    * so it lapses when the reader's frame is garbage. */
-  private final class Pin { @volatile var live: Set[Path] = null }
-
-  private val pins = new ConcurrentHashMap[Path, java.util.Set[WeakReference[Pin]]]()
-
-  /** The log as it is now, for the writer. */
-  def snapshot(fs: FileSystem, root: Path): Snapshot = load(fs, root, null)
-
-  /** The log as it is now, for a reader: until the snapshot is garbage,
-    * [[vacuum]] deletes no delta it names. The pin is registered before the
-    * log is listed, so a compaction that commits in between cannot delete
-    * a delta this snapshot still names. */
-  def readerSnapshot(fs: FileSystem, root: Path): Snapshot = {
-    val pin = new Pin
-    val held = pins.computeIfAbsent(root, _ => ConcurrentHashMap.newKeySet[WeakReference[Pin]]())
-    held.removeIf(_.get == null)
-    held.add(new WeakReference(pin))
-    val s = load(fs, root, pin)
-    pin.live = s.liveDeltas.map(_.path).toSet
-    s
-  }
-
-  private def load(fs: FileSystem, root: Path, pin: Pin): Snapshot = {
-    val records = ls(fs, new Path(root, LogDir)).filter(_.isFile).map(_.getPath)
-    def fields(p: Path): Seq[Array[String]] = {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map(_.split('\t')).toSeq
-    }
-    val batches = records.collect { case p if p.getName.startsWith(BatchPrefix) =>
-      val id = p.getName.stripPrefix(BatchPrefix).toLong
-      id -> fields(p).map(f => Delta(id, f(0).toLong, new Path(root, f(2)), f(1).toLong))
+  /** The log as it is now. A record that [[vacuum]] deletes between the
+    * listing and its opening is left out: only a batch record can go, and
+    * only once a compaction in the listing superseded all its deltas. */
+  def snapshot(fs: FileSystem, root: Path): Snapshot = {
+    def lines(p: Path): Option[Seq[String]] =
+      try {
+        val in = fs.open(p)
+        val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
+        Some(body.linesIterator.filter(_.nonEmpty).toSeq)
+      } catch { case _: FileNotFoundException => None }
+    val records = ls(fs, new Path(root, LogDir)).filter(_.isFile)
+      .flatMap(f => lines(f.getPath).map(f.getPath.getName -> _))
+    val batches = records.collect { case (name, body) if name.startsWith(BatchPrefix) =>
+      val id = name.stripPrefix(BatchPrefix).toLong
+      id -> body.map(_.split('\t')).map(f => Delta(id, f(0).toLong, new Path(root, f(2)), f(1).toLong))
     }.toMap
-    val compactions = records.collect { case p if p.getName.startsWith(CompactPrefix) =>
-      p.getName.stripPrefix(CompactPrefix) -> fields(p).map(f => new Path(root, f(0))).toSet
+    // a compaction record's first line is the batch id it committed after;
+    // a record without one counts as past retention
+    val compactions = records.collect { case (name, body) if name.startsWith(CompactPrefix) =>
+      val (after, folded) = body.headOption.flatMap(_.toLongOption)
+        .fold((Long.MinValue, body))(a => (a, body.tail))
+      name.stripPrefix(CompactPrefix) -> Compaction(after, folded.map(new Path(root, _)).toSet)
     }.toMap
-    new Snapshot(batches, compactions, pin)
+    new Snapshot(batches, compactions)
   }
 
   /** Appends one normalized micro-batch as batch `batchId`, exactly once: a
-    * batch id with a record writes nothing; one without deletes what an
-    * earlier attempt left, writes one file per run, then publishes its
-    * record. Then compacts the runs that are due and vacuums. */
+    * batch id at or below the newest committed one writes nothing; a newer
+    * one deletes what an earlier attempt left, writes one file per run, then
+    * publishes its record. Then compacts the runs that are due and vacuums. */
   def append(samples: DataFrame, path: String, batchId: Long, hadoopConf: Configuration): Unit = {
     val (fs, root) = resolve(path, hadoopConf)
     val before = snapshot(fs, root)
@@ -194,7 +195,7 @@ object CommitLog {
     require(deltas.forall(_.run == run), "a compaction folds one run")
     val id = UUID.randomUUID().toString
     val staging = new Path(root, s"$CompactDir/$id/run=$run")
-    deltaFrame(spark, root, s, deltas, StructType(DeltaSchema.filterNot(_.name == "run")), LongType)
+    deltaFrame(spark, root, deltas, StructType(DeltaSchema.filterNot(_.name == "run")), LongType)
       .drop("run")
       .repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("pvname"), col("tsUs"))
@@ -206,37 +207,34 @@ object CommitLog {
         rename(fs, f.getPath, new Path(target, s"$CompactedPrefix$id.$k.parquet"))
       }
     }
-    publish(fs, root, s"$CompactPrefix$id", deltas.map(d => relative(root, d.path)))
+    publish(fs, root, s"$CompactPrefix$id", s.newest.toString +: deltas.map(d => relative(root, d.path)))
     fs.delete(new Path(root, s"$CompactDir/$id"), true)
     s.withCompaction(id, deltas)
   }
 
-  /** A frame over `deltas` of snapshot `s`, with `run` as a partition
-    * column of `runType` and the data columns of `dataSchema`. No listing,
-    * no Spark job. The frame holds `s`, and with it a reader's pin. */
-  private[store] def deltaFrame(spark: SparkSession, root: Path, s: Snapshot, deltas: Seq[Delta],
+  /** A frame over `deltas`, with `run` as a partition column of `runType`
+    * and the data columns of `dataSchema`. No listing, no Spark job. */
+  private[store] def deltaFrame(spark: SparkSession, root: Path, deltas: Seq[Delta],
       dataSchema: StructType, runType: DataType): DataFrame = {
-    val index = new DeltaFileIndex(root, s, deltas, runType)
+    val index = new DeltaFileIndex(root, deltas, runType)
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
       bucketSpec = None, new ParquetFileFormat(), options = Map.empty)(spark))
   }
 
-  /** Deletes what no snapshot can read: a crashed attempt's delta directory
-    * or compaction output, which no record names, and the deltas a committed
-    * compaction superseded, unless a live reader's snapshot still names
-    * them. */
+  /** Deletes what no reader within retention can read: a crashed attempt's
+    * delta directory or compaction output, which no record names; the
+    * deltas of every compaction that [[RetainCommits]] batches have
+    * committed after; and the record of a batch once none of its deltas is
+    * live and [[RetainCommits]] batches have committed after it. */
   private def vacuum(fs: FileSystem, root: Path, s: Snapshot): Unit = {
-    val named = Option(pins.get(root)).toSeq.flatMap(_.asScala.flatMap(r => Option(r.get)).map(_.live))
-    val listing = named.contains(null)
-    val pinned = if (listing) Set.empty[Path] else named.flatten.toSet
-    val superseded = s.compactions.values.flatten.toSet
-    def reclaimable(d: Delta) = !listing && superseded(d.path) && !pinned(d.path)
+    val horizon = s.newest - RetainCommits
+    val expired = s.compactions.values.filter(_.after <= horizon).flatMap(_.folded).toSet
+    val (gone, kept) = s.batches.partition { case (id, ds) => id <= horizon && ds.forall(d => expired(d.path)) }
+    gone.keys.foreach(id => fs.delete(new Path(root, s"$LogDir/$BatchPrefix$id"), false))
     for (dir <- ls(fs, new Path(root, DeltaDir)) if dir.isDirectory) {
-      val id = scala.util.Try(dir.getPath.getName.toLong).toOption
-      id.flatMap(s.batches.get) match {
+      scala.util.Try(dir.getPath.getName.toLong).toOption.flatMap(kept.get) match {
         case None => fs.delete(dir.getPath, true)
-        case Some(ds) if ds.forall(reclaimable) => fs.delete(dir.getPath, true)
-        case Some(ds) => ds.filter(reclaimable).foreach(d => fs.delete(d.path, false))
+        case Some(ds) => ds.filter(d => expired(d.path)).foreach(d => fs.delete(d.path, false))
       }
     }
     for (staged <- ls(fs, new Path(root, CompactDir)) if staged.isDirectory) {

@@ -44,10 +44,12 @@ import graft.functions.PvFunctions
   * same columns, unioned after the tree; a store without a log reads as
   * the tree alone. Each listing is kept for the life of the returned
   * frame: re-executing it sees the same files until `refresh()`, and a new
-  * `read` sees new commits. Measured on the `query` benchmark (4 cores,
-  * traced): `read` took 1.5–1.6 s of a 1.8 s `get_data` as
-  * `spark.read.parquet`, in listing and schema-inference jobs, and takes
-  * 6–7 ms now.
+  * `read` sees new commits. A frame stays readable while fewer than
+  * [[CommitLog.RetainCommits]] ingest batches commit after its `read`, in
+  * this process or any other; after that, call `read` again. Measured on
+  * the `query` benchmark (4 cores, traced): `read` took 1.5–1.6 s of a
+  * 1.8 s `get_data` as `spark.read.parquet`, in listing and
+  * schema-inference jobs, and takes 6–7 ms now.
   */
 object SampleStore {
 
@@ -99,7 +101,7 @@ object SampleStore {
     val hadoopConf = spark.sessionState.newHadoopConf()
     val (fs, root) = CommitLog.resolve(path, hadoopConf)
     if (!fs.exists(root)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> root.toString))
-    val snapshot = CommitLog.readerSnapshot(fs, root)
+    val snapshot = CommitLog.snapshot(fs, root)
     val tree = StoreFileIndex(spark, root, fs, hadoopConf, snapshot)
     val deltas = snapshot.liveDeltas
     if (tree.isEmpty && deltas.isEmpty)
@@ -112,7 +114,7 @@ object SampleStore {
     }
     val runType = tree.fold(StoreFileIndex.runType(deltas.map(_.run)))(_._1.partitionSchema("run").dataType)
     val deltaFrame = Option.when(deltas.nonEmpty) {
-      CommitLog.deltaFrame(spark, root, snapshot, deltas, dataSchema.add(CommitLog.DeltaSchema("bucket")), runType)
+      CommitLog.deltaFrame(spark, root, deltas, dataSchema.add(CommitLog.DeltaSchema("bucket")), runType)
         .select((dataSchema.fieldNames :+ "run" :+ "bucket").map(col).toSeq: _*)
     }
     (treeFrame ++ deltaFrame).reduce(_ union _)

@@ -117,11 +117,11 @@ final class StoreFileIndex private (root: Path, fs: FileSystem, snapshot: Commit
   * `bucket = b` conjunct reaches the parquet reader as a pushed-down filter
   * and skips the row groups of other buckets (a delta is sorted by
   * bucket). File sizes come from the records: no listing, no Spark job.
-  * The index holds the `snapshot` the deltas come from, and with it a
-  * reader's pin, for as long as a plan holds the index.
+  * The files stay on disk for [[CommitLog.RetainCommits]] commits after
+  * the snapshot that named them.
   */
-final class DeltaFileIndex private[store] (root: Path, val snapshot: CommitLog.Snapshot,
-    deltas: Seq[CommitLog.Delta], runType: DataType) extends FileIndex {
+final class DeltaFileIndex private[store] (root: Path, deltas: Seq[CommitLog.Delta], runType: DataType)
+    extends FileIndex {
 
   override val partitionSchema: StructType = StructType(Seq(StructField("run", runType)))
 

@@ -1,7 +1,6 @@
 package graft.store
 
 import java.io.File
-import java.lang.ref.WeakReference
 import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -12,7 +11,7 @@ import graft.streaming.Ingest
 import graft.streaming.Downsampler.{PvConfig, RawSample, Sample}
 
 /** The ingest sink's commit log: a crash before a batch's record, readers
-  * during commits and a compaction, and compaction itself. */
+  * during commits and a compaction, compaction itself, and retention. */
 class CommitLogSpec extends SparkSpec {
 
   private val S = 1000000L
@@ -118,14 +117,14 @@ class CommitLogSpec extends SparkSpec {
     assert(all.select("pvname", "tsUs").distinct().count() == nBatches * perBatch)
   }
 
-  test("compaction folds 128 live deltas, again at rotation, and deletes only what no snapshot names") {
+  test("compaction folds 128 live deltas, again at rotation, and deletes only past retention") {
     val sp = spark
     import sp.implicits._
     val dir = Files.createTempDirectory("graft_compact").toString
     val width = 1000 * S
     val pvs = 48
     def batch(k: Int): Dataset[Sample] = (0 until pvs).map { i =>
-      val ts = if (k < 130) k * S + i else width + i
+      val ts = if (k < 130) k * S + i else width + k * S + i
       Sample(s"CMP:pv$i.VAL", ts, s"$k.$i", s"$k.$i")
     }.toDS()
     def write(k: Int): Double = {
@@ -140,7 +139,7 @@ class CommitLogSpec extends SparkSpec {
     val times = (0 until 127).map(write)
     assert(snapshotOf(dir).compactions.isEmpty && snapshotOf(dir).liveDeltas.size == 127)
     assert(bucketFiles.isEmpty)
-    var held = SampleStore.read(sp, dir)
+    val held = SampleStore.read(sp, dir)
     val heldRows = rows(held)
     val heldDeltas = snapshotOf(dir).liveDeltas.map(d => new File(d.path.toUri))
     assert(heldDeltas.forall(_.isFile))
@@ -155,7 +154,7 @@ class CommitLogSpec extends SparkSpec {
       fs.size == 1 && fs.head.startsWith(s"${CommitLog.CompactedPrefix}$firstId.")), afterFirst)
     info(f"one compaction of 128 deltas ($pvs PVs each): the trigger took $compactMs%.0f ms; " +
       f"the median trigger before it ${times.sorted.apply(times.size / 2)}%.0f ms")
-    // the held frame's snapshot still names the superseded deltas: they stay
+    // within retention the superseded deltas stay, and the held frame still reads them
     assert(heldDeltas.forall(_.isFile))
     assert(rows(held) == heldRows)
 
@@ -180,13 +179,6 @@ class CommitLogSpec extends SparkSpec {
       new File(dir, CommitLog.CompactDir).list().isEmpty)
     assert(heldDeltas.forall(_.isFile), "a delta the held snapshot names was deleted")
 
-    // release the held frame; the next commit may delete what it named
-    val ref = new WeakReference(held)
-    held = null
-    var tries = 0
-    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
-    assume(ref.get == null, "the held frame was not collected")
-
     // the next run: rotation compacts run 0's two live deltas
     write(130)
     val last = snapshotOf(dir)
@@ -199,14 +191,64 @@ class CommitLogSpec extends SparkSpec {
       assert(fs.forall(f => f.startsWith(s"${CommitLog.CompactedPrefix}$firstId.") ||
         f.startsWith(s"${CommitLog.CompactedPrefix}$secondId.")), s"$b: $fs")
     }
-    assert(heldDeltas.forall(!_.exists()), "superseded deltas outlived every snapshot")
-    assert(new File(dir, CommitLog.DeltaDir).list().toSeq == Seq("130"))
 
-    val want = (0 until 131).flatMap { k => batch(k).collect() }
+    // retention: the first compaction's deltas outlive 127 more commits and
+    // go at the 128th, with the records of the batches that wrote them
+    val expiry = 127 + CommitLog.RetainCommits
+    (131 until expiry).foreach(write)
+    assert(heldDeltas.forall(_.isFile), "a delta was deleted within retention")
+    assert(rows(held) == heldRows)
+    write(expiry)
+    assert(heldDeltas.forall(!_.exists()), "superseded deltas outlived retention")
+    assert(new File(dir, CommitLog.DeltaDir).list().map(_.toInt).sorted.toSeq == (128 to expiry))
+    assert(new File(dir, CommitLog.LogDir).list().count(_.startsWith("batch-")) == expiry - 127)
+
+    val want = (0 to expiry).flatMap { k => batch(k).collect() }
     val got = SampleStore.read(sp, dir)
-    assert(got.count() == 131 * pvs)
+    assert(got.count() == (expiry + 1) * pvs)
     assert(got.select("pvname", "tsUs", "value").as[(String, Long, String)].collect().sorted.toSeq ==
       want.map(s => (s.pvname, s.tsUs, s.value)).sorted)
     assert(rows(got.where(col("run") === 0)).size == 130 * pvs)
+  }
+
+  /** Commits batch `k` of one row, at second `k` of run 0. */
+  private def commitOne(dir: String, k: Int): Unit = {
+    val sp = spark
+    import sp.implicits._
+    Ingest.writeBatchIdempotent(Seq(Sample("RET:pv.VAL", k * S, s"$k", s"$k")).toDS(), dir, 1000 * S, k, conf)
+  }
+
+  test("a snapshot the writer cannot see keeps its deltas on disk for RetainCommits commits after their compaction") {
+    val dir = Files.createTempDirectory("graft_retain").toString
+    (0 until 127).foreach(commitOne(dir, _))
+    // a reader in another process holds nothing the writer can see
+    val named = snapshotOf(dir).liveDeltas.map(d => new File(d.path.toUri))
+    assert(named.size == 127 && named.forall(_.isFile))
+    commitOne(dir, 127)
+    assert(snapshotOf(dir).compactions.size == 1 && snapshotOf(dir).liveDeltas.isEmpty)
+    for (k <- 127 until 127 + CommitLog.RetainCommits) {
+      if (k > 127) commitOne(dir, k)
+      val lost = named.filterNot(_.isFile)
+      assert(lost.isEmpty, s"${lost.size} deltas deleted ${k - 127} commits after their compaction")
+    }
+    assert(spark.read.parquet(named.map(_.toString): _*).count() == 127)
+    commitOne(dir, 127 + CommitLog.RetainCommits)
+    assert(named.forall(!_.exists()), "deltas outlived retention")
+  }
+
+  test("the log stays bounded: at most 2 x RetainCommits batch records, and a replay of any old id writes nothing") {
+    val dir = Files.createTempDirectory("graft_bounded").toString
+    val n = 3 * CommitLog.RetainCommits
+    def records = new File(dir, CommitLog.LogDir).list().count(_.startsWith("batch-"))
+    val most = (0 until n).map { k => commitOne(dir, k); records }.max
+    assert(snapshotOf(dir).compactions.size == 3)
+    assert(most <= 2 * CommitLog.RetainCommits, s"the log held $most batch records")
+    assert(records == CommitLog.RetainCommits)
+    val stored = SampleStore.read(spark, dir)
+    assert(stored.count() == n && stored.select("tsUs").distinct().count() == n)
+    // batch 5's record is long gone, batch n - 1 is the newest: neither writes
+    Seq(5, n - 1).foreach(commitOne(dir, _))
+    assert(SampleStore.read(spark, dir).count() == n)
+    assert(!snapshotOf(dir).committed(n) && snapshotOf(dir).committed(5))
   }
 }
