@@ -20,6 +20,23 @@ object Engine {
     if (v.isNaN || v.isInfinite) "null"
     else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
+  /** A JSON string literal — the one escaper for artifact JSON: backslash,
+    * quote and every control character below 0x20 (a tab or CR left raw
+    * makes a strict reader such as Python's `json.load` fail). */
+  private[graft] def jsonString(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"'  => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
   /** Confs every session needs, applicable to an existing session too (all are
     * runtime SQL confs). `nanosAsLong` lets Spark read the parquet
     * TIMESTAMP(NANOS) columns the reference-style event feeds carry; we expose

@@ -28,18 +28,6 @@ object Verify {
         // one users-sized frame per rank call
         operators.TimeSeries.releaseCallScopedPersists()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // each query's oracle SQL, static or generated here from the data
     // (IVF centroids, PQ codebooks, BPE merges trained with the engine's own
     // seeded code, embedded as SQL literals). An oracle that throws costs
@@ -64,7 +52,7 @@ object Verify {
       else s"; ${oracleFailed.size} oracles FAILED: ${oracleFailed.mkString(", ")}"
     System.err.println(s"[verify] SUMMARY: $dumped$oracleNote")
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Engine.jsonString(k)}: ${Engine.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -192,8 +192,8 @@ object Dedup {
     }
     if (!live || inter == 0) Iterator.empty
     else {
-      val cab = Similarity.round6(inter.toDouble / la)
-      val cba = Similarity.round6(inter.toDouble / lb)
+      val cab = Sweep.round6(inter.toDouble / la)
+      val cba = Sweep.round6(inter.toDouble / lb)
       (if (cab >= threshold) Iterator.single((id1, id2, cab)) else Iterator.empty) ++
         (if (cba >= threshold) Iterator.single((id2, id1, cba)) else Iterator.empty)
     }
@@ -359,24 +359,14 @@ object Dedup {
       .agg(collect_list(col("hs")).as("hss"))
       .select(col("doc"), mergeHashSetsUdf(col("hss")).as("hs"))
       .as[(Long, Array[Long])].collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(sets)
-    val nDocs = sets.length
-    spark.range(nDocs.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val data = bc.value
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (d1, a) = data(i)
-          (i + 1 until nDocs).iterator.flatMap { j =>
-            val (d2, b) = data(j)
-            val jac = jaccardPairHashed(a, b, threshold)
-            if (jac.isNaN) Iterator.empty else Iterator.single((d1, d2, jac))
-          }
-        }
+    Sweep.broadcastRows(spark, sets.length, sets) { (data, i) =>
+      val (d1, a) = data(i)
+      (i + 1 until data.length).iterator.flatMap { j =>
+        val (d2, b) = data(j)
+        val jac = jaccardPairHashed(a, b, threshold)
+        if (jac.isNaN) Iterator.empty else Iterator.single((d1, d2, jac))
       }
-      .toDF("d1", "d2", "jaccard")
+    }.toDF("d1", "d2", "jaccard")
   }
 
   /** A document's distinct shingles as a SORTED flat array of 128-bit MD5
@@ -432,7 +422,7 @@ object Dedup {
   private[operators] def jaccardPairHashed(a: Array[Long], b: Array[Long], threshold: Double): Double = {
     val la = a.length / 2; val lb = b.length / 2
     val maxInter = math.min(la, lb)
-    if (Similarity.round6(maxInter.toDouble / (la + lb - maxInter)) < threshold) return Double.NaN
+    if (Sweep.round6(maxInter.toDouble / (la + lb - maxInter)) < threshold) return Double.NaN
     val t = roundSlack(threshold)
     val needed = math.ceil(t * (la + lb) / (1.0 + t) - 1e-9).toInt
     var ai = 0; var bi = 0; var inter = 0
@@ -445,7 +435,7 @@ object Dedup {
       else bi += 1
       if (inter + math.min(la - ai, lb - bi) < needed) live = false
     }
-    val jac = Similarity.round6(inter.toDouble / (la + lb - inter))
+    val jac = Sweep.round6(inter.toDouble / (la + lb - inter))
     if (live && jac >= threshold) jac else Double.NaN
   }
 

@@ -79,7 +79,7 @@ object Graph {
     // paths identical; the distributed loop remains the unbounded path.
     val nEdges = e.count()
     if (nEdges <= maxDriverEdges && nEdges <= (Int.MaxValue / 2 - 8).toLong) {
-      try return pageRankDriver(e, iters, scale)
+      try return pageRankDriver(e, nEdges.toInt, iters, scale)
       finally e.unpersist(blocking = false)
     }
     // setup passes (degree agg, node distinct, the `ed` build) read the
@@ -197,10 +197,9 @@ object Graph {
     * target, `pr' = teleport + Σ` — over collected primitive arrays.
     * Integer addition commutes, so this is bit-identical to the shuffled
     * sum by construction (GraphSpec pins it). */
-  private def pageRankDriver(e: DataFrame, iters: Int, scale: Long): DataFrame = {
+  private def pageRankDriver(e: DataFrame, m: Int, iters: Int, scale: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val m = e.count().toInt
     require(m > 0, "pageRank needs at least one edge")
     val (ea, eb, nodes) = collectGraph(e, m)
     val nn = nodes.length
@@ -274,7 +273,7 @@ object Graph {
       .persist()
     val nEdges = e.count()
     if (nEdges <= maxDriverEdges && nEdges <= (Int.MaxValue / 2 - 8).toLong) {
-      try return hitsDriver(e, iters, scale)
+      try return hitsDriver(e, nEdges.toInt, iters, scale)
       finally e.unpersist(blocking = false)
     }
     // rows-derived widths for the setup passes AND the pinned caches
@@ -369,10 +368,9 @@ object Graph {
   /** Driver half of [[hits]]'s size gate: the identical integer recurrence
     * over collected primitive arrays — integer sums commute, so the two
     * paths are bit-equal by construction (GraphSpec pins it). */
-  private def hitsDriver(e: DataFrame, iters: Int, scale: Long): DataFrame = {
+  private def hitsDriver(e: DataFrame, m: Int, iters: Int, scale: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val m = e.count().toInt
     require(m > 0, "hits needs at least one edge")
     val (ea, eb, nodes) = collectGraph(e, m)
     val nn = nodes.length
@@ -448,7 +446,7 @@ object Graph {
       .persist()
     val nEdges = e.count()
     if (nEdges <= maxDriverEdges && nEdges <= (Int.MaxValue / 2 - 8).toLong) {
-      try return harmonicDriver(e, seedMod, maxHops, scale)
+      try return harmonicDriver(e, nEdges.toInt, seedMod, maxHops, scale)
       finally e.unpersist(blocking = false)
     }
     // rows-derived width for the setup passes and the per-hop edge join
@@ -499,11 +497,10 @@ object Graph {
   /** Driver half of [[harmonicCentrality]]'s size gate: per-seed BFS over
     * the CSR out-adjacency — distances are unique minima, so this is
     * equal to the frontier-join path by construction (GraphSpec pins it). */
-  private def harmonicDriver(e: DataFrame, seedMod: Long, maxHops: Int,
+  private def harmonicDriver(e: DataFrame, m: Int, seedMod: Long, maxHops: Int,
       scale: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val m = e.count().toInt
     require(m > 0, "harmonicCentrality needs at least one edge")
     val (ea, eb, nodes) = collectGraph(e, m)
     val nn = nodes.length
@@ -560,10 +557,9 @@ object Graph {
     * label), seeds frozen, unreached nodes keep null — over collected
     * primitive arrays with a CSR-by-target adjacency. Integer counts and a
     * total tie order make it bit-identical to the shuffled vote. */
-  private def labelPropagationDriver(e: DataFrame, sd: DataFrame, iters: Int): DataFrame = {
+  private def labelPropagationDriver(e: DataFrame, m: Int, sd: DataFrame, iters: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val m = e.count().toInt
     val (ea, eb, nodes) = collectGraph(e, m)
     val nn = nodes.length
     def idx(v: Long): Int = java.util.Arrays.binarySearch(nodes, v)
@@ -805,7 +801,7 @@ object Graph {
     // 4.9 s at sf0.1 on a 6k-node kNN backbone). GraphSpec pins parity.
     val nEdges = e.count()
     if (nEdges <= maxDriverEdges && nEdges <= (Int.MaxValue / 2 - 8).toLong) {
-      try return labelPropagationDriver(e, sd0, iters)
+      try return labelPropagationDriver(e, nEdges.toInt, sd0, iters)
       finally e.unpersist(blocking = false)
     }
     // rows-derived widths for the setup passes and the pinned cache
@@ -991,27 +987,13 @@ object Graph {
         // HashMap[Long, HashSet[Long]] this replaces (r7 ADVICE: that
         // adjacency risked driver OOM at the gate).
         val m = nEdges.toInt
-        val ea = new Array[Long](m); val eb = new Array[Long](m)
-        // coalesce(1): toLocalIterator is one job PER PARTITION — see
-        // [[collectGraph]] (the r8 q_kcore regression)
-        val it = canon.coalesce(1).toLocalIterator()
-        var i = 0
-        while (it.hasNext) { val r = it.next(); ea(i) = r.getLong(0); eb(i) = r.getLong(1); i += 1 }
-        // dense node index: sorted unique endpoint ids, binary-searched
-        val all = new Array[Long](2 * m)
-        System.arraycopy(ea, 0, all, 0, m); System.arraycopy(eb, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var nn = 0
-        i = 0
-        while (i < all.length) { // unique in place
-          if (nn == 0 || all(nn - 1) != all(i)) { all(nn) = all(i); nn += 1 }
-          i += 1
-        }
-        val nodes = java.util.Arrays.copyOf(all, nn)
+        val (ea, eb, nodes) = collectGraph(canon, m)
+        val nn = nodes.length
         def idx(v: Long): Int = java.util.Arrays.binarySearch(nodes, v)
         // CSR adjacency: degree count, prefix offsets, fill
         val deg = new Array[Int](nn)
-        i = 0; while (i < m) { deg(idx(ea(i))) += 1; deg(idx(eb(i))) += 1; i += 1 }
+        var i = 0
+        while (i < m) { deg(idx(ea(i))) += 1; deg(idx(eb(i))) += 1; i += 1 }
         val off = new Array[Int](nn + 1)
         i = 0; while (i < nn) { off(i + 1) = off(i) + deg(i); i += 1 }
         val adj = new Array[Int](2 * m)

@@ -112,21 +112,9 @@ object Retrieval {
     rows.groupByKey(_._1).flatMapGroups { (qid: Long, it: Iterator[(Long, Long, Double, Array[Float])]) =>
       val cands = it.toArray.sortBy(_._2) // docId order = index order = tie order
       val n = cands.length
-      val norms = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        val v = cands(i)._4
-        var s = 0.0; var t = 0
-        while (t < v.length) { s += v(t).toDouble * v(t).toDouble; t += 1 }
-        norms(i) = math.sqrt(s)
-        i += 1
-      }
-      def sim(a: Int, b: Int): Double = {
-        val va = cands(a)._4; val vb = cands(b)._4
-        var s = 0.0; var t = 0; val len = math.min(va.length, vb.length)
-        while (t < len) { s += va(t).toDouble * vb(t).toDouble; t += 1 }
-        s / (norms(a) * norms(b)) // raw: see determinism contract above
-      }
+      val norms = cands.map(c => Sweep.norm(c._4))
+      def sim(a: Int, b: Int): Double = // raw: see determinism contract above
+        Sweep.cosine(Sweep.dot(cands(a)._4, cands(b)._4), norms(a), norms(b))
       val chosen = new Array[Boolean](n)
       val selected = new scala.collection.mutable.ArrayBuffer[Int](k)
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)](math.min(k, n))

@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * ([[randomHyperplaneBuckets]]): random-hyperplane signs shrink the
   * candidate set per query so a 100 TB corpus is scanned once, shuffled only
   * by bucket.
+  *
+  * The executor-side sweeps ([[knnGraph]] and [[knnGraphBlocked]],
+  * [[marginMining]], [[knnClassify]], [[cosinePairs]] and
+  * [[cosinePairsBlocked]]) score and rank through [[Sweep]], the one
+  * definition of the pair score (`round6` cosine, with its threshold quick
+  * reject) and of the top-k order (`round6` sim DESC, then id ASC, in
+  * Spark's SQL double order) — the order [[bruteForceKnn]]'s window uses.
   */
 object Similarity {
 
@@ -292,8 +299,7 @@ object Similarity {
 
   /** Full exact kNN graph — EVERY vector as a query, its `k` nearest by
     * cosine, the structure under UMAP/label-propagation/hubness analysis.
-    * Same ranking contract as [[bruteForceKnn]] (`round6` sim DESC, id
-    * ASC).
+    * Same ranking contract as [[bruteForceKnn]] ([[Sweep.TopK]]).
     *
     * Size-gated two-path routing (the [[graft.operators.Dedup.connectedComponents]]
     * pattern): up to `maxBroadcastRows` the corpus is collected and
@@ -301,9 +307,9 @@ object Similarity {
     * ([[knnClassify]]'s physical shape — no n²-row window shuffle, the
     * right plan when one executor can hold the matrix). Beyond the gate it
     * routes to [[knnGraphBlocked]], the exact distributed 2-D block sweep —
-    * identical output by construction (both paths cut on the same
-    * `(round6 sim DESC, id ASC)` total order), so the gate changes the
-    * physical plan only, never the result.
+    * identical output by construction (both paths cut with
+    * [[Sweep.TopK]]), so the gate changes the physical plan only, never
+    * the result.
     */
   def knnGraph(df: DataFrame, id: String, vec: String, k: Int,
       maxBroadcastRows: Long = 200000L): DataFrame = {
@@ -333,52 +339,21 @@ object Similarity {
     }
     val data = base
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val norms = data.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((data, norms))
-    val n = data.length
-    spark.range(n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val (d, nrm) = bc.value
-        val m = d.length
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (qid, qv) = d(i)
-          val qn = nrm(i)
-          val simArr = new Array[Double](k)
-          val vidArr = new Array[Long](k)
-          var size = 0
-          var j = 0
-          while (j < m) {
-            if (j != i) {
-              val (nid, nv) = d(j)
-              var sab = 0.0; var t = 0; val len = math.min(qv.length, nv.length)
-              while (t < len) { sab += qv(t).toDouble * nv(t).toDouble; t += 1 }
-              val sim = round6(sab / (qn * nrm(j)))
-              var pos = size
-              while (pos > 0 && (sim > simArr(pos - 1) ||
-                  (sim == simArr(pos - 1) && nid < vidArr(pos - 1)))) pos -= 1
-              if (pos < k) {
-                var s2 = math.min(size, k - 1)
-                while (s2 > pos) {
-                  simArr(s2) = simArr(s2 - 1); vidArr(s2) = vidArr(s2 - 1)
-                  s2 -= 1
-                }
-                simArr(pos) = sim; vidArr(pos) = nid
-                if (size < k) size += 1
-              }
-            }
-            j += 1
-          }
-          (0 until size).iterator.map(r => (qid, vidArr(r), simArr(r), (r + 1).toLong))
+    val norms = data.map(r => Sweep.norm(r._2))
+    Sweep.broadcastRows(spark, data.length, (data, norms)) { case ((d, nrm), i) =>
+      val (qid, qv) = d(i)
+      val qn = nrm(i)
+      val top = new Sweep.TopK(k)
+      var j = 0
+      while (j < d.length) {
+        if (j != i) {
+          val (nid, nv) = d(j)
+          top.offer(Sweep.cosine(Sweep.dot(qv, nv), qn, nrm(j)), nid)
         }
+        j += 1
       }
-      .toDF("query_id", "neighbor_id", "sim", "rank")
+      (0 until top.size).iterator.map(r => (qid, top.ids(r), top.sims(r), (r + 1).toLong))
+    }.toDF("query_id", "neighbor_id", "sim", "rank")
   }
 
   /** The unbounded-corpus path of [[knnGraph]]: EXACT distributed kNN via a
@@ -391,11 +366,10 @@ object Similarity {
     * then reduces `blocks·k` candidates per query — `n·blocks·k` rows
     * through the final window, never n².
     *
-    * Exactness: per-block candidates are cut on the same
-    * `(round6 sim DESC, id ASC)` total order as the broadcast path, and a
-    * query's true top-k within the union of blocks is the top-k of the
-    * per-block top-ks — so output is bit-identical to the broadcast sweep
-    * (spec-pinned). At 1000 executors: `blocks = ⌈n / maxBroadcastRows⌉`
+    * Exactness: per-block candidates are cut by the same [[Sweep.TopK]]
+    * as the broadcast path, and a query's true top-k within the union of
+    * blocks is the top-k of the per-block top-ks — so output is
+    * bit-identical to the broadcast sweep (spec-pinned). At 1000 executors: `blocks = ⌈n / maxBroadcastRows⌉`
     * tasks-squared of bounded memory, no driver materialization.
     */
   private[graft] def knnGraphBlocked(df: DataFrame, id: String, vec: String,
@@ -427,43 +401,17 @@ object Similarity {
           if (role != 0) corpus += ((i, v))
         }
         val cn = corpus.length
-        val cNorm = new Array[Double](cn)
-        var ci = 0
-        while (ci < cn) {
-          val cv = corpus(ci)._2; var s = 0.0; var t = 0
-          while (t < cv.length) { s += cv(t).toDouble * cv(t).toDouble; t += 1 }
-          cNorm(ci) = math.sqrt(s); ci += 1
-        }
+        val cNorm = corpus.iterator.map(r => Sweep.norm(r._2)).toArray
         queries.iterator.flatMap { case (qid, qv) =>
-          var qs = 0.0; var qt = 0
-          while (qt < qv.length) { qs += qv(qt).toDouble * qv(qt).toDouble; qt += 1 }
-          val qn = math.sqrt(qs)
-          val simArr = new Array[Double](k)
-          val vidArr = new Array[Long](k)
-          var size = 0
+          val qn = Sweep.norm(qv)
+          val top = new Sweep.TopK(k)
           var j = 0
           while (j < cn) {
             val (nid, nv) = corpus(j)
-            if (nid != qid) {
-              var sab = 0.0; var t = 0; val len = math.min(qv.length, nv.length)
-              while (t < len) { sab += qv(t).toDouble * nv(t).toDouble; t += 1 }
-              val sim = round6(sab / (qn * cNorm(j)))
-              var pos = size
-              while (pos > 0 && (sim > simArr(pos - 1) ||
-                  (sim == simArr(pos - 1) && nid < vidArr(pos - 1)))) pos -= 1
-              if (pos < k) {
-                var s2 = math.min(size, k - 1)
-                while (s2 > pos) {
-                  simArr(s2) = simArr(s2 - 1); vidArr(s2) = vidArr(s2 - 1)
-                  s2 -= 1
-                }
-                simArr(pos) = sim; vidArr(pos) = nid
-                if (size < k) size += 1
-              }
-            }
+            if (nid != qid) top.offer(Sweep.cosine(Sweep.dot(qv, nv), qn, cNorm(j)), nid)
             j += 1
           }
-          (0 until size).iterator.map(r => (qid, vidArr(r), simArr(r)))
+          (0 until top.size).iterator.map(r => (qid, top.ids(r), top.sims(r)))
         }
       }
       .toDF("query_id", "neighbor_id", "sim")
@@ -506,52 +454,19 @@ object Similarity {
     val data = df.where(col(vec).isNotNull && group.isNotNull)
       .select(col(id).cast("long"), col(vec), group.cast("string"))
       .as[(Long, Array[Float], String)].collect().sortBy(_._1)
-    val norms = data.map { case (_, v, _) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((data, norms))
-    val n = data.length
-    val edges = spark.range(n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val (d, nrm) = bc.value
-        val m = d.length
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (qid, qv, qg) = d(i)
-          val qn = nrm(i)
-          val simArr = new Array[Double](k)
-          val vidArr = new Array[Long](k)
-          var size = 0
-          var j = 0
-          while (j < m) {
-            val (nid, nv, ng) = d(j)
-            if (ng != qg) { // cross-group only
-              var sab = 0.0; var t = 0; val len = math.min(qv.length, nv.length)
-              while (t < len) { sab += qv(t).toDouble * nv(t).toDouble; t += 1 }
-              val sim = round6(sab / (qn * nrm(j)))
-              var pos = size
-              while (pos > 0 && (sim > simArr(pos - 1) ||
-                  (sim == simArr(pos - 1) && nid < vidArr(pos - 1)))) pos -= 1
-              if (pos < k) {
-                var s2 = math.min(size, k - 1)
-                while (s2 > pos) {
-                  simArr(s2) = simArr(s2 - 1); vidArr(s2) = vidArr(s2 - 1)
-                  s2 -= 1
-                }
-                simArr(pos) = sim; vidArr(pos) = nid
-                if (size < k) size += 1
-              }
-            }
-            j += 1
-          }
-          (0 until size).iterator.map(r => (qid, vidArr(r), simArr(r), qg))
-        }
+    val norms = data.map(r => Sweep.norm(r._2))
+    val edges = Sweep.broadcastRows(spark, data.length, (data, norms)) { case ((d, nrm), i) =>
+      val (qid, qv, qg) = d(i)
+      val qn = nrm(i)
+      val top = new Sweep.TopK(k)
+      var j = 0
+      while (j < d.length) {
+        val (nid, nv, ng) = d(j)
+        if (ng != qg) top.offer(Sweep.cosine(Sweep.dot(qv, nv), qn, nrm(j)), nid) // cross-group only
+        j += 1
       }
-      .toDF("qid", "nid", "sim", "grp")
+      (0 until top.size).iterator.map(r => (qid, top.ids(r), top.sims(r), qg))
+    }.toDF("qid", "nid", "sim", "grp")
     // integer neighborhood sums: round(sim·1e6) is exactly integral, the
     // cast is exact, and BIGINT addition has no order to diverge
     val sums = edges.groupBy(col("qid"))
@@ -774,7 +689,7 @@ object Similarity {
             val w = ws(c)
             var s = 0.0; var i = 0; val len = math.min(v.length, w.length)
             while (i < len) { s += v(i).toDouble * w(i); i += 1 }
-            pcs(c) = round6(s - os(c))
+            pcs(c) = Sweep.round6(s - os(c))
             c += 1
           }
           (vid, pcs)
@@ -839,11 +754,6 @@ object Similarity {
         round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall"))
   }
 
-  /** Spark `round(_, 6)` semantics (RoundBase: BigDecimal.valueOf + HALF_UP)
-    * for driver/executor-side Scala code that must match Column results —
-    * including NaN/Infinity passthrough (BigDecimal.valueOf would throw;
-    * Spark's round leaves them unchanged).
-    */
   /** Auto block count for the block-partitioned pair sweeps: b(b+1)/2
     * tasks sized to give the scheduler ~16 tasks per core — the triangle's
     * diagonal blocks carry half an off-diagonal block's work, so a coarse
@@ -879,10 +789,6 @@ object Similarity {
     math.max(par, floor)
   }
 
-  private[operators] def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Embedding-cosine near-duplicate pairs: all (i < j) pairs with cosine
     * similarity at or above `threshold`.
     *
@@ -900,40 +806,16 @@ object Similarity {
     requireIntegralId(df, id)
     val data = df.select(col(id).cast("long"), col(vec))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val norms = data.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((data, norms))
-    val n = data.length
-    spark.range(n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism) // balance the triangle
-      .as[Long]
-      .mapPartitions { it =>
-        val (d, nrm) = bc.value
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (id1, vi) = d(i)
-          val ni = nrm(i)
-          (i + 1 until n).iterator.flatMap { j =>
-            val (id2, vj) = d(j)
-            var sab = 0.0; var k = 0; val len = math.min(vi.length, vj.length)
-            while (k < len) { sab += vi(k).toDouble * vj(k).toDouble; k += 1 }
-            val raw = sab / (ni * nrm(j))
-            // round6 moves a value by < 5e-7, so anything below
-            // threshold − 1e-6 can never round up across it: the quick
-            // reject skips the per-pair BigDecimal allocation for the
-            // overwhelming non-match majority (semantics unchanged)
-            if (raw < threshold - 1e-6) Iterator.empty
-            else {
-              val sim = round6(raw)
-              if (sim >= threshold) Iterator.single((id1, id2, sim)) else Iterator.empty
-            }
-          }
-        }
+    val norms = data.map(r => Sweep.norm(r._2))
+    Sweep.broadcastRows(spark, data.length, (data, norms)) { case ((d, nrm), i) =>
+      val (id1, vi) = d(i)
+      val ni = nrm(i)
+      (i + 1 until d.length).iterator.flatMap { j =>
+        val (id2, vj) = d(j)
+        val sim = Sweep.cos6(Sweep.dot(vi, vj), ni, nrm(j), threshold)
+        if (sim.isNaN) Iterator.empty else Iterator.single((id1, id2, sim))
       }
-      .toDF("d1", "d2", "sim")
+    }.toDF("d1", "d2", "sim")
   }
 
   /** Block-partitioned exact all-pairs form of [[cosinePairs]] — identical
@@ -980,35 +862,20 @@ object Similarity {
         col("b1"), col("b2"))
       .as[(Int, Int, Array[(Long, Array[Float])], Array[(Long, Array[Float])])]
       .mapPartitions { it =>
-        def norms(vs: Array[(Long, Array[Float])]): Array[Double] = vs.map { case (_, v) =>
-          var s = 0.0; var i = 0
-          while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-          math.sqrt(s)
-        }
         it.flatMap { case (bi, bj, as, bs) =>
           // same-block halving is by ID, not index: collect_list order is
           // not deterministic across the two join sides even for b1 == b2
           val same = bi == bj
-          val nb = norms(bs)
-          val na = norms(as)
-          as.iterator.zipWithIndex.flatMap { case ((id1, vi), i) =>
-            val ni = na(i)
+          val nb = bs.map(r => Sweep.norm(r._2))
+          as.iterator.flatMap { case (id1, vi) =>
+            val ni = Sweep.norm(vi)
             bs.indices.iterator.flatMap { j =>
               val (id2, vj) = bs(j)
-              if (same && id2 <= id1) Iterator.empty
-              else {
-                var sab = 0.0; var k = 0; val len = math.min(vi.length, vj.length)
-                while (k < len) { sab += vi(k).toDouble * vj(k).toDouble; k += 1 }
-                val raw = sab / (ni * nb(j))
-                // quick reject before the BigDecimal round — see cosinePairs
-                if (raw < threshold - 1e-6) Iterator.empty
-                else {
-                  val sim = round6(raw)
-                  if (sim >= threshold)
-                    Iterator.single((math.min(id1, id2), math.max(id1, id2), sim))
-                  else Iterator.empty
-                }
-              }
+              val sim =
+                if (same && id2 <= id1) Double.NaN
+                else Sweep.cos6(Sweep.dot(vi, vj), ni, nb(j), threshold)
+              if (sim.isNaN) Iterator.empty
+              else Iterator.single((math.min(id1, id2), math.max(id1, id2), sim))
             }
           }
         }
@@ -1207,7 +1074,7 @@ object Similarity {
             if (d < bd) { bd = d; best = j } // first-minimum tie rule
             j += 1
           }
-          (i, best.toLong, round6(math.sqrt(math.max(bd, 0.0))))
+          (i, best.toLong, Sweep.round6(math.sqrt(math.max(bd, 0.0))))
         }
       }
       .toDF(id, "cell", "dist")
@@ -1432,7 +1299,7 @@ object Similarity {
             var adc = 0.0
             var s = 0
             while (s < codes.length) { adc += lut(s)(codes(s)); s += 1 }
-            (qid, nid, round6(adc))
+            (qid, nid, Sweep.round6(adc))
           }
         }
       }
@@ -1527,10 +1394,8 @@ object Similarity {
     *
     * Vote rule (fully deterministic, integer-only): most neighbor votes,
     * ties broken by the best (smallest) neighbor rank carrying that label,
-    * then by the smaller label. Neighbor ranking rounds the cosine to 6
-    * places before ordering (ties then broken by id) so rankings are
-    * reproducible across engines' last-ulp differences, exactly like
-    * [[bruteForceKnn]].
+    * then by the smaller label. Neighbors rank in [[bruteForceKnn]]'s
+    * order ([[Sweep.TopK]]).
     *
     * This brute exact form scores all n² pairs via a broadcast matrix +
     * bounded per-query top-k sweep in `mapPartitions` — the right tool up
@@ -1555,79 +1420,45 @@ object Similarity {
     val data = df.where(col(vec).isNotNull && col(label).isNotNull)
       .select(col(id).cast("long"), col(label).cast("long"), col(vec))
       .as[(Long, Long, Array[Float])].collect().sortBy(_._1)
-    val norms = data.map { case (_, _, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((data, norms))
-    val n = data.length
-    spark.range(n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val (d, nrm) = bc.value
-        val m = d.length
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (_, qlab, qv) = d(i)
-          val qn = nrm(i)
-          // bounded insertion keeps the k best neighbors ordered by
-          // (rounded sim DESC, id ASC) — identical to the window's
-          // `ORDER BY sim DESC, vid` ranking
-          val simArr = new Array[Double](k)
-          val vidArr = new Array[Long](k)
-          val labArr = new Array[Long](k)
-          var size = 0
-          var j = 0
-          while (j < m) {
-            if (j != i) {
-              val (nid, nlab, nv) = d(j)
-              var sab = 0.0; var t = 0; val len = math.min(qv.length, nv.length)
-              while (t < len) { sab += qv(t).toDouble * nv(t).toDouble; t += 1 }
-              val sim = round6(sab / (qn * nrm(j)))
-              var pos = size
-              while (pos > 0 && (sim > simArr(pos - 1) ||
-                  (sim == simArr(pos - 1) && nid < vidArr(pos - 1)))) pos -= 1
-              if (pos < k) {
-                var s2 = math.min(size, k - 1)
-                while (s2 > pos) {
-                  simArr(s2) = simArr(s2 - 1); vidArr(s2) = vidArr(s2 - 1)
-                  labArr(s2) = labArr(s2 - 1); s2 -= 1
-                }
-                simArr(pos) = sim; vidArr(pos) = nid; labArr(pos) = nlab
-                if (size < k) size += 1
-              }
-            }
-            j += 1
-          }
-          if (size == 0) Iterator.empty // nothing to vote (n == 1 corpus)
-          else {
-            // vote: most neighbor votes, ties by best (smallest) rank
-            // carrying that label, then by smaller label — the array is
-            // rank-ordered so a label's first index IS its best rank
-            var bestLab = -1L; var bestCnt = -1L; var bestMr = Int.MaxValue
-            var a = 0
-            while (a < size) {
-              val labA = labArr(a)
-              var seen = false; var b = 0
-              while (b < a) { if (labArr(b) == labA) seen = true; b += 1 }
-              if (!seen) {
-                var cnt = 0L; var c = a
-                while (c < size) { if (labArr(c) == labA) cnt += 1; c += 1 }
-                val mr = a + 1
-                if (cnt > bestCnt || (cnt == bestCnt && (mr < bestMr ||
-                    (mr == bestMr && labA < bestLab)))) {
-                  bestLab = labA; bestCnt = cnt; bestMr = mr
-                }
-              }
-              a += 1
-            }
-            Iterator.single((qlab, bestLab))
-          }
+    val norms = data.map(r => Sweep.norm(r._3))
+    Sweep.broadcastRows(spark, data.length, (data, norms)) { case ((d, nrm), i) =>
+      val (_, qlab, qv) = d(i)
+      val qn = nrm(i)
+      val top = new Sweep.TopK(k, labels = true)
+      var j = 0
+      while (j < d.length) {
+        if (j != i) {
+          val (nid, nlab, nv) = d(j)
+          top.offer(Sweep.cosine(Sweep.dot(qv, nv), qn, nrm(j)), nid, nlab)
         }
+        j += 1
       }
-      .toDF("label", "pred")
+      if (top.size == 0) Iterator.empty // nothing to vote (n == 1 corpus)
+      else {
+        // vote: most neighbor votes, ties by best (smallest) rank
+        // carrying that label, then by smaller label — the buffer is
+        // rank-ordered so a label's first index IS its best rank
+        val labArr = top.payload
+        var bestLab = -1L; var bestCnt = -1L; var bestMr = Int.MaxValue
+        var a = 0
+        while (a < top.size) {
+          val labA = labArr(a)
+          var seen = false; var b = 0
+          while (b < a) { if (labArr(b) == labA) seen = true; b += 1 }
+          if (!seen) {
+            var cnt = 0L; var c = a
+            while (c < top.size) { if (labArr(c) == labA) cnt += 1; c += 1 }
+            val mr = a + 1
+            if (cnt > bestCnt || (cnt == bestCnt && (mr < bestMr ||
+                (mr == bestMr && labA < bestLab)))) {
+              bestLab = labA; bestCnt = cnt; bestMr = mr
+            }
+          }
+          a += 1
+        }
+        Iterator.single((qlab, bestLab))
+      }
+    }.toDF("label", "pred")
       .groupBy(col("label"), col("pred"))
       .agg(count(lit(1)).as("n"))
   }

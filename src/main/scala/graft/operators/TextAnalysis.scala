@@ -1377,34 +1377,23 @@ object TextAnalysis {
       while (i < ws.length) { s += ws(i) * ws(i); i += 1 }
       s
     }
-    val bc = spark.sparkContext.broadcast((data, norms2))
-    val n = data.length
-    spark.range(n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val (d, n2) = bc.value
-        it.flatMap { ii =>
-          val i = ii.toInt
-          val (id1, ix1, w1) = d(i)
-          val na = math.sqrt(n2(i).toDouble)
-          (i + 1 until n).iterator.flatMap { j =>
-            val (id2, ix2, w2) = d(j)
-            var dot = 0L; var a = 0; var b = 0
-            while (a < ix1.length && b < ix2.length) {
-              if (ix1(a) < ix2(b)) a += 1
-              else if (ix1(a) > ix2(b)) b += 1
-              else { dot += w1(a) * w2(b); a += 1; b += 1 }
-            }
-            if (dot == 0L) Iterator.empty
-            else {
-              val sim = Similarity.round6(dot.toDouble / (na * math.sqrt(n2(j).toDouble)))
-              if (sim >= threshold) Iterator.single((id1, id2, sim)) else Iterator.empty
-            }
-          }
+    Sweep.broadcastRows(spark, data.length, (data, norms2)) { case ((d, n2), i) =>
+      val (id1, ix1, w1) = d(i)
+      val na = math.sqrt(n2(i).toDouble)
+      (i + 1 until d.length).iterator.flatMap { j =>
+        val (id2, ix2, w2) = d(j)
+        var dot = 0L; var a = 0; var b = 0
+        while (a < ix1.length && b < ix2.length) {
+          if (ix1(a) < ix2(b)) a += 1
+          else if (ix1(a) > ix2(b)) b += 1
+          else { dot += w1(a) * w2(b); a += 1; b += 1 }
         }
+        val sim =
+          if (dot == 0L) Double.NaN
+          else Sweep.cos6(dot.toDouble, na, math.sqrt(n2(j).toDouble), threshold)
+        if (sim.isNaN) Iterator.empty else Iterator.single((id1, id2, sim))
       }
-      .toDF("d1", "d2", "sim")
+    }.toDF("d1", "d2", "sim")
   }
 
   /** TextRank-style centrality over a document's CHUNKS — the extractive

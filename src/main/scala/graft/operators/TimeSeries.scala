@@ -535,7 +535,7 @@ object TimeSeries {
 
   /** Spark SQL's double comparison: -0.0 equals 0.0, and NaN equals NaN and
     * sorts above every number (Java's `<` and `>` are false on NaN). */
-  private def sqlCompare(a: Double, b: Double): Int =
+  private[operators] def sqlCompare(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
   /** Spark's exact `percentile` over non-empty `sorted` (ascending, NaN

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Engine
+
 /** S6 — byte-level zarr v2 interop for the reference's read-optimized
   * export (archiver.py:542-608 `save_zarr`). [[SampleStore.exportRunSorted]]
   * is the Spark-native re-expression (Parquet IS the columnar copy); this
@@ -54,29 +56,13 @@ object ZarrExport {
 
   // ---------------------------------------------------------------- JSON --
 
-  private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def jstr(s: String): String = "\"" + jsonEscape(s) + "\""
-
   /** zarr v2 array metadata. `dtype` is the numpy typestr (`<f8`, `|S12`).
     * fill_value null is spec-valid for every dtype and sidesteps the
     * base64 encoding rule for S fill values.
     */
   private[store] def zarrayJson(n: Long, chunkElems: Int, dtype: String): String =
     s"""{"chunks":[$chunkElems],"compressor":{"id":"gzip","level":1},""" +
-      s""""dtype":${jstr(dtype)},"fill_value":null,"filters":null,""" +
+      s""""dtype":${Engine.jsonString(dtype)},"fill_value":null,"filters":null,""" +
       s""""order":"C","shape":[$n],"zarr_format":2}"""
 
   private val zgroupJson = """{"zarr_format":2}"""
@@ -85,7 +71,7 @@ object ZarrExport {
     * float-or-empty-string coercion (archiver.py:566-582).
     */
   private[store] def zattrsJson(meta: Map[String, String]): String = {
-    def s(k: String) = jstr(meta.getOrElse(k, ""))
+    def s(k: String) = Engine.jsonString(meta.getOrElse(k, ""))
     def f(k: String) = meta.get(k).flatMap(v => v.toDoubleOption)
       .map(_.toString).getOrElse("0.0")
     def fOrEmpty(k: String) = meta.get(k).flatMap(_.toDoubleOption)
@@ -418,7 +404,7 @@ object ZarrExport {
   /** Minimal flat-JSON-object scanner for `.zattrs` (the writer emits one
     * flat object — [[zattrsJson]]; the reference's `grp.attrs.update`
     * produces the same shape, archiver.py:576-582). String values are
-    * unescaped (the inverse of [[jsonEscape]], plus `\u` and `\/`); number
+    * unescaped (the inverse of [[graft.Engine.jsonString]], plus `\u` and `\/`); number
     * tokens parse as doubles; a bare `null` (a NULL description column in
     * the reference's pv table) drops the key, matching the writer's
     * empty-string default.

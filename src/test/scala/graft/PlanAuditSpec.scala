@@ -735,4 +735,20 @@ class PlanAuditSpec extends SparkSpec {
     // reachability inside one JVM
     assert(sources.collect { case (f, t) if t.contains("java.lang.ref") => f }.isEmpty)
   }
+
+  test("one sweep kernel: the top-k insertion, cosine score and broadcast scaffold live only in Sweep") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => main.relativize(f).toString -> java.nio.file.Files.readString(f)).toSeq
+    val kernels = Seq(
+      "top-k insertion shift" -> """(\w+)\((\w+)\) = \1\(\2 - 1\)""".r,
+      "round6 cosine score" -> """round6\((raw\)|[^\n]*/ \([^)\n]*\*)""".r,
+      "threshold quick reject" -> """< threshold - 1e-6""".r,
+      "broadcast sweep scaffold" -> """\.range\([^)]*\)\s*\.repartition\([^)]*defaultParallelism""".r)
+    kernels.foreach { case (what, re) =>
+      val at = sources.collect { case (f, t) if re.findFirstIn(t).nonEmpty => f }
+      assert(at == Seq("graft/operators/Sweep.scala"), what)
+    }
+  }
 }

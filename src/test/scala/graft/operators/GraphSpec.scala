@@ -245,6 +245,29 @@ class GraphSpec extends SparkSpec {
     assert(driver == dist) // integer recurrence: bit-identical, not "close"
   }
 
+  test("the driver paths count the edge frame once: the gate's count is passed in") {
+    val sp = spark
+    import sp.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val seeds = Seq((1L, 7L)).toDF("node", "label")
+    // the jobs of the gate's count: one count of a fresh cache of the
+    // operator's own edge frame (harmonicCentrality's drops loops, distinct)
+    def gateJobs(distinct: Boolean): Int = {
+      val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+      val e = (if (distinct) e0.where(col("src") =!= col("dst")).distinct() else e0).persist()
+      try jobsOf(e.count())._2.size finally e.unpersist(blocking = true)
+    }
+    def jobs(run: => org.apache.spark.sql.DataFrame): Int = jobsOf(run)._2.size
+    // the gate's count plus the one collect of the edge list (and of the
+    // seeds); the driver half used to count the cached frame a second time
+    val plain = gateJobs(distinct = false) + 1
+    assert(jobs(Graph.pageRank(edges, "src", "dst", iters = 3)) == plain)
+    assert(jobs(Graph.hits(edges, "src", "dst", iters = 3)) == plain)
+    assert(jobs(Graph.labelPropagation(edges, "src", "dst", seeds, "node", "label", 3)) == plain + 1)
+    assert(jobs(Graph.harmonicCentrality(edges, "src", "dst")) == gateJobs(distinct = true) + 1)
+  }
+
   test("labelPropagation size gate: driver vote loop == distributed rounds") {
     val sp = spark
     import sp.implicits._

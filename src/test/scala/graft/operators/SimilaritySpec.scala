@@ -368,6 +368,53 @@ class SimilaritySpec extends SparkSpec {
     assert(gated == broadcast)
   }
 
+  private def knnRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
+      r.getAs[Double]("sim").toString, r.getAs[Number]("rank").longValue)).toSet
+
+  test("a zero vector scores NaN and ranks first on every knnGraph path, as in Spark's window") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq(
+      (1L, Array(1.0f, 0.0f)), (2L, Array(0.8f, 0.6f)), (3L, Array(0.0f, 0.0f)),
+      (4L, Array(0.96f, 0.28f)), (5L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val brute = knnRows(Similarity.bruteForceKnn(df, df, "vec_id", "embedding", k = 2))
+    // Spark sorts NaN above every number: 0/0 against the zero vector wins
+    assert(brute.filter(_._1 == 1L) == Set((1L, 3L, "NaN", 1L), (1L, 4L, "0.96", 2L)))
+    assert(knnRows(Similarity.knnGraph(df, "vec_id", "embedding", k = 2)) == brute)
+    Seq(1, 2, 3).foreach { b =>
+      assert(knnRows(Similarity.knnGraphBlocked(df, "vec_id", "embedding", 2, b)) == brute, s"blocks=$b")
+    }
+  }
+
+  test("exact ties at the k-th slot go to the smaller id on every top-k sweep; labels travel along") {
+    val sp = spark
+    import sp.implicits._
+    // 3 and 5 are the same vector, so every query scores them equal
+    val df = Seq(
+      (1L, Array(1.0f, 0.0f), 10L), (2L, Array(1.0f, 0.05f), 20L), (3L, Array(0.6f, 0.8f), 30L),
+      (4L, Array(0.0f, 1.0f), 40L), (5L, Array(0.6f, 0.8f), 50L))
+      .toDF("vec_id", "embedding", "label")
+    val graph = knnRows(Similarity.knnGraph(df, "vec_id", "embedding", k = 2))
+    val lists = graph.groupBy(_._1).map { case (q, rs) => q -> rs.toSeq.sortBy(_._4).map(_._2) }
+    assert(lists == Map(1L -> Seq(2L, 3L), 2L -> Seq(1L, 3L), 3L -> Seq(5L, 4L),
+      4L -> Seq(3L, 5L), 5L -> Seq(3L, 4L)))
+    assert(knnRows(Similarity.bruteForceKnn(df, df, "vec_id", "embedding", k = 2)) == graph)
+    Seq(2, 3).foreach { b =>
+      assert(knnRows(Similarity.knnGraphBlocked(df, "vec_id", "embedding", 2, b)) == graph, s"blocks=$b")
+    }
+    // k = 1: query 4 ties 3 and 5, keeps 3, and votes 3's label
+    val votes = Similarity.knnClassify(df, "vec_id", "embedding", "label", k = 1)
+      .collect().map(r => (r.getAs[Long]("label"), r.getAs[Long]("pred"), r.getAs[Long]("n"))).toSet
+    assert(votes == Set((10L, 20L, 1L), (20L, 10L, 1L), (30L, 50L, 1L), (40L, 30L, 1L), (50L, 30L, 1L)))
+    // source 1's one cross-group neighbour is the smaller of the tied pair
+    val margin = Similarity.marginMining(df.where(col("vec_id") =!= 2L), "vec_id", "embedding",
+      when(col("vec_id") === 1L, "a").otherwise("b"), srcGroup = "a", k = 1, threshold = 0.0)
+      .collect().map(r => r.getAs[Long]("src_id") -> r.getAs[Long]("dst_id")).toMap
+    assert(margin == Map(1L -> 3L))
+  }
+
   test("truncatedRecall: full-width truncation is perfect recall; tiny prefixes degrade") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val got = Similarity.truncatedRecall(emb, emb.where(col("vec_id") < 5),
@@ -548,12 +595,12 @@ class SimilaritySpec extends SparkSpec {
     // the sharp pair outranks the mediocre source's best pair
     assert(got(1L)._3 > got(2L)._3)
     // cos of (1, 11) is the exact round6 cosine
-    val expCos = Similarity.round6(0.99 / math.sqrt(0.99 * 0.99 + 0.1 * 0.1))
+    val expCos = Sweep.round6(0.99 / math.sqrt(0.99 * 0.99 + 0.1 * 0.1))
     assert(got(1L)._2 == expCos)
     // margin replays exactly: integer neighborhood sums over round6 sims
     def cos6(a: Array[Double], b: Array[Double]): Double = {
       val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      Similarity.round6(dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)))
+      Sweep.round6(dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)))
     }
     val v = Map(
       1L -> Array(1.0, 0.0, 0.0), 2L -> Array(0.5, 0.5, 0.7),
